@@ -82,22 +82,43 @@ class RegistrySpec extends AnyFunSuite {
     // fabricated path (VERDICT r12 found one) is corrosive precisely
     // because nothing checked it. Extract every cited reference file —
     // absolute (/root/reference/...) or repo-relative (src/...py,
-    // dags/...py) — from every main .scala file and stat it.
-    import java.nio.file.{Files, Paths}
+    // dags/...py) — from every main .scala file and check it against one
+    // of two sources of truth:
+    //  - the reference checkout, where it exists: every citation is stat'ed
+    //    under it, and so is every file SURVEY.md cites, which keeps the
+    //    record below honest;
+    //  - otherwise SURVEY.md, the committed analysis written from that
+    //    checkout: every citation must be one of the files it cites.
+    // The fallback exists because the checkout is not part of the repo; a
+    // clone without it would fail here for a reason that has nothing to do
+    // with the citations, and the guard would stop guarding.
+    import java.nio.file.{Files, Path, Paths}
     import scala.jdk.CollectionConverters._
     val cite = """(?:/root/reference/)?((?:src|dags|tests|configs)/[A-Za-z0-9_/]+\.py)""".r
+    def cited(p: Path): Iterator[String] =
+      cite.findAllMatchIn(new String(Files.readAllBytes(p), "UTF-8")).map(_.group(1))
     val mainDir = Paths.get("src/main/scala")
-    val missing = Files.walk(mainDir).iterator().asScala
+    val citations = Files.walk(mainDir).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .flatMap { p =>
-        val text = new String(Files.readAllBytes(p), "UTF-8")
-        cite.findAllMatchIn(text).map(m => p.toString -> m.group(1))
-      }
-      .filterNot { case (_, rel) =>
-        Files.exists(Paths.get("/root/reference").resolve(rel))
-      }
+      .flatMap(p => cited(p).map(p.toString -> _))
       .toSeq.distinct
-    assert(missing.isEmpty,
-      s"citation of a nonexistent reference file: $missing")
+    val surveyed = cited(Paths.get("SURVEY.md")).toSet
+    val reference = Paths.get("/root/reference")
+    if (Files.isDirectory(reference)) {
+      def inReference(rel: String) = Files.exists(reference.resolve(rel))
+      val missing = citations.filterNot { case (_, rel) => inReference(rel) }
+      assert(missing.isEmpty,
+        s"citation of a file missing from the reference at $reference: $missing")
+      val stale = surveyed.filterNot(inReference)
+      assert(stale.isEmpty,
+        s"SURVEY.md cites files missing from the reference at $reference: $stale")
+    } else {
+      val missing = citations.filterNot { case (_, rel) => surveyed(rel) }
+      assert(missing.isEmpty,
+        s"no reference checkout at $reference, so citations were checked " +
+          "against SURVEY.md's record of it; these cite a file SURVEY.md " +
+          s"does not record: $missing. Cite the real file, checked against " +
+          "the reference; do not add the path to SURVEY.md by hand.")
+    }
   }
 }
