@@ -35,17 +35,17 @@ object GraftSession {
       // NEED real min/max stats (zone maps — Writers.ensureSorted) pin
       // TIMESTAMP_MICROS in their own cloned session instead.
       // catalog-table writes (bucketed layouts — sources.Bucketing) land
-      // in tmp scratch, never the library user's cwd. PID-scoped: the
-      // in-memory catalog is per-JVM, so a SHARED warehouse path makes
-      // every concurrent graft process see the others' live tables as
-      // catalog-less orphans (and Bucketing's stale-location recovery
-      // would delete them mid-query — ADVICE r12). Two live processes
-      // can never share a PID, so per-PID scoping makes any orphan in
-      // this warehouse provably ours (PID reuse only inherits a DEAD
-      // process's leftovers, which the recovery path exists to clear).
+      // in the per-JVM scratch root, never the library user's cwd, and
+      // are removed at JVM exit. PID-scoped: the in-memory catalog is
+      // per-JVM, so a SHARED warehouse path makes every concurrent graft
+      // process see the others' live tables as catalog-less orphans (and
+      // Bucketing's stale-location recovery would delete them mid-query
+      // — ADVICE r12). Two live processes can never share a PID, so
+      // per-PID scoping makes any orphan in this warehouse provably ours
+      // (PID reuse only inherits a DEAD process's leftovers, which the
+      // recovery path exists to clear).
       .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft-warehouse-" +
-          ProcessHandle.current().pid())
+        s"${sources.Writers.scratchRoot}/warehouse")
       // allow co-partitioned joins on a PREFIX of the join keys: tables
       // bucketed by l_orderkey then joined on (l_orderkey, l_linenumber)
       // are correctly co-located (equal keys ⇒ equal bucket) — the

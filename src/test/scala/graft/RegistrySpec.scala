@@ -94,9 +94,14 @@ class RegistrySpec extends AnyFunSuite {
     // with the citations, and the guard would stop guarding.
     import java.nio.file.{Files, Path, Paths}
     import scala.jdk.CollectionConverters._
-    val cite = """(?:/root/reference/)?((?:src|dags|tests|configs)/[A-Za-z0-9_/]+\.py)""".r
+    // .py sources and .yml configs; a bare configs/ path naming a file in
+    // the repo's own configs/ directory is a repo path, not a citation
+    val cite = """(/root/reference/)?((?:src|dags|tests|configs)/[A-Za-z0-9_/]+\.(?:py|yml))""".r
     def cited(p: Path): Iterator[String] =
-      cite.findAllMatchIn(new String(Files.readAllBytes(p), "UTF-8")).map(_.group(1))
+      cite.findAllMatchIn(new String(Files.readAllBytes(p), "UTF-8"))
+        .filterNot(m => m.group(1) == null && m.group(2).startsWith("configs/") &&
+          Files.isRegularFile(Paths.get(m.group(2))))
+        .map(_.group(2))
     val mainDir = Paths.get("src/main/scala")
     val citations = Files.walk(mainDir).iterator().asScala
       .filter(_.toString.endsWith(".scala"))

@@ -90,6 +90,29 @@ class SourcesSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$dir/v0").count() == 2)
   }
 
+  test("mergeState: a torn state version (the committer's _temporary/ " +
+    "only, no _SUCCESS) is not the latest version, and the next merge " +
+    "overwrites it with the merge over the version before it") {
+    val dir = tmp("tornstate")
+    val b1 = Seq(("k1", 1, "v1a"), ("k2", 1, "v2a")).toDF("pk", "batch", "payload")
+    Writers.mergeState(spark, dir, b1, Seq("pk"), col("batch"))
+    val b2 = Seq(("k1", 2, "v1b"), ("k3", 2, "v3a")).toDF("pk", "batch", "payload")
+    Writers.mergeState(spark, dir, b2, Seq("pk"), col("batch"))
+    // a crash inside the third merge's write: Spark's committer created
+    // v2 at job setup and never reached _SUCCESS
+    Files.createDirectories(java.nio.file.Paths.get(dir, "v2", "_temporary", "0"))
+    assert(Writers.latestVersion(dir).contains(1L))
+    val b3 = Seq(("k2", 3, "v2b"), ("k4", 3, "v4a")).toDF("pk", "batch", "payload")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("pk", "batch", "payload").as[(String, Int, String)].collect().toSet
+    val expected = rows(graft.operators.Upsert.merge(
+      spark.read.parquet(s"$dir/v1"), b3, Seq("pk"), col("batch")))
+    assert(rows(Writers.mergeState(spark, dir, b3, Seq("pk"), col("batch"))) ==
+      expected)
+    assert(Writers.latestVersion(dir).contains(2L))
+    assert(rows(Writers.readState(spark, dir).get) == expected)
+  }
+
   // --- JDBC upsert sink (reference storage.py:41-53,126-131) -----------
 
   private val storageYaml =
@@ -1542,6 +1565,79 @@ class SourcesSpec extends AnyFunSuite {
     assert(after.count() == vecs.count() &&
       after.groupBy(col("vec_id")).count().filter(col("count") > 1).isEmpty,
       "retried merge after vacuum dropped or doubled a vector")
+  }
+
+  test("swap-window recovery (leg): a crash between compactBm25Index's " +
+    "two renames — tf/ already at tf.old, the complete tf.staged not yet " +
+    "renamed in, the lock abandoned — is rolled forward by " +
+    "vacuumBm25Index, and the probe equals the pre-crash probe") {
+    import graft.operators.Retrieval
+    import java.nio.file.Paths
+    val docs = Seq((0L, "alpha beta beta"), (1L, "beta gamma"),
+      (2L, "alpha gamma gamma")).toDF("doc_id", "text")
+    val p = tmp("bm25swapcrash")
+    Writers.writeBm25Index(docs, p)
+    Writers.deleteFromBm25Index(spark, p, Seq(1L).toDF("doc_id"))
+    val terms = Seq("alpha", "beta", "gamma")
+    def probe() = Retrieval.bm25Stored(
+        Writers.prunedBm25Tf(spark, p, terms),
+        spark.read.parquet(s"$p/stats"), "doc_id", terms)
+      .as[(Long, Long, Double)].collect().toSet
+    val before = probe()
+    // the crashed compaction's state: its staged tf (tombstoned doc 1
+    // folded out) complete, the live tf renamed away, the lock held
+    spark.read.parquet(s"$p/tf").filter(col("doc_id") =!= 1)
+      .repartition(col("tok_part"))
+      .write.partitionBy("tok_part").parquet(s"$p/tf.staged")
+    Files.move(Paths.get(s"$p/tf"), Paths.get(s"$p/tf.old"))
+    Files.writeString(Paths.get(p, "_writer.lock"), "pid=crashed")
+    Writers.vacuumBm25Index(spark, p)
+    assert(probe() == before, "the swap-window crash lost the tf leg")
+    assert(spark.read.parquet(s"$p/tf").filter(col("doc_id") === 1).isEmpty,
+      "a complete staged leg must roll forward, not back")
+    assert(!Files.exists(Paths.get(s"$p/tf.old")) &&
+      !Files.exists(Paths.get(s"$p/tf.staged")))
+    assert(!Writers.writerLockHeld(p))
+    Writers.compactBm25Index(spark, p)
+    assert(probe() == before)
+  }
+
+  test("swap-window recovery (root): a crash between compactPostings' " +
+    "two renames — the root (with its tombstones and the crashed verb's " +
+    "lock) at .old, the complete staged root not yet renamed in — is " +
+    "rolled forward by vacuumPostings, and the probe equals the " +
+    "pre-crash probe") {
+    import graft.operators.Retrieval
+    import java.nio.file.Paths
+    val docs = Seq((0L, "alpha beta gamma"), (1L, "beta gamma delta"),
+      (2L, "gamma beta alpha")).toDF("doc_id", "text")
+    val p = tmp("postswapcrash")
+    Writers.writePostings(spark, docs, p)
+    Writers.deleteFromPostings(spark, p, Seq(1L).toDF("doc_id"))
+    val phrase = Seq("beta", "gamma")
+    def probe() = Retrieval.phraseSearch(
+        Writers.prunedPostings(spark, p, phrase), "doc_id", phrase)
+      .select(col("doc_id")).distinct().as[Long].collect().toSet
+    val before = probe()
+    assert(before == Set(0L))
+    // the crashed compaction's state: the staged root (doc 1 folded
+    // out, the gen sidecar at its preserved counter) complete, the live
+    // root renamed away with the lock inside it
+    val staged = p + ".staged"
+    spark.read.parquet(p).filter(col("doc_id") =!= 1)
+      .repartition(col("tok_part"))
+      .write.partitionBy("tok_part").parquet(staged)
+    spark.read.parquet(s"$p/_gen").write.parquet(s"$staged/_gen")
+    Files.writeString(Paths.get(p, "_writer.lock"), "pid=crashed")
+    Files.move(Paths.get(p), Paths.get(p + ".old"))
+    Writers.vacuumPostings(spark, p)
+    assert(probe() == before, "the swap-window crash lost the root")
+    assert(Writers.postingsDeletes(spark, p).isEmpty,
+      "a complete staged root must roll forward, not back")
+    assert(!Files.exists(Paths.get(p + ".old")) && !Files.exists(Paths.get(staged)))
+    assert(!Writers.writerLockHeld(p))
+    Writers.mergePostings(spark, p, Seq(3L -> "beta gamma").toDF("doc_id", "text"))
+    assert(probe() == Set(0L, 3L))
   }
 
   test("jdbc upsert: postgres dialect renders the reference's ON CONFLICT form") {

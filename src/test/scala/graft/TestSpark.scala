@@ -9,7 +9,7 @@ object TestSpark {
     .master("local[2]")
     .config("spark.sql.shuffle.partitions", "2")
     .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+      s"${graft.sources.Writers.scratchRoot}/warehouse")
     .config("spark.sql.session.timeZone", "UTC")
     // nanos-typed events corpora need this at session build (Tables.events
     // no longer sets it as a read side-effect — VERDICT r11 #4)
