@@ -632,7 +632,7 @@ object Dedup {
 
   /** Incremental form of [[dedupTokenWindows]] — the q93 fresh-vs-state
     * shape at substring grain (and the core the streaming
-    * [[graft.streaming.StreamingJobs.incrementalWindowSink]] runs per
+    * [[graft.streaming.StreamingJobs.incrementalWindowBatch]] runs per
     * epoch): dedup `docs` against `known` window hashes IN ADDITION to
     * within-corpus keep-first. A known window strips ALL its occurrences
     * in `docs` (the prior corpus owns the canonical copy); an unknown

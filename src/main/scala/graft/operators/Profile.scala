@@ -47,7 +47,7 @@ object Profile {
     * max_v)`, one row per column from one keyed aggregation. Merge law
     * (the streaming form's contract): sum the three counts, min/max the
     * two extremes — partial moments over stream parts reduce to exactly
-    * the whole-stream moments, which is what lets `profileSink` keep
+    * the whole-stream moments, which is what lets `profileBatch` keep
     * |cols|-bounded state per epoch where the exact-distinct batch form
     * must see every value. */
   def moments(df: DataFrame, cols: Seq[String]): DataFrame =

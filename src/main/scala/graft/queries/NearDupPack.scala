@@ -675,7 +675,7 @@ object NearDupPack extends QueryPack {
 
     // L1 substring grain, INCREMENTAL: the q93 fresh-vs-state shape at
     // window grain (and the oracle-checked batch twin of the streaming
-    // incrementalWindowSink's epoch core). Docs with doc_id % 10 == 0
+    // incrementalWindowBatch's epoch core). Docs with doc_id % 10 == 0
     // are the fresh crawl; everything else is the already-ingested
     // corpus, represented by its distinct 8-token window hashes. A
     // state-known window strips ALL its fresh occurrences (the prior

@@ -1,9 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.Row
+
+import graft.operators.{Dedup, Delta, Profile, QualityModel, Retrieval, Similarity, Sketches, TextStats, Upsert}
+import graft.sources.Writers
 
 /** Structured Streaming surface — SURVEY §2.8 G10. The reference's daily
   * Airflow micro-batch + checksum delta (dags/master_etl.py:22,
@@ -24,6 +29,20 @@ import org.apache.spark.sql.Row
   * the driver. Batch queries stay the oracle-checked source of truth; these
   * jobs are covered by MemoryStream ScalaTests (no DuckDB oracle exists for
   * streaming semantics).
+  *
+  * The incremental sinks are the reference's scheduled run (compute this
+  * run's delta, upsert it into stored state) as one epoch body each: a
+  * `*Batch(batch, epochId, …)` that [[foreachEpoch]] starts on a stream.
+  * Every body runs the same epoch-sink protocol, written once in
+  * [[runEpoch]]: read each state leg's latest version as of
+  * `__epoch < epochId`, write the epoch's output over `outDir/epoch=N`,
+  * merge the fresh contribution stamped `__epoch = N` (evicting
+  * `__epoch <= N - maxEpochAge` when `maxEpochAge > 0`), then write one
+  * metrics row under `outDir/_metrics/epoch=N`. Replay contract:
+  * foreachBatch is at-least-once, and re-running the SAME
+  * (batch, epochId) leaves identical output and state — the prior read
+  * never sees the epoch's own rows, the output and metrics overwrite by
+  * epoch, and the `__epoch`-versioned keyed merge is content-idempotent.
   */
 object StreamingJobs {
 
@@ -60,20 +79,128 @@ object StreamingJobs {
     events.withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark(keys)
 
-  /** The reference's storage_etl as a streaming sink: every micro-batch
-    * MERGEs into the versioned parquet state (same Upsert.merge semantics
-    * as the batch path — foreachBatch is the batch-sink escape hatch, so
-    * sink behavior is identical in both modes). Caller `.start()`s the
-    * returned writer. */
-  def mergeStateSink(df: DataFrame, stateDir: String, pk: Seq[String],
-                     version: Column): DataStreamWriter[Row] =
-    df.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.Writers.mergeState(
-          batch.sparkSession, stateDir, batch, pk, version)
-        ()
-      }
+  /** Run `step(batch, epochId)` on every micro-batch of `df`; the caller
+    * `.start()`s the returned writer. The step is an epoch body with its
+    * arguments bound — `foreachEpoch(docs)(cmsBatch(_, _, col("w"),
+    * stateDir, outDir))` — or any batch action, e.g. the reference's
+    * storage_etl as a streaming sink: `Writers.mergeState` per
+    * micro-batch, the same upsert semantics as the batch path
+    * (foreachBatch is the batch-sink escape hatch, so sink behavior is
+    * identical in both modes). */
+  def foreachEpoch(df: DataFrame)(
+      step: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    df.writeStream.outputMode(OutputMode.Append).foreachBatch(step)
+
+  /** A versioned state leg of an epoch body: its directory and its merge
+    * key. Sinks that keep each epoch's contribution apart (the additive
+    * ones) put `__epoch` in the key. */
+  private final case class Leg(dir: String, key: Seq[String])
+
+  /** What an epoch body hands to [[runEpoch]]: its output, its fresh
+    * contribution per state leg, and its flagged count. The last two are
+    * evaluated after the output is written, so they may derive from
+    * [[Epoch.written]]. */
+  private final class Emit(val out: DataFrame,
+                           fresh: => Seq[(Leg, DataFrame)],
+                           flagged: => Long) {
+    def contributions: Seq[(Leg, DataFrame)] = fresh
+    def flaggedCount: Long = flagged
+  }
+
+  /** The epoch a [[runEpoch]] body runs in. */
+  private final class Epoch(val spark: SparkSession, val id: Long,
+                            outPath: String) {
+    /** `df` stamped with this epoch as its `__epoch` version. */
+    def stamp(df: DataFrame): DataFrame = df.withColumn("__epoch", lit(id))
+
+    /** `leg`'s state before this epoch: its latest committed version
+      * restricted to `__epoch < id` (a replay never sees its own
+      * half-merged rows), or, before the leg's first merge, an empty
+      * frame with the contribution's schema — `like`, stamped. */
+    def prior(leg: Leg, like: DataFrame): DataFrame =
+      Writers.readState(spark, leg.dir)
+        .fold(stamp(like).limit(0))(_.filter(col("__epoch") < id))
+
+    /** This epoch's output as written (read once, on first use). */
+    lazy val written: DataFrame = spark.read.parquet(outPath)
+  }
+
+  /** The law of the additive sinks (mergeable summaries — counts sum,
+    * minima re-reduce, per-epoch heads re-rank): the cumulative summary is
+    * `reduce` over the prior contributions ∪ the fresh one, both cut to
+    * the same `cols`. It equals one build over the concatenated stream,
+    * and it is summary-sized, never data-sized. */
+  private def cumulative(prior: DataFrame, fresh: DataFrame, cols: String*)(
+      reduce: DataFrame => DataFrame): DataFrame =
+    reduce(prior.select(cols.map(col): _*)
+      .unionByName(fresh.select(cols.map(col): _*)))
+
+  /** The epoch-sink protocol, written once for every `*Batch` body
+    * (`body` names it in errors). `run` supplies the epoch's output,
+    * fresh contributions and flagged count; this then
+    *  1. overwrites `outDir/epoch=N` with the output;
+    *  2. merges each leg's contribution, stamped `__epoch = N`, with
+    *     [[Writers.mergeState]] on the leg's key, `__epoch` as version,
+    *     evicting `__epoch <= N - maxEpochAge` when `maxEpochAge > 0`
+    *     (0 retains every epoch; a negative age is rejected) — a
+    *     deterministic function of (row epoch, N), so replay stays
+    *     content-idempotent;
+    *  3. overwrites `outDir/_metrics/epoch=N` with one row
+    *     `(input_rows, flagged, state_rows, flagged_kind, flagged_pairs)`
+    *     — the reference's per-run delta-count logging
+    *     (dags/scraping_etl.py:71), generalized. The `_` prefix keeps the
+    *     sidecar out of reads of `outDir`; `flagged_kind` names what
+    *     `flagged` counts; `flagged_pairs` repeats it only when that
+    *     kind is "flagged_pairs". `state_rows` counts the first leg at the
+    *     epoch's OWN horizon (`__epoch <= N`), so a replay re-records the
+    *     number it recorded the first time, unless eviction has since
+    *     removed rows from before its window; it is 0 without a leg.
+    *
+    * Spark actions per epoch, beside those the body runs itself (the
+    * bodies' docs name theirs): a schema read of each leg's latest
+    * version in `prior`; the output write; per leg, `mergeState`'s read of
+    * the latest version, its write and its read-back; then for the
+    * metrics: a count of `batch` — which re-runs the micro-batch's
+    * source and plan unless the body cached it (only the maintenance
+    * bodies do) — the body's flagged count (a read-back of the output,
+    * counted whole or filtered on its payload columns, or a count over
+    * the late rows; kmv, hist, rrf and profile emit a constant), a count
+    * of the first leg's latest version filtered on `__epoch` (which reads
+    * that column from every state file), and the one-row metrics
+    * write. */
+  private def runEpoch(body: String, batch: DataFrame, epochId: Long,
+                       outDir: String, maxEpochAge: Int = 0,
+                       flaggedKind: String = "flagged_pairs")(
+                       run: Epoch => Emit): Unit = {
+    require(maxEpochAge >= 0,
+      s"$body: maxEpochAge must be >= 0 (0 retains every epoch), got " +
+        s"$maxEpochAge at epoch $epochId")
+    val spark = batch.sparkSession
+    val outPath = s"$outDir/epoch=$epochId"
+    val ep = new Epoch(spark, epochId, outPath)
+    val emit = run(ep)
+    emit.out.write.mode("overwrite").parquet(outPath)
+    val legs = emit.contributions
+    val evict =
+      if (maxEpochAge > 0) Some(col("__epoch") <= epochId - maxEpochAge)
+      else None
+    legs.foreach { case (leg, fresh) =>
+      Writers.mergeState(spark, leg.dir, ep.stamp(fresh), leg.key,
+        col("__epoch"), evict)
+    }
+    val inputRows = batch.count()
+    val flagged = emit.flaggedCount
+    val stateRows = legs.headOption
+      .flatMap { case (leg, _) => Writers.readState(spark, leg.dir) }
+      .fold(0L)(_.filter(col("__epoch") <= epochId).count())
+    import spark.implicits._
+    Seq((inputRows, flagged, stateRows, flaggedKind))
+      .toDF("input_rows", "flagged", "state_rows", "flagged_kind")
+      .withColumn("flagged_pairs",
+        when(col("flagged_kind") === "flagged_pairs", col("flagged")))
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$outDir/_metrics/epoch=$epochId")
+  }
 
   /** L1 streaming: incremental near-dup against a persisted bucket state —
     * the production shape of q93 (`Dedup.incrementalLshCandidates`). Each
@@ -96,7 +223,8 @@ object StreamingJobs {
     * current epoch (a replayed batch must not see its own half-merged
     * buckets), flagged pairs overwrite a per-epoch directory instead of
     * blind-appending, and the (id, band)-keyed state merge with the epoch
-    * as version is content-idempotent under replay.
+    * as version is content-idempotent under replay — calling this twice
+    * with the SAME (batch, epochId) leaves identical output and state.
     *
     * `maxEpochAge` is the state-compaction knob (VERDICT r7 #3 — without
     * it the bucket table grows per epoch forever, becoming its own 100 TB
@@ -108,65 +236,33 @@ object StreamingJobs {
     * window dedup contract. 0 = retain forever (the exact contract).
     * Eviction depends only on (row epoch, current epochId), so replay
     * stays content-idempotent. */
-  def incrementalDedupSink(docs: DataFrame, idCol: String,
-                           tokensCol: org.apache.spark.sql.Column,
-                           stateDir: String, outDir: String,
-                           k: Int = 8, bands: Int = 4, rowsPerBand: Int = 2,
-                           maxBucketSize: Int = 50,
-                           maxEpochAge: Int = 0,
-                           withinBatch: Boolean = false): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        incrementalDedupBatch(batch, epochId, idCol, tokensCol,
-          stateDir, outDir, k, bands, rowsPerBand, maxBucketSize, maxEpochAge,
-          withinBatch)
-      }
-
-  /** One epoch of [[incrementalDedupSink]], exposed so replay semantics
-    * are testable outside a streaming query: calling this twice with the
-    * SAME (batch, epochId) must leave identical output and state. */
   def incrementalDedupBatch(batch: DataFrame, epochId: Long, idCol: String,
-                            tokensCol: org.apache.spark.sql.Column,
+                            tokensCol: Column,
                             stateDir: String, outDir: String,
                             k: Int = 8, bands: Int = 4, rowsPerBand: Int = 2,
                             maxBucketSize: Int = 50,
                             maxEpochAge: Int = 0,
-                            withinBatch: Boolean = false): Unit = {
-    val spark = batch.sparkSession
-    val sigs = batch.select(col(idCol),
-      graft.operators.Dedup.minhashSignature(tokensCol, k).as("sig"))
-    val buckets = graft.operators.Dedup.lshBuckets(
-        sigs, idCol, col("sig"), bands, rowsPerBand)
-      .withColumn("__epoch", lit(epochId))
-    val state = graft.sources.Writers.latestVersion(stateDir) match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v$v")
-        .filter(col("__epoch") < epochId)
-      case None => buckets.limit(0)
+                            withinBatch: Boolean = false): Unit =
+    runEpoch("incrementalDedupBatch", batch, epochId, outDir,
+        maxEpochAge) { ep =>
+      val sigs = batch.select(col(idCol),
+        Dedup.minhashSignature(tokensCol, k).as("sig"))
+      val buckets = Dedup.lshBuckets(sigs, idCol, col("sig"), bands, rowsPerBand)
+      val leg = Leg(stateDir, Seq(idCol, "band"))
+      val cross = Dedup.incrementalLshCandidates(
+        ep.prior(leg, buckets).drop("__epoch"), buckets, maxBucketSize)
+      val flagged = if (!withinBatch) cross else {
+        // same-batch pairs via the batch-form self-pairing (same cap);
+        // lshCandidates orients id_a < id_b, so the LATER id is flagged
+        // against the earlier — deterministic under replay
+        val within = Dedup.lshCandidates(buckets, maxBucketSize)
+          .select(col("id_b").as("id_new"), col("id_a").as("id_old"))
+        cross.unionByName(within).distinct()
+      }
+      new Emit(flagged, Seq(leg -> buckets), ep.written.count())
     }
-    val cross = graft.operators.Dedup.incrementalLshCandidates(
-      state.drop("__epoch"), buckets.drop("__epoch"), maxBucketSize)
-    val flagged = if (!withinBatch) cross else {
-      // same-batch pairs via the batch-form self-pairing (same cap);
-      // lshCandidates orients id_a < id_b, so the LATER id is flagged
-      // against the earlier — deterministic under replay
-      val within = graft.operators.Dedup.lshCandidates(
-          buckets.drop("__epoch"), maxBucketSize)
-        .select(col("id_b").as("id_new"), col("id_a").as("id_old"))
-      cross.unionByName(within).distinct()
-    }
-    flagged.write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-    graft.sources.Writers.mergeState(
-      spark, stateDir, buckets, Seq(idCol, "band"), col("__epoch"),
-      evict = if (maxEpochAge > 0) Some(col("__epoch") <= epochId - maxEpochAge)
-              else None)
-    writeEpochMetrics(spark, outDir, epochId,
-      inputRows = batch.count(),
-      flagged = spark.read.parquet(s"$outDir/epoch=$epochId").count(),
-      stateDir = stateDir)
-  }
 
-  /** [[incrementalDedupSink]]'s EXACT-grain sibling at paragraph level:
+  /** [[incrementalDedupBatch]]'s EXACT-grain sibling at paragraph level:
     * each micro-batch of documents is paragraph-deduplicated against
     * everything already ingested (the crawl-ingest form of
     * [[graft.operators.Dedup.dedupParagraphs]] — dedup each new crawl
@@ -190,79 +286,50 @@ object StreamingJobs {
     * sub-corpus-sized: a q112-style substring sink persists one state
     * row per w-token window — ~n_tokens rows, a state table the size of
     * the tokenized corpus under exact-forever retention. That grain
-    * EXISTS as [[incrementalWindowSink]], but its 100 TB stance is
+    * EXISTS as [[incrementalWindowBatch]], but its 100 TB stance is
     * inverted: `maxEpochAge` bounding is the REQUIRED configuration
     * (state plateaus at the N-epoch working set), exact-forever is the
     * bounded-corpus special case, and the periodic batch
     * [[graft.operators.Dedup.dedupTokenWindows]] pass over the
     * materialized corpus remains the exact-grain source of truth. */
-  def incrementalParagraphSink(docs: DataFrame, idCol: String,
-                               textCol: String, sep: String,
-                               stateDir: String, outDir: String,
-                               maxEpochAge: Int = 0): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        incrementalParagraphBatch(batch, epochId, idCol, textCol, sep,
-          stateDir, outDir, maxEpochAge)
-      }
-
-  /** One epoch of [[incrementalParagraphSink]], exposed for replay
-    * testing (same (batch, epochId) twice ⇒ identical output and
-    * state). */
   def incrementalParagraphBatch(batch: DataFrame, epochId: Long,
                                 idCol: String, textCol: String, sep: String,
                                 stateDir: String, outDir: String,
-                                maxEpochAge: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    val quoted = java.util.regex.Pattern.quote(sep)
-    val paras = batch
-      .select(col(idCol), posexplode(split(col(textCol), quoted))
-        .as(Seq("__pos", "__para")))
-      .filter(trim(col("__para")) =!= "")
-      .withColumn("__h", md5(trim(col("__para"))))
-    val byOccurrence = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__h"))
-      .orderBy(col(idCol).asc_nulls_first, col("__pos").asc_nulls_first)
-    val batchWinners = paras
-      .withColumn("__rn", row_number().over(byOccurrence))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-    val state = graft.sources.Writers.latestVersion(stateDir) match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v$v")
-        .filter(col("__epoch") < epochId)
-      case None => spark.emptyDataFrame
-        .select(lit("").as("__h"), lit(0L).as("__epoch")).limit(0)
+                                maxEpochAge: Int = 0): Unit =
+    runEpoch("incrementalParagraphBatch", batch, epochId, outDir,
+        maxEpochAge, "docs_fully_deduped") { ep =>
+      val quoted = java.util.regex.Pattern.quote(sep)
+      val paras = batch
+        .select(col(idCol), posexplode(split(col(textCol), quoted))
+          .as(Seq("__pos", "__para")))
+        .filter(trim(col("__para")) =!= "")
+        .withColumn("__h", md5(trim(col("__para"))))
+      val byOccurrence = Window.partitionBy(col("__h"))
+        .orderBy(col(idCol).asc_nulls_first, col("__pos").asc_nulls_first)
+      val batchWinners = paras
+        .withColumn("__rn", row_number().over(byOccurrence))
+        .filter(col("__rn") === 1)
+        .drop("__rn")
+      val leg = Leg(stateDir, Seq("__h"))
+      val state = ep.prior(leg, paras.select(col("__h")))
+      val kept = batchWinners
+        .join(state.select(col("__h")), Seq("__h"), "left_anti")
+      val cleaned = kept
+        .groupBy(col(idCol))
+        .agg(count(lit(1)).as("n_kept"),
+          array_join(
+            transform(sort_array(collect_list(struct(col("__pos"), col("__para")))),
+              p => p.getField("__para")), sep).as("clean_text"))
+      val out = batch.select(col(idCol))
+        .join(cleaned, Seq(idCol), "left")
+        .select(col(idCol),
+          coalesce(col("clean_text"), lit("")).as("clean_text"),
+          coalesce(col("n_kept"), lit(0L)).as("n_kept"))
+      new Emit(out, Seq(leg -> kept.select(col("__h")).distinct()),
+        ep.written.filter(col("n_kept") === 0).count())
     }
-    val kept = batchWinners
-      .join(state.select(col("__h")), Seq("__h"), "left_anti")
-    val cleaned = kept
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_kept"),
-        array_join(
-          transform(sort_array(collect_list(struct(col("__pos"), col("__para")))),
-            p => p.getField("__para")), sep).as("clean_text"))
-    batch.select(col(idCol))
-      .join(cleaned, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("clean_text"), lit("")).as("clean_text"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"))
-      .write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-    graft.sources.Writers.mergeState(
-      spark, stateDir,
-      kept.select(col("__h")).distinct().withColumn("__epoch", lit(epochId)),
-      Seq("__h"), col("__epoch"),
-      evict = if (maxEpochAge > 0) Some(col("__epoch") <= epochId - maxEpochAge)
-              else None)
-    writeEpochMetrics(spark, outDir, epochId,
-      inputRows = batch.count(),
-      flagged = spark.read.parquet(s"$outDir/epoch=$epochId")
-        .filter(col("n_kept") === 0).count(),
-      stateDir = stateDir,
-      flaggedKind = "docs_fully_deduped")
-  }
 
-  /** [[incrementalParagraphSink]]'s SUBSTRING-grain sibling — the
+  /** [[incrementalParagraphBatch]]'s SUBSTRING-grain sibling — the
     * bounded-state streaming form of
     * [[graft.operators.Dedup.dedupTokenWindows]] (the trade VERDICT r11
     * #8 asked to close): each micro-batch's overlapping w-token windows
@@ -291,50 +358,23 @@ object StreamingJobs {
     * original epoch — refreshing it on sight would make a replayed
     * probe's `< epochId` filter miss it and change the replay's
     * output). */
-  def incrementalWindowSink(docs: DataFrame, idCol: String,
-                            toks: Column, w: Int,
-                            stateDir: String, outDir: String,
-                            maxEpochAge: Int = 0): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        incrementalWindowBatch(batch, epochId, idCol, toks, w,
-          stateDir, outDir, maxEpochAge)
-      }
-
-  /** One epoch of [[incrementalWindowSink]], exposed for replay
-    * testing. */
   def incrementalWindowBatch(batch: DataFrame, epochId: Long,
                              idCol: String, toks: Column, w: Int,
                              stateDir: String, outDir: String,
-                             maxEpochAge: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    val state = graft.sources.Writers.latestVersion(stateDir) match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v$v")
-        .filter(col("__epoch") < epochId)
-      case None => spark.emptyDataFrame
-        .select(lit("").as("__h"), lit(0L).as("__epoch")).limit(0)
+                             maxEpochAge: Int = 0): Unit =
+    runEpoch("incrementalWindowBatch", batch, epochId, outDir,
+        maxEpochAge, "docs_shortened") { ep =>
+      val leg = Leg(stateDir, Seq("__h"))
+      val state = ep.prior(leg, batch.select(lit("").as("__h")))
+      // the batch operator IS the epoch core: covered = within-batch
+      // non-first occurrences OR any occurrence of a state-known window
+      // (prior epochs own the canonical copy); `novel` is exactly the
+      // first-occurrence-and-unknown hash set the next epoch must know
+      val (cleaned, novel) = Dedup.dedupTokenWindowsIncremental(
+        batch, idCol, toks, w, state.select(col("__h")))
+      new Emit(cleaned, Seq(leg -> novel),
+        ep.written.filter(col("n_kept") < col("n_tok")).count())
     }
-    // the batch operator IS the epoch core: covered = within-batch
-    // non-first occurrences OR any occurrence of a state-known window
-    // (prior epochs own the canonical copy); `novel` is exactly the
-    // first-occurrence-and-unknown hash set the next epoch must know
-    val (cleaned, novel) = graft.operators.Dedup.dedupTokenWindowsIncremental(
-      batch, idCol, toks, w, state.select(col("__h")))
-    cleaned.write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-    graft.sources.Writers.mergeState(
-      spark, stateDir,
-      novel.withColumn("__epoch", lit(epochId)),
-      Seq("__h"), col("__epoch"),
-      evict = if (maxEpochAge > 0) Some(col("__epoch") <= epochId - maxEpochAge)
-              else None)
-    writeEpochMetrics(spark, outDir, epochId,
-      inputRows = batch.count(),
-      flagged = spark.read.parquet(s"$outDir/epoch=$epochId")
-        .filter(col("n_kept") < col("n_tok")).count(),
-      stateDir = stateDir,
-      flaggedKind = "docs_shortened")
-  }
 
   /** Mergeable-sketch streaming state — the count-min frequency monitor
     * ([[graft.operators.Sketches]]) as an incremental sink. Each
@@ -356,55 +396,27 @@ object StreamingJobs {
     * contribution instead of double-counting (additive state is the one
     * place blind re-merge would silently corrupt — keying by epoch is
     * what makes `+` replay-safe); probes filter `__epoch < epochId`
-    * before adding the pinned fresh contribution; output overwrites by
+    * before adding the fresh contribution; output overwrites by
     * epoch. */
-  def cmsSink(items: DataFrame, itemCol: Column,
-              stateDir: String, outDir: String,
-              depth: Int = 4, width: Int = 2048, threshold: Long = 100,
-              maxEpochAge: Int = 0): DataStreamWriter[Row] =
-    items.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        cmsBatch(batch, epochId, itemCol, stateDir, outDir,
-          depth, width, threshold, maxEpochAge)
-      }
-
-  /** One epoch of [[cmsSink]], exposed for replay/merge testing. */
   def cmsBatch(batch: DataFrame, epochId: Long, itemCol: Column,
                stateDir: String, outDir: String,
                depth: Int = 4, width: Int = 2048, threshold: Long = 100,
-               maxEpochAge: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    val fresh = graft.operators.Sketches.cmsBuild(batch, itemCol, depth, width)
-      .withColumn("__epoch", lit(epochId))
-    val prior = graft.sources.Writers.latestVersion(stateDir) match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v$v")
-        .filter(col("__epoch") < epochId)
-      case None => fresh.limit(0)
+               maxEpochAge: Int = 0): Unit =
+    runEpoch("cmsBatch", batch, epochId, outDir, maxEpochAge,
+        "heavy_hitters") { ep =>
+      val fresh = Sketches.cmsBuild(batch, itemCol, depth, width)
+      val leg = Leg(stateDir, Seq("r", "bucket", "__epoch"))
+      // cumulative sketch at THIS epoch's horizon (≤ depth·width rows)
+      val sketch = cumulative(ep.prior(leg, fresh), fresh, "r", "bucket", "cnt")(
+        _.groupBy("r", "bucket").agg(sum("cnt").as("cnt")))
+      val hitters = Sketches.cmsEstimate(
+          batch.select(itemCol.as("item")).distinct(), col("item"),
+          sketch, depth, width)
+        .filter(col("est") >= threshold)
+      new Emit(hitters, Seq(leg -> fresh), ep.written.count())
     }
-    // cumulative sketch at THIS epoch's horizon: bucket-wise sum of the
-    // retained prior contributions + the pinned fresh one (≤ depth·width
-    // rows — the whole reduction is sketch-sized, never data-sized)
-    val cumulative = prior.select(col("r"), col("bucket"), col("cnt"))
-      .unionByName(fresh.select(col("r"), col("bucket"), col("cnt")))
-      .groupBy("r", "bucket").agg(sum("cnt").as("cnt"))
-    val hitters = graft.operators.Sketches.cmsEstimate(
-        batch.select(itemCol.as("item")).distinct(), col("item"),
-        cumulative, depth, width)
-      .filter(col("est") >= threshold)
-    hitters.write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-    graft.sources.Writers.mergeState(
-      spark, stateDir, fresh, Seq("r", "bucket", "__epoch"), col("__epoch"),
-      evict = if (maxEpochAge > 0) Some(col("__epoch") <= epochId - maxEpochAge)
-              else None)
-    writeEpochMetrics(spark, outDir, epochId,
-      inputRows = batch.count(),
-      flagged = spark.read.parquet(s"$outDir/epoch=$epochId").count(),
-      stateDir = stateDir,
-      flaggedKind = "heavy_hitters")
-  }
 
-  /** [[cmsSink]]'s distinct-count sibling — the KMV sketch
+  /** [[cmsBatch]]'s distinct-count sibling — the KMV sketch
     * ([[graft.operators.Sketches.kmvMinima]]/`kmvEstimate`, q135's
     * operator) as an incremental sink: each micro-batch contributes its
     * own ≤ k minima, the cumulative (or `maxEpochAge`-sliding) distinct
@@ -417,53 +429,29 @@ object StreamingJobs {
     * answers: "how many distinct URLs/keys have we ingested (all-time,
     * or over the last N epochs)" without data-sized distinct state.
     *
-    * Replay contract, family-standard (the cmsSink shape): per-epoch
+    * Replay contract, family-standard (the cmsBatch shape): per-epoch
     * contributions keyed (h, __epoch) — a replayed epoch overwrites its
     * own rows, probes filter `__epoch < epochId`, output overwrites by
     * epoch. `maxEpochAge` N > 0 retains only the last N epochs'
     * minima → a sliding-window distinct monitor. */
-  def kmvSink(items: DataFrame, itemCol: Column,
-              stateDir: String, outDir: String,
-              k: Int = 256, maxEpochAge: Int = 0): DataStreamWriter[Row] =
-    items.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        kmvBatch(batch, epochId, itemCol, stateDir, outDir, k, maxEpochAge)
-      }
-
-  /** One epoch of [[kmvSink]], exposed for replay/merge testing. */
   def kmvBatch(batch: DataFrame, epochId: Long, itemCol: Column,
                stateDir: String, outDir: String,
-               k: Int = 256, maxEpochAge: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    val fresh = graft.operators.Sketches.kmvMinima(batch, itemCol, k)
-      .withColumn("__epoch", lit(epochId))
-    val prior = graft.sources.Writers.latestVersion(stateDir) match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v$v")
-        .filter(col("__epoch") < epochId)
-      case None => fresh.limit(0)
+               k: Int = 256, maxEpochAge: Int = 0): Unit =
+    runEpoch("kmvBatch", batch, epochId, outDir, maxEpochAge,
+        "distinct_estimates_emitted") { ep =>
+      val fresh = Sketches.kmvMinima(batch, itemCol, k)
+      val leg = Leg(stateDir, Seq("h", "__epoch"))
+      new Emit(cumulative(ep.prior(leg, fresh), fresh, "h")(
+        Sketches.kmvEstimate(_, k)), Seq(leg -> fresh), 1L)
     }
-    val estimate = graft.operators.Sketches.kmvEstimate(
-      prior.select(col("h")).unionByName(fresh.select(col("h"))), k)
-    estimate.write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-    graft.sources.Writers.mergeState(
-      spark, stateDir, fresh, Seq("h", "__epoch"), col("__epoch"),
-      evict = if (maxEpochAge > 0) Some(col("__epoch") <= epochId - maxEpochAge)
-              else None)
-    writeEpochMetrics(spark, outDir, epochId,
-      inputRows = batch.count(),
-      flagged = 1L,
-      stateDir = stateDir,
-      flaggedKind = "distinct_estimates_emitted")
-  }
 
-  /** [[cmsSink]]/[[kmvSink]]'s QUANTILE sibling — the log-linear
+  /** [[cmsBatch]]/[[kmvBatch]]'s QUANTILE sibling — the log-linear
     * histogram sketch ([[graft.operators.Sketches.histBuild]], q143's
     * operator) as an incremental sink: each micro-batch contributes its
     * own `(bin, cnt)` rows, and the cumulative (or `maxEpochAge`-sliding)
     * quantile estimates are emitted to `outDir/epoch=N` as one
     * `(n, p50, …)` row — the streaming latency/size-distribution monitor
-    * next to kmvSink's distinct counter and cmsSink's frequency alarm.
+    * next to kmvBatch's distinct counter and cmsBatch's frequency alarm.
     * State is ≤ 64·2^kb rows PER RETAINED EPOCH regardless of stream
     * volume, and counts are ADDITIVE, so the cumulative estimate equals
     * a one-shot build over the concatenated stream (StreamingSpec pins
@@ -473,47 +461,20 @@ object StreamingJobs {
     *
     * Replay contract, family-standard: contributions keyed
     * (bin, __epoch) — a replayed epoch overwrites its own rows; probes
-    * filter `__epoch < epochId` before adding the pinned fresh
-    * contribution; output overwrites by epoch. */
-  def histSink(items: DataFrame, value: Column,
-               stateDir: String, outDir: String,
-               kb: Int = 5, pcts: Seq[Int] = Seq(50, 90, 99),
-               maxEpochAge: Int = 0): DataStreamWriter[Row] =
-    items.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        histBatch(batch, epochId, value, stateDir, outDir, kb, pcts,
-          maxEpochAge)
-      }
-
-  /** One epoch of [[histSink]], exposed for replay/merge testing. */
+    * filter `__epoch < epochId` before adding the fresh contribution;
+    * output overwrites by epoch. */
   def histBatch(batch: DataFrame, epochId: Long, value: Column,
                 stateDir: String, outDir: String,
                 kb: Int = 5, pcts: Seq[Int] = Seq(50, 90, 99),
-                maxEpochAge: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    val fresh = graft.operators.Sketches.histBuild(batch, value, kb)
-      .withColumn("__epoch", lit(epochId))
-    val prior = graft.sources.Writers.latestVersion(stateDir) match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v$v")
-        .filter(col("__epoch") < epochId)
-      case None => fresh.limit(0)
+                maxEpochAge: Int = 0): Unit =
+    runEpoch("histBatch", batch, epochId, outDir, maxEpochAge,
+        "quantile_rows_emitted") { ep =>
+      val fresh = Sketches.histBuild(batch, value, kb)
+      val leg = Leg(stateDir, Seq("bin", "__epoch"))
+      val hist = cumulative(ep.prior(leg, fresh), fresh, "bin", "cnt")(
+        _.groupBy("bin").agg(sum("cnt").as("cnt")))
+      new Emit(Sketches.histQuantiles(hist, kb, pcts), Seq(leg -> fresh), 1L)
     }
-    val cumulative = prior.select(col("bin"), col("cnt"))
-      .unionByName(fresh.select(col("bin"), col("cnt")))
-      .groupBy("bin").agg(sum("cnt").as("cnt"))
-    val estimates = graft.operators.Sketches.histQuantiles(cumulative, kb, pcts)
-    estimates.write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-    graft.sources.Writers.mergeState(
-      spark, stateDir, fresh, Seq("bin", "__epoch"), col("__epoch"),
-      evict = if (maxEpochAge > 0) Some(col("__epoch") <= epochId - maxEpochAge)
-              else None)
-    writeEpochMetrics(spark, outDir, epochId,
-      inputRows = batch.count(),
-      flagged = 1L,
-      stateDir = stateDir,
-      flaggedKind = "quantile_rows_emitted")
-  }
 
   /** The sketch-sink family's QA member — the per-column dataset
     * profile (q154's operator) maintained incrementally: each
@@ -539,74 +500,41 @@ object StreamingJobs {
     * exact fields while `est_distinct` equals `kmvDistinct` over it
     * (both StreamingSpec-pinned).
     *
-    * Replay contract, family-standard: moment rows keyed
-    * (col_name, __epoch), minima rows keyed (col_name, h, __epoch) —
-    * a replayed epoch overwrites its own contributions; probes filter
-    * `__epoch < epochId`; output overwrites by epoch. */
-  def profileSink(rows: DataFrame, cols: Seq[String],
-                  stateDir: String, outDir: String,
-                  k: Int = 256, maxEpochAge: Int = 0): DataStreamWriter[Row] =
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        profileBatch(batch, epochId, cols, stateDir, outDir, k, maxEpochAge)
-      }
-
-  /** One epoch of [[profileSink]], exposed for replay/merge testing. */
+    * Replay contract, family-standard: two legs, moment rows under
+    * `stateDir/moments` keyed (col_name, __epoch) and minima rows under
+    * `stateDir/kmv` keyed (col_name, h, __epoch) — a replayed epoch
+    * overwrites its own contributions; probes filter
+    * `__epoch < epochId`; output overwrites by epoch; `state_rows`
+    * counts the moments leg. */
   def profileBatch(batch: DataFrame, epochId: Long, cols: Seq[String],
                    stateDir: String, outDir: String,
-                   k: Int = 256, maxEpochAge: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    val momentsDir = s"$stateDir/moments"
-    val kmvDir = s"$stateDir/kmv"
-    val freshM = graft.operators.Profile.moments(batch, cols)
-      .withColumn("__epoch", lit(epochId))
-    val freshK = graft.operators.Sketches.kmvMinimaBy(
-        graft.operators.Profile.melt(batch, cols), col("col_name"),
-        col("v"), k)
-      .withColumnRenamed("g", "col_name")
-      .withColumn("__epoch", lit(epochId))
-    def prior(dir: String, fresh: DataFrame): DataFrame =
-      graft.sources.Writers.latestVersion(dir) match {
-        case Some(v) => spark.read.parquet(s"$dir/v$v")
-          .filter(col("__epoch") < epochId)
-        case None => fresh.limit(0)
-      }
-    val momentCols =
-      Seq("col_name", "n_rows", "n_null", "sum_len", "min_v", "max_v")
-    val reduced = prior(momentsDir, freshM)
-      .select(momentCols.map(col): _*)
-      .unionByName(freshM.select(momentCols.map(col): _*))
-      .groupBy(col("col_name"))
-      .agg(sum(col("n_rows")).as("n_rows"),
-        sum(col("n_null")).as("n_null"),
-        sum(col("sum_len")).as("sum_len"),
-        min(col("min_v")).as("min_v"),
-        max(col("max_v")).as("max_v"))
-    val est = graft.operators.Sketches.kmvEstimateBy(
-      prior(kmvDir, freshK).select(col("col_name").as("g"), col("h"))
-        .unionByName(freshK.select(col("col_name").as("g"), col("h"))), k)
-      .select(col("g").as("col_name"), col("est").as("est_distinct"))
-    graft.operators.Profile.finishMoments(reduced)
-      // an all-null column contributes no minima → no est row → 0 distinct
-      .join(est, Seq("col_name"), "left")
-      .withColumn("est_distinct", coalesce(col("est_distinct"), lit(0.0)))
-      .write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-    val evict =
-      if (maxEpochAge > 0) Some(col("__epoch") <= epochId - maxEpochAge)
-      else None
-    graft.sources.Writers.mergeState(
-      spark, momentsDir, freshM, Seq("col_name", "__epoch"), col("__epoch"),
-      evict = evict)
-    graft.sources.Writers.mergeState(
-      spark, kmvDir, freshK, Seq("col_name", "h", "__epoch"), col("__epoch"),
-      evict = evict)
-    writeEpochMetrics(spark, outDir, epochId,
-      inputRows = batch.count(),
-      flagged = cols.size.toLong,
-      stateDir = momentsDir,
-      flaggedKind = "profile_rows_emitted")
-  }
+                   k: Int = 256, maxEpochAge: Int = 0): Unit =
+    runEpoch("profileBatch", batch, epochId, outDir, maxEpochAge,
+        "profile_rows_emitted") { ep =>
+      val moments = Leg(s"$stateDir/moments", Seq("col_name", "__epoch"))
+      val minima = Leg(s"$stateDir/kmv", Seq("col_name", "h", "__epoch"))
+      val freshM = Profile.moments(batch, cols)
+      val freshK = Sketches.kmvMinimaBy(
+          Profile.melt(batch, cols), col("col_name"), col("v"), k)
+        .withColumnRenamed("g", "col_name")
+      val reduced = cumulative(ep.prior(moments, freshM), freshM,
+          "col_name", "n_rows", "n_null", "sum_len", "min_v", "max_v")(
+        _.groupBy(col("col_name"))
+          .agg(sum(col("n_rows")).as("n_rows"),
+            sum(col("n_null")).as("n_null"),
+            sum(col("sum_len")).as("sum_len"),
+            min(col("min_v")).as("min_v"),
+            max(col("max_v")).as("max_v")))
+      val est = cumulative(ep.prior(minima, freshK), freshK, "col_name", "h")(
+          m => Sketches.kmvEstimateBy(m.withColumnRenamed("col_name", "g"), k))
+        .select(col("g").as("col_name"), col("est").as("est_distinct"))
+      val card = Profile.finishMoments(reduced)
+        // an all-null column contributes no minima → no est row → 0 distinct
+        .join(est, Seq("col_name"), "left")
+        .withColumn("est_distinct", coalesce(col("est_distinct"), lit(0.0)))
+      new Emit(card, Seq(moments -> freshM, minima -> freshK),
+        cols.size.toLong)
+    }
 
   /** The sketch-sink family's VOCABULARY-mining member — incremental
     * collocation mining (q148's operator as a sink): each micro-batch
@@ -623,63 +551,35 @@ object StreamingJobs {
     * `maxEpochAge` N > 0 keeps a sliding vocabulary window — TRENDING
     * phrases, not all-time.
     *
-    * Replay contract, family-standard ([[cmsSink]]): contributions
+    * Replay contract, family-standard ([[cmsBatch]]): contributions
     * keyed (side, wa, wb, __epoch) — side 'u' rows carry (w, '') —
     * a replayed epoch overwrites its own rows; probes filter
-    * `__epoch < epochId` before adding the pinned fresh contribution;
+    * `__epoch < epochId` before adding the fresh contribution;
     * output overwrites by epoch. */
-  def collocSink(docs: DataFrame, tokensCol: Column,
-                 stateDir: String, outDir: String,
-                 minCount: Long, delta: Long = 2L,
-                 maxEpochAge: Int = 0): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        collocBatch(batch, epochId, tokensCol, stateDir, outDir,
-          minCount, delta, maxEpochAge)
-      }
-
-  /** One epoch of [[collocSink]], exposed for replay/merge testing. */
   def collocBatch(batch: DataFrame, epochId: Long, tokensCol: Column,
                   stateDir: String, outDir: String,
                   minCount: Long, delta: Long = 2L,
-                  maxEpochAge: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    import graft.operators.TextStats
-    val fresh = TextStats.unigramCounts(batch, tokensCol)
-      .select(lit("u").as("side"), col("w").as("wa"), lit("").as("wb"),
-        col("c"))
-      .unionByName(TextStats.bigramCounts(batch, tokensCol)
-        .select(lit("b").as("side"), col("wa"), col("wb"),
-          col("c_ab").as("c")))
-      .withColumn("__epoch", lit(epochId))
-    val prior = graft.sources.Writers.latestVersion(stateDir) match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v$v")
-        .filter(col("__epoch") < epochId)
-      case None => fresh.limit(0)
+                  maxEpochAge: Int = 0): Unit =
+    runEpoch("collocBatch", batch, epochId, outDir, maxEpochAge,
+        "collocations_emitted") { ep =>
+      val fresh = TextStats.unigramCounts(batch, tokensCol)
+        .select(lit("u").as("side"), col("w").as("wa"), lit("").as("wb"),
+          col("c"))
+        .unionByName(TextStats.bigramCounts(batch, tokensCol)
+          .select(lit("b").as("side"), col("wa"), col("wb"),
+            col("c_ab").as("c")))
+      val leg = Leg(stateDir, Seq("side", "wa", "wb", "__epoch"))
+      val counts = cumulative(ep.prior(leg, fresh), fresh, "side", "wa", "wb", "c")(
+        _.groupBy("side", "wa", "wb").agg(sum("c").as("c")))
+      val scored = TextStats.scoreCollocations(
+        counts.filter(col("side") === "u")
+          .select(col("wa").as("w"), col("c")),
+        counts.filter(col("side") === "b")
+          .select(col("wa"), col("wb"), col("c").as("c_ab"))
+          .filter(col("c_ab") >= minCount),
+        delta)
+      new Emit(scored, Seq(leg -> fresh), ep.written.count())
     }
-    val cumulative = prior.select(col("side"), col("wa"), col("wb"), col("c"))
-      .unionByName(fresh.select(col("side"), col("wa"), col("wb"), col("c")))
-      .groupBy("side", "wa", "wb").agg(sum("c").as("c"))
-    val scored = TextStats.scoreCollocations(
-      cumulative.filter(col("side") === "u")
-        .select(col("wa").as("w"), col("c")),
-      cumulative.filter(col("side") === "b")
-        .select(col("wa"), col("wb"), col("c").as("c_ab"))
-        .filter(col("c_ab") >= minCount),
-      delta)
-    scored.write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-    graft.sources.Writers.mergeState(
-      spark, stateDir, fresh, Seq("side", "wa", "wb", "__epoch"),
-      col("__epoch"),
-      evict = if (maxEpochAge > 0) Some(col("__epoch") <= epochId - maxEpochAge)
-              else None)
-    writeEpochMetrics(spark, outDir, epochId,
-      inputRows = batch.count(),
-      flagged = spark.read.parquet(s"$outDir/epoch=$epochId").count(),
-      stateDir = stateDir,
-      flaggedKind = "collocations_emitted")
-  }
 
   /** The retrieval tier's streaming story (VERDICT r13 #8 — q136's
     * fusion had no incremental form): maintain the HYBRID top-`n` of a
@@ -698,7 +598,7 @@ object StreamingJobs {
     * top-n(top-n(s1) ∪ top-n(s2)) for row-local scores (StreamingSpec
     * pins the equality against the batch composition).
     *
-    * Scale/state shape, family-standard ([[kmvSink]]): state is each
+    * Scale/state shape, family-standard ([[kmvBatch]]): state is each
     * epoch's per-arm BATCH-LOCAL head — ≤ 2n rows per retained epoch,
     * corpus-independent — and the merge re-ranks ≤ retained·2n rows
     * (driver-bounded windows over arm partitions, never a corpus
@@ -710,63 +610,36 @@ object StreamingJobs {
     * sliding-freshness retrieval head (late docs age out with their
     * epoch). Duplicate ids across epochs (re-scored docs) collapse to
     * their best score per arm before ranking. */
-  def rrfTopKSink(docs: DataFrame, idCol: String, scoreA: Column,
-                  scoreB: Column, stateDir: String, outDir: String,
-                  n: Int = 100, c: Double = 60.0,
-                  maxEpochAge: Int = 0): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        rrfTopKBatch(batch, epochId, idCol, scoreA, scoreB,
-          stateDir, outDir, n, c, maxEpochAge)
-      }
-
-  /** One epoch of [[rrfTopKSink]], exposed for equivalence/replay
-    * tests. */
   def rrfTopKBatch(batch: DataFrame, epochId: Long, idCol: String,
                    scoreA: Column, scoreB: Column,
                    stateDir: String, outDir: String,
                    n: Int = 100, c: Double = 60.0,
-                   maxEpochAge: Int = 0): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = batch.sparkSession
-    def armHead(arm: String, s: Column): DataFrame = batch
-      .filter(s.isNotNull)
-      .select(lit(arm).as("arm"), col(idCol).cast("string").as("id"),
-        s.cast("double").as("score"))
-      .orderBy(col("score").desc, col("id").asc)
-      .limit(n)
-    val fresh = armHead("a", scoreA).unionByName(armHead("b", scoreB))
-      .withColumn("__epoch", lit(epochId))
-    val prior = graft.sources.Writers.latestVersion(stateDir) match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v$v")
-        .filter(col("__epoch") < epochId)
-      case None => fresh.limit(0)
+                   maxEpochAge: Int = 0): Unit =
+    runEpoch("rrfTopKBatch", batch, epochId, outDir, maxEpochAge,
+        "fused_heads_emitted") { ep =>
+      def armHead(arm: String, s: Column): DataFrame = batch
+        .filter(s.isNotNull)
+        .select(lit(arm).as("arm"), col(idCol).cast("string").as("id"),
+          s.cast("double").as("score"))
+        .orderBy(col("score").desc, col("id").asc)
+        .limit(n)
+      val fresh = armHead("a", scoreA).unionByName(armHead("b", scoreB))
+      val leg = Leg(stateDir, Seq("arm", "id", "__epoch"))
+      // cumulative per-arm heads over ≤ retained·2n contribution rows:
+      // best score per (arm, id), then rank 1..n per arm
+      val rankW = Window.partitionBy(col("arm"))
+        .orderBy(col("score").desc, col("id").asc)
+      val heads = cumulative(ep.prior(leg, fresh), fresh, "arm", "id", "score")(
+        _.groupBy(col("arm"), col("id"))
+          .agg(max(col("score")).as("score"))
+          .withColumn("r", row_number().over(rankW).cast("long"))
+          .filter(col("r") <= n))
+      val fused = Retrieval.rrfFuse(
+        heads.filter(col("arm") === "a").select(col("id"), col("r").as("r_lex")),
+        heads.filter(col("arm") === "b").select(col("id"), col("r").as("r_vec")),
+        "id", "r_lex", "r_vec", c)
+      new Emit(fused, Seq(leg -> fresh), 1L)
     }
-    // cumulative per-arm heads over ≤ retained·2n contribution rows:
-    // best score per (arm, id), then rank 1..n per arm
-    val rankW = Window.partitionBy(col("arm"))
-      .orderBy(col("score").desc, col("id").asc)
-    val heads = prior.unionByName(fresh)
-      .groupBy(col("arm"), col("id"))
-      .agg(max(col("score")).as("score"))
-      .withColumn("r", row_number().over(rankW).cast("long"))
-      .filter(col("r") <= n)
-    val fused = graft.operators.Retrieval.rrfFuse(
-      heads.filter(col("arm") === "a").select(col("id"), col("r").as("r_lex")),
-      heads.filter(col("arm") === "b").select(col("id"), col("r").as("r_vec")),
-      "id", "r_lex", "r_vec", c)
-    fused.write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-    graft.sources.Writers.mergeState(
-      spark, stateDir, fresh, Seq("arm", "id", "__epoch"), col("__epoch"),
-      evict = if (maxEpochAge > 0) Some(col("__epoch") <= epochId - maxEpochAge)
-              else None)
-    writeEpochMetrics(spark, outDir, epochId,
-      inputRows = batch.count(),
-      flagged = 1L,
-      stateDir = stateDir,
-      flaggedKind = "fused_heads_emitted")
-  }
 
   /** The sketch-sink family's LEXICAL-RETRIEVAL member — the positional
     * inverted index as a sink (q151/q158's stored table built
@@ -785,89 +658,60 @@ object StreamingJobs {
     * contribution ((token, id, pos, __epoch) PK, the family rule) and
     * is idempotent, but a doc re-delivered in a LATER epoch with
     * different content would leave its old postings standing (the
-    * mutable-doc case routes through [[mergeStateSink]]'s keyed upsert
+    * mutable-doc case routes through a keyed `Writers.mergeState` upsert
     * instead — rebuild the index from merged docs). `assertAppendOnly`
     * makes that contract CHECKABLE instead of purely documented (ADVICE
     * r15): each epoch compares the fresh batch's re-delivered doc_ids'
     * posting sets against prior state (probe ∝ the re-delivered subset,
-    * never state×state) and RAISES on a content change — for sources
-    * that promise append-only but can't prove it. `maxEpochAge` > 0
-    * keeps a sliding index (recent-epoch retrieval only). State is
-    * posting-mass-bounded per retained epoch — the postings ARE the
-    * product, as with every layout table; at production scale the state
-    * directory is the token-partitioned layout
-    * ([[graft.sources.Writers.ensurePostings]]) and probes prune to
-    * their tokens' directories. */
-  def invertedIndexSink(docs: DataFrame, idCol: String, tokensCol: Column,
-                        stateDir: String, outDir: String,
-                        probePhrase: Seq[String],
-                        maxEpochAge: Int = 0,
-                        assertAppendOnly: Boolean = false): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        invertedIndexBatch(batch, epochId, idCol, tokensCol, stateDir,
-          outDir, probePhrase, maxEpochAge, assertAppendOnly)
-      }
-
-  /** One epoch of [[invertedIndexSink]], exposed for replay/merge
-    * testing. */
+    * never state×state, one extra collect) and RAISES on a content
+    * change — for sources that promise append-only but can't prove it.
+    * `maxEpochAge` > 0 keeps a sliding index (recent-epoch retrieval
+    * only). State is posting-mass-bounded per retained epoch — the
+    * postings ARE the product, as with every layout table; at
+    * production scale the state directory is the token-partitioned
+    * layout ([[graft.sources.Writers.ensurePostings]]) and probes prune
+    * to their tokens' directories. */
   def invertedIndexBatch(batch: DataFrame, epochId: Long, idCol: String,
                          tokensCol: Column, stateDir: String,
                          outDir: String, probePhrase: Seq[String],
                          maxEpochAge: Int = 0,
-                         assertAppendOnly: Boolean = false): Unit = {
-    val spark = batch.sparkSession
-    import graft.operators.Retrieval
-    val fresh = Retrieval.invertedIndex(batch, idCol, tokensCol)
-      .withColumn("__epoch", lit(epochId))
-    val prior = graft.sources.Writers.latestVersion(stateDir) match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v$v")
-        .filter(col("__epoch") < epochId)
-      case None => fresh.limit(0)
+                         assertAppendOnly: Boolean = false): Unit =
+    runEpoch("invertedIndexBatch", batch, epochId, outDir, maxEpochAge,
+        "phrase_match_docs") { ep =>
+      val fresh = Retrieval.invertedIndex(batch, idCol, tokensCol)
+      val leg = Leg(stateDir, Seq("token", idCol, "pos", "__epoch"))
+      val prior = ep.prior(leg, fresh)
+      if (assertAppendOnly) {
+        // re-delivered ids only (semi-join — probe ∝ |fresh|, the family
+        // incremental rule); content changed ⇔ the (token, pos) multiset
+        // differs, detected as any (id, token, pos) present on exactly one
+        // side. A replay of the SAME content matches both sides and passes
+        // (crash-replay idempotence is unaffected).
+        val redelivered = fresh.select(col(idCol)).distinct()
+          .join(prior.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
+        val sideOf = (df: DataFrame, p: Int, f: Int) =>
+          df.select(col(idCol), col("token"), col("pos"))
+            .join(redelivered, Seq(idCol), "left_semi")
+            .select(col(idCol), col("token"), col("pos"),
+              lit(p.toLong).as("__p"), lit(f.toLong).as("__f"))
+        val changed = sideOf(prior, 1, 0).unionByName(sideOf(fresh, 0, 1))
+          .groupBy(col(idCol), col("token"), col("pos"))
+          .agg(sum(col("__p")).as("__np"), sum(col("__f")).as("__nf"))
+          .filter(col("__np") === 0 || col("__nf") === 0)
+          .select(col(idCol)).distinct()
+          .orderBy(col(idCol)).limit(5)
+          .collect().map(_.get(0))
+        require(changed.isEmpty,
+          s"invertedIndexBatch append-only contract violated at epoch " +
+            s"$epochId: doc ids ${changed.mkString(", ")} were re-delivered " +
+            s"with different posting sets — their old postings would stand " +
+            s"and corrupt phrase results; upsert mutable docs with " +
+            s"Writers.mergeState and rebuild the index from merged docs")
+      }
+      val matches = cumulative(prior, fresh, "token", idCol, "pos")(
+        Retrieval.phraseSearch(_, idCol, probePhrase))
+      new Emit(matches, Seq(leg -> fresh), ep.written.count())
     }
-    if (assertAppendOnly) {
-      // re-delivered ids only (semi-join — probe ∝ |fresh|, the family
-      // incremental rule); content changed ⇔ the (token, pos) multiset
-      // differs, detected as any (id, token, pos) present on exactly one
-      // side. A replay of the SAME content matches both sides and passes
-      // (crash-replay idempotence is unaffected).
-      val redelivered = fresh.select(col(idCol)).distinct()
-        .join(prior.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
-      val sideOf = (df: DataFrame, p: Int, f: Int) =>
-        df.select(col(idCol), col("token"), col("pos"))
-          .join(redelivered, Seq(idCol), "left_semi")
-          .select(col(idCol), col("token"), col("pos"),
-            lit(p.toLong).as("__p"), lit(f.toLong).as("__f"))
-      val changed = sideOf(prior, 1, 0).unionByName(sideOf(fresh, 0, 1))
-        .groupBy(col(idCol), col("token"), col("pos"))
-        .agg(sum(col("__p")).as("__np"), sum(col("__f")).as("__nf"))
-        .filter(col("__np") === 0 || col("__nf") === 0)
-        .select(col(idCol)).distinct()
-        .orderBy(col(idCol)).limit(5)
-        .collect().map(_.get(0))
-      require(changed.isEmpty,
-        s"invertedIndexSink append-only contract violated at epoch " +
-          s"$epochId: doc ids ${changed.mkString(", ")} were re-delivered " +
-          s"with different posting sets — their old postings would stand " +
-          s"and corrupt phrase results; route mutable docs through " +
-          s"mergeStateSink and rebuild the index from merged docs")
-    }
-    val cumulative = prior.select(col("token"), col(idCol), col("pos"))
-      .unionByName(fresh.select(col("token"), col(idCol), col("pos")))
-    Retrieval.phraseSearch(cumulative, idCol, probePhrase)
-      .write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-    graft.sources.Writers.mergeState(
-      spark, stateDir, fresh, Seq("token", idCol, "pos", "__epoch"),
-      col("__epoch"),
-      evict = if (maxEpochAge > 0) Some(col("__epoch") <= epochId - maxEpochAge)
-              else None)
-    writeEpochMetrics(spark, outDir, epochId,
-      inputRows = batch.count(),
-      flagged = spark.read.parquet(s"$outDir/epoch=$epochId").count(),
-      stateDir = stateDir,
-      flaggedKind = "phrase_match_docs")
-  }
 
   /** Streaming ANN index — the FAISS deployment contract made a sink:
     * TRAIN ONCE, ADD FOREVER. The first NON-EMPTY batch trains the two
@@ -877,12 +721,15 @@ object StreamingJobs {
     * codes) and FREEZES them under `stateDir/artifacts`; every batch
     * then codes its vectors against the frozen artifacts (row-local,
     * exact, replayable) and merges (id, codes, bucket, __epoch) into
-    * the versioned state — PK (id, __epoch), the invertedIndexSink
-    * append-only contract (ids are content-addressed vectors; a
-    * re-observed id keeps its FIRST coding at probe time; mutable
-    * vectors route through [[mergeStateSink]]). Each epoch emits the
-    * probe query's cumulative [[graft.operators.Similarity
-    * .ivfPqSearchStored]] top-k to `outDir/epoch=N`.
+    * the versioned state leg `stateDir/codes` — PK (id, __epoch), the
+    * invertedIndexBatch append-only contract (ids are content-addressed
+    * vectors; a re-observed id keeps its FIRST coding at probe time;
+    * mutable vectors route through a keyed `Writers.mergeState`
+    * upsert). Each epoch emits the probe query's cumulative
+    * [[graft.operators.Similarity.ivfPqSearchStored]] top-k to
+    * `outDir/epoch=N`. An empty epoch before training (checked with one
+    * `isEmpty` job) emits an empty result and a metrics row with zero
+    * counts; it trains nothing and merges nothing.
     *
     * Freezing is WHY this streams: retraining codebook/centroids per
     * epoch would re-code every prior vector (a full-state rewrite per
@@ -894,83 +741,57 @@ object StreamingJobs {
     * index built offline and cut over, not an in-place mutation.
     * `maxEpochAge` > 0 slides the searchable window (codes age out by
     * first-seen epoch — the family eviction contract). */
-  def ivfCodesSink(vecs: DataFrame, idCol: String, vecCol: String,
-                   stateDir: String, outDir: String,
-                   queryVec: Seq[Float], nprobe: Int, k: Int,
-                   coarseK: Int = 8, m: Int = 4, subDim: Int = 16,
-                   probeDims: Int = 4,
-                   maxEpochAge: Int = 0): DataStreamWriter[Row] =
-    vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        ivfCodesBatch(batch, epochId, idCol, vecCol, stateDir, outDir,
-          queryVec, nprobe, k, coarseK, m, subDim, probeDims, maxEpochAge)
-      }
-
-  /** One epoch of [[ivfCodesSink]], exposed for replay/merge testing. */
   def ivfCodesBatch(batch: DataFrame, epochId: Long, idCol: String,
                     vecCol: String, stateDir: String, outDir: String,
                     queryVec: Seq[Float], nprobe: Int, k: Int,
                     coarseK: Int = 8, m: Int = 4, subDim: Int = 16,
-                    probeDims: Int = 4, maxEpochAge: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    import graft.operators.Similarity
-    val artDone = java.nio.file.Paths.get(s"$stateDir/artifacts/_done")
-    if (!java.nio.file.Files.exists(artDone)) {
-      if (batch.isEmpty) {
+                    probeDims: Int = 4, maxEpochAge: Int = 0): Unit =
+    runEpoch("ivfCodesBatch", batch, epochId, outDir, maxEpochAge,
+        "ann_topk_rows") { ep =>
+      val spark = ep.spark
+      val artDone = Paths.get(s"$stateDir/artifacts/_done")
+      val trained = Files.exists(artDone)
+      if (!trained && batch.isEmpty)
         // nothing to train on and nothing searchable yet: an empty
         // epoch before training emits an empty result, not a crash
-        batch.sparkSession.range(0)
-          .select(col("id").as(idCol), lit(0.0).as("adist"))
-          .write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-        return
+        new Emit(spark.range(0).select(col("id").as(idCol),
+          lit(0.0).as("adist")), Nil, 0L)
+      else {
+        if (!trained) {
+          val coarse = batch
+            .orderBy(col(idCol).asc_nulls_last).limit(coarseK)
+            .select(col(idCol).cast("long").as("cid"), col(vecCol).as("cvec"))
+          val (_, book) = Similarity.ivfPqIndexTables(
+            batch, idCol, vecCol, coarse, "cid", "cvec", m, subDim, probeDims)
+          coarse.write.mode("overwrite")
+            .parquet(s"$stateDir/artifacts/centroids")
+          book.write.mode("overwrite").parquet(s"$stateDir/artifacts/codebook")
+          // marker last: a crash mid-write retrains on replay (the
+          // postings-marker discipline); content is a pure function of the
+          // training batch, so a replayed train overwrites with itself
+          Files.writeString(artDone, "1")
+        }
+        val cents = spark.read.parquet(s"$stateDir/artifacts/centroids")
+        val book = spark.read.parquet(s"$stateDir/artifacts/codebook")
+        val (coded, _) = Similarity.ivfPqIndexTables(
+          batch, idCol, vecCol, cents, "cid", "cvec", m, subDim, probeDims)
+        val fresh = ep.stamp(coded)
+        val leg = Leg(s"$stateDir/codes", Seq(idCol, "__epoch"))
+        // probe view: first-seen coding wins for a re-observed id (the
+        // append-only contract applied at read, so a duplicate send can
+        // never surface one id twice in a top-k)
+        val searchable = Upsert.keepFirst(
+          ep.prior(leg, fresh).unionByName(fresh), Seq(idCol),
+          Seq(col("__epoch").asc))
+        val query = spark.range(1)
+          .select(typedLit(queryVec).cast("array<float>").as("qvec"))
+        new Emit(Similarity.ivfPqSearchStored(searchable, book, cents, idCol,
+            query, "qvec", nprobe, k, m, subDim, probeDims),
+          Seq(leg -> fresh), ep.written.count())
       }
-      val coarse = batch
-        .orderBy(col(idCol).asc_nulls_last).limit(coarseK)
-        .select(col(idCol).cast("long").as("cid"), col(vecCol).as("cvec"))
-      val (_, book) = Similarity.ivfPqIndexTables(
-        batch, idCol, vecCol, coarse, "cid", "cvec", m, subDim, probeDims)
-      coarse.write.mode("overwrite")
-        .parquet(s"$stateDir/artifacts/centroids")
-      book.write.mode("overwrite").parquet(s"$stateDir/artifacts/codebook")
-      // marker last: a crash mid-write retrains on replay (the
-      // postings-marker discipline); content is a pure function of the
-      // training batch, so a replayed train overwrites with itself
-      java.nio.file.Files.writeString(artDone, "1")
     }
-    val cents = spark.read.parquet(s"$stateDir/artifacts/centroids")
-    val book = spark.read.parquet(s"$stateDir/artifacts/codebook")
-    val (coded, _) = Similarity.ivfPqIndexTables(
-      batch, idCol, vecCol, cents, "cid", "cvec", m, subDim, probeDims)
-    val fresh = coded.withColumn("__epoch", lit(epochId))
-    val prior = graft.sources.Writers.latestVersion(s"$stateDir/codes") match {
-      case Some(v) => spark.read.parquet(s"$stateDir/codes/v$v")
-        .filter(col("__epoch") < epochId)
-      case None => fresh.limit(0)
-    }
-    // probe view: first-seen coding wins for a re-observed id (the
-    // append-only contract applied at read, so a duplicate send can
-    // never surface one id twice in a top-k)
-    val searchable = graft.operators.Upsert.keepFirst(
-      prior.unionByName(fresh), Seq(idCol), Seq(col("__epoch").asc))
-    val query = spark.range(1)
-      .select(typedLit(queryVec).cast("array<float>").as("qvec"))
-    Similarity.ivfPqSearchStored(searchable, book, cents, idCol,
-      query, "qvec", nprobe, k, m, subDim, probeDims)
-      .write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-    graft.sources.Writers.mergeState(
-      spark, s"$stateDir/codes", fresh, Seq(idCol, "__epoch"),
-      col("__epoch"),
-      evict = if (maxEpochAge > 0)
-        Some(col("__epoch") <= epochId - maxEpochAge) else None)
-    writeEpochMetrics(spark, outDir, epochId,
-      inputRows = batch.count(),
-      flagged = spark.read.parquet(s"$outDir/epoch=$epochId").count(),
-      stateDir = s"$stateDir/codes",
-      flaggedKind = "ann_topk_rows")
-  }
 
-  /** [[cmsSink]]'s membership sibling — the Bloom ingest gate
+  /** [[cmsBatch]]'s membership sibling — the Bloom ingest gate
     * ([[graft.operators.Sketches.bloomBuild]]/`bloomProbe`) as an
     * incremental sink: each micro-batch's keys probe the persisted bit
     * state, rows whose key is DEFINITELY NEW (any unset bit) pass to
@@ -986,7 +807,8 @@ object StreamingJobs {
     * ~10 bits per expected distinct key for ~1% FP at k=4; when the
     * stream outgrows m, the right move is a bigger rebuilt filter, not
     * living with saturation. The exact-grain alternative with linear
-    * state is [[mergeStateSink]]/[[incrementalParagraphSink]].
+    * state is a keyed `Writers.mergeState` upsert or
+    * [[incrementalParagraphBatch]].
     *
     * Replay contract, family-standard: bit rows are keyed by bit id and
     * merge NOVEL-ONLY (a state-known bit keeps its first epoch — the
@@ -1000,56 +822,30 @@ object StreamingJobs {
     * first-seen contract as the paragraph/window sinks, and the
     * direction a dedup gate can tolerate (an occasional duplicate
     * passes; nothing new is ever silently retained as "seen"). */
-  def bloomGateSink(rows: DataFrame, keyCol: Column,
-                    stateDir: String, outDir: String,
-                    k: Int = 4, m: Int = 1 << 20,
-                    maxEpochAge: Int = 0): DataStreamWriter[Row] =
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        bloomGateBatch(batch, epochId, keyCol, stateDir, outDir,
-          k, m, maxEpochAge)
-      }
-
-  /** One epoch of [[bloomGateSink]], exposed for replay testing. */
   def bloomGateBatch(batch: DataFrame, epochId: Long, keyCol: Column,
                      stateDir: String, outDir: String,
                      k: Int = 4, m: Int = 1 << 20,
-                     maxEpochAge: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    val state = graft.sources.Writers.latestVersion(stateDir) match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v$v")
-        .filter(col("__epoch") < epochId)
-      case None => spark.emptyDataFrame
-        .select(lit(0L).as("bit"), lit(0L).as("__epoch")).limit(0)
+                     maxEpochAge: Int = 0): Unit =
+    runEpoch("bloomGateBatch", batch, epochId, outDir, maxEpochAge,
+        "rows_passed") { ep =>
+      // the WHOLE batch's bits (passed or not — a dropped FP key's bits
+      // are already set by definition); only the novel ones merge
+      val freshBits = Sketches.bloomBuild(batch, keyCol, k, m)
+      val leg = Leg(stateDir, Seq("bit"))
+      val state = ep.prior(leg, freshBits).select(col("bit"))
+      // definitely-new rows: at least one of the key's k bits unset in the
+      // prior state (no within-batch dedup here — two copies of a new key
+      // in ONE batch both pass; the gate is cross-epoch, and the exact
+      // within-batch grain belongs to keepFirst on the passed output).
+      // bloomProbe's re-group folds FULLY-identical duplicate rows into
+      // one (its documented keyed-table contract) — batches should be
+      // row-distinct, which any id-carrying ingest batch is.
+      val passed = Sketches.bloomProbe(batch, keyCol, state, k, m)
+        .filter(col("maybe_member") === 0)
+        .drop("maybe_member")
+      new Emit(passed, Seq(leg -> freshBits.join(state, Seq("bit"), "left_anti")),
+        ep.written.count())
     }
-    // definitely-new rows: at least one of the key's k bits unset in the
-    // prior state (no within-batch dedup here — two copies of a new key
-    // in ONE batch both pass; the gate is cross-epoch, and the exact
-    // within-batch grain belongs to keepFirst on the passed output).
-    // bloomProbe's re-group folds FULLY-identical duplicate rows into
-    // one (its documented keyed-table contract) — batches should be
-    // row-distinct, which any id-carrying ingest batch is.
-    val passed = graft.operators.Sketches.bloomProbe(
-        batch, keyCol, state.select(col("bit")), k, m)
-      .filter(col("maybe_member") === 0)
-      .drop("maybe_member")
-    passed.write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-    // merge the WHOLE batch's bits (passed or not — a dropped FP key's
-    // bits are already set by definition), novel bits only
-    val freshBits = graft.operators.Sketches.bloomBuild(batch, keyCol, k, m)
-      .withColumn("__epoch", lit(epochId))
-    val novel = freshBits.join(state.select(col("bit")), Seq("bit"), "left_anti")
-    graft.sources.Writers.mergeState(
-      spark, stateDir, novel, Seq("bit"), col("__epoch"),
-      evict = if (maxEpochAge > 0) Some(col("__epoch") <= epochId - maxEpochAge)
-              else None)
-    writeEpochMetrics(spark, outDir, epochId,
-      inputRows = batch.count(),
-      flagged = spark.read.parquet(s"$outDir/epoch=$epochId").count(),
-      stateDir = stateDir,
-      flaggedKind = "rows_passed")
-  }
 
   /** [[graft.operators.TimeSeries.gapFill]]'s incremental form (VERDICT
     * r12 #8): per-key state holds the fill seed — (last emitted period,
@@ -1073,87 +869,64 @@ object StreamingJobs {
     * Replay contract, family-standard: state rows are keyed
     * (key, __epoch) — per-epoch APPENDS, never in-place seed updates —
     * so the probe's `__epoch < epochId` filter reconstructs exactly the
-    * pre-epoch view (the cmsSink lesson: state a replay must re-derive
+    * pre-epoch view (the cmsBatch lesson: state a replay must re-derive
     * cannot be overwritten in place), with the latest retained row per
-    * key as the live seed; output overwrites by epoch. State grows by
+    * key as the live seed; the new seed is the latest period per key of
+    * the output as written; output overwrites by epoch. State grows by
     * |touched keys| per epoch; `maxEpochAge` bounds it to the sliding
     * working set. */
-  def gapFillSink(events: DataFrame, key: Column, ts: Column, value: Column,
-                  stateDir: String, outDir: String, grain: String = "hour",
-                  maxEpochAge: Int = 0): DataStreamWriter[Row] =
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        gapFillBatch(batch, epochId, key, ts, value, stateDir, outDir,
-          grain, maxEpochAge)
-      }
-
-  /** One epoch of [[gapFillSink]], exposed for equivalence/replay tests. */
   def gapFillBatch(batch: DataFrame, epochId: Long, key: Column, ts: Column,
                    value: Column, stateDir: String, outDir: String,
-                   grain: String = "hour", maxEpochAge: Int = 0): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = batch.sparkSession
-    val step = expr(s"interval 1 $grain")
-    val fresh = batch.select(key.as("key"), date_trunc(grain, ts).as("period"),
-      value.as("__v"))
-    val stateAll = graft.sources.Writers.latestVersion(stateDir) match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v$v")
-        .filter(col("__epoch") < epochId)
-      case None => fresh.select(col("key"), col("period").as("last_period"),
-        lit(0.0).as("last_value"), lit(-1L).as("__epoch")).limit(0)
+                   grain: String = "hour", maxEpochAge: Int = 0): Unit =
+    runEpoch("gapFillBatch", batch, epochId, outDir, maxEpochAge,
+        "late_period_rows_dropped") { ep =>
+      val step = expr(s"interval 1 $grain")
+      val fresh = batch.select(key.as("key"), date_trunc(grain, ts).as("period"),
+        value.as("__v"))
+      val leg = Leg(stateDir, Seq("key", "__epoch"))
+      val stateAll = ep.prior(leg, fresh.select(col("key"),
+        col("period").as("last_period"), lit(0.0).as("last_value")))
+      // live seed = latest retained state row per key
+      val seed = Upsert.keepFirst(stateAll, Seq("key"), Seq(col("__epoch").desc))
+        .select(col("key"), col("last_period"), col("last_value"))
+      val agg = fresh.groupBy(col("key"), col("period"))
+        .agg(graft.queries.Q.sumExact(col("__v")).as("v"))
+        .join(seed, Seq("key"), "left")
+      val late = agg.filter(col("last_period").isNotNull &&
+        col("period") <= col("last_period"))
+      val kept = agg.filter(col("last_period").isNull ||
+        col("period") > col("last_period"))
+      // per-key grid: resume one grain after the seed (covering inter-epoch
+      // gaps), or at the key's own first period when unseeded
+      val grid = kept.groupBy(col("key"))
+        .agg(min(col("period")).as("pmin"), max(col("period")).as("pmax"),
+          max(col("last_period")).as("last_period"),
+          max(col("last_value")).as("last_value"))
+        .select(col("key"), col("last_value"),
+          explode(sequence(
+            coalesce(col("last_period") + step, col("pmin")),
+            col("pmax"), step)).as("period"))
+      val w = Window.partitionBy(col("key")).orderBy(col("period"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val filled = grid
+        .join(kept.select(col("key"), col("period"), col("v")),
+          Seq("key", "period"), "left")
+        .select(col("key"), col("period"),
+          coalesce(last(col("v"), ignoreNulls = true).over(w),
+            col("last_value")).as("value_ff"),
+          col("v").isNull.cast("int").as("was_gap"))
+      new Emit(filled,
+        Seq(leg -> Upsert.keepFirst(ep.written, Seq("key"),
+            Seq(col("period").desc))
+          .select(col("key"), col("period").as("last_period"),
+            col("value_ff").as("last_value"))),
+        late.count())
     }
-    // live seed = latest retained state row per key
-    val seed = graft.operators.Upsert.keepFirst(
-      stateAll, Seq("key"), Seq(col("__epoch").desc))
-      .select(col("key"), col("last_period"), col("last_value"))
-    val agg = fresh.groupBy(col("key"), col("period"))
-      .agg(graft.queries.Q.sumExact(col("__v")).as("v"))
-      .join(seed, Seq("key"), "left")
-    val late = agg.filter(col("last_period").isNotNull &&
-      col("period") <= col("last_period"))
-    val kept = agg.filter(col("last_period").isNull ||
-      col("period") > col("last_period"))
-    // per-key grid: resume one grain after the seed (covering inter-epoch
-    // gaps), or at the key's own first period when unseeded
-    val grid = kept.groupBy(col("key"))
-      .agg(min(col("period")).as("pmin"), max(col("period")).as("pmax"),
-        max(col("last_period")).as("last_period"),
-        max(col("last_value")).as("last_value"))
-      .select(col("key"), col("last_value"),
-        explode(sequence(
-          coalesce(col("last_period") + step, col("pmin")),
-          col("pmax"), step)).as("period"))
-    val w = Window.partitionBy(col("key")).orderBy(col("period"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val filled = grid
-      .join(kept.select(col("key"), col("period"), col("v")),
-        Seq("key", "period"), "left")
-      .select(col("key"), col("period"),
-        coalesce(last(col("v"), ignoreNulls = true).over(w),
-          col("last_value")).as("value_ff"),
-        col("v").isNull.cast("int").as("was_gap"))
-    filled.write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-    val emitted = spark.read.parquet(s"$outDir/epoch=$epochId")
-    val newSeed = graft.operators.Upsert.keepFirst(
-      emitted, Seq("key"), Seq(col("period").desc))
-      .select(col("key"), col("period").as("last_period"),
-        col("value_ff").as("last_value"), lit(epochId).as("__epoch"))
-    graft.sources.Writers.mergeState(
-      spark, stateDir, newSeed, Seq("key", "__epoch"), col("__epoch"),
-      evict = if (maxEpochAge > 0) Some(col("__epoch") <= epochId - maxEpochAge)
-              else None)
-    writeEpochMetrics(spark, outDir, epochId,
-      inputRows = batch.count(),
-      flagged = late.count(),
-      stateDir = stateDir,
-      flaggedKind = "late_period_rows_dropped")
-  }
 
   /** [[graft.operators.Delta.scd2]]'s incremental sink — SCD2 history
     * maintenance at ingest (q144's operator; the epoch core is
     * [[graft.operators.Delta.scd2Merge]], whose equality to the full
-    * rebuild is spec-pinned batch-side — the q120/incrementalWindowSink
+    * rebuild is spec-pinned batch-side — the q120/incrementalWindowBatch
     * pattern of oracle-checked epoch cores). Per-key state holds only
     * the OPEN version's observation row + its version number; each
     * micro-batch folds its observations in and emits the REBUILT version
@@ -1163,7 +936,7 @@ object StreamingJobs {
     * (StreamingSpec pins the equivalence): a version's row only ever
     * changes by closing its interval, and each change re-emits it.
     *
-    * Late contract (the gapFillSink shape): an observation at or before
+    * Late contract (the gapFillBatch shape): an observation at or before
     * its key's open-version `(tsCol, tieCols…)` is DROPPED and counted
     * in the metrics sidecar (`late_observations_dropped`) — history
     * rewrites belong to a batch backfill, not a bounded-state sink.
@@ -1176,72 +949,48 @@ object StreamingJobs {
     * Replay contract, family-standard: state keyed (keyCols…, __epoch) —
     * per-epoch APPENDS, never in-place seed updates — so the probe's
     * `__epoch < epochId` filter reconstructs exactly the pre-epoch view;
+    * the new seed is the current version rows of the output as written;
     * output overwrites by epoch. */
-  def scd2Sink(obs: DataFrame, keyCols: Seq[String], tsCol: String,
-               tieCols: Seq[String], trackCols: Seq[String],
-               stateDir: String, outDir: String,
-               maxEpochAge: Int = 0): DataStreamWriter[Row] =
-    obs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        scd2Batch(batch, epochId, keyCols, tsCol, tieCols, trackCols,
-          stateDir, outDir, maxEpochAge)
-      }
-
-  /** One epoch of [[scd2Sink]], exposed for equivalence/replay tests. */
   def scd2Batch(batch: DataFrame, epochId: Long, keyCols: Seq[String],
                 tsCol: String, tieCols: Seq[String], trackCols: Seq[String],
                 stateDir: String, outDir: String,
-                maxEpochAge: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    val ordCols = tsCol +: tieCols
-    val stateAll = graft.sources.Writers.latestVersion(stateDir) match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v$v")
-        .filter(col("__epoch") < epochId)
-      case None => batch.withColumn("version_nr", lit(1L))
-        .withColumn("__epoch", lit(-1L)).limit(0)
+                maxEpochAge: Int = 0): Unit =
+    runEpoch("scd2Batch", batch, epochId, outDir, maxEpochAge,
+        "late_observations_dropped") { ep =>
+      val ordCols = tsCol +: tieCols
+      val leg = Leg(stateDir, keyCols :+ "__epoch")
+      val stateAll = ep.prior(leg, batch.withColumn("version_nr", lit(1L)))
+      // live seed = the latest retained open-version row per key
+      val seed = Upsert.keepFirst(stateAll, keyCols, Seq(col("__epoch").desc))
+        .drop("__epoch")
+      // late gate: observations must sort strictly after the open
+      // version's (ts, tie…) — compared as one struct so timestamp ties
+      // fall through to the tie columns
+      val seedKeyed = seed.select(
+        (keyCols.map(col) :+
+          struct(ordCols.map(col): _*).as("__seed_ord")): _*)
+      val gated = batch.join(seedKeyed, keyCols, "left")
+      val obsOrd = struct(ordCols.map(col): _*)
+      val late = gated.filter(col("__seed_ord").isNotNull &&
+        obsOrd <= col("__seed_ord"))
+      val kept = gated.filter(col("__seed_ord").isNull ||
+        obsOrd > col("__seed_ord")).drop("__seed_ord")
+      // the seed rows ARE an scd2 history of only-open versions
+      val history = seed
+        .withColumn("valid_from", col(tsCol))
+        .withColumn("valid_to", lit(Delta.OpenVersion))
+        .withColumn("is_current", lit(1))
+      val merged = Delta.scd2Merge(
+        history, kept, keyCols, tsCol, tieCols, trackCols)
+      val touched = merged.join(
+        kept.select(keyCols.map(col): _*).distinct(), keyCols, "left_semi")
+      new Emit(touched,
+        Seq(leg -> ep.written.filter(col("is_current") === 1)
+          .drop("valid_from", "valid_to", "is_current")),
+        late.count())
     }
-    // live seed = the latest retained open-version row per key
-    val seed = graft.operators.Upsert.keepFirst(
-      stateAll, keyCols, Seq(col("__epoch").desc)).drop("__epoch")
-    // late gate: observations must sort strictly after the open
-    // version's (ts, tie…) — compared as one struct so timestamp ties
-    // fall through to the tie columns
-    val seedKeyed = seed.select(
-      (keyCols.map(col) :+
-        struct(ordCols.map(col): _*).as("__seed_ord")): _*)
-    val gated = batch.join(seedKeyed, keyCols, "left")
-    val obsOrd = struct(ordCols.map(col): _*)
-    val late = gated.filter(col("__seed_ord").isNotNull &&
-      obsOrd <= col("__seed_ord"))
-    val kept = gated.filter(col("__seed_ord").isNull ||
-      obsOrd > col("__seed_ord")).drop("__seed_ord")
-    // the seed rows ARE an scd2 history of only-open versions
-    val history = seed
-      .withColumn("valid_from", col(tsCol))
-      .withColumn("valid_to", lit(graft.operators.Delta.OpenVersion))
-      .withColumn("is_current", lit(1))
-    val merged = graft.operators.Delta.scd2Merge(
-      history, kept, keyCols, tsCol, tieCols, trackCols)
-    val touched = merged.join(
-      kept.select(keyCols.map(col): _*).distinct(), keyCols, "left_semi")
-    touched.write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-    val emitted = spark.read.parquet(s"$outDir/epoch=$epochId")
-    val newSeed = emitted.filter(col("is_current") === 1)
-      .drop("valid_from", "valid_to", "is_current")
-      .withColumn("__epoch", lit(epochId))
-    graft.sources.Writers.mergeState(
-      spark, stateDir, newSeed, keyCols :+ "__epoch", col("__epoch"),
-      evict = if (maxEpochAge > 0) Some(col("__epoch") <= epochId - maxEpochAge)
-              else None)
-    writeEpochMetrics(spark, outDir, epochId,
-      inputRows = batch.count(),
-      flagged = late.count(),
-      stateDir = stateDir,
-      flaggedKind = "late_observations_dropped")
-  }
 
-  /** [[incrementalDedupSink]]'s vector twin: each micro-batch of
+  /** [[incrementalDedupBatch]]'s vector twin: each micro-batch of
     * embeddings probes the persisted IVF bucket state for cosine
     * near-dups, then merges its own buckets into the state — the
     * embedding-dedup-at-ingest shape. Same replay contract: epoch-keyed
@@ -1255,64 +1004,32 @@ object StreamingJobs {
     * same compaction knob: `maxEpochAge` N > 0 keeps only the last N
     * epochs' vectors in state (sliding-window dedup; older near-dups go
     * unflagged), 0 retains forever. */
-  def incrementalEmbeddingSink(vecs: DataFrame, idCol: String, vecCol: String,
-                               stateDir: String, outDir: String,
-                               probeDims: Int = 8, maxBucketSize: Int = 100,
-                               minCosine: Double = 0.9,
-                               maxEpochAge: Int = 0,
-                               withinBatch: Boolean = false): DataStreamWriter[Row] =
-    vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        incrementalEmbeddingBatch(batch, epochId, idCol, vecCol,
-          stateDir, outDir, probeDims, maxBucketSize, minCosine, maxEpochAge,
-          withinBatch)
-      }
-
-  /** One epoch of [[incrementalEmbeddingSink]], exposed for replay tests
-    * (same contract as [[incrementalDedupBatch]]). */
   def incrementalEmbeddingBatch(batch: DataFrame, epochId: Long,
                                 idCol: String, vecCol: String,
                                 stateDir: String, outDir: String,
                                 probeDims: Int = 8, maxBucketSize: Int = 100,
                                 minCosine: Double = 0.9,
                                 maxEpochAge: Int = 0,
-                                withinBatch: Boolean = false): Unit = {
-    val spark = batch.sparkSession
-    val bucketed = batch
-      .withColumn("bucket",
-        graft.operators.Similarity.ivfAssign(col(vecCol), probeDims))
-      .filter(col("bucket").isNotNull)
-      .select(col(idCol), col("bucket"), col(vecCol))
-      .withColumn("__epoch", lit(epochId))
-    val state = graft.sources.Writers.latestVersion(stateDir) match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v$v")
-        .filter(col("__epoch") < epochId)
-      case None => bucketed.limit(0)
-    }
-    val cross = graft.operators.Similarity.incrementalEmbeddingCandidates(
-      state.drop("__epoch"), bucketed.drop("__epoch").drop("bucket"),
-      idCol, vecCol, probeDims, maxBucketSize, minCosine)
-    val flagged = if (!withinBatch) cross else {
+                                withinBatch: Boolean = false): Unit =
+    runEpoch("incrementalEmbeddingBatch", batch, epochId, outDir,
+        maxEpochAge) { ep =>
+      val bucketed = batch
+        .withColumn("bucket", Similarity.ivfAssign(col(vecCol), probeDims))
+        .filter(col("bucket").isNotNull)
+        .select(col(idCol), col("bucket"), col(vecCol))
+      val leg = Leg(stateDir, Seq(idCol))
+      def probe(state: DataFrame) = Similarity.incrementalEmbeddingCandidates(
+        state, bucketed.drop("bucket"), idCol, vecCol, probeDims,
+        maxBucketSize, minCosine)
+      val cross = probe(ep.prior(leg, bucketed).drop("__epoch"))
       // self-probe yields both orientations of every same-batch pair
       // (self-matches already excluded); keep one, later id flagged
       // against the earlier — consistent with the text sink
-      val within = graft.operators.Similarity.incrementalEmbeddingCandidates(
-          bucketed.drop("__epoch"), bucketed.drop("__epoch").drop("bucket"),
-          idCol, vecCol, probeDims, maxBucketSize, minCosine)
-        .filter(col("id_new") > col("id_old"))
-      cross.unionByName(within).distinct()
+      val flagged = if (!withinBatch) cross
+        else cross.unionByName(probe(bucketed)
+          .filter(col("id_new") > col("id_old"))).distinct()
+      new Emit(flagged, Seq(leg -> bucketed), ep.written.count())
     }
-    flagged.write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-    graft.sources.Writers.mergeState(
-      spark, stateDir, bucketed, Seq(idCol), col("__epoch"),
-      evict = if (maxEpochAge > 0) Some(col("__epoch") <= epochId - maxEpochAge)
-              else None)
-    writeEpochMetrics(spark, outDir, epochId,
-      inputRows = batch.count(),
-      flagged = spark.read.parquet(s"$outDir/epoch=$epochId").count(),
-      stateDir = stateDir)
-  }
 
   /** Streaming labeling with a FROZEN stored model — the deployment
     * shape of the learned tier (q165's serving half as a stream): the
@@ -1323,46 +1040,40 @@ object StreamingJobs {
     * this is the family's one STATELESS sink — labeling is a pure
     * function of (doc, model), so there is no stateDir, no merge, and
     * replay idempotence holds by construction (each epoch overwrites
-    * its own keyed output). Model retraining follows the ivfCodesSink
+    * its own keyed output). Model retraining follows the ivfCodesBatch
     * frozen-artifact contract: train offline, write a NEW artifact,
     * cut the sink over — never mutate the live path mid-stream (a
     * half-read weight table would label one epoch with a torn model).
     * Emits the labeled batch (idCol + per-class scores + pred column)
     * to `outDir/epoch=N`; the metrics sidecar counts labeled rows
     * (state_rows is 0 — stateless). */
-  def labelSink(docs: DataFrame, idCol: String, tokensCol: Column,
-                modelPath: String, classes: Seq[String], buckets: Int,
-                outDir: String, outCol: String = "class"): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        labelBatch(batch, epochId, idCol, tokensCol, modelPath, classes,
-          buckets, outDir, outCol)
-      }
-
-  /** One epoch of [[labelSink]], exposed for replay testing. */
   def labelBatch(batch: DataFrame, epochId: Long, idCol: String,
                  tokensCol: Column, modelPath: String, classes: Seq[String],
                  buckets: Int, outDir: String,
                  outCol: String = "class"): Unit = {
-    val spark = batch.sparkSession
-    val weights = spark.read.parquet(modelPath)
     // cache → count → write: the labeled-row counter comes from the
     // SAME computed batch the epoch persists (one model pass, the write
     // replays from cache) instead of a second full read of the parquet
     // just written (ADVICE r16)
-    val labeled = graft.operators.QualityModel.predictClass(
-        batch.select(col(idCol), tokensCol.as("__toks")),
-        col("__toks"), weights, classes, buckets, outCol)
+    val labeled = QualityModel.predictClass(
+        batch.select(col(idCol), tokensCol.as("__toks")), col("__toks"),
+        batch.sparkSession.read.parquet(modelPath), classes, buckets, outCol)
       .drop("__toks")
       .cache()
-    try {
+    try runEpoch("labelBatch", batch, epochId, outDir,
+        flaggedKind = "rows_labeled") { _ =>
       val flagged = labeled.filter(col(s"pred_$outCol").isNotNull).count()
-      labeled.write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-      writeEpochMetricsStateless(spark, outDir, epochId,
-        inputRows = batch.count(), flagged = flagged,
-        flaggedKind = "rows_labeled")
+      new Emit(labeled, Nil, flagged)
     } finally labeled.unpersist()
+  }
+
+  /** Fail an epoch of a maintenance body whose ops are not all
+    * add | update | delete. */
+  private def requireKnownOps(ops: DataFrame, body: String,
+                              epochId: Long): Unit = {
+    val bad = ops.filter(!col("op").isin("add", "update", "delete")).count()
+    require(bad == 0L, s"$body: $bad rows with unknown op in epoch " +
+      s"$epochId — ops must be add | update | delete")
   }
 
   /** Streaming MAINTENANCE of the stored BM25 SERVING layout — the CDC
@@ -1385,7 +1096,10 @@ object StreamingJobs {
     * `outDir/epoch=N` — StreamingSpec pins every horizon ≡ a
     * from-scratch build over the post-CDC corpus. The layout must
     * exist before the first epoch; `writeBm25Index` over ZERO docs is
-    * the supported empty bootstrap.
+    * the supported empty bootstrap. The layout is this body's state, so
+    * it runs [[runEpoch]] with no state leg (`state_rows` is 0) over
+    * the cached ops, and the maintenance policy check runs after the
+    * metrics row.
     *
     * Replay note — the COMMIT-PROTOCOL × STREAMING interaction
     * (VERDICT r18 #8), both halves spec-pinned in StreamingSpec:
@@ -1405,53 +1119,39 @@ object StreamingJobs {
     * A production deployment gets the same guarantees from a table
     * format's atomic MERGE INTO (the Writers.mergeState framing:
     * operator semantics here, commit protocol there). */
-  def bm25MaintenanceSink(ops: DataFrame, indexPath: String, outDir: String,
-                          probeTerms: Seq[String]): DataStreamWriter[Row] =
-    ops.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        bm25MaintenanceBatch(batch, epochId, indexPath, outDir, probeTerms)
-      }
-
-  /** One epoch of [[bm25MaintenanceSink]], exposed for replay testing. */
   def bm25MaintenanceBatch(batch: DataFrame, epochId: Long,
                            indexPath: String, outDir: String,
                            probeTerms: Seq[String]): Unit = {
     val spark = batch.sparkSession
     val cached = batch.select(col("op"), col("doc_id"), col("text")).cache()
     try {
-      val bad = cached
-        .filter(!col("op").isin("add", "update", "delete")).count()
-      require(bad == 0L,
-        s"bm25MaintenanceSink: $bad rows with unknown op in epoch " +
-          s"$epochId — ops must be add | update | delete")
-      // CRASH RECOVERY (single-writer deployment: the CDC stream IS the
-      // layout's one writer, so a lock held at epoch start can only be
-      // this stream's crashed predecessor — a replayed epoch whose verb
-      // died mid-flight): vacuum collects the torn files the read-time
-      // commit already hid and releases the lock, and the replay below
-      // then lands content-idempotent. Syscall-priced when no crash.
-      if (graft.sources.Writers.writerLockHeld(indexPath))
-        graft.sources.Writers.vacuumBm25Index(spark, indexPath)
-      // allowEmpty: an epoch whose ops cover the ENTIRE live set (a
-      // full refresh) transits the layout through empty between the
-      // delete and the merge — a valid CDC state, never a dead end
-      // (the merge's additive stats bootstrap from the empty shape;
-      // ADVICE r17)
-      graft.sources.Writers.deleteFromBm25Index(spark, indexPath,
-        cached.select(col("doc_id")), allowEmpty = true)
-      graft.sources.Writers.mergeBm25Index(spark, indexPath,
-        cached.filter(col("op") =!= "delete")
-          .select(col("doc_id"), col("text")))
-      graft.operators.Retrieval.bm25Stored(
-          graft.sources.Writers.prunedBm25Tf(spark, indexPath, probeTerms),
-          spark.read.parquet(s"$indexPath/stats"), "doc_id", probeTerms)
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-      writeEpochMetricsStateless(spark, outDir, epochId,
-        inputRows = cached.count(),
-        flagged = cached.filter(col("op") === "delete").count(),
-        flaggedKind = "docs_deleted")
+      runEpoch("bm25MaintenanceBatch", cached, epochId, outDir,
+          flaggedKind = "docs_deleted") { _ =>
+        requireKnownOps(cached, "bm25MaintenanceBatch", epochId)
+        // CRASH RECOVERY (single-writer deployment: the CDC stream IS the
+        // layout's one writer, so a lock held at epoch start can only be
+        // this stream's crashed predecessor — a replayed epoch whose verb
+        // died mid-flight): vacuum collects the torn files the read-time
+        // commit already hid and releases the lock, and the replay below
+        // then lands content-idempotent. Syscall-priced when no crash.
+        if (Writers.writerLockHeld(indexPath))
+          Writers.vacuumBm25Index(spark, indexPath)
+        // allowEmpty: an epoch whose ops cover the ENTIRE live set (a
+        // full refresh) transits the layout through empty between the
+        // delete and the merge — a valid CDC state, never a dead end
+        // (the merge's additive stats bootstrap from the empty shape;
+        // ADVICE r17)
+        Writers.deleteFromBm25Index(spark, indexPath,
+          cached.select(col("doc_id")), allowEmpty = true)
+        Writers.mergeBm25Index(spark, indexPath,
+          cached.filter(col("op") =!= "delete")
+            .select(col("doc_id"), col("text")))
+        new Emit(Retrieval.bm25Stored(
+              Writers.prunedBm25Tf(spark, indexPath, probeTerms),
+              spark.read.parquet(s"$indexPath/stats"), "doc_id", probeTerms)
+            .coalesce(1),
+          Nil, cached.filter(col("op") === "delete").count())
+      }
       // SELF-HEALING: every epoch appends tombstones, so a long-running
       // stream would eventually hit the MaxTombstoneRows hard cap and
       // wedge (every replay re-throws) — the policy check is
@@ -1459,12 +1159,12 @@ object StreamingJobs {
       // before the cap (ADVICE r18). Visibility is identical across a
       // compaction, so probe outputs and replay idempotence are
       // unchanged.
-      graft.sources.Writers.maintainBm25Index(spark, indexPath)
+      Writers.maintainBm25Index(spark, indexPath)
     } finally cached.unpersist()
   }
 
   /** Streaming MAINTENANCE of the stored IVF×PQ SERVING layout — the
-    * [[bm25MaintenanceSink]] contract on the VECTOR leg (VERDICT r17
+    * [[bm25MaintenanceBatch]] contract on the VECTOR leg (VERDICT r17
     * #6, closing the verb×layout×stream matrix): each epoch carries
     * (op, vec_id, embedding) rows with op ∈ add | update | delete,
     * routed at cost ∝ the epoch against FROZEN codebook/centroid
@@ -1485,20 +1185,9 @@ object StreamingJobs {
     * `outDir/epoch=N` — StreamingSpec pins every horizon ≡ a
     * from-scratch encode over the post-CDC corpus with the same frozen
     * artifacts, last-epoch replay content-idempotence, and the
-    * empty-codes bootstrap. Same at-least-once/torn-write caveat as
-    * the BM25 sink (production: table-format MERGE INTO). */
-  def ivfPqMaintenanceSink(ops: DataFrame, indexPath: String, outDir: String,
-                           probeVec: Seq[Double], nprobe: Int = 3,
-                           k: Int = 20, m: Int = 4, subDim: Int = 16,
-                           probeDims: Int = 4): DataStreamWriter[Row] =
-    ops.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        ivfPqMaintenanceBatch(batch, epochId, indexPath, outDir, probeVec,
-          nprobe, k, m, subDim, probeDims)
-      }
-
-  /** One epoch of [[ivfPqMaintenanceSink]], exposed for replay testing. */
+    * empty-codes bootstrap. Same at-least-once/torn-write caveat and
+    * the same stateless [[runEpoch]] use as the BM25 body (production:
+    * table-format MERGE INTO). */
   def ivfPqMaintenanceBatch(batch: DataFrame, epochId: Long,
                             indexPath: String, outDir: String,
                             probeVec: Seq[Double], nprobe: Int = 3,
@@ -1508,119 +1197,58 @@ object StreamingJobs {
     val cached = batch.select(col("op"), col("vec_id"), col("embedding"))
       .cache()
     try {
-      val bad = cached
-        .filter(!col("op").isin("add", "update", "delete")).count()
-      require(bad == 0L,
-        s"ivfPqMaintenanceSink: $bad rows with unknown op in epoch " +
-          s"$epochId — ops must be add | update | delete")
-      // crash recovery — the bm25MaintenanceBatch stance: a lock held
-      // at epoch start is this stream's crashed predecessor; vacuum
-      // collects its torn files and releases, the replay lands once
-      if (graft.sources.Writers.writerLockHeld(indexPath))
-        graft.sources.Writers.vacuumIvfPqIndex(spark, indexPath)
-      graft.sources.Writers.deleteFromIvfPqIndex(spark, indexPath,
-        cached.select(col("vec_id")))
-      val upserts = cached.filter(col("op") =!= "delete")
-        .select(col("vec_id"), col("embedding"))
-      // an all-delete epoch merges nothing — skip the verb rather than
-      // advance the generation counter for an empty batch (keeps
-      // re-delete row-idempotence intact across such epochs)
-      if (upserts.limit(1).count() > 0)
-        graft.sources.Writers.mergeIvfPqIndex(spark, indexPath, upserts,
-          m = m, subDim = subDim, probeDims = probeDims)
-      val probed =
-        if (graft.sources.Writers.hasParquetFiles(s"$indexPath/codes")) {
-          val query = spark.range(1).select(
-            array(probeVec.map(v => lit(v.toFloat)): _*).as("qvec"))
-          graft.operators.Similarity.ivfPqSearchStored(
-            graft.sources.Writers.liveCodes(spark, indexPath),
-            spark.read.parquet(s"$indexPath/codebook"),
-            spark.read.parquet(s"$indexPath/centroids"),
-            "vec_id", query, "qvec", nprobe, k, m, subDim, probeDims)
-        } else // all-delete epoch emptied the layout: schema-stable empty
-          spark.range(0).select(col("id").as("vec_id"),
-            lit(0.0).as("adist"))
-      probed.coalesce(1)
-        .write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-      writeEpochMetricsStateless(spark, outDir, epochId,
-        inputRows = cached.count(),
-        flagged = cached.filter(col("op") === "delete").count(),
-        flaggedKind = "vecs_deleted")
+      runEpoch("ivfPqMaintenanceBatch", cached, epochId, outDir,
+          flaggedKind = "vecs_deleted") { _ =>
+        requireKnownOps(cached, "ivfPqMaintenanceBatch", epochId)
+        // crash recovery — the bm25MaintenanceBatch stance: a lock held
+        // at epoch start is this stream's crashed predecessor; vacuum
+        // collects its torn files and releases, the replay lands once
+        if (Writers.writerLockHeld(indexPath))
+          Writers.vacuumIvfPqIndex(spark, indexPath)
+        Writers.deleteFromIvfPqIndex(spark, indexPath,
+          cached.select(col("vec_id")))
+        val upserts = cached.filter(col("op") =!= "delete")
+          .select(col("vec_id"), col("embedding"))
+        // an all-delete epoch merges nothing — skip the verb rather than
+        // advance the generation counter for an empty batch (keeps
+        // re-delete row-idempotence intact across such epochs)
+        if (upserts.limit(1).count() > 0)
+          Writers.mergeIvfPqIndex(spark, indexPath, upserts,
+            m = m, subDim = subDim, probeDims = probeDims)
+        val probed =
+          if (Writers.hasParquetFiles(s"$indexPath/codes")) {
+            val query = spark.range(1).select(
+              array(probeVec.map(v => lit(v.toFloat)): _*).as("qvec"))
+            Similarity.ivfPqSearchStored(
+              Writers.liveCodes(spark, indexPath),
+              spark.read.parquet(s"$indexPath/codebook"),
+              spark.read.parquet(s"$indexPath/centroids"),
+              "vec_id", query, "qvec", nprobe, k, m, subDim, probeDims)
+          } else // all-delete epoch emptied the layout: schema-stable empty
+            spark.range(0).select(col("id").as("vec_id"),
+              lit(0.0).as("adist"))
+        new Emit(probed.coalesce(1), Nil,
+          cached.filter(col("op") === "delete").count())
+      }
       // SELF-HEALING compaction cadence — the bm25MaintenanceBatch
       // rationale (ADVICE r18): without it every epoch's tombstone
       // append marches the layout toward the MaxTombstoneRows hard cap
       // and the stream wedges there.
-      if (graft.sources.Writers.hasParquetFiles(s"$indexPath/codes"))
-        graft.sources.Writers.maintainIvfPqIndex(spark, indexPath)
+      if (Writers.hasParquetFiles(s"$indexPath/codes"))
+        Writers.maintainIvfPqIndex(spark, indexPath)
     } finally cached.unpersist()
-  }
-
-  /** Per-epoch sink observability (the reference's per-run delta-count
-    * logging, dags/scraping_etl.py:71, generalized): each incremental
-    * sink epoch writes ONE counter row under `outDir/_metrics/epoch=N`
-    * — input rows, flagged pairs, post-merge state rows. The underscore
-    * prefix keeps the sidecar invisible to readers of `outDir` itself
-    * (parquet readers skip `_`-paths), the per-epoch overwrite keeps it
-    * replay-idempotent like the data it describes, and the counts come
-    * from parquet footers of files just written (metadata reads, no
-    * payload rescan) plus one count of the pinned micro-batch.
-    *
-    * `state_rows` counts at the epoch's OWN horizon (`__epoch <=
-    * epochId`, the same filter the probe applies), so a replayed epoch
-    * re-records the number it recorded the first time even when later
-    * epochs have merged since — replay-deterministic unless compaction
-    * has already evicted rows from before the replayed epoch's window
-    * (the same sliding-window trade the data path documents). */
-  private def writeEpochMetrics(spark: org.apache.spark.sql.SparkSession,
-                                outDir: String, epochId: Long,
-                                inputRows: Long, flagged: Long,
-                                stateDir: String,
-                                flaggedKind: String = "flagged_pairs"): Unit = {
-    val stateRows = graft.sources.Writers.latestVersion(stateDir)
-      .map(v => spark.read.parquet(s"$stateDir/v$v")
-        .filter(col("__epoch") <= epochId).count()).getOrElse(0L)
-    emitEpochMetrics(spark, outDir, epochId, inputRows, flagged, stateRows,
-      flaggedKind)
-  }
-
-  /** [[writeEpochMetrics]] for a STATELESS sink (labelSink): states the
-    * 0-state fact directly instead of aliasing `outDir` as a state
-    * location and leaning on the v*-directory naming convention to read
-    * back empty (ADVICE r16). */
-  private def writeEpochMetricsStateless(
-      spark: org.apache.spark.sql.SparkSession, outDir: String,
-      epochId: Long, inputRows: Long, flagged: Long,
-      flaggedKind: String): Unit =
-    emitEpochMetrics(spark, outDir, epochId, inputRows, flagged,
-      stateRows = 0L, flaggedKind = flaggedKind)
-
-  private def emitEpochMetrics(spark: org.apache.spark.sql.SparkSession,
-                               outDir: String, epochId: Long,
-                               inputRows: Long, flagged: Long,
-                               stateRows: Long, flaggedKind: String): Unit = {
-    import spark.implicits._
-    // `flagged_kind` names what `flagged` counts per sink — the paragraph
-    // sink counts fully-emptied DOCS, not candidate pairs, and labeling
-    // both "flagged pairs" misled anyone monitoring the sinks side by
-    // side (ADVICE r11)
-    Seq((inputRows, flagged, stateRows, flaggedKind))
-      .toDF("input_rows", "flagged", "state_rows", "flagged_kind")
-      .withColumn("flagged_pairs",
-        when(col("flagged_kind") === "flagged_pairs", col("flagged")))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$outDir/_metrics/epoch=$epochId")
   }
 
   /** The metrics sidecar of an incremental sink's `outDir` as a
     * DataFrame: (epoch, input_rows, flagged, state_rows, flagged_kind,
-    * flagged_pairs), one row per processed epoch. `flagged_kind` says
-    * what `flagged` counts for that sink ("flagged_pairs" for the
-    * LSH/IVF sinks, "docs_fully_deduped" for the paragraph sink);
-    * `flagged_pairs` is the legacy pair-count column, NULL on epochs
-    * whose kind isn't a pair count. `state_rows` deltas across
-    * consecutive epochs expose compaction (eviction) at work. */
-  def epochMetrics(spark: org.apache.spark.sql.SparkSession,
-                   outDir: String): DataFrame =
+    * flagged_pairs), one row per processed epoch (written by
+    * [[runEpoch]]). `flagged_kind` says what `flagged` counts for that
+    * sink ("flagged_pairs" for the LSH/IVF sinks, "docs_fully_deduped"
+    * for the paragraph sink); `flagged_pairs` is the legacy pair-count
+    * column, NULL on epochs whose kind isn't a pair count. `state_rows`
+    * deltas across consecutive epochs expose compaction (eviction) at
+    * work. */
+  def epochMetrics(spark: SparkSession, outDir: String): DataFrame =
     spark.read.parquet(s"$outDir/_metrics")
 
   /** Watermark-side observability for the query-surface jobs

@@ -270,8 +270,8 @@ class EdgeCaseSpec extends AnyFunSuite {
 
   test("rrfTopKBatch: empty first epoch and single-arm batches merge, not crash") {
     import graft.streaming.StreamingJobs
-    val stateDir = java.nio.file.Files.createTempDirectory("rrfedge").toString
-    val outDir = java.nio.file.Files.createTempDirectory("rrfedgeout").toString
+    val stateDir = TestSpark.tmpDir("rrfedge")
+    val outDir = TestSpark.tmpDir("rrfedgeout")
     def run(e: Long, rows: Seq[(Long, Option[Double], Option[Double])]): Unit =
       StreamingJobs.rrfTopKBatch(
         rows.toDF("doc_id", "sa", "sb"), e, "doc_id",

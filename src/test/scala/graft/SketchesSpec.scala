@@ -254,7 +254,7 @@ class SketchesSpec extends AnyFunSuite {
     }
     // minima rows are ≤ k per group, and feeding the UNION of two parts'
     // per-group minima re-reduces to the whole-stream estimate (the
-    // profileSink merge law)
+    // profileBatch merge law)
     val mins = Sketches.kmvMinimaBy(df, col("grp"), col("x"), 16)
     assert(mins.groupBy("g").count().as[(String, Long)].collect()
       .forall(_._2 <= 16))

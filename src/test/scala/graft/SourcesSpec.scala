@@ -15,8 +15,7 @@ class SourcesSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String): String = TestSpark.tmpDir(prefix)
 
   test("csv/jsonl readers honor the explicit schema") {
     val dir = tmp("csvsrc")

@@ -44,12 +44,12 @@ class StreamingSpec extends AnyFunSuite {
 
   test("incrementalDedupSink flags cross-batch near-dups and grows bucket state") {
     implicit val sqlCtx = spark.sqlContext
-    val stateDir = java.nio.file.Files.createTempDirectory("lshstate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("lshout").toString
+    val stateDir = TestSpark.tmpDir("lshstate")
+    val outDir = TestSpark.tmpDir("lshout")
     val in = MemoryStream[(Long, String)]
     val docs = in.toDF().toDF("doc_id", "text")
-    val q = StreamingJobs.incrementalDedupSink(
-      docs, "doc_id", split(col("text"), " "), stateDir, outDir).start()
+    val q = StreamingJobs.foreachEpoch(docs)(StreamingJobs.incrementalDedupBatch(
+      _, _, "doc_id", split(col("text"), " "), stateDir, outDir)).start()
     try {
       // batch 1 seeds the state — nothing to probe against yet
       in.addData((1L, "alpha beta gamma delta"), (2L, "epsilon zeta eta theta"))
@@ -77,8 +77,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("incrementalDedupBatch replay: same epoch re-run leaves identical output and state") {
-    val stateDir = java.nio.file.Files.createTempDirectory("lshstate2").toString
-    val outDir = java.nio.file.Files.createTempDirectory("lshout2").toString
+    val stateDir = TestSpark.tmpDir("lshstate2")
+    val outDir = TestSpark.tmpDir("lshout2")
     def run(epoch: Long, docs: Seq[(Long, String)]): Unit =
       StreamingJobs.incrementalDedupBatch(
         docs.toDF("doc_id", "text"), epoch, "doc_id",
@@ -104,8 +104,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("incrementalParagraphBatch dedups each epoch against all prior epochs") {
-    val stateDir = java.nio.file.Files.createTempDirectory("parstate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("parout").toString
+    val stateDir = TestSpark.tmpDir("parstate")
+    val outDir = TestSpark.tmpDir("parout")
     def run(epoch: Long, docs: Seq[(Long, String)]): Unit =
       StreamingJobs.incrementalParagraphBatch(
         docs.toDF("doc_id", "text"), epoch, "doc_id", "text", "\n",
@@ -144,8 +144,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("incrementalParagraphBatch eviction readmits paragraphs unseen for N epochs") {
-    val stateDir = java.nio.file.Files.createTempDirectory("parstate2").toString
-    val outDir = java.nio.file.Files.createTempDirectory("parout2").toString
+    val stateDir = TestSpark.tmpDir("parstate2")
+    val outDir = TestSpark.tmpDir("parout2")
     def run(epoch: Long, docs: Seq[(Long, String)]): Unit =
       StreamingJobs.incrementalParagraphBatch(
         docs.toDF("doc_id", "text"), epoch, "doc_id", "text", "\n",
@@ -161,8 +161,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("incrementalWindowBatch: within-batch + cross-epoch substring dedup, replay-stable") {
-    val stateDir = java.nio.file.Files.createTempDirectory("winstate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("winout").toString
+    val stateDir = TestSpark.tmpDir("winstate")
+    val outDir = TestSpark.tmpDir("winout")
     def run(epoch: Long, docs: Seq[(Long, String)]): Unit =
       StreamingJobs.incrementalWindowBatch(
         docs.toDF("doc_id", "text"), epoch, "doc_id",
@@ -206,8 +206,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("incrementalWindowBatch eviction readmits windows first seen > N epochs ago") {
-    val stateDir = java.nio.file.Files.createTempDirectory("winstate2").toString
-    val outDir = java.nio.file.Files.createTempDirectory("winout2").toString
+    val stateDir = TestSpark.tmpDir("winstate2")
+    val outDir = TestSpark.tmpDir("winout2")
     def run(epoch: Long, docs: Seq[(Long, String)]): Unit =
       StreamingJobs.incrementalWindowBatch(
         docs.toDF("doc_id", "text"), epoch, "doc_id",
@@ -223,8 +223,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("cmsBatch: cumulative estimates merge exactly, replay never double-counts") {
-    val stateDir = java.nio.file.Files.createTempDirectory("cmsstate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("cmsout").toString
+    val stateDir = TestSpark.tmpDir("cmsstate")
+    val outDir = TestSpark.tmpDir("cmsout")
     val e0 = Seq.fill(6)("alpha") ++ Seq.fill(2)("beta")
     val e1 = Seq.fill(5)("alpha") ++ Seq.fill(4)("gamma")
     def run(epoch: Long, items: Seq[String]): Unit =
@@ -268,8 +268,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("cmsBatch eviction turns all-time counts into a sliding window") {
-    val stateDir = java.nio.file.Files.createTempDirectory("cmsstate2").toString
-    val outDir = java.nio.file.Files.createTempDirectory("cmsout2").toString
+    val stateDir = TestSpark.tmpDir("cmsstate2")
+    val outDir = TestSpark.tmpDir("cmsout2")
     def run(epoch: Long, items: Seq[String]): Unit =
       StreamingJobs.cmsBatch(items.toDF("w"), epoch, col("w"),
         stateDir, outDir, depth = 4, width = 1 << 12, threshold = 6L,
@@ -295,8 +295,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("kmvBatch: cumulative estimate equals one-shot build, replay-stable, age-evicted") {
     import graft.operators.Sketches
-    val stateDir = java.nio.file.Files.createTempDirectory("kmvstate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("kmvout").toString
+    val stateDir = TestSpark.tmpDir("kmvstate")
+    val outDir = TestSpark.tmpDir("kmvout")
     val e0 = (0 until 300).map(i => s"a$i")
     val e1 = (0 until 300).map(i => s"b$i") ++ (0 until 100).map(i => s"a$i")
     val e2 = (0 until 300).map(i => s"c$i")
@@ -323,8 +323,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(math.abs(estAt(2) - 900.0) / 900.0 < 0.38)
     // sliding window: maxEpochAge=1 retains only the previous epoch's
     // minima — the fresh estimate approximates |e1 ∪ e2|, not all-time
-    val stateDir2 = java.nio.file.Files.createTempDirectory("kmvstate2").toString
-    val outDir2 = java.nio.file.Files.createTempDirectory("kmvout2").toString
+    val stateDir2 = TestSpark.tmpDir("kmvstate2")
+    val outDir2 = TestSpark.tmpDir("kmvout2")
     def run2(e: Long, items: Seq[String]): Unit =
       StreamingJobs.kmvBatch(items.toDF("x"), e, col("x"),
         stateDir2, outDir2, k = 64, maxEpochAge = 1)
@@ -339,8 +339,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("histBatch: cumulative quantiles equal one-shot build, replay-stable, sliding window") {
     import graft.operators.Sketches
-    val stateDir = java.nio.file.Files.createTempDirectory("histstate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("histout").toString
+    val stateDir = TestSpark.tmpDir("histstate")
+    val outDir = TestSpark.tmpDir("histout")
     val e0 = (1L to 1000L)
     val e1 = (500L to 5000L by 3)
     val e2 = (10L to 100L)
@@ -370,8 +370,8 @@ class StreamingSpec extends AnyFunSuite {
     run(2, e2)
     assert(estAt(2) == before)
     // sliding window: maxEpochAge=1 → epoch 2's estimate covers e1 ∪ e2
-    val stateDir2 = java.nio.file.Files.createTempDirectory("histstate2").toString
-    val outDir2 = java.nio.file.Files.createTempDirectory("histout2").toString
+    val stateDir2 = TestSpark.tmpDir("histstate2")
+    val outDir2 = TestSpark.tmpDir("histout2")
     def run2(e: Long, vals: Seq[Long]): Unit =
       StreamingJobs.histBatch(vals.toDF("v"), e, col("v"),
         stateDir2, outDir2, kb = 5, pcts = Seq(50, 90), maxEpochAge = 1)
@@ -386,8 +386,8 @@ class StreamingSpec extends AnyFunSuite {
     "KMV distinct is exactly mergeable, replay-stable, sliding window") {
     import graft.operators.{Profile, Sketches}
     val cols = Seq("id", "s", "t")
-    val stateDir = java.nio.file.Files.createTempDirectory("profstate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("profout").toString
+    val stateDir = TestSpark.tmpDir("profstate")
+    val outDir = TestSpark.tmpDir("profout")
     val e0: Seq[(Long, Option[String], Option[String])] = (1L to 60L).map(i =>
       (i, if (i % 5 == 0) None else Some(s"v${i % 7}"), None))
     val e1: Seq[(Long, Option[String], Option[String])] = (61L to 120L).map(i =>
@@ -430,8 +430,8 @@ class StreamingSpec extends AnyFunSuite {
     run(2, e2)
     assert(card(2) == before)
     // sliding window: maxEpochAge=1 → epoch 2's card covers e1 ∪ e2
-    val stateDir2 = java.nio.file.Files.createTempDirectory("profstate2").toString
-    val outDir2 = java.nio.file.Files.createTempDirectory("profout2").toString
+    val stateDir2 = TestSpark.tmpDir("profstate2")
+    val outDir2 = TestSpark.tmpDir("profout2")
     def run2(e: Long, rows: Seq[(Long, Option[String], Option[String])]): Unit =
       StreamingJobs.profileBatch(rows.toDF("id", "s", "t"), e, cols,
         stateDir2, outDir2, k = 32, maxEpochAge = 1)
@@ -447,8 +447,8 @@ class StreamingSpec extends AnyFunSuite {
   test("collocBatch: cumulative phrase table equals one-shot collocations, " +
     "replay-stable, sliding vocabulary window") {
     import graft.operators.TextStats
-    val stateDir = java.nio.file.Files.createTempDirectory("collstate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("collout").toString
+    val stateDir = TestSpark.tmpDir("collstate")
+    val outDir = TestSpark.tmpDir("collout")
     val e0 = (1 to 30).map(i => s"new york trip $i") :+ "a new car"
     val e1 = (1 to 25).map(i => s"new york and hong kong $i")
     val e2 = (1 to 20).map(i => s"hong kong stories $i only")
@@ -481,8 +481,8 @@ class StreamingSpec extends AnyFunSuite {
     val vocab = (e0 ++ e1 ++ e2).flatMap(_.split(" ")).distinct.size
     assert(state.filter(col("side") === "u").count() <= 3L * vocab)
     // sliding window: maxEpochAge=1 → epoch 2's table covers e1 ∪ e2
-    val stateDir2 = java.nio.file.Files.createTempDirectory("collstate2").toString
-    val outDir2 = java.nio.file.Files.createTempDirectory("collout2").toString
+    val stateDir2 = TestSpark.tmpDir("collstate2")
+    val outDir2 = TestSpark.tmpDir("collout2")
     def run2(e: Long, docs: Seq[String]): Unit =
       StreamingJobs.collocBatch(docs.toDF("text"), e, split(col("text"), " "),
         stateDir2, outDir2, minCount = 10L, delta = 2L, maxEpochAge = 1)
@@ -500,8 +500,8 @@ class StreamingSpec extends AnyFunSuite {
   test("invertedIndexBatch: cumulative phrase result equals the one-shot " +
     "index at every horizon, replay-stable, sliding window (r14 stretch)") {
     import graft.operators.Retrieval
-    val stateDir = java.nio.file.Files.createTempDirectory("iistate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("iiout").toString
+    val stateDir = TestSpark.tmpDir("iistate")
+    val outDir = TestSpark.tmpDir("iiout")
     val e0 = Seq((1L, "fast table scan runs"), (2L, "the fast car"))
     val e1 = Seq((3L, "a fast table and a fast table again"),
       (4L, "slow table"))
@@ -540,8 +540,8 @@ class StreamingSpec extends AnyFunSuite {
     val v2 = graft.sources.Writers.latestVersion(stateDir).get
     assert(spark.read.parquet(s"$stateDir/v$v2").count() == stateRowsBefore)
     // sliding index: maxEpochAge=1 → epoch 2's probe covers e1 ∪ e2 only
-    val st2 = java.nio.file.Files.createTempDirectory("iistate2").toString
-    val out2 = java.nio.file.Files.createTempDirectory("iiout2").toString
+    val st2 = TestSpark.tmpDir("iistate2")
+    val out2 = TestSpark.tmpDir("iiout2")
     run(0, e0, st2, out2, age = 1)
     run(1, e1, st2, out2, age = 1)
     run(2, e2, st2, out2, age = 1)
@@ -552,8 +552,8 @@ class StreamingSpec extends AnyFunSuite {
   test("invertedIndexBatch assertAppendOnly: same-content re-delivery " +
     "passes, changed content raises instead of silently corrupting " +
     "(ADVICE r15)") {
-    val stateDir = java.nio.file.Files.createTempDirectory("iiaostate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("iiaoout").toString
+    val stateDir = TestSpark.tmpDir("iiaostate")
+    val outDir = TestSpark.tmpDir("iiaoout")
     def run(e: Long, docs: Seq[(Long, String)]): Unit =
       StreamingJobs.invertedIndexBatch(docs.toDF("doc_id", "text"), e,
         "doc_id", split(col("text"), " "), stateDir, outDir,
@@ -574,7 +574,7 @@ class StreamingSpec extends AnyFunSuite {
     "the batch predictClass over the same docs, replay-idempotent, " +
     "cut-over = a new artifact path") {
     import graft.operators.QualityModel
-    val outDir = java.nio.file.Files.createTempDirectory("lblout").toString
+    val outDir = TestSpark.tmpDir("lblout")
     val classes = Seq("a", "b")
     val train = Seq(
       (1L, "x x x x x", "a"), (2L, "y y y y y", "b"),
@@ -582,7 +582,7 @@ class StreamingSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "lab")
       .select(col("doc_id"), col("lab"),
         split(col("text"), " ").as("toks"))
-    val mdl1 = java.nio.file.Files.createTempDirectory("lblmdl1").toString
+    val mdl1 = TestSpark.tmpDir("lblmdl1")
     QualityModel.fitMulticlass(train, col("toks"), col("lab"),
       classes, 64, 2).write.mode("overwrite").parquet(mdl1)
     def toks(c: org.apache.spark.sql.Column) =
@@ -615,7 +615,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(emitted(1) == before)
     // cut-over: a retrained artifact at a NEW path relabels from the
     // next epoch on — prior epoch outputs stand untouched
-    val mdl2 = java.nio.file.Files.createTempDirectory("lblmdl2").toString
+    val mdl2 = TestSpark.tmpDir("lblmdl2")
     QualityModel.fitMulticlass(
         train.withColumn("lab", // labels flipped -> argmax flips
           when(col("lab") === "a", "b").otherwise("a")),
@@ -635,8 +635,8 @@ class StreamingSpec extends AnyFunSuite {
     "equals the one-shot search with epoch-0-frozen artifacts, " +
     "replay-stable, sliding window") {
     import graft.operators.Similarity
-    val stateDir = java.nio.file.Files.createTempDirectory("ivfstate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("ivfout").toString
+    val stateDir = TestSpark.tmpDir("ivfstate")
+    val outDir = TestSpark.tmpDir("ivfout")
     val e0 = Seq(
       (0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f)),
       (2L, Seq(0f, 0f, 1f, 0f)), (3L, Seq(0f, 0f, 0f, 1f)),
@@ -691,8 +691,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$stateDir/codes/v$vAfter").count() == rowsBefore)
     // sliding window: age=1 → epoch 2 searches e1 ∪ e2 only, with the
     // artifacts STILL trained on e0 (training never ages out)
-    val st2 = java.nio.file.Files.createTempDirectory("ivfstate2").toString
-    val out2 = java.nio.file.Files.createTempDirectory("ivfout2").toString
+    val st2 = TestSpark.tmpDir("ivfstate2")
+    val out2 = TestSpark.tmpDir("ivfout2")
     run(0, e0, st2, out2, age = 1)
     run(1, e1, st2, out2, age = 1)
     run(2, e2, st2, out2, age = 1)
@@ -700,14 +700,33 @@ class StreamingSpec extends AnyFunSuite {
     // an EMPTY epoch before anything trains emits an empty result (not
     // a crash, not artifacts trained on nothing); the first non-empty
     // batch then trains as epoch 0 would have
-    val st3 = java.nio.file.Files.createTempDirectory("ivfstate3").toString
-    val out3 = java.nio.file.Files.createTempDirectory("ivfout3").toString
+    val st3 = TestSpark.tmpDir("ivfstate3")
+    val out3 = TestSpark.tmpDir("ivfout3")
     run(0, Seq.empty, st3, out3)
     assert(emitted(0, out3).isEmpty)
+    // ... and still writes its metrics row: one row per processed epoch
+    assert(spark.read.parquet(s"$out3/_metrics/epoch=0")
+      .select("input_rows", "flagged", "state_rows", "flagged_kind")
+      .as[(Long, Long, Long, String)].collect().toSeq ==
+      Seq((0L, 0L, 0L, "ann_topk_rows")))
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st3/artifacts/_done")))
     run(1, e0, st3, out3)
     assert(emitted(1, out3) == oneShot(e0, e0))
+  }
+
+  test("a negative maxEpochAge is rejected before the epoch writes anything") {
+    val stateDir = TestSpark.tmpDir("negage")
+    val outDir = TestSpark.tmpDir("negageout")
+    val err = intercept[IllegalArgumentException] {
+      StreamingJobs.cmsBatch(Seq("a", "b").toDF("w"), 3L, col("w"),
+        stateDir, outDir, maxEpochAge = -1)
+    }
+    assert(err.getMessage.contains("cmsBatch") &&
+      err.getMessage.contains("epoch 3"), err.getMessage)
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$outDir/epoch=3")))
+    assert(graft.sources.Writers.latestVersion(stateDir).isEmpty)
   }
 
   test("ivfCodesSink drift trade MEASURED: epoch-0-frozen codebook means " +
@@ -728,8 +747,8 @@ class StreamingSpec extends AnyFunSuite {
     val all = trainEpoch ++ driftEpoch
     val qv = Seq(0.9f, 0.4f) ++ tail
     def df(rows: Seq[(Long, Seq[Float])]) = rows.toDF("vec_id", "embedding")
-    val stateDir = java.nio.file.Files.createTempDirectory("drift").toString
-    val outDir = java.nio.file.Files.createTempDirectory("driftout").toString
+    val stateDir = TestSpark.tmpDir("drift")
+    val outDir = TestSpark.tmpDir("driftout")
     def run(e: Long, rows: Seq[(Long, Seq[Float])]): Unit =
       StreamingJobs.ivfCodesBatch(df(rows), e, "vec_id", "embedding",
         stateDir, outDir, qv, nprobe = 1, k = 5, coarseK = 1, m = 2,
@@ -764,8 +783,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("scd2Batch: reconstruction equals batch scd2, late drops counted, replay-stable") {
     import graft.operators.Delta
-    val stateDir = java.nio.file.Files.createTempDirectory("scdstate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("scdout").toString
+    val stateDir = TestSpark.tmpDir("scdstate")
+    val outDir = TestSpark.tmpDir("scdout")
     def obs(rows: (String, Int, Long, String)*) =
       rows.toSeq.toDF("key", "d", "id", "v")
         .select(col("key"),
@@ -816,8 +835,8 @@ class StreamingSpec extends AnyFunSuite {
   test("rrfTopKBatch: cumulative fused head equals batch composition, replay-stable, age-evicted") {
     import graft.operators.Retrieval
     import org.apache.spark.sql.expressions.Window
-    val stateDir = java.nio.file.Files.createTempDirectory("rrfstate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("rrfout").toString
+    val stateDir = TestSpark.tmpDir("rrfstate")
+    val outDir = TestSpark.tmpDir("rrfout")
     // deterministic arm scores: doc i scores (i*7%101, i*13%103); some
     // docs miss an arm entirely (null) — and epoch 1 RE-SCORES doc 3
     // lower on arm a (the duplicate-id collapse must keep the best)
@@ -868,8 +887,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(fusedAt(2).sameElements(before))
     // sliding freshness: maxEpochAge=1 ages epoch 0's heads out of the
     // epoch-2 merge — the fused head is the one-shot over e1 ++ e2 only
-    val stateDir2 = java.nio.file.Files.createTempDirectory("rrfstate2").toString
-    val outDir2 = java.nio.file.Files.createTempDirectory("rrfout2").toString
+    val stateDir2 = TestSpark.tmpDir("rrfstate2")
+    val outDir2 = TestSpark.tmpDir("rrfout2")
     def run2(e: Long, ids: Seq[Long], re: Boolean = false): Unit =
       StreamingJobs.rrfTopKBatch(docs(ids, re), e, "doc_id",
         col("sa"), col("sb"), stateDir2, outDir2, n = 10, maxEpochAge = 1)
@@ -893,8 +912,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("gapFillBatch: epoch-concat equals batch gapFill, fills inter-epoch gaps, replay-stable") {
-    val stateDir = java.nio.file.Files.createTempDirectory("gfstate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("gfout").toString
+    val stateDir = TestSpark.tmpDir("gfstate")
+    val outDir = TestSpark.tmpDir("gfout")
     def ev(rows: (Long, String, Double)*) = rows.toSeq.toDF("k", "tss", "v")
       .select(col("k"), col("tss").cast("timestamp").as("ts"), col("v"))
     // epoch 0: key 1 hours 00–01, key 2 hour 00
@@ -942,8 +961,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("gapFillBatch drops per-key late periods and counts them in metrics") {
-    val stateDir = java.nio.file.Files.createTempDirectory("gfstate2").toString
-    val outDir = java.nio.file.Files.createTempDirectory("gfout2").toString
+    val stateDir = TestSpark.tmpDir("gfstate2")
+    val outDir = TestSpark.tmpDir("gfout2")
     def ev(rows: (Long, String, Double)*) = rows.toSeq.toDF("k", "tss", "v")
       .select(col("k"), col("tss").cast("timestamp").as("ts"), col("v"))
     StreamingJobs.gapFillBatch(
@@ -967,8 +986,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("bloomGateBatch passes only definitely-new keys, replay-stable") {
-    val stateDir = java.nio.file.Files.createTempDirectory("bloomstate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("bloomout").toString
+    val stateDir = TestSpark.tmpDir("bloomstate")
+    val outDir = TestSpark.tmpDir("bloomout")
     def run(epoch: Long, rows: Seq[(String, Int)]): Unit =
       StreamingJobs.bloomGateBatch(rows.toDF("url", "payload"), epoch,
         col("url"), stateDir, outDir, k = 4, m = 1 << 16)
@@ -1001,8 +1020,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("bloomGateBatch eviction readmits a key once its bits age out") {
-    val stateDir = java.nio.file.Files.createTempDirectory("bloomstate2").toString
-    val outDir = java.nio.file.Files.createTempDirectory("bloomout2").toString
+    val stateDir = TestSpark.tmpDir("bloomstate2")
+    val outDir = TestSpark.tmpDir("bloomout2")
     def run(epoch: Long, keys: Seq[String]): Unit =
       StreamingJobs.bloomGateBatch(keys.map((_, 0)).toDF("url", "payload"),
         epoch, col("url"), stateDir, outDir, k = 4, m = 1 << 16,
@@ -1016,8 +1035,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("incrementalEmbeddingBatch replay: same epoch re-run is a no-op") {
-    val stateDir = java.nio.file.Files.createTempDirectory("embstate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("embout").toString
+    val stateDir = TestSpark.tmpDir("embstate")
+    val outDir = TestSpark.tmpDir("embout")
     // 8-dim vectors; ids 1 and 3 are near-identical (same bucket, cos~1)
     def v(xs: Double*) = xs.map(_.toFloat)
     def run(epoch: Long, rows: Seq[(Long, Seq[Float])]): Unit =
@@ -1047,8 +1066,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("withinBatch flags same-batch text near-dups; off by default; replay stable") {
     def dirs(tag: String) =
-      (java.nio.file.Files.createTempDirectory(s"$tag-state").toString,
-       java.nio.file.Files.createTempDirectory(s"$tag-out").toString)
+      (TestSpark.tmpDir(s"$tag-state"),
+       TestSpark.tmpDir(s"$tag-out"))
     // docs 1 and 2 are near-dups arriving in the SAME micro-batch
     val batch0 = Seq(
       (1L, "alpha beta gamma delta"), (2L, "alpha beta gamma delta"),
@@ -1090,8 +1109,8 @@ class StreamingSpec extends AnyFunSuite {
   test("withinBatch flags same-batch embedding near-dups; off by default") {
     def v(xs: Double*) = xs.map(_.toFloat)
     def dirs(tag: String) =
-      (java.nio.file.Files.createTempDirectory(s"$tag-state").toString,
-       java.nio.file.Files.createTempDirectory(s"$tag-out").toString)
+      (TestSpark.tmpDir(s"$tag-state"),
+       TestSpark.tmpDir(s"$tag-out"))
     // vecs 1 and 2 are near-identical, arriving together; vec 3 is far
     val batch0 = Seq(
       (1L, v(0.9, 0.3, 0, 0, 0, 0, 0, 0)),
@@ -1119,13 +1138,14 @@ class StreamingSpec extends AnyFunSuite {
 
   test("bloomGateSink e2e on a FILE source: checkpoint restart + constant bit state") {
     import org.apache.spark.sql.streaming.Trigger
-    val srcDir = java.nio.file.Files.createTempDirectory("bgsrc").toString
-    val stateDir = java.nio.file.Files.createTempDirectory("bgfsstate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("bgfsout").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("bgfsckpt").toString
-    def start() = StreamingJobs.bloomGateSink(
-        spark.readStream.schema("url STRING, payload INT").parquet(srcDir),
-        col("url"), stateDir, outDir, k = 4, m = 1 << 16)
+    val srcDir = TestSpark.tmpDir("bgsrc")
+    val stateDir = TestSpark.tmpDir("bgfsstate")
+    val outDir = TestSpark.tmpDir("bgfsout")
+    val ckpt = TestSpark.tmpDir("bgfsckpt")
+    def start() = StreamingJobs.foreachEpoch(
+        spark.readStream.schema("url STRING, payload INT").parquet(srcDir))(
+        StreamingJobs.bloomGateBatch(_, _, col("url"), stateDir, outDir,
+          k = 4, m = 1 << 16))
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
     def passed = spark.read.parquet(outDir)
@@ -1150,13 +1170,13 @@ class StreamingSpec extends AnyFunSuite {
   test("kmvSink e2e on a FILE source: checkpoint restart + cumulative estimate") {
     import org.apache.spark.sql.streaming.Trigger
     import graft.operators.Sketches
-    val srcDir = java.nio.file.Files.createTempDirectory("kmvsrc").toString
-    val stateDir = java.nio.file.Files.createTempDirectory("kmvfsstate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("kmvfsout").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("kmvfsckpt").toString
-    def start() = StreamingJobs.kmvSink(
-        spark.readStream.schema("x STRING").parquet(srcDir),
-        col("x"), stateDir, outDir, k = 64)
+    val srcDir = TestSpark.tmpDir("kmvsrc")
+    val stateDir = TestSpark.tmpDir("kmvfsstate")
+    val outDir = TestSpark.tmpDir("kmvfsout")
+    val ckpt = TestSpark.tmpDir("kmvfsckpt")
+    def start() = StreamingJobs.foreachEpoch(
+        spark.readStream.schema("x STRING").parquet(srcDir))(
+        StreamingJobs.kmvBatch(_, _, col("x"), stateDir, outDir, k = 64))
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
     val b0 = (0 until 100).map(i => s"u$i")
@@ -1185,13 +1205,14 @@ class StreamingSpec extends AnyFunSuite {
     // resumes from the checkpoint — new files become the next epoch
     // against the SAME versioned state the first run left behind
     import org.apache.spark.sql.streaming.Trigger
-    val srcDir = java.nio.file.Files.createTempDirectory("lshsrc").toString
-    val stateDir = java.nio.file.Files.createTempDirectory("lshfsstate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("lshfsout").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("lshfsckpt").toString
-    def start() = StreamingJobs.incrementalDedupSink(
-        spark.readStream.schema("doc_id LONG, text STRING").parquet(srcDir),
-        "doc_id", split(col("text"), " "), stateDir, outDir)
+    val srcDir = TestSpark.tmpDir("lshsrc")
+    val stateDir = TestSpark.tmpDir("lshfsstate")
+    val outDir = TestSpark.tmpDir("lshfsout")
+    val ckpt = TestSpark.tmpDir("lshfsckpt")
+    def start() = StreamingJobs.foreachEpoch(
+        spark.readStream.schema("doc_id LONG, text STRING").parquet(srcDir))(
+        StreamingJobs.incrementalDedupBatch(_, _, "doc_id",
+          split(col("text"), " "), stateDir, outDir))
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
     def flagged = spark.read.parquet(outDir)
@@ -1219,13 +1240,14 @@ class StreamingSpec extends AnyFunSuite {
 
   test("incrementalParagraphSink e2e on a FILE source: checkpoint restart + versioned state") {
     import org.apache.spark.sql.streaming.Trigger
-    val srcDir = java.nio.file.Files.createTempDirectory("parsrc").toString
-    val stateDir = java.nio.file.Files.createTempDirectory("parfsstate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("parfsout").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("parfsckpt").toString
-    def start() = StreamingJobs.incrementalParagraphSink(
-        spark.readStream.schema("doc_id LONG, text STRING").parquet(srcDir),
-        "doc_id", "text", "\n", stateDir, outDir)
+    val srcDir = TestSpark.tmpDir("parsrc")
+    val stateDir = TestSpark.tmpDir("parfsstate")
+    val outDir = TestSpark.tmpDir("parfsout")
+    val ckpt = TestSpark.tmpDir("parfsckpt")
+    def start() = StreamingJobs.foreachEpoch(
+        spark.readStream.schema("doc_id LONG, text STRING").parquet(srcDir))(
+        StreamingJobs.incrementalParagraphBatch(_, _, "doc_id", "text", "\n",
+          stateDir, outDir))
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
     def cleaned = spark.read.parquet(outDir)
@@ -1256,15 +1278,16 @@ class StreamingSpec extends AnyFunSuite {
   test("incrementalEmbeddingSink e2e on a FILE source: checkpoint restart + versioned state") {
     import org.apache.spark.sql.streaming.Trigger
     def v(xs: Double*) = xs.map(_.toFloat)
-    val srcDir = java.nio.file.Files.createTempDirectory("embsrc").toString
-    val stateDir = java.nio.file.Files.createTempDirectory("embfsstate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("embfsout").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("embfsckpt").toString
-    def start() = StreamingJobs.incrementalEmbeddingSink(
+    val srcDir = TestSpark.tmpDir("embsrc")
+    val stateDir = TestSpark.tmpDir("embfsstate")
+    val outDir = TestSpark.tmpDir("embfsout")
+    val ckpt = TestSpark.tmpDir("embfsckpt")
+    def start() = StreamingJobs.foreachEpoch(
         spark.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
-          .parquet(srcDir),
-        "vec_id", "embedding", stateDir, outDir,
-        probeDims = 8, maxBucketSize = 100, minCosine = 0.9)
+          .parquet(srcDir))(
+        StreamingJobs.incrementalEmbeddingBatch(_, _, "vec_id", "embedding",
+          stateDir, outDir, probeDims = 8, maxBucketSize = 100,
+          minCosine = 0.9))
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
     def flagged = spark.read.parquet(outDir)
@@ -1286,8 +1309,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("dedup state compaction: size plateaus across epochs, replay still idempotent") {
-    val stateDir = java.nio.file.Files.createTempDirectory("lshcompact").toString
-    val outDir = java.nio.file.Files.createTempDirectory("lshcompactout").toString
+    val stateDir = TestSpark.tmpDir("lshcompact")
+    val outDir = TestSpark.tmpDir("lshcompactout")
     // each epoch delivers 2 fresh docs with distinct vocab (no cross-dup
     // noise); maxEpochAge=2 must hold the bucket table at the 2-epoch
     // working set while the uncompacted form would grow linearly
@@ -1343,8 +1366,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("embedding state compaction plateaus and keeps only recent epochs") {
-    val stateDir = java.nio.file.Files.createTempDirectory("embcompact").toString
-    val outDir = java.nio.file.Files.createTempDirectory("embcompactout").toString
+    val stateDir = TestSpark.tmpDir("embcompact")
+    val outDir = TestSpark.tmpDir("embcompactout")
     def v(xs: Double*) = xs.map(_.toFloat)
     // one fresh orthogonal-ish vector per epoch
     def run(epoch: Long): Unit = {
@@ -1447,10 +1470,12 @@ class StreamingSpec extends AnyFunSuite {
 
   test("mergeStateSink upserts each micro-batch into the versioned state") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("stream-state").toString
+    val dir = TestSpark.tmpDir("stream-state")
     val in = MemoryStream[(String, Int, String)]
     val df = in.toDF().toDF("pk", "version", "payload")
-    val q = StreamingJobs.mergeStateSink(df, dir, Seq("pk"), col("version")).start()
+    val q = StreamingJobs.foreachEpoch(df)((batch, _) =>
+      graft.sources.Writers.mergeState(
+        batch.sparkSession, dir, batch, Seq("pk"), col("version"))).start()
     try {
       in.addData(("k1", 1, "a"), ("k2", 1, "b"))
       q.processAllAvailable()
@@ -1492,11 +1517,13 @@ class StreamingSpec extends AnyFunSuite {
 
   test("full streaming pipeline: delta state filter chained into the merge sink") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("stream-pipe").toString
+    val dir = TestSpark.tmpDir("stream-pipe")
     val in = MemoryStream[KeyedRecord]
     val deltas = StreamingJobs.deltaStream(in.toDS()).toDF()
       .withColumn("v", lit(1))
-    val q = StreamingJobs.mergeStateSink(deltas, dir, Seq("key"), col("v")).start()
+    val q = StreamingJobs.foreachEpoch(deltas)((batch, _) =>
+      graft.sources.Writers.mergeState(
+        batch.sparkSession, dir, batch, Seq("key"), col("v"))).start()
     try {
       in.addData(KeyedRecord("k1", "h1", "v1"), KeyedRecord("k2", "h2", "w1"))
       q.processAllAvailable()
@@ -1533,8 +1560,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("epoch metrics: per-epoch counters, stable under replay, invisible to data readers") {
-    val stateDir = java.nio.file.Files.createTempDirectory("mstate").toString
-    val outDir = java.nio.file.Files.createTempDirectory("mout").toString
+    val stateDir = TestSpark.tmpDir("mstate")
+    val outDir = TestSpark.tmpDir("mout")
     def run(epoch: Long, docs: Seq[(Long, String)]): Unit =
       StreamingJobs.incrementalDedupBatch(
         docs.toDF("doc_id", "text"), epoch, "doc_id",
@@ -1591,8 +1618,8 @@ class StreamingSpec extends AnyFunSuite {
     "idempotent, unknown ops fail loudly") {
     import graft.operators.Retrieval
     import graft.sources.Writers
-    val idx = java.nio.file.Files.createTempDirectory("bm25cdc").toString
-    val outDir = java.nio.file.Files.createTempDirectory("bm25cdcout").toString
+    val idx = TestSpark.tmpDir("bm25cdc")
+    val outDir = TestSpark.tmpDir("bm25cdcout")
     val terms = Seq("alpha", "beta", "gamma")
     // the supported empty bootstrap: a zero-doc build, epochs take over
     Writers.writeBm25Index(
@@ -1605,7 +1632,7 @@ class StreamingSpec extends AnyFunSuite {
         .select(col("doc_id"), col("n_terms"), col("bm25"))
         .as[(Long, Long, Double)].collect().toSet
     def fromScratch(docs: Seq[(Long, String)]): Set[(Long, Long, Double)] = {
-      val p = java.nio.file.Files.createTempDirectory("bm25cdcref").toString
+      val p = TestSpark.tmpDir("bm25cdcref")
       Writers.writeBm25Index(docs.toDF("doc_id", "text"), p)
       Retrieval.bm25Stored(Writers.prunedBm25Tf(spark, p, terms),
           spark.read.parquet(s"$p/stats"), "doc_id", terms)
@@ -1661,8 +1688,8 @@ class StreamingSpec extends AnyFunSuite {
     "vacuumed, replayed, landed exactly once") {
     import graft.operators.Retrieval
     import graft.sources.Writers
-    val idx = java.nio.file.Files.createTempDirectory("bm25crash").toString
-    val outDir = java.nio.file.Files.createTempDirectory("bm25crashout").toString
+    val idx = TestSpark.tmpDir("bm25crash")
+    val outDir = TestSpark.tmpDir("bm25crashout")
     val terms = Seq("alpha", "beta")
     Writers.writeBm25Index(
       Seq(0L -> "alpha beta", 1L -> "beta beta").toDF("doc_id", "text"), idx)
@@ -1684,7 +1711,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq(("add", 2L, "alpha alpha")).toDF("op", "doc_id", "text"),
       0, idx, outDir, terms)
     assert(!Writers.writerLockHeld(idx), "the stale lock survived")
-    val ref = java.nio.file.Files.createTempDirectory("bm25crashref").toString
+    val ref = TestSpark.tmpDir("bm25crashref")
     Writers.writeBm25Index(
       Seq(0L -> "alpha beta", 1L -> "beta beta", 2L -> "alpha alpha")
         .toDF("doc_id", "text"), ref)
@@ -1700,8 +1727,8 @@ class StreamingSpec extends AnyFunSuite {
     "live set) transits the layout through empty and repopulates it") {
     import graft.operators.Retrieval
     import graft.sources.Writers
-    val idx = java.nio.file.Files.createTempDirectory("bm25cdcfull").toString
-    val outDir = java.nio.file.Files.createTempDirectory("bm25cdcfullout").toString
+    val idx = TestSpark.tmpDir("bm25cdcfull")
+    val outDir = TestSpark.tmpDir("bm25cdcfullout")
     val terms = Seq("alpha", "beta")
     Writers.writeBm25Index(
       Seq(0L -> "alpha beta", 1L -> "beta beta").toDF("doc_id", "text"), idx)
@@ -1710,7 +1737,7 @@ class StreamingSpec extends AnyFunSuite {
     StreamingJobs.bm25MaintenanceBatch(
       Seq(("update", 0L, "alpha alpha"), ("update", 1L, "beta alpha"))
         .toDF("op", "doc_id", "text"), 0, idx, outDir, terms)
-    val ref = java.nio.file.Files.createTempDirectory("bm25cdcfullref").toString
+    val ref = TestSpark.tmpDir("bm25cdcfullref")
     Writers.writeBm25Index(
       Seq(0L -> "alpha alpha", 1L -> "beta alpha").toDF("doc_id", "text"),
       ref)
@@ -1730,8 +1757,8 @@ class StreamingSpec extends AnyFunSuite {
     import graft.operators.Similarity
     import graft.sources.Writers
     val dir = "/root/testdata/sf0.001"
-    val idx = java.nio.file.Files.createTempDirectory("ivfcdc").toString
-    val outDir = java.nio.file.Files.createTempDirectory("ivfcdcout").toString
+    val idx = TestSpark.tmpDir("ivfcdc")
+    val outDir = TestSpark.tmpDir("ivfcdcout")
     val vecs = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     // FAISS train-before-stream: frozen artifacts exist, codes leg EMPTY

@@ -22,4 +22,13 @@ object TestSpark {
     .config("spark.sql.streaming.forceDeleteTempCheckpointLocation", "true")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** A fresh directory named `prefix…` under the JVM's scratch root
+    * ([[graft.sources.Writers.scratchRoot]]), which a shutdown hook
+    * removes — test fixtures leave nothing in the temp directory. */
+  def tmpDir(prefix: String): String = {
+    val root = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(graft.sources.Writers.scratchRoot))
+    java.nio.file.Files.createTempDirectory(root, prefix).toString
+  }
 }
