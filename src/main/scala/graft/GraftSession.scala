@@ -8,12 +8,38 @@ import org.apache.spark.sql.SparkSession
   *  - nanos-as-long parquet reads (TIMESTAMP(NANOS) sources — Tables);
   *  - AQE with skew-join splitting (on by default in Spark 4, pinned
   *    here so a cluster-side default flip can't regress skewed joins);
-  *  - graft native functions registered (SQL-callable graft_dot).
+  *  - graft native functions registered (SQL-callable graft_dot);
+  *  - a generated-code cache sized for the whole declared suite
+  *    ([[CodegenCacheEntries]]). The size is a static conf that Spark's
+  *    `CodeGenerator` reads once per JVM, at its first use: a session
+  *    built after any codegen in the same JVM silently keeps the size
+  *    that first use saw. One full `graft.Bench` pass compiles
+  *    2,353 distinct classes; the cap is sized from that count.
   *
   * `shufflePartitions` should be ≈ total executor cores on a real
   * cluster; the mains pass SPARK_GRAFT_CPUS.
   */
 object GraftSession {
+  /** `spark.sql.codegen.cache.maxEntries`: the cache of compiled
+    * whole-stage and expression classes, keyed by generated source.
+    * Spark's default of 100 is below what one `etl_tail` pass of the
+    * benchmark generates (126 classes), so each class was evicted before
+    * its next use and every warm pass recompiled about 100 of them.
+    *
+    * Sized from a count (Spark's `CodegenMetrics` compile counter, at
+    * `local[4]` on sf0.1, in a JVM whose cache never evicts): one full
+    * `graft.Bench` pass over every declared query compiles 2,353
+    * distinct classes, its warm-up included, and a second pass compiles
+    * 34 more, in 9 queries whose plans differ from pass to pass (those
+    * classes are never reused). One pass's working set is therefore
+    * 2,387 classes. The cap holds it plus half again, because the cache
+    * (Guava's) splits its size over 4 segments, each evicting its own
+    * least recently used class once it holds a quarter of the cap, and
+    * because declared queries added later, or plans that differ at
+    * another scale or core count, add classes. The cache holds at most
+    * this many classes; a JVM that compiles fewer never fills it. */
+  val CodegenCacheEntries: Int = 2387 * 3 / 2
+
   def build(master: String, shufflePartitions: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
@@ -76,6 +102,8 @@ object GraftSession {
         sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
         sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION", "64m"))
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -136,7 +136,9 @@ object StreamingJobs {
       .unionByName(fresh.select(cols.map(col): _*)))
 
   /** The epoch-sink protocol, written once for every `*Batch` body
-    * (`body` names it in errors). `run` supplies the epoch's output,
+    * (`body` names it in errors). `input` holds the epoch's input rows —
+    * the micro-batch, or a cached frame with one row per batch row — and
+    * its count is `input_rows`. `run` supplies the epoch's output,
     * fresh contributions and flagged count; this then
     *  1. overwrites `outDir/epoch=N` with the output;
     *  2. merges each leg's contribution, stamped `__epoch = N`, with
@@ -160,22 +162,23 @@ object StreamingJobs {
     * bodies' docs name theirs): a schema read of each leg's latest
     * version in `prior`; the output write; per leg, `mergeState`'s read of
     * the latest version, its write and its read-back; then for the
-    * metrics: a count of `batch` — which re-runs the micro-batch's
-    * source and plan unless the body cached it (only the maintenance
-    * bodies do) — the body's flagged count (a read-back of the output,
+    * metrics: a count of `input` — which re-runs the micro-batch's
+    * source and plan unless the body passes it cached (the maintenance
+    * bodies cache the batch; `labelBatch` passes its cached labeled
+    * rows) — the body's flagged count (a read-back of the output,
     * counted whole or filtered on its payload columns, or a count over
     * the late rows; kmv, hist, rrf and profile emit a constant), a count
     * of the first leg's latest version filtered on `__epoch` (which reads
     * that column from every state file), and the one-row metrics
     * write. */
-  private def runEpoch(body: String, batch: DataFrame, epochId: Long,
+  private def runEpoch(body: String, input: DataFrame, epochId: Long,
                        outDir: String, maxEpochAge: Int = 0,
                        flaggedKind: String = "flagged_pairs")(
                        run: Epoch => Emit): Unit = {
     require(maxEpochAge >= 0,
       s"$body: maxEpochAge must be >= 0 (0 retains every epoch), got " +
         s"$maxEpochAge at epoch $epochId")
-    val spark = batch.sparkSession
+    val spark = input.sparkSession
     val outPath = s"$outDir/epoch=$epochId"
     val ep = new Epoch(spark, epochId, outPath)
     val emit = run(ep)
@@ -188,7 +191,7 @@ object StreamingJobs {
       Writers.mergeState(spark, leg.dir, ep.stamp(fresh), leg.key,
         col("__epoch"), evict)
     }
-    val inputRows = batch.count()
+    val inputRows = input.count()
     val flagged = emit.flaggedCount
     val stateRows = legs.headOption
       .flatMap { case (leg, _) => Writers.readState(spark, leg.dir) }
@@ -1051,16 +1054,17 @@ object StreamingJobs {
                  tokensCol: Column, modelPath: String, classes: Seq[String],
                  buckets: Int, outDir: String,
                  outCol: String = "class"): Unit = {
-    // cache → count → write: the labeled-row counter comes from the
-    // SAME computed batch the epoch persists (one model pass, the write
-    // replays from cache) instead of a second full read of the parquet
-    // just written (ADVICE r16)
+    // cache → count → write: the labeled-row counter and the input-row
+    // count come from the SAME computed batch the epoch persists (one
+    // model pass; the write and both counts replay from cache —
+    // predictClass keeps one row per input row) instead of re-reading
+    // the written parquet (ADVICE r16) or re-running the micro-batch
     val labeled = QualityModel.predictClass(
         batch.select(col(idCol), tokensCol.as("__toks")), col("__toks"),
         batch.sparkSession.read.parquet(modelPath), classes, buckets, outCol)
       .drop("__toks")
       .cache()
-    try runEpoch("labelBatch", batch, epochId, outDir,
+    try runEpoch("labelBatch", labeled, epochId, outDir,
         flaggedKind = "rows_labeled") { _ =>
       val flagged = labeled.filter(col(s"pred_$outCol").isNotNull).count()
       new Emit(labeled, Nil, flagged)

@@ -18,6 +18,10 @@ import graft.functions.GraftFunctions
   * expressions (the xpath family) still pass — their generated code is a
   * reference call by design, which compiles — while a native expression
   * whose emitted Java doesn't resolve breaks loudly.
+  *
+  * The spec also pins the generated-code cache's size: a repeated pass
+  * over more distinct plans than Spark's default cap reuses its classes
+  * instead of compiling them again.
   */
 class CodegenLintSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -73,6 +77,23 @@ class CodegenLintSpec extends AnyFunSuite {
     val missing = registered.filterNot(invocations.contains)
     assert(missing.isEmpty,
       s"registered functions with no codegen-lint invocation: $missing")
+  }
+
+  test("a second pass over 150 distinct whole-stage plans reuses their " +
+    "compiled classes (codegen cache sized by GraftSession)") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // the inlined literal makes each plan's generated class distinct
+    def pass(): Unit = (1 to 150).foreach { i =>
+      spark.range(0, 10, 1, 1).selectExpr(s"id * $i + 1")
+        .write.format("noop").mode("overwrite").save()
+    }
+    pass()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    pass()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    // Spark's default cap of 100 evicts every class before its reuse,
+    // and the second pass compiles every one of them again
+    assert(compiled <= 5, s"second pass compiled $compiled classes")
   }
 
   test("all graft_* expressions codegen-compile (no interpreter fallback)") {

@@ -20,6 +20,8 @@ object TestSpark {
     // over tables bucketed by l_orderkey)
     .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
     .config("spark.sql.streaming.forceDeleteTempCheckpointLocation", "true")
+    .config("spark.sql.codegen.cache.maxEntries",
+      GraftSession.CodegenCacheEntries.toString)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
