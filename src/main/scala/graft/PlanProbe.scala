@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dev loop: where does a query's wall-time go — plan construction,
   * analysis, optimization, physical planning, or execution? Surfaces
@@ -25,6 +29,20 @@ object PlanProbe {
       n
     }
 
+    // SPARK_GRAFT_METRICS: the rerun's noop write plans its OWN
+    // QueryExecution, so its executed tree (with the metrics that run
+    // populated) only reaches a listener. Listener events are
+    // asynchronous, so each write's tree is taken from the queue below
+    // after the write returns.
+    val metrics = sys.env.contains("SPARK_GRAFT_METRICS")
+    val writes = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    if (metrics) spark.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.executedPlan.isInstanceOf[V2TableWriteExec])
+          writes.put(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+
     args.foreach { name =>
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
@@ -44,19 +62,15 @@ object PlanProbe {
       df2.write.format("noop").mode("overwrite").save()
       val t7 = System.nanoTime()
       println(f"[probe] $name%-26s construct=${(t1 - t0) / 1e9}%.2f analyze=${(t2 - t1) / 1e9}%.2f optimize=${(t3 - t2) / 1e9}%.2f physical=${(t4 - t3) / 1e9}%.2f exec1=${(t5 - t4) / 1e9}%.2f rerun=${(t7 - t6) / 1e9}%.2f exprNodes analyzed=${exprNodes(analyzed)} optimized=${exprNodes(opt)}")
-      if (sys.env.contains("SPARK_GRAFT_METRICS")) {
-        // the noop write above plans its OWN QueryExecution, so df2's
-        // tree never ran and its metrics are all zero — execute df2's
-        // plan directly (toRdd materializes every column of every row)
-        // and read the metrics that execution populated
-        val df3 = fn(spark, sfDir)
-        df3.queryExecution.toRdd.foreach(_ => ())
+      if (metrics) {
+        // the first write's tree arrives first; the rerun's is the second
+        writes.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+        val rerun = writes.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+        require(rerun != null, s"$name: the rerun's write tree never arrived")
         // AQE final trees nest executed subtrees inside QueryStageExec
         // LEAVES (ResultQueryStage/ShuffleQueryStage/BroadcastQueryStage
         // in 4.1) — plain foreach stops at the stage boundary, so walk
         // through each stage's wrapped plan explicitly
-        import org.apache.spark.sql.execution.SparkPlan
-        import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
         def walk(p: SparkPlan)(f: SparkPlan => Unit): Unit = {
           f(p)
           p match {
@@ -65,7 +79,7 @@ object PlanProbe {
             case other => other.children.foreach(walk(_)(f))
           }
         }
-        walk(df3.queryExecution.executedPlan) { node =>
+        walk(rerun) { node =>
           val interesting = node.metrics.filter { case (k, m) =>
             m.value > 0 && (k.contains("time") || k.contains("duration") ||
               k == "numOutputRows" || k.contains("Time"))

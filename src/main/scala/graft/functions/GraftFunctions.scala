@@ -197,19 +197,10 @@ object GraftFunctions {
     * [[ImageFunctions.imageMeta]]/`unpackAudio`/`unpackVideo` decode
     * column-side. */
   private[functions] val mediaBuilders: Seq[(String, Class[_], Seq[Expression] => Expression)] =
-    Seq(
-      ("graft_image_dims", classOf[ImageDims], unary("graft_image_dims", ImageDims)),
-      ("graft_wav_info", classOf[WavInfo], unary("graft_wav_info", WavInfo)),
-      ("graft_mp4_info", classOf[Mp4Info], unary("graft_mp4_info", Mp4Info)),
-      ("graft_mkv_info", classOf[MkvInfo], unary("graft_mkv_info", MkvInfo)),
-      ("graft_mkv_audio_info", classOf[MkvAudioInfo],
-        unary("graft_mkv_audio_info", MkvAudioInfo)),
-      ("graft_mp3_info", classOf[Mp3Info], unary("graft_mp3_info", Mp3Info)),
-      ("graft_flac_info", classOf[FlacInfo], unary("graft_flac_info", FlacInfo)),
-      ("graft_ogg_info", classOf[OggInfo], unary("graft_ogg_info", OggInfo)),
-      ("graft_avi_info", classOf[AviInfo], unary("graft_avi_info", AviInfo)),
-      ("graft_pdf_info", classOf[PdfInfo], unary("graft_pdf_info", PdfInfo)),
-      ("graft_dhash", classOf[ImageDHash], unary("graft_dhash", ImageDHash)))
+    MediaHeader.Parsers.map { case (name, _, _) =>
+      (s"graft_$name", classOf[MediaHeader]: Class[_],
+        unary(s"graft_$name", MediaHeader(_, name)))
+    } :+ ("graft_dhash", classOf[ImageDHash], unary("graft_dhash", ImageDHash))
 
   val mediaFunctions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
     mediaBuilders.map { case (name, cls, builder) =>

@@ -40,7 +40,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Output: struct(text = kept blocks joined by '\n', kept, blocks). At
   * 100 TB the stage is map-only expression work — filters and projections
   * around it still push to the scan; the expression stays inside
-  * whole-stage codegen via the static-helper call (the [[ImageDims]]
+  * whole-stage codegen via the static-helper call (the [[MediaHeader]]
   * shape).
   */
 object HtmlContent {
@@ -240,7 +240,7 @@ object HtmlContent {
 
 /** `graft_main_content(html) -> struct(text, kept, blocks)` — the
   * [[HtmlContent]] extractor as a codegen expression (static-helper call,
-  * the [[ImageDims]] shape; NULL input yields NULL). */
+  * the [[MediaHeader]] shape; NULL input yields NULL). */
 case class HtmlMainContent(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {

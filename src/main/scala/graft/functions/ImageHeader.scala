@@ -1126,24 +1126,31 @@ object ImageHeader {
   }
 }
 
-/** `image_dims(binary) -> long` — NULL unless the payload starts with a
-  * well-formed PNG/JPEG/GIF/BMP header; else formatId<<48|width<<24|height
-  * (unpacked by [[ImageFunctions.imageMeta]]). Codegen calls the static
-  * parser directly, so the expression stays inside whole-stage codegen. */
-case class ImageDims(child: Expression) extends UnaryExpression {
+/** One media header parser as a SQL expression, `name(binary) -> long`:
+  * NULL unless the payload starts with a well-formed header of the
+  * parser's format, else that format's packed long. Codegen calls the
+  * static parser directly, so the expression stays inside whole-stage
+  * codegen. `name` (the prettyName) picks the parser from
+  * [[MediaHeader.Parsers]]; `stringArgs` is the child alone, so a plan
+  * reads `image_dims(bin)`, not the parser name twice. */
+case class MediaHeader(child: Expression, name: String)
+    extends UnaryExpression {
+
+  private val (method, parse) = MediaHeader.parser(name)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case BinaryType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"image_dims expects binary input, got ${other.sql}")
+      s"$name expects binary input, got ${other.sql}")
   }
 
   override def dataType: DataType = LongType
-  override def prettyName: String = "image_dims"
+  override def prettyName: String = name
   override def nullable: Boolean = true
+  override protected def stringArgs: Iterator[Any] = Iterator(child)
 
   override def nullSafeEval(input: Any): Any = {
-    val packed = ImageHeader.packedDims(input.asInstanceOf[Array[Byte]])
+    val packed = parse(input.asInstanceOf[Array[Byte]])
     if (packed < 0) null else packed
   }
 
@@ -1151,324 +1158,58 @@ case class ImageDims(child: Expression) extends UnaryExpression {
     nullSafeCodeGen(ctx, ev, c => {
       val packed = ctx.freshName("packed")
       s"""
-         |long $packed = graft.functions.ImageHeader.packedDims($c);
+         |long $packed = graft.functions.ImageHeader.$method($c);
          |if ($packed < 0) { ${ev.isNull} = true; } else { ${ev.value} = $packed; }
        """.stripMargin
     })
 
-  override protected def withNewChildInternal(newChild: Expression): ImageDims =
+  override protected def withNewChildInternal(newChild: Expression): MediaHeader =
     copy(child = newChild)
 }
 
-/** `wav_info(binary) -> long` — NULL unless the payload is a well-formed
-  * RIFF/WAVE header; else sampleRate<<24|durationMs (unpacked by
-  * [[ImageFunctions.audioMeta]]). Same codegen shape as [[ImageDims]]. */
-case class WavInfo(child: Expression) extends UnaryExpression {
+object MediaHeader {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"wav_info expects binary input, got ${other.sql}")
-  }
+  /** (prettyName, static [[ImageHeader]] method, parser), in
+    * registration order. Four packings, each decoded column-side by
+    * [[ImageFunctions]]:
+    *  - `image_dims`: PNG/JPEG/GIF/BMP/WebP/TIFF,
+    *    formatId<<48|width<<24|height (`imageMeta`);
+    *  - `wav_info` (RIFF/WAVE), `mkv_audio_info` (Matroska/WebM with an
+    *    audio track), `mp3_info` (optional ID3v2 + MPEG Layer III frame
+    *    header, CBR estimate), `flac_info` (fLaC + STREAMINFO) and
+    *    `ogg_info` (OggS page + Vorbis/Opus identification header):
+    *    sampleRate<<24|durationMs (`audioMeta` and its twins);
+    *  - `mp4_info` (MP4/ISO-BMFF), `mkv_info` (Matroska/WebM EBML) and
+    *    `avi_info` (RIFF/AVI + hdrl LIST + avih):
+    *    width<<44|height<<24|durationMs (`videoMeta` and its twins);
+    *  - `pdf_info`: a classic-xref PDF whose page tree resolves,
+    *    major<<40|minor<<32|pageCount (`pdfMeta`). */
+  val Parsers: Seq[(String, String, Array[Byte] => Long)] = Seq(
+    ("image_dims", "packedDims", ImageHeader.packedDims),
+    ("wav_info", "packedWav", ImageHeader.packedWav),
+    ("mp4_info", "packedMp4", ImageHeader.packedMp4),
+    ("mkv_info", "packedMkv", ImageHeader.packedMkv),
+    ("mkv_audio_info", "packedMkvAudio", ImageHeader.packedMkvAudio),
+    ("mp3_info", "packedMp3", ImageHeader.packedMp3),
+    ("flac_info", "packedFlac", ImageHeader.packedFlac),
+    ("ogg_info", "packedOgg", ImageHeader.packedOgg),
+    ("avi_info", "packedAvi", ImageHeader.packedAvi),
+    ("pdf_info", "packedPdf", ImageHeader.packedPdf))
 
-  override def dataType: DataType = LongType
-  override def prettyName: String = "wav_info"
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
-    val packed = ImageHeader.packedWav(input.asInstanceOf[Array[Byte]])
-    if (packed < 0) null else packed
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val packed = ctx.freshName("packed")
-      s"""
-         |long $packed = graft.functions.ImageHeader.packedWav($c);
-         |if ($packed < 0) { ${ev.isNull} = true; } else { ${ev.value} = $packed; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): WavInfo =
-    copy(child = newChild)
-}
-
-/** `mp4_info(binary) -> long` — NULL unless the payload is a well-formed
-  * MP4/ISO-BMFF header; else width<<44|height<<24|durationMs (unpacked
-  * by [[ImageFunctions.videoMeta]]). Same codegen shape as [[ImageDims]]. */
-case class Mp4Info(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"mp4_info expects binary input, got ${other.sql}")
-  }
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "mp4_info"
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
-    val packed = ImageHeader.packedMp4(input.asInstanceOf[Array[Byte]])
-    if (packed < 0) null else packed
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val packed = ctx.freshName("packed")
-      s"""
-         |long $packed = graft.functions.ImageHeader.packedMp4($c);
-         |if ($packed < 0) { ${ev.isNull} = true; } else { ${ev.value} = $packed; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Mp4Info =
-    copy(child = newChild)
-}
-
-/** `mkv_info(binary) -> long` — NULL unless the payload is a well-formed
-  * Matroska/WebM (EBML) header; else width<<44|height<<24|durationMs —
-  * MP4's packing, so [[ImageFunctions.videoMeta]]-style unpacking applies
-  * to either container. Same codegen shape as [[ImageDims]]. */
-case class MkvInfo(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"mkv_info expects binary input, got ${other.sql}")
-  }
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "mkv_info"
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
-    val packed = ImageHeader.packedMkv(input.asInstanceOf[Array[Byte]])
-    if (packed < 0) null else packed
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val packed = ctx.freshName("packed")
-      s"""
-         |long $packed = graft.functions.ImageHeader.packedMkv($c);
-         |if ($packed < 0) { ${ev.isNull} = true; } else { ${ev.value} = $packed; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): MkvInfo =
-    copy(child = newChild)
-}
-
-/** `mkv_audio_info(binary) -> long` — NULL unless the payload is a
-  * well-formed Matroska/WebM with an audio track; else
-  * sampleRate<<24|durationMs — WAV's packing, so
-  * [[ImageFunctions.audioMeta]]-style unpacking applies to either audio
-  * container. Same codegen shape as [[ImageDims]]. */
-case class MkvAudioInfo(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"mkv_audio_info expects binary input, got ${other.sql}")
-  }
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "mkv_audio_info"
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
-    val packed = ImageHeader.packedMkvAudio(input.asInstanceOf[Array[Byte]])
-    if (packed < 0) null else packed
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val packed = ctx.freshName("packed")
-      s"""
-         |long $packed = graft.functions.ImageHeader.packedMkvAudio($c);
-         |if ($packed < 0) { ${ev.isNull} = true; } else { ${ev.value} = $packed; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): MkvAudioInfo =
-    copy(child = newChild)
-}
-
-/** `mp3_info(binary) -> long` — NULL unless the payload is a well-formed
-  * MP3 (optional ID3v2 + MPEG Layer III frame header); else
-  * sampleRate<<24|durationMs (CBR estimate), WAV's packing. Same codegen
-  * shape as [[ImageDims]]. */
-case class Mp3Info(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"mp3_info expects binary input, got ${other.sql}")
-  }
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "mp3_info"
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
-    val packed = ImageHeader.packedMp3(input.asInstanceOf[Array[Byte]])
-    if (packed < 0) null else packed
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val packed = ctx.freshName("packed")
-      s"""
-         |long $packed = graft.functions.ImageHeader.packedMp3($c);
-         |if ($packed < 0) { ${ev.isNull} = true; } else { ${ev.value} = $packed; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Mp3Info =
-    copy(child = newChild)
-}
-
-/** `avi_info(binary) -> long` — NULL unless the payload is a well-formed
-  * AVI (RIFF/AVI + hdrl LIST + avih); else width<<44|height<<24|durationMs,
-  * MP4's packing. Same codegen shape as [[ImageDims]]. */
-case class AviInfo(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"avi_info expects binary input, got ${other.sql}")
-  }
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "avi_info"
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
-    val packed = ImageHeader.packedAvi(input.asInstanceOf[Array[Byte]])
-    if (packed < 0) null else packed
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val packed = ctx.freshName("packed")
-      s"""
-         |long $packed = graft.functions.ImageHeader.packedAvi($c);
-         |if ($packed < 0) { ${ev.isNull} = true; } else { ${ev.value} = $packed; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): AviInfo =
-    copy(child = newChild)
-}
-
-/** `flac_info(binary) -> long` — NULL unless the payload is a well-formed
-  * FLAC (fLaC magic + STREAMINFO); else sampleRate<<24|durationMs, WAV's
-  * packing. Same codegen shape as [[ImageDims]]. */
-case class FlacInfo(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"flac_info expects binary input, got ${other.sql}")
-  }
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "flac_info"
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
-    val packed = ImageHeader.packedFlac(input.asInstanceOf[Array[Byte]])
-    if (packed < 0) null else packed
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val packed = ctx.freshName("packed")
-      s"""
-         |long $packed = graft.functions.ImageHeader.packedFlac($c);
-         |if ($packed < 0) { ${ev.isNull} = true; } else { ${ev.value} = $packed; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): FlacInfo =
-    copy(child = newChild)
-}
-
-/** `ogg_info(binary) -> long` — NULL unless the payload is a well-formed
-  * OGG Vorbis/Opus (OggS page + identification header); else
-  * sampleRate<<24|durationMs, WAV's packing. Same codegen shape as
-  * [[ImageDims]]. */
-case class OggInfo(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"ogg_info expects binary input, got ${other.sql}")
-  }
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "ogg_info"
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
-    val packed = ImageHeader.packedOgg(input.asInstanceOf[Array[Byte]])
-    if (packed < 0) null else packed
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val packed = ctx.freshName("packed")
-      s"""
-         |long $packed = graft.functions.ImageHeader.packedOgg($c);
-         |if ($packed < 0) { ${ev.isNull} = true; } else { ${ev.value} = $packed; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): OggInfo =
-    copy(child = newChild)
-}
-
-/** `pdf_info(binary) -> long` — NULL unless the payload is a classic-xref
-  * PDF whose page tree resolves; else major<<40|minor<<32|pageCount
-  * (unpacked by [[ImageFunctions.pdfMeta]]). Same codegen shape as
-  * [[ImageDims]]. */
-case class PdfInfo(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"pdf_info expects binary input, got ${other.sql}")
-  }
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "pdf_info"
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
-    val packed = ImageHeader.packedPdf(input.asInstanceOf[Array[Byte]])
-    if (packed < 0) null else packed
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val packed = ctx.freshName("packed")
-      s"""
-         |long $packed = graft.functions.ImageHeader.packedPdf($c);
-         |if ($packed < 0) { ${ev.isNull} = true; } else { ${ev.value} = $packed; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): PdfInfo =
-    copy(child = newChild)
+  private def parser(name: String): (String, Array[Byte] => Long) =
+    Parsers.collectFirst { case (`name`, m, f) => (m, f) }.getOrElse(
+      throw new IllegalArgumentException(s"no media header parser $name"))
 }
 
 /** Column-level entry points for the image-header expressions. */
 object ImageFunctions {
 
+  private def header(name: String, payload: Column): Column =
+    ColumnBridge.column(MediaHeader(ColumnBridge.expression(payload), name))
+
   /** Packed (format,width,height) long, NULL for unrecognized payloads. */
   def imageDims(payload: Column): Column =
-    ColumnBridge.column(ImageDims(ColumnBridge.expression(payload)))
+    header("image_dims", payload)
 
   /** Typed header metadata `{format, width, height}` — NULL fields for
     * unrecognized payloads (filter on `format IS NOT NULL`).
@@ -1494,7 +1235,7 @@ object ImageFunctions {
   /** Packed (sampleRate, durationMs) long for RIFF/WAVE payloads, NULL
     * otherwise. */
   def wavInfo(payload: Column): Column =
-    ColumnBridge.column(WavInfo(ColumnBridge.expression(payload)))
+    header("wav_info", payload)
 
   /** Typed audio header metadata `{sample_rate, duration_ms}` — NULL
     * fields for non-WAV payloads. */
@@ -1503,7 +1244,7 @@ object ImageFunctions {
   /** Packed (sampleRate, durationMs) long for Matroska/WebM payloads
     * carrying an audio track, NULL otherwise. */
   def mkvAudioInfo(payload: Column): Column =
-    ColumnBridge.column(MkvAudioInfo(ColumnBridge.expression(payload)))
+    header("mkv_audio_info", payload)
 
   /** Typed audio header metadata for Matroska/WebM audio — NULL fields
     * otherwise. */
@@ -1513,7 +1254,7 @@ object ImageFunctions {
   /** Packed (sampleRate, durationMs) long for MP3 payloads, NULL
     * otherwise. */
   def mp3Info(payload: Column): Column =
-    ColumnBridge.column(Mp3Info(ColumnBridge.expression(payload)))
+    header("mp3_info", payload)
 
   /** Typed audio header metadata for MP3 — NULL fields otherwise. */
   def mp3Meta(payload: Column): Column = unpackAudio(mp3Info(payload))
@@ -1521,7 +1262,7 @@ object ImageFunctions {
   /** Packed (sampleRate, durationMs) long for FLAC payloads, NULL
     * otherwise. */
   def flacInfo(payload: Column): Column =
-    ColumnBridge.column(FlacInfo(ColumnBridge.expression(payload)))
+    header("flac_info", payload)
 
   /** Typed audio header metadata for FLAC — NULL fields otherwise. */
   def flacMeta(payload: Column): Column = unpackAudio(flacInfo(payload))
@@ -1529,7 +1270,7 @@ object ImageFunctions {
   /** Packed (sampleRate, durationMs) long for OGG Vorbis/Opus payloads,
     * NULL otherwise. */
   def oggInfo(payload: Column): Column =
-    ColumnBridge.column(OggInfo(ColumnBridge.expression(payload)))
+    header("ogg_info", payload)
 
   /** Typed audio header metadata for OGG — NULL fields otherwise. */
   def oggMeta(payload: Column): Column = unpackAudio(oggInfo(payload))
@@ -1550,7 +1291,7 @@ object ImageFunctions {
   /** Packed (width, height, durationMs) long for MP4 payloads, NULL
     * otherwise. */
   def mp4Info(payload: Column): Column =
-    ColumnBridge.column(Mp4Info(ColumnBridge.expression(payload)))
+    header("mp4_info", payload)
 
   /** Typed video header metadata `{width, height, duration_ms}` — NULL
     * fields for non-MP4 payloads. */
@@ -1559,7 +1300,7 @@ object ImageFunctions {
   /** Packed (width, height, durationMs) long for Matroska/WebM payloads,
     * NULL otherwise. */
   def mkvInfo(payload: Column): Column =
-    ColumnBridge.column(MkvInfo(ColumnBridge.expression(payload)))
+    header("mkv_info", payload)
 
   /** Typed video header metadata for Matroska/WebM payloads — NULL
     * fields otherwise. */
@@ -1568,7 +1309,7 @@ object ImageFunctions {
   /** Packed (width, height, durationMs) long for AVI payloads, NULL
     * otherwise. */
   def aviInfo(payload: Column): Column =
-    ColumnBridge.column(AviInfo(ColumnBridge.expression(payload)))
+    header("avi_info", payload)
 
   /** Typed video header metadata for AVI payloads — NULL fields
     * otherwise. */
@@ -1590,7 +1331,7 @@ object ImageFunctions {
   /** Packed (major, minor, pageCount) long for classic-xref PDF
     * payloads, NULL otherwise. */
   def pdfInfo(payload: Column): Column =
-    ColumnBridge.column(PdfInfo(ColumnBridge.expression(payload)))
+    header("pdf_info", payload)
 
   /** Typed PDF metadata `{version, pages}` — NULL fields for payloads
     * that are not resolvable classic-xref PDFs. */

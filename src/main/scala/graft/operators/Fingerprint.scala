@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Canonical row fingerprinting (SURVEY §2.3 H1/H2).
@@ -22,11 +22,6 @@ object Fingerprint {
   /** `md5(concat_ws('|', coalesce(cast(c as string), '')...))`. */
   def rowHash(cols: Seq[Column]): Column =
     md5(concat_ws(Sep, cols.map(c => coalesce(c.cast("string"), lit(""))): _*))
-
-  /** H2: attach the fingerprint to every row (scraper.py:99-101). */
-  def withRowHash(df: DataFrame, hashFields: Seq[String],
-                  out: String = "row_hash"): DataFrame =
-    df.withColumn(out, rowHash(hashFields.map(col)))
 
   /** Matching oracle-SQL fragment for the same fingerprint. */
   def sqlExpr(cols: Seq[String]): String =

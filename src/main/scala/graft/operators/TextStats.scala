@@ -321,9 +321,14 @@ object TextStats {
     //   c_ab(a,b) = c(a, b) with b non-null     (exact bigram counts)
     // The (w, next) aggregate is vocabulary²-bounded (never data-sized);
     // it is localCheckpoint'ed so the two second-level aggregations read
-    // the bounded table instead of re-running the corpus pass — identical
-    // counts to [[unigramCounts]]/[[bigramCounts]] (TextStatsSpec pins
-    // them; the streaming sink keeps using those epoch-additive forms).
+    // the bounded table instead of re-running the corpus pass — counts
+    // identical to [[unigramCounts]]/[[bigramCounts]] for token arrays
+    // WITHOUT null elements (TextStatsSpec pins them; the streaming sink
+    // keeps using those epoch-additive forms). A null token breaks the
+    // identity: bigramCounts folds every pair with a null member into one
+    // null bigram, while this stream keeps (null, w) as a wa = null pair
+    // and drops (w, null) as a document end. The collocations output is
+    // unaffected, since scoreCollocations' inner equi-joins drop null keys.
     val shifted = concat(
       slice(tokensCol, lit(2), greatest(size(tokensCol) - 1, lit(0))),
       array(lit(null).cast("string")))

@@ -4,7 +4,7 @@ import java.nio.file.{FileAlreadyExistsException, Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
-import scala.util.control.NonFatal
+import scala.util.control.{ControlThrowable, NonFatal}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -159,9 +159,6 @@ object Writers {
     * directories instead of scanning a corpus-sized table. */
   def idPart(id: Column): Column = tokenPart(id.cast("string"))
 
-  /** Driver-side twin of [[idPart]] (the [[tokenPartOf]] contract). */
-  def idPartOf(id: Long): String = tokenPartOf(id.toString)
-
   // ---- the generation-stamped layout protocol -------------------------
 
   /** Hard cap on a layout's ACCUMULATED tombstone rows (across all
@@ -218,14 +215,31 @@ object Writers {
       * swap a crash interrupted. A root missing its directory can only be
       * mid-swap, and the lock lives inside it, so that root is recovered
       * before the lock; everything else only once the lock is held,
-      * which keeps a refused writer from touching anything. */
-    def write[T](verb: String)(body: => T): T = {
+      * which keeps a refused writer from touching anything.
+      *
+      * A body that THROWS may already have appended segments or
+      * tombstones at the committed generation, and the next commit would
+      * publish them. So they are [[vacuum]]ed while the lock still
+      * fences other writers, and vacuum releases the lock last; if that
+      * vacuum fails too, the lock stays held, exactly as after a crash:
+      * the next writer is refused and maintain* recovers. */
+    def write[T](spark: SparkSession, verb: String)(body: => T): T = {
       if (!Files.exists(Paths.get(root))) recoverSwap(root)
       val token = acquireWriter(verb)
-      try {
-        swaps.foreach(recoverSwap)
-        body
-      } finally releaseWriter(token)
+      val out =
+        try {
+          swaps.foreach(recoverSwap)
+          body
+        } catch {
+          case r: ControlThrowable => // a non-local return: body finished
+            releaseWriter(token)
+            throw r
+          case NonFatal(e) =>
+            try vacuum(spark) catch { case NonFatal(v) => e.addSuppressed(v) }
+            throw e
+        }
+      releaseWriter(token)
+      out
     }
 
     private def acquireWriter(verb: String): String = {
@@ -271,7 +285,8 @@ object Writers {
 
     /** The committed generation — None on a legacy gen-less layout. */
     def horizon(spark: SparkSession): Option[Long] =
-      sidecar(spark).map(_.getAs[Long]("next_gen")).orElse(defaultGen)
+      sidecar(spark).filter(_.schema.fieldNames.contains("next_gen"))
+        .map(_.getAs[Long]("next_gen")).orElse(defaultGen)
 
     /** The visibility horizon of a read AS OF `asOfGen` — clamped to the
       * committed counter (the committed state IS the newest history). */
@@ -281,10 +296,10 @@ object Writers {
     /** The committed generation of a layout that always has one. */
     def gen(spark: SparkSession): Long = horizon(spark).get
 
-    /** The tombstone table, when any delete ever ran. */
+    /** The tombstone table, when any committed or torn delete left one
+      * (a vacuum that collected every tombstone file leaves none). */
     def deletes(spark: SparkSession): Option[DataFrame] =
-      if (Files.isDirectory(Paths.get(delDir)))
-        Some(spark.read.parquet(delDir))
+      if (hasParquetFiles(delDir)) Some(spark.read.parquet(delDir))
       else None
 
     /** Accumulated tombstone rows, cached against the table's file
@@ -386,7 +401,7 @@ object Writers {
       * the result plan no tombstone scan, and AS-OF history is truncated
       * to the fold point. */
     def compact(spark: SparkSession, idCol: String): Unit =
-      write(s"compact$kind") {
+      write(spark, s"compact$kind") {
         val g = horizon(spark)
         val side = sidecar(spark)
         val dels = deletes(spark)
@@ -462,6 +477,14 @@ object Writers {
       cache.put(dir, (sig, v))
       v
     }
+  }
+
+  /** Run `body` with a `cache` that persists a DataFrame for the rest
+    * of the call; every DataFrame it cached is unpersisted on exit. */
+  private def withCached[T](body: (DataFrame => DataFrame) => T): T = {
+    val held = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    try body { df => held += df; df.cache() }
+    finally held.foreach(_.unpersist())
   }
 
   private def dirSignature(path: String): String = {
@@ -659,7 +682,7 @@ object Writers {
   def mergePostings(spark: SparkSession, path: String, fresh: DataFrame,
                     checkNewDocIds: Boolean = true): Unit = {
     val lay = postingsLayout(path)
-    lay.write("mergePostings") {
+    lay.write(spark, "mergePostings") {
       val g = lay.horizon(spark)
       val rows = postingsRows(fresh)
       val stamped = g.fold(rows)(v => rows.withColumn("gen", lit(v)))
@@ -725,7 +748,7 @@ object Writers {
                          ids: DataFrame,
                          idCol: String = "doc_id"): Unit = {
     val lay = postingsLayout(path)
-    lay.write("deleteFromPostings") {
+    lay.write(spark, "deleteFromPostings") {
       val cand = ids.select(col(idCol).as("doc_id")).distinct().cache()
       try {
         val existing = lay.deletes(spark)
@@ -840,10 +863,10 @@ object Writers {
       .select(col("token"), col("doc_id"), col("tf"), col("dl"),
         col("tok_part"))
 
-  /** The doclen rows of `docs` stamped `gen`, partitioned by [[idPart]]. */
-  private def bm25DocLen(docs: DataFrame, gen: Long): DataFrame =
+  /** The (doc_id, dl, doc_part) doclen rows of `docs`, partitioned by
+    * [[idPart]]; the writer stamps their `gen`. */
+  private def bm25DocLen(docs: DataFrame): DataFrame =
     bm25Base(docs).select(col("doc_id"), col("dl"))
-      .withColumn("gen", lit(gen))
       .withColumn("doc_part", idPart(col("doc_id")))
 
   /** (n_docs, sum_dl) of doclen rows — the exact DECIMAL length sum
@@ -904,15 +927,9 @@ object Writers {
       .write.mode("overwrite").parquet(s"$path/stats")
     writeClustered(bm25TfRows(docs).withColumn("gen", lit(0L)),
       s"$path/tf", "tok_part", "overwrite")
-    writeClustered(bm25DocLen(docs, 0L), s"$path/doclen", "doc_part",
-      "overwrite")
+    writeClustered(bm25DocLen(docs).withColumn("gen", lit(0L)),
+      s"$path/doclen", "doc_part", "overwrite")
   }
-
-  /** The tombstone table of a BM25 layout, when any delete ever ran —
-    * (doc_id, del_gen) rows, append-only segments, bounded between
-    * compactions, so probes broadcast it. */
-  def bm25Deletes(spark: SparkSession, path: String): Option[DataFrame] =
-    bm25Layout(path).deletes(spark)
 
   /** LIVE rows of the layout's doclen leg, pruned to the given
     * [[idPart]] directories — the existence/dl lookup merge's misuse
@@ -940,6 +957,95 @@ object Writers {
       writeBm25Index(graft.Tables.load(spark, dir, name), p)
     }
 
+  /** THE write step of a BM25 layout: [[mergeBm25Index]],
+    * [[deleteFromBm25Index]], [[updateBm25Index]] and one CDC epoch
+    * (StreamingJobs.bm25MaintenanceBatch) are each ONE call of it —
+    * one writer lock, one commit, so no caller exposes an intermediate
+    * generation. Under the lock, all ∝ the batch:
+    *  1. the stats sidecar is read once: the committed generation `g`;
+    *  2. delete leg (`deletes`, doc_id rows): the ids LIVE at `g`,
+    *     probed through their id-pruned doclen directories (never tf);
+    *     ids not live are skipped (idempotent, never a double-subtract);
+    *  3. the new-id guard, one rule: no add id may be live unless this
+    *     epoch tombstones it. `checkNewIds` probes it; a caller whose
+    *     delete leg names every add id (update, a CDC epoch) holds it by
+    *     construction, and an ingest routed through Delta.split may skip
+    *     it;
+    *  4. tombstones (doc_id, del_gen = g) append, then the add leg's
+    *     tf/doclen rows append stamped PAST them — `g + 1` when this
+    *     epoch tombstoned any id, else `g` — so visibility serves exactly
+    *     the new version of every doc;
+    *  5. ONE stats write lands last — subtract the deleted dl, add the
+    *     fresh dl through the exact DECIMAL sum_dl (bit-for-bit the avgdl
+    *     a from-scratch build over the changed corpus computes),
+    *     `next_gen` one past the last stamp — and is the COMMIT POINT for
+    *     tombstones and rows together.
+    * An epoch that changes nothing commits nothing. An epoch may leave
+    * the layout empty — the [[writeBm25Index]]-over-zero-docs bootstrap
+    * stats shape, which a later add leg bootstraps from — unless
+    * `allowEmpty` is false. Returns the number of live docs tombstoned. */
+  private[graft] def bm25Epoch(spark: SparkSession, path: String,
+                               verb: String, deletes: Option[DataFrame],
+                               adds: Option[DataFrame],
+                               checkNewIds: Boolean = false,
+                               allowEmpty: Boolean = true): Long = {
+    val lay = bm25Layout(path)
+    lay.write(spark, verb)(withCached { cache =>
+      val old = mergeableStats(spark, lay, verb)
+      val oldN = old.getAs[Long]("n_docs")
+      val g = old.getAs[Long]("next_gen")
+      val dels = lay.deletes(spark)
+      // the add leg's doclen rows drive everything batch-sized on that
+      // side: the stats delta, the guard's probe and the doclen append
+      val freshLen = adds.map(a => cache(bm25DocLen(a)))
+      val add = freshLen.map(dlSum(_).head())
+      val addN = add.fold(0L)(_.getAs[Long]("n_docs"))
+      // n_docs = 0 ⇒ nothing can be LIVE (and the empty doclen leg has
+      // no readable schema): no probe at all
+      def live(ids: DataFrame): Option[DataFrame] = {
+        val parts = if (oldN == 0L) Nil else docParts(ids)
+        if (parts.isEmpty) None
+        else Some(liveDoclen(spark, lay, parts, dels, g)
+          .join(ids.select(col("doc_id")), Seq("doc_id"), "left_semi"))
+      }
+      val dead = deletes.flatMap(d => live(cache(d.select(col("doc_id"))
+        .withColumn("doc_part", idPart(col("doc_id")))))).map(cache)
+      val gone = dead.map(dlSum(_).head())
+      val cnt = gone.fold(0L)(_.getAs[Long]("n_docs"))
+      if (checkNewIds && addN > 0L) live(freshLen.get).foreach { hit =>
+        require(dead.fold(hit)(d => hit.join(d.select(col("doc_id")),
+            Seq("doc_id"), "left_anti")).head(1).isEmpty,
+          s"$verb: fresh batch contains doc_ids LIVE in the index — " +
+            "merge takes the delta split's NEW side; changed docs need " +
+            "updateBm25Index (or deleteFromBm25Index first), not an " +
+            "in-place double-count")
+      }
+      val n = oldN - cnt + addN
+      if (cnt > 0L || addN > 0L) {
+        require(n > 0L || allowEmpty,
+          s"$verb would empty the index — an empty-stats layout is never " +
+            "the silent result of a plain delete; pass allowEmpty = true " +
+            "(the CDC maintenance stance) or rebuild")
+        if (cnt > 0L) lay.appendTombstones(verb, dels,
+          dead.get.select(col("doc_id")), cnt, g)
+        val addGen = if (cnt > 0L) g + 1L else g
+        if (addN > 0L) {
+          writeClustered(bm25TfRows(adds.get).withColumn("gen", lit(addGen)),
+            s"$path/tf", "tok_part", "append")
+          writeClustered(freshLen.get.withColumn("gen", lit(addGen)),
+            s"$path/doclen", "doc_part", "append")
+        }
+        val zero = java.math.BigDecimal.ZERO
+        val s = sumDl(old).subtract(gone.fold(zero)(sumDl))
+          .add(add.fold(zero)(sumDl))
+        lay.commit(spark, verb, g)(statsRow(lit(n),
+          (if (n == 0L) lit(null) else lit(s)).cast("decimal(28,6)"),
+          (if (addN > 0L) addGen else g) + 1L): _*)
+      }
+      cnt
+    })
+  }
+
   /** Fold a FRESH document batch into a stored [[ensureBm25Index]]
     * layout at cost ∝ |fresh| + its touched token directories — never a
     * from-scratch rebuild (VERDICT r16 #1; the q93/q120 fresh-vs-state
@@ -947,7 +1053,8 @@ object Writers {
     *
     * `fresh` must carry (doc_id, text) rows whose doc_ids are NEW to
     * the index — the delta split's new side (operators/Delta, the
-    * reference's whole incremental contract). The merge:
+    * reference's whole incremental contract). The merge is
+    * [[bm25Epoch]]'s add leg alone:
     *  1. computes the fresh (token, doc_id, tf, dl) rows — ∝ |fresh|;
     *  2. APPENDS them as new files inside their md5-prefix directories
     *     (the Lucene segment discipline: NOTHING existing is read or
@@ -963,46 +1070,17 @@ object Writers {
     * silent double-count; the guard semi-joins the fresh ids' doclen
     * directories, so an ingest that already routed through Delta.split
     * may pass false. Fresh rows are stamped `gen = stats.next_gen`, so
-    * they survive any earlier tombstone for the same id. */
+    * they survive any earlier tombstone for the same id. An empty batch
+    * is a no-op. */
   def mergeBm25Index(spark: SparkSession, path: String, fresh: DataFrame,
-                     checkNewDocIds: Boolean = true): Unit = {
-    val lay = bm25Layout(path)
-    lay.write("mergeBm25Index") {
-      val old = mergeableStats(spark, lay, "mergeBm25Index")
-      val g = old.getAs[Long]("next_gen")
-      val oldN = old.getAs[Long]("n_docs")
-      // the fresh doclen rows drive everything batch-sized: the stats
-      // delta, the guard's existence probe, and the doclen append
-      val freshLen = bm25DocLen(fresh, g).cache()
-      try {
-        val add = dlSum(freshLen).head()
-        val n = oldN + add.getAs[Long]("n_docs")
-        if (n == oldN) return // empty batch: no-op
-        // n_docs = 0 ⇒ nothing can be LIVE (and the empty doclen leg has
-        // no readable schema) — the bootstrap merge skips the guard
-        if (checkNewDocIds && oldN > 0L)
-          require(liveDoclen(spark, lay, docParts(freshLen),
-              lay.deletes(spark), g)
-              .join(freshLen.select(col("doc_id")).distinct(),
-                Seq("doc_id"), "left_semi").head(1).isEmpty,
-            "mergeBm25Index: fresh batch contains doc_ids LIVE in the " +
-              "index — merge takes the delta split's NEW side; changed " +
-              "docs need deleteFromBm25Index first, not an in-place " +
-              "double-count")
-        writeClustered(bm25TfRows(fresh).withColumn("gen", lit(g)),
-          s"$path/tf", "tok_part", "append")
-        writeClustered(freshLen, s"$path/doclen", "doc_part", "append")
-        val s = sumDl(old).add(sumDl(add))
-        lay.commit(spark, "mergeBm25Index", g)(
-          statsRow(lit(n), lit(s).cast("decimal(28,6)"), g + 1L): _*)
-      } finally freshLen.unpersist()
-    }
-  }
+                     checkNewDocIds: Boolean = true): Unit =
+    bm25Epoch(spark, path, "mergeBm25Index", None, Some(fresh),
+      checkNewIds = checkNewDocIds)
 
   /** Delete documents from a stored [[ensureBm25Index]] layout at cost
     * ∝ |deletes| — the Lucene `.del`-file analog (opt-outs,
-    * contamination takedowns, dedup evictions). Returns the number of
-    * documents actually deleted.
+    * contamination takedowns, dedup evictions): [[bm25Epoch]]'s delete
+    * leg alone. Returns the number of documents actually deleted.
     *  1. candidate ids prune the doclen leg to their [[idPart]]
     *     directories; only ids LIVE there count (delete is idempotent,
     *     never a double-subtract);
@@ -1014,115 +1092,36 @@ object Writers {
     * Deleting the LAST document is refused by default (an empty-stats
     * layout is a foot-gun for a caller who expects scores next probe);
     * `allowEmpty = true` permits it and writes exactly the
-    * [[writeBm25Index]]-over-zero-docs bootstrap stats shape, so a
-    * layout may TRANSIT through empty — the CDC maintenance loop needs
-    * that when one epoch replaces the entire live set (ADVICE r17).
-    * Between compactions [[MaxTombstoneRows]] bounds the tombstone
-    * table — a 100M-doc takedown routes through compaction, not through
-    * a broadcast. */
+    * [[writeBm25Index]]-over-zero-docs bootstrap stats shape, which a
+    * later merge bootstraps from. Between compactions
+    * [[MaxTombstoneRows]] bounds the tombstone table — a 100M-doc
+    * takedown routes through compaction, not through a broadcast. */
   def deleteFromBm25Index(spark: SparkSession, path: String,
                           deletes: DataFrame,
                           idCol: String = "doc_id",
-                          allowEmpty: Boolean = false): Long = {
-    val lay = bm25Layout(path)
-    lay.write("deleteFromBm25Index") {
-      val old = mergeableStats(spark, lay, "deleteFromBm25Index")
-      val oldN = old.getAs[Long]("n_docs")
-      if (oldN == 0L) return 0L // empty index: nothing to delete
-      val g = old.getAs[Long]("next_gen")
-      val cand = deletes.select(col(idCol).as("doc_id")).distinct()
-        .withColumn("doc_part", idPart(col("doc_id")))
-        .cache()
-      try {
-        val parts = docParts(cand)
-        if (parts.isEmpty) return 0L
-        val dels = lay.deletes(spark)
-        val present = liveDoclen(spark, lay, parts, dels, g)
-          .join(cand.select(col("doc_id")), Seq("doc_id"), "left_semi")
-          .cache()
-        try {
-          val gone = dlSum(present).head()
-          val cnt = gone.getAs[Long]("n_docs")
-          if (cnt == 0L) return 0L
-          val n = oldN - cnt
-          require(n > 0 || allowEmpty,
-            "deleteFromBm25Index would empty the index — an empty-stats " +
-              "layout is never the silent result of a plain delete; pass " +
-              "allowEmpty = true (the CDC maintenance stance) or rebuild")
-          lay.appendTombstones("deleteFromBm25Index", dels,
-            present.select(col("doc_id")), cnt, g)
-          val s = sumDl(old).subtract(sumDl(gone))
-          lay.commit(spark, "deleteFromBm25Index", g)(statsRow(lit(n),
-            (if (n == 0L) lit(null) else lit(s)).cast("decimal(28,6)"),
-            g + 1L): _*)
-          cnt
-        } finally present.unpersist()
-      } finally cand.unpersist()
-    }
-  }
+                          allowEmpty: Boolean = false): Long =
+    bm25Epoch(spark, path, "deleteFromBm25Index",
+      Some(deletes.select(col(idCol).as("doc_id"))), None,
+      allowEmpty = allowEmpty)
 
-  /** UPDATE = delete + re-merge FUSED into one verb with ONE commit
-    * flip (VERDICT r18 #5: the chained form commits twice and pays two
-    * stats reads, two stats writes and two guard probes; a traced
-    * `layout_epochs` run measured this verb at 23 Spark jobs for a
-    * 10-document batch). Mechanics, all ∝ the changed batch:
-    *  1. ids LIVE in the index are tombstoned at `del_gen = g` (absent
-    *     ids skip the tombstone — a changed doc that is NEW is just an
-    *     add, so update subsumes the merge guard);
-    *  2. the changed docs' tf/doclen rows append stamped `gen = g + 1`
-    *     — PAST their own tombstones, so visibility serves exactly the
-    *     new version of every doc;
-    *  3. ONE stats write lands last — subtract the deleted dl, add the
-    *     fresh dl through the exact DECIMAL sum, `next_gen = g + 2` —
-    *     and is the COMMIT POINT for tombstones AND rows together; the
-    *     chained delete-then-merge form commits the intermediate
-    *     deleted-only state, this verb never exposes it.
-    * Equivalent to a from-scratch build over the updated corpus
-    * (q180's oracle replays THIS verb) and to the chained form's final
-    * state (spec-pinned). Returns the number of replaced (previously
-    * live) docs. */
+  /** UPDATE = delete + re-merge as ONE [[bm25Epoch]] — one lock, one
+    * commit flip (VERDICT r18 #5: the chained form commits twice and
+    * pays two stats reads, two stats writes and two guard probes): the
+    * changed ids LIVE in the index are tombstoned at `del_gen = g`
+    * (absent ids skip the tombstone — a changed doc that is NEW is just
+    * an add, so update subsumes the merge guard), the changed docs'
+    * tf/doclen rows append stamped past them, and the one stats write
+    * commits both; the deleted-only state is never exposed. Equivalent
+    * to a from-scratch build over the updated corpus (q180's oracle
+    * replays THIS verb) and to the chained form's final state
+    * (spec-pinned). Returns the number of replaced (previously live)
+    * docs. */
   def updateBm25Index(spark: SparkSession, path: String, changed: DataFrame,
                       idCol: String = "doc_id",
                       textCol: String = "text"): Long = {
-    val lay = bm25Layout(path)
-    lay.write("updateBm25Index") {
-      val old = mergeableStats(spark, lay, "updateBm25Index")
-      val oldN = old.getAs[Long]("n_docs")
-      val g = old.getAs[Long]("next_gen")
-      val docs = changed.select(col(idCol).as("doc_id"),
-        col(textCol).as("text"))
-      val freshLen = bm25DocLen(docs, g + 1L).cache()
-      try {
-        val add = dlSum(freshLen).head()
-        if (add.getAs[Long]("n_docs") == 0L) return 0L // empty batch
-        // the delete half: only ids currently LIVE get a tombstone —
-        // probed through the id-pruned doclen directories (never tf)
-        val dels = lay.deletes(spark)
-        val present =
-          if (oldN == 0L) None // empty layout: pure adds
-          else Some(liveDoclen(spark, lay, docParts(freshLen), dels, g)
-            .join(freshLen.select(col("doc_id")).distinct(),
-              Seq("doc_id"), "left_semi")
-            .cache())
-        try {
-          val gone = present.map(dlSum(_).head())
-          val cnt = gone.fold(0L)(_.getAs[Long]("n_docs"))
-          if (cnt > 0L) lay.appendTombstones("updateBm25Index", dels,
-            present.get.select(col("doc_id")), cnt, g)
-          // the add half: fresh rows stamped PAST their own tombstones
-          writeClustered(bm25TfRows(docs).withColumn("gen", lit(g + 1L)),
-            s"$path/tf", "tok_part", "append")
-          writeClustered(freshLen, s"$path/doclen", "doc_part", "append")
-          val s = sumDl(old)
-            .subtract(gone.fold(java.math.BigDecimal.ZERO)(sumDl))
-            .add(sumDl(add))
-          lay.commit(spark, "updateBm25Index", g)(statsRow(
-            lit(oldN - cnt + add.getAs[Long]("n_docs")),
-            lit(s).cast("decimal(28,6)"), g + 2L): _*)
-          cnt
-        } finally present.foreach(_.unpersist())
-      } finally freshLen.unpersist()
-    }
+    val docs = changed.select(col(idCol).as("doc_id"), col(textCol).as("text"))
+    bm25Epoch(spark, path, "updateBm25Index", Some(docs.select(col("doc_id"))),
+      Some(docs))
   }
 
   /** Fold accumulated tombstones INTO the physical layout and compact
@@ -1324,7 +1323,7 @@ object Writers {
   // UPDATE = delete + re-merge is batch-proportional on vectors exactly
   // as on documents. `last_merge_gen` keeps delete row-idempotent: a
   // tombstone with del_gen > last_merge_gen is FULLY KILLING (gens are
-  // only handed out by merges), so re-deleting an id behind one is a
+  // only handed out by add legs), so re-deleting an id behind one is a
   // no-op; one at or below it may have been out-merged and a re-delete
   // must stamp a fresh one. Update requires a gen-capable layout and
   // says so.
@@ -1415,66 +1414,119 @@ object Writers {
         probeDims, padded = false, passthrough = Seq("label"))
     }
 
+  /** THE write step of an IVF×PQ layout — [[bm25Epoch]]'s contract on
+    * the vector leg: [[mergeIvfPqIndex]], [[deleteFromIvfPqIndex]],
+    * [[updateIvfPqIndex]] and one CDC epoch
+    * (StreamingJobs.ivfPqMaintenanceBatch) are each ONE call, under one
+    * writer lock with one commit. Under the lock:
+    *  1. the gen sidecar is read once: `g` and `last_merge_gen`;
+    *  2. delete leg (`deletes`, `idCol` rows): every candidate is
+    *     tombstoned except ids already behind a COMMITTED FULLY KILLING
+    *     tombstone (last_merge_gen < del_gen < g — gens are only handed
+    *     out by adds, so such an id has no live row); codes are
+    *     bucket-partitioned, there is no id-pruned leg to probe
+    *     liveness cheaply, so a brand-new id gets a harmless kill-nothing
+    *     stamp that compaction folds away. A legacy id-only leg keeps its
+    *     kill-all semantics (every existing tombstone is fully killing,
+    *     appended rows stay id-only — ADVICE r18);
+    *  3. add leg: `adds` encodes rows against the layout's FROZEN
+    *     centroid table (codebook and centroids never change here);
+    *  4. the new-id guard, one rule: no add id may be live unless this
+    *     epoch tombstones it — probed under `checkNewIds` over the add
+    *     buckets' directories; a gen-less layout cannot stamp an add past
+    *     any tombstone, so there an add id may have none and an epoch
+    *     with both legs is refused;
+    *  5. tombstones append at `del_gen = g`, codes append stamped past
+    *     them (`g + 1` when this epoch tombstoned any id, else `g`), and
+    *     the sidecar (next_gen one past the last stamp, last_merge_gen
+    *     the add stamp) lands last.
+    * An epoch that changes nothing commits nothing. */
+  private[graft] def ivfPqEpoch(spark: SparkSession, path: String,
+                                verb: String, idCol: String,
+                                deletes: Option[DataFrame],
+                                adds: Option[DataFrame => DataFrame],
+                                checkNewIds: Boolean = false): Unit = {
+    val lay = ivfLayout(path)
+    lay.write(spark, verb)(withCached { cache =>
+      val g = lay.gen(spark)
+      val lastMerge = lastMergeGen(spark, lay)
+      val dels = lay.deletes(spark)
+      val codesExist = hasParquetFiles(s"$path/codes")
+      val genCapable = !codesExist ||
+        spark.read.parquet(s"$path/codes").columns.contains("gen")
+      require(genCapable || deletes.isEmpty || adds.isEmpty,
+        s"$verb needs a gen-capable layout (per-row gen stamps — rebuild " +
+          "with writeIvfCodes / the ensure* builders); a gen-less layout " +
+          "routes changes as delete -> compact -> merge")
+      val fresh = deletes.map { d =>
+        val cand = cache(d.select(col(idCol)).distinct())
+        dels.fold(cand)(old => cand.join(
+          (if (!old.columns.contains("del_gen")) old
+           else old.filter(col("del_gen") > lastMerge &&
+             col("del_gen") < lit(g))).select(col(idCol)),
+          Seq(idCol), "left_anti"))
+      }
+      val freshCnt = fresh.fold(0L)(_.count())
+      val out = adds.map(enc =>
+        cache(enc(spark.read.parquet(s"$path/centroids"))))
+      val buckets = out.fold(Array.empty[Long])(_.select(col("bucket"))
+        .distinct().collect().map(_.getLong(0))) // bounded by the coarse k
+      val addIds = out.map(_.select(col(idCol)).distinct())
+      if (!genCapable && buckets.nonEmpty) dels.foreach(del =>
+        require(del.join(addIds.get, Seq(idCol), "left_semi").head(1).isEmpty,
+          s"$verb: gen-less layout has tombstones for ids in this batch " +
+            "— compactIvfPqIndex first, or rebuild the layout gen-capable " +
+            "(writeIvfCodes) to use update semantics"))
+      if (checkNewIds && codesExist && buckets.nonEmpty) {
+        val hit = lay.visible(spark.read.parquet(s"$path/codes"), dels,
+            idCol, Some(g))
+          .filter(col("bucket").isin(buckets.toIndexedSeq: _*))
+          .join(addIds.get, Seq(idCol), "left_semi")
+        require(fresh.fold(hit)(f => hit.join(f, Seq(idCol), "left_anti"))
+            .head(1).isEmpty,
+          s"$verb: fresh batch contains ids LIVE in the index — merge " +
+            "takes the delta split's NEW side; changed vectors need " +
+            "updateIvfPqIndex (or delete first), not a double add")
+      }
+      if (freshCnt > 0L || buckets.nonEmpty) {
+        if (freshCnt > 0L)
+          lay.appendTombstones(verb, dels, fresh.get, freshCnt, g)
+        val addGen = if (freshCnt > 0L) g + 1L else g
+        if (buckets.nonEmpty)
+          (if (genCapable) out.get.withColumn("gen", lit(addGen)) else out.get)
+            .write.partitionBy("bucket").mode("append")
+            .parquet(s"$path/codes")
+        val (next, merged) =
+          if (buckets.nonEmpty) (addGen + 1L, addGen) else (g + 1L, lastMerge)
+        lay.commit(spark, verb, g)(lit(next).as("next_gen"),
+          lit(merged).as("last_merge_gen"))
+      }
+    })
+  }
+
   /** Fold a FRESH vector batch into a stored [[ensureIvfPqIndex]]-shape
-    * layout at cost ∝ |fresh| — the FAISS add() contract: the codebook
-    * and centroid artifacts stay FROZEN (re-training per ingest batch
-    * would shift every stored code's meaning), fresh vectors are encoded
-    * against them in one map-only pass ([[Similarity.ivfPqEncode]]) and
-    * APPENDED as new files in their bucket directories. Merged ≡
-    * from-scratch-with-the-same-frozen-artifacts is q174's oracle. With
-    * `checkNewIds` (the default) a fresh id already LIVE fails loudly
-    * (a semi-join over the fresh buckets' directories; Delta-routed
-    * ingest passes false); the check is gen-aware, so the re-add half
-    * of [[updateIvfPqIndex]] passes it. Fresh rows are stamped
-    * `gen = next_gen` on gen-capable layouts; on a gen-less dev layout
-    * the append follows the stored schema. `passthrough` must match the
-    * columns the layout was built with. An empty codes leg (the
-    * streaming bootstrap) skips the guard. */
+    * layout at cost ∝ |fresh| — the FAISS add() contract, [[ivfPqEpoch]]'s
+    * add leg alone: the codebook and centroid artifacts stay FROZEN
+    * (re-training per ingest batch would shift every stored code's
+    * meaning), fresh vectors are encoded against them in one map-only
+    * pass ([[Similarity.ivfPqEncode]]) and APPENDED as new files in
+    * their bucket directories. Merged ≡ from-scratch-with-the-same-
+    * frozen-artifacts is q174's oracle. With `checkNewIds` (the default)
+    * a fresh id already LIVE fails loudly (a semi-join over the fresh
+    * buckets' directories; Delta-routed ingest passes false). Fresh rows
+    * are stamped `gen = next_gen` on gen-capable layouts; on a gen-less
+    * dev layout the append follows the stored schema. `passthrough` must
+    * match the columns the layout was built with. An empty codes leg
+    * (the streaming bootstrap) skips the guard; an empty batch is a
+    * no-op. */
   def mergeIvfPqIndex(spark: SparkSession, path: String, fresh: DataFrame,
                       idCol: String = "vec_id", vecCol: String = "embedding",
                       m: Int = 4, subDim: Int = 16, probeDims: Int = 4,
                       passthrough: Seq[String] = Nil,
-                      checkNewIds: Boolean = true): Unit = {
-    val lay = ivfLayout(path)
-    lay.write("mergeIvfPqIndex") {
-      val bootstrap = !hasParquetFiles(s"$path/codes")
-      val genCapable = bootstrap ||
-        spark.read.parquet(s"$path/codes").columns.contains("gen")
-      val g = lay.gen(spark)
-      val encoded = Similarity.ivfPqEncode(
-        fresh, idCol, vecCol, spark.read.parquet(s"$path/centroids"),
-        m, subDim, probeDims, passthrough)
-      val freshCodes =
-        if (genCapable) encoded.withColumn("gen", lit(g)) else encoded
-      if (!genCapable) lay.deletes(spark).foreach { del =>
-        // a gen-less row cannot be stamped past a tombstone — a re-add
-        // of a deleted id would append an invisible row
-        require(del.join(freshCodes.select(col(idCol)).distinct(),
-            Seq(idCol), "left_semi").head(1).isEmpty,
-          "mergeIvfPqIndex: gen-less layout has tombstones for ids in " +
-            "this batch — compactIvfPqIndex first, or rebuild the layout " +
-            "gen-capable (writeIvfCodes) to use update semantics")
-      }
-      val guarded = checkNewIds && !bootstrap
-      val out = if (guarded) freshCodes.cache() else freshCodes
-      try {
-        if (guarded) {
-          val buckets = out.select(col("bucket")).distinct()
-            .collect().map(_.getLong(0)) // bounded by the coarse k
-          require(liveCodes(spark, path, idCol)
-              .filter(col("bucket").isin(buckets.toIndexedSeq: _*))
-              .join(out.select(col(idCol)).distinct(), Seq(idCol),
-                "left_semi").head(1).isEmpty,
-            "mergeIvfPqIndex: fresh batch contains ids LIVE in the index " +
-              "— merge takes the delta split's NEW side; changed vectors " +
-              "need updateIvfPqIndex (or delete first), not a double add")
-        }
-        out.write.partitionBy("bucket").mode("append").parquet(s"$path/codes")
-      } finally out.unpersist()
-      lay.commit(spark, "mergeIvfPqIndex", g)(lit(g + 1L).as("next_gen"),
-        lit(g).as("last_merge_gen"))
-    }
-  }
+                      checkNewIds: Boolean = true): Unit =
+    ivfPqEpoch(spark, path, "mergeIvfPqIndex", idCol, None,
+      Some(Similarity.ivfPqEncode(fresh, idCol, vecCol, _: DataFrame, m, subDim,
+        probeDims, passthrough)), checkNewIds)
 
   /** q174's artifact: train the codebook and fix the centroid table on
     * the vec_id%3≠2 slice ONLY (the FAISS train-on-a-sample contract),
@@ -1494,45 +1546,18 @@ object Writers {
         m = m, subDim = subDim, probeDims = probeDims)
     }
 
-  /** The tombstone table of an IVF×PQ layout, when any delete ever ran
-    * — (id, del_gen) rows, or id-only on a legacy leg. */
-  def ivfDeletes(spark: SparkSession, path: String): Option[DataFrame] =
-    ivfLayout(path).deletes(spark)
-
   /** FAISS `remove_ids` for the stored IVF×PQ layout, at cost ∝ |ids|:
-    * append (id, del_gen = next_gen) tombstones; probes read codes
-    * through [[liveCodes]]. Row-idempotent: candidate ids already
-    * behind a COMMITTED FULLY KILLING tombstone (last_merge_gen <
-    * del_gen < next_gen) are skipped — an uncommitted one must not
-    * dedup the retry that will commit it. A legacy id-only leg keeps
-    * its kill-all semantics: every existing tombstone is fully killing
-    * and appended rows stay id-only (ADVICE r18). [[MaxTombstoneRows]]
-    * bounds the accumulated table. */
+    * [[ivfPqEpoch]]'s delete leg alone — (id, del_gen = next_gen)
+    * tombstones; probes read codes through [[liveCodes]].
+    * Row-idempotent: candidate ids already behind a COMMITTED FULLY
+    * KILLING tombstone are skipped — an uncommitted one must not dedup
+    * the retry that will commit it. [[MaxTombstoneRows]] bounds the
+    * accumulated table. */
   def deleteFromIvfPqIndex(spark: SparkSession, path: String,
                            ids: DataFrame,
-                           idCol: String = "vec_id"): Unit = {
-    val lay = ivfLayout(path)
-    lay.write("deleteFromIvfPqIndex") {
-      val g = lay.gen(spark)
-      val lastMerge = lastMergeGen(spark, lay)
-      val cand = ids.select(col(idCol)).distinct().cache()
-      try {
-        val existing = lay.deletes(spark)
-        val fresh = existing.fold(cand)(old => cand.join(
-          (if (!old.columns.contains("del_gen")) old
-           else old.filter(col("del_gen") > lastMerge &&
-             col("del_gen") < lit(g))).select(col(idCol)),
-          Seq(idCol), "left_anti"))
-        val freshCnt = fresh.count()
-        if (freshCnt > 0L) { // else all candidates already fully killed
-          lay.appendTombstones("deleteFromIvfPqIndex", existing, fresh,
-            freshCnt, g)
-          lay.commit(spark, "deleteFromIvfPqIndex", g)(
-            lit(g + 1L).as("next_gen"), lit(lastMerge).as("last_merge_gen"))
-        }
-      } finally cand.unpersist()
-    }
-  }
+                           idCol: String = "vec_id"): Unit =
+    ivfPqEpoch(spark, path, "deleteFromIvfPqIndex", idCol,
+      Some(ids.select(col(idCol))), None)
 
   /** Probe-side codes view of a stored IVF×PQ layout: the codes table
     * through [[GenLayout.visible]] — uncommitted rows and tombstones
@@ -1576,27 +1601,23 @@ object Writers {
     ivfLayout(path).compact(spark, idCol)
 
   /** UPDATE on the stored IVF×PQ layout — the reference's `ON CONFLICT
-    * DO UPDATE` (src/storage.py:41-53) on the vector leg: tombstone the
-    * changed ids ([[deleteFromIvfPqIndex]]), then re-encode the changed
+    * DO UPDATE` (src/storage.py:41-53) on the vector leg, as ONE
+    * [[ivfPqEpoch]]: tombstone the changed ids, re-encode the changed
     * vectors against the FROZEN codebook/centroids and append them
-    * stamped past the tombstone ([[mergeIvfPqIndex]]). Both steps ∝
-    * the changed batch (q184's oracle). Requires a gen-capable layout —
-    * without per-row gens a re-add cannot outlive its tombstone. The
-    * codebook must cover the codes the changed vectors realize
-    * ([[padIvfPqCodebook]] at build time guarantees that). */
+    * stamped past the tombstones, one commit for both — the
+    * tombstoned-only state is never exposed. ∝ the changed batch
+    * (q184's oracle). Requires a gen-capable layout — without per-row
+    * gens a re-add cannot outlive its tombstone. The codebook must cover
+    * the codes the changed vectors realize ([[padIvfPqCodebook]] at
+    * build time guarantees that). */
   def updateIvfPqIndex(spark: SparkSession, path: String, changed: DataFrame,
                        idCol: String = "vec_id", vecCol: String = "embedding",
                        m: Int = 4, subDim: Int = 16, probeDims: Int = 4,
-                       passthrough: Seq[String] = Nil): Unit = {
-    require(!hasParquetFiles(s"$path/codes") ||
-        spark.read.parquet(s"$path/codes").columns.contains("gen"),
-      "updateIvfPqIndex needs a gen-capable layout (per-row gen stamps " +
-        "— rebuild with writeIvfCodes / the ensure* builders); a " +
-        "gen-less layout routes changes as delete -> compact -> merge")
-    deleteFromIvfPqIndex(spark, path, changed.select(col(idCol)), idCol)
-    mergeIvfPqIndex(spark, path, changed, idCol, vecCol, m, subDim,
-      probeDims, passthrough)
-  }
+                       passthrough: Seq[String] = Nil): Unit =
+    ivfPqEpoch(spark, path, "updateIvfPqIndex", idCol,
+      Some(changed.select(col(idCol))),
+      Some(Similarity.ivfPqEncode(changed, idCol, vecCol, _: DataFrame, m, subDim,
+        probeDims, passthrough)))
 
   /** REINDEX — trained-artifact refresh with atomic cutover (VERDICT
     * r18 #4): merge/update encode against FROZEN artifacts, so a
@@ -1620,7 +1641,7 @@ object Writers {
                         m: Int = 4, subDim: Int = 16, probeDims: Int = 4,
                         passthrough: Seq[String] = Nil): Unit = {
     val lay = ivfLayout(path)
-    lay.write("reindexIvfPqIndex") {
+    lay.write(spark, "reindexIvfPqIndex") {
       val g = lay.gen(spark)
       val cents = coarse.select(col(cidCol).as("cid"),
         col(cvecCol).as("cvec"))

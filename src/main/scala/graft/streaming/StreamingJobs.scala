@@ -1083,19 +1083,19 @@ object StreamingJobs {
   /** Streaming MAINTENANCE of the stored BM25 SERVING layout — the CDC
     * deployment loop, closing the lifecycle ring: the batch path builds
     * / merges / deletes / updates the layout (q169/q171/q177/q180), and
-    * this sink drives those same verbs from a change stream. Each epoch
-    * carries (op, doc_id, text) rows with op ∈ add | update | delete
-    * (the reference's upsert stream made explicit,
-    * dags/scraping_etl.py:51-74), routed at cost ∝ the epoch:
-    *  1. EVERY referenced doc that is currently live is tombstoned
-    *     ([[graft.sources.Writers.deleteFromBm25Index]] — deletes
-    *     proper, the delete half of updates, and no-ops for brand-new
-    *     ids; idempotent);
-    *  2. add/update rows merge their content back in, stamped past the
-    *     tombstone ([[graft.sources.Writers.mergeBm25Index]] — the q180
-    *     generation discipline; at the layout level add and update are
-    *     both upserts, the op tag's delete/non-delete split is what
-    *     routes).
+    * this sink drives the same write step from a change stream. Each
+    * epoch carries (op, doc_id, text) rows with op ∈ add | update |
+    * delete (the reference's upsert stream made explicit,
+    * dags/scraping_etl.py:51-74) and is ONE
+    * [[graft.sources.Writers.bm25Epoch]] — one writer lock, one
+    * generation, one stats commit — at cost ∝ the epoch: EVERY
+    * referenced doc that is currently live is tombstoned (deletes
+    * proper, the delete half of updates, no-ops for brand-new ids), and
+    * the add/update rows append stamped past those tombstones (the q180
+    * generation discipline; at the layout level add and update are both
+    * upserts, the op tag's delete/non-delete split is what routes). An
+    * epoch that replaces the entire live set never reads as empty, and
+    * one that deletes it leaves the zero-doc bootstrap shape.
     * Each epoch writes the probe query's post-CDC scores to
     * `outDir/epoch=N` — StreamingSpec pins every horizon ≡ a
     * from-scratch build over the post-CDC corpus. The layout must
@@ -1106,20 +1106,24 @@ object StreamingJobs {
     * metrics row.
     *
     * Replay note — the COMMIT-PROTOCOL × STREAMING interaction
-    * (VERDICT r18 #8), both halves spec-pinned in StreamingSpec:
-    *  - a crash BETWEEN a verb's commit flip and the checkpoint
+    * (VERDICT r18 #8), both halves spec-pinned in StreamingSpec. An
+    * epoch is ONE generation: readers (and an as-of probe) see the
+    * layout before the epoch or after it, never between its deletes and
+    * its adds.
+    *  - a crash BETWEEN the epoch's commit flip and the checkpoint
     *    advance re-delivers a COMPLETED epoch (foreachBatch is
-    *    at-least-once), and the replay lands content-idempotent — the
-    *    re-delete tombstones the epoch's own merged rows, the re-merge
-    *    re-adds the same content one generation later, the stats
-    *    subtract/add the same exact decimals;
-    *  - a crash INSIDE a verb's multi-file commit leaves its appended
-    *    files UNCOMMITTED (invisible — Writers.visibleRows' read-time
-    *    protocol) plus an abandoned writer lock; the next epoch
-    *    detects the lock (this stream is the layout's single writer by
-    *    deployment contract, so a held lock at epoch start can only be
-    *    its own crashed predecessor), vacuums the torn files, and
-    *    replays — the retry lands exactly once.
+    *    at-least-once), and the replay lands content-idempotent — it
+    *    tombstones the epoch's own added rows and re-adds the same
+    *    content one generation later, and the stats subtract/add the
+    *    same exact decimals;
+    *  - a crash INSIDE the epoch's multi-file write leaves its appended
+    *    files UNCOMMITTED (invisible — the read-time commit protocol)
+    *    plus an abandoned writer lock; the next epoch detects the lock
+    *    (this stream is the layout's single writer by deployment
+    *    contract, so a held lock at epoch start can only be its own
+    *    crashed predecessor), vacuums the torn files, and replays — the
+    *    retry lands exactly once. An epoch that fails with an exception
+    *    instead vacuums its own torn files before it releases the lock.
     * A production deployment gets the same guarantees from a table
     * format's atomic MERGE INTO (the Writers.mergeState framing:
     * operator semantics here, commit protocol there). */
@@ -1134,22 +1138,17 @@ object StreamingJobs {
         requireKnownOps(cached, "bm25MaintenanceBatch", epochId)
         // CRASH RECOVERY (single-writer deployment: the CDC stream IS the
         // layout's one writer, so a lock held at epoch start can only be
-        // this stream's crashed predecessor — a replayed epoch whose verb
-        // died mid-flight): vacuum collects the torn files the read-time
-        // commit already hid and releases the lock, and the replay below
-        // then lands content-idempotent. Syscall-priced when no crash.
+        // this stream's crashed predecessor — a replayed epoch whose
+        // write died mid-flight): vacuum collects the torn files the
+        // read-time commit already hid and releases the lock, and the
+        // replay below then lands content-idempotent. Syscall-priced when
+        // no crash.
         if (Writers.writerLockHeld(indexPath))
           Writers.vacuumBm25Index(spark, indexPath)
-        // allowEmpty: an epoch whose ops cover the ENTIRE live set (a
-        // full refresh) transits the layout through empty between the
-        // delete and the merge — a valid CDC state, never a dead end
-        // (the merge's additive stats bootstrap from the empty shape;
-        // ADVICE r17)
-        Writers.deleteFromBm25Index(spark, indexPath,
-          cached.select(col("doc_id")), allowEmpty = true)
-        Writers.mergeBm25Index(spark, indexPath,
-          cached.filter(col("op") =!= "delete")
-            .select(col("doc_id"), col("text")))
+        Writers.bm25Epoch(spark, indexPath, "bm25MaintenanceBatch",
+          Some(cached.select(col("doc_id"))),
+          Some(cached.filter(col("op") =!= "delete")
+            .select(col("doc_id"), col("text"))))
         new Emit(Retrieval.bm25Stored(
               Writers.prunedBm25Tf(spark, indexPath, probeTerms),
               spark.read.parquet(s"$indexPath/stats"), "doc_id", probeTerms)
@@ -1170,28 +1169,26 @@ object StreamingJobs {
   /** Streaming MAINTENANCE of the stored IVF×PQ SERVING layout — the
     * [[bm25MaintenanceBatch]] contract on the VECTOR leg (VERDICT r17
     * #6, closing the verb×layout×stream matrix): each epoch carries
-    * (op, vec_id, embedding) rows with op ∈ add | update | delete,
-    * routed at cost ∝ the epoch against FROZEN codebook/centroid
-    * artifacts (the FAISS train-before-stream contract — the layout's
-    * codebook and centroids must exist before the first epoch; the
-    * codes leg may start EMPTY, the supported bootstrap):
-    *  1. every referenced id is tombstoned
-    *     ([[graft.sources.Writers.deleteFromIvfPqIndex]] — deletes
-    *     proper, the delete half of updates, and kill-nothing stamps
-    *     for brand-new ids, which the vector leg cannot distinguish
-    *     cheaply: codes are bucket-partitioned, there is no id-pruned
-    *     leg to probe — the tombstone is harmless and compacted away);
-    *  2. add/update rows re-encode against the frozen artifacts and
-    *     merge in stamped past their tombstones
-    *     ([[graft.sources.Writers.mergeIvfPqIndex]] — the q184
-    *     generation discipline).
+    * (op, vec_id, embedding) rows with op ∈ add | update | delete and is
+    * ONE [[graft.sources.Writers.ivfPqEpoch]] at cost ∝ the epoch
+    * against FROZEN codebook/centroid artifacts (the FAISS
+    * train-before-stream contract — the layout's codebook and centroids
+    * must exist before the first epoch; the codes leg may start EMPTY,
+    * the supported bootstrap): every referenced id is tombstoned
+    * (deletes proper, the delete half of updates, and kill-nothing
+    * stamps for brand-new ids, which the vector leg cannot distinguish
+    * cheaply — the tombstone is harmless and compacted away), and the
+    * add/update rows re-encode against the frozen artifacts and append
+    * stamped past their tombstones (the q184 generation discipline), in
+    * one generation. An all-delete epoch adds nothing and advances the
+    * counter once, for its tombstones.
     * Each epoch writes the probe's post-CDC ANN top-k to
     * `outDir/epoch=N` — StreamingSpec pins every horizon ≡ a
     * from-scratch encode over the post-CDC corpus with the same frozen
     * artifacts, last-epoch replay content-idempotence, and the
-    * empty-codes bootstrap. Same at-least-once/torn-write caveat and
-    * the same stateless [[runEpoch]] use as the BM25 body (production:
-    * table-format MERGE INTO). */
+    * empty-codes bootstrap. Same replay notes and the same stateless
+    * [[runEpoch]] use as the BM25 body (production: table-format MERGE
+    * INTO). */
   def ivfPqMaintenanceBatch(batch: DataFrame, epochId: Long,
                             indexPath: String, outDir: String,
                             probeVec: Seq[Double], nprobe: Int = 3,
@@ -1209,16 +1206,12 @@ object StreamingJobs {
         // collects its torn files and releases, the replay lands once
         if (Writers.writerLockHeld(indexPath))
           Writers.vacuumIvfPqIndex(spark, indexPath)
-        Writers.deleteFromIvfPqIndex(spark, indexPath,
-          cached.select(col("vec_id")))
         val upserts = cached.filter(col("op") =!= "delete")
           .select(col("vec_id"), col("embedding"))
-        // an all-delete epoch merges nothing — skip the verb rather than
-        // advance the generation counter for an empty batch (keeps
-        // re-delete row-idempotence intact across such epochs)
-        if (upserts.limit(1).count() > 0)
-          Writers.mergeIvfPqIndex(spark, indexPath, upserts,
-            m = m, subDim = subDim, probeDims = probeDims)
+        Writers.ivfPqEpoch(spark, indexPath, "ivfPqMaintenanceBatch",
+          "vec_id", Some(cached.select(col("vec_id"))),
+          Some(Similarity.ivfPqEncode(upserts, "vec_id", "embedding",
+            _: DataFrame, m, subDim, probeDims)))
         val probed =
           if (Writers.hasParquetFiles(s"$indexPath/codes")) {
             val query = spark.range(1).select(

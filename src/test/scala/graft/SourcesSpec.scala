@@ -1566,6 +1566,87 @@ class SourcesSpec extends AnyFunSuite {
       "retried merge after vacuum dropped or doubled a vector")
   }
 
+  test("a verb that throws after an append vacuums its torn files before " +
+    "it releases the writer lock, so the next commit cannot publish them " +
+    "— all three serving legs") {
+    import graft.operators.{Retrieval, Similarity}
+    // ---- BM25: the tf append lands, the commit of its job throws ----
+    val p = tmp("bm25throw")
+    val terms = Seq("alpha", "beta")
+    Writers.writeBm25Index(
+      Seq(0L -> "alpha beta", 1L -> "beta beta").toDF("doc_id", "text"), p)
+    def probe(path: String) = Retrieval.bm25Stored(
+        Writers.prunedBm25Tf(spark, path, terms),
+        spark.read.parquet(s"$path/stats"), "doc_id", terms)
+      .as[(Long, Long, Double)].collect().toSet
+    val before = probe(p)
+    val undo = TestSpark.failNextCommit(s"$p/tf")
+    intercept[Exception] {
+      Writers.mergeBm25Index(spark, p,
+        Seq(10L -> "alpha alpha").toDF("doc_id", "text"),
+        checkNewDocIds = false)
+    }
+    undo()
+    assert(!Writers.writerLockHeld(p))
+    assert(probe(p) == before)
+    assert(spark.read.parquet(s"$p/tf").filter(col("doc_id") === 10L)
+      .isEmpty, "the failed merge's tf segment was left behind")
+    Writers.mergeBm25Index(spark, p,
+      Seq(11L -> "alpha beta").toDF("doc_id", "text"))
+    val ref = tmp("bm25throwref")
+    Writers.writeBm25Index(Seq(0L -> "alpha beta", 1L -> "beta beta",
+      11L -> "alpha beta").toDF("doc_id", "text"), ref)
+    assert(probe(p) == probe(ref),
+      "the next commit published the failed merge's rows")
+    assert(Writers.describeBm25Index(spark, p).doclenRows == 3L)
+
+    // ---- postings: the root append lands, its job commit throws ----
+    val pp = tmp("postthrow")
+    Writers.writePostings(spark,
+      Seq(0L -> "x y", 1L -> "y z").toDF("doc_id", "text"), pp)
+    val undoP = TestSpark.failNextCommit(pp)
+    intercept[Exception] {
+      Writers.mergePostings(spark, pp, Seq(10L -> "x y").toDF("doc_id", "text"))
+    }
+    undoP()
+    assert(!Writers.writerLockHeld(pp))
+    Writers.mergePostings(spark, pp, Seq(11L -> "y z").toDF("doc_id", "text"))
+    assert(Retrieval.phraseSearch(
+        Writers.prunedPostings(spark, pp, Seq("x", "y")), "doc_id",
+        Seq("x", "y"))
+      .select(col("doc_id")).as[Long].collect().toSet == Set(0L),
+      "the next commit published the failed postings merge")
+
+    // ---- IVF×PQ: the codes append lands, its job commit throws ----
+    val pv = tmp("ivfthrow")
+    val vecs = TestSpark.vectors(90)
+    val coarse = vecs.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    val (codes, book) = Similarity.ivfPqIndexTables(
+      vecs.filter(col("vec_id") % 3 =!= 2), "vec_id", "embedding",
+      coarse, "cid", "cvec", 4, 16, 4)
+    Writers.writeIvfCodes(spark, codes, pv)
+    Writers.padIvfPqCodebook(spark, book, 4, 16, 4)
+      .write.mode("overwrite").parquet(s"$pv/codebook")
+    coarse.write.mode("overwrite").parquet(s"$pv/centroids")
+    def visible() = Writers.liveCodes(spark, pv)
+      .select(col("vec_id")).as[Long].collect().toSet
+    val beforeV = visible()
+    val undoV = TestSpark.failNextCommit(s"$pv/codes")
+    intercept[Exception] {
+      Writers.mergeIvfPqIndex(spark, pv,
+        vecs.filter(col("vec_id") % 3 === 2 && col("vec_id") % 2 === 0))
+    }
+    undoV()
+    assert(!Writers.writerLockHeld(pv))
+    Writers.mergeIvfPqIndex(spark, pv,
+      vecs.filter(col("vec_id") % 3 === 2 && col("vec_id") % 2 === 1))
+    val oddIds = vecs.filter(col("vec_id") % 3 === 2 && col("vec_id") % 2 === 1)
+      .select(col("vec_id")).as[Long].collect().toSet
+    assert(visible() == beforeV ++ oddIds,
+      "the next commit published the failed IVF merge's codes")
+  }
+
   test("swap-window recovery (leg): a crash between compactBm25Index's " +
     "two renames — tf/ already at tf.old, the complete tf.staged not yet " +
     "renamed in, the lock abandoned — is rolled forward by " +

@@ -1837,4 +1837,89 @@ class StreamingSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("unknown op"))
   }
+
+  test("an update whose add half fails leaves readers at the pre-verb " +
+    "generation — updateIvfPqIndex, a bm25MaintenanceBatch epoch and an " +
+    "ivfPqMaintenanceBatch epoch each commit once, and the retry lands") {
+    import graft.operators.{Retrieval, Similarity}
+    import graft.sources.Writers
+    def gen(sidecar: String): Long =
+      spark.read.parquet(sidecar).select(col("next_gen")).head().getLong(0)
+
+    // ---- bm25MaintenanceBatch: the epoch's tf append fails ----
+    val idx = TestSpark.tmpDir("bm25addfail")
+    val outDir = TestSpark.tmpDir("bm25addfailout")
+    val terms = Seq("alpha", "beta", "gamma")
+    Writers.writeBm25Index(Seq(0L -> "alpha beta", 1L -> "beta gamma",
+      2L -> "gamma gamma").toDF("doc_id", "text"), idx)
+    def probe(p: String) = Retrieval.bm25Stored(
+        Writers.prunedBm25Tf(spark, p, terms),
+        spark.read.parquet(s"$p/stats"), "doc_id", terms)
+      .as[(Long, Long, Double)].collect().toSet
+    val before = probe(idx)
+    val g0 = gen(s"$idx/stats")
+    val ops = Seq(("update", 0L, "alpha alpha"), ("delete", 2L, null: String),
+      ("add", 3L, "beta beta")).toDF("op", "doc_id", "text")
+    val undo = TestSpark.failNextCommit(s"$idx/tf")
+    intercept[Exception] {
+      StreamingJobs.bm25MaintenanceBatch(ops, 0, idx, outDir, terms)
+    }
+    undo()
+    assert(gen(s"$idx/stats") == g0 && probe(idx) == before,
+      "the failed epoch's delete half became visible")
+    assert(!Writers.writerLockHeld(idx))
+    StreamingJobs.bm25MaintenanceBatch(ops, 0, idx, outDir, terms)
+    val ref = TestSpark.tmpDir("bm25addfailref")
+    Writers.writeBm25Index(Seq(0L -> "alpha alpha", 1L -> "beta gamma",
+      3L -> "beta beta").toDF("doc_id", "text"), ref)
+    assert(probe(idx) == probe(ref))
+    assert(gen(s"$idx/stats") == g0 + 2L,
+      "one epoch, one commit: tombstones at g, rows at g + 1")
+
+    // ---- IVF×PQ: updateIvfPqIndex and an epoch, the codes append fails ----
+    val vecs = TestSpark.vectors(90)
+    val coarse = vecs.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    val (codes, book) = Similarity.ivfPqIndexTables(
+      vecs, "vec_id", "embedding", coarse, "cid", "cvec", 4, 16, 4)
+    def ivfLayout(name: String): String = {
+      val p = TestSpark.tmpDir(name)
+      Writers.writeIvfCodes(spark, codes, p)
+      Writers.padIvfPqCodebook(spark, book, 4, 16, 4)
+        .write.mode("overwrite").parquet(s"$p/codebook")
+      coarse.write.mode("overwrite").parquet(s"$p/centroids")
+      p
+    }
+    def visible(p: String) = Writers.liveCodes(spark, p)
+      .select(col("vec_id"), col("codes")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Any](1))).toSet
+    val changed = vecs.filter(col("vec_id") % 5 === 4)
+      .select(col("vec_id"), reverse(col("embedding")).as("embedding"))
+    val updated = visible {
+      val p = ivfLayout("ivfupdref")
+      Writers.updateIvfPqIndex(spark, p, changed)
+      p
+    }
+    def failOnce(p: String)(verb: => Unit): Unit = {
+      val pre = visible(p)
+      val g = gen(s"$p/gen")
+      val undoV = TestSpark.failNextCommit(s"$p/codes")
+      intercept[Exception](verb)
+      undoV()
+      assert(gen(s"$p/gen") == g && visible(p) == pre,
+        "the failed add half's tombstones became visible")
+      assert(!Writers.writerLockHeld(p))
+      verb
+      assert(visible(p) == updated && gen(s"$p/gen") == g + 2L)
+    }
+    val pu = ivfLayout("ivfupdfail")
+    failOnce(pu)(Writers.updateIvfPqIndex(spark, pu, changed))
+    val pe = ivfLayout("ivfepochfail")
+    val outV = TestSpark.tmpDir("ivfepochfailout")
+    val probeVec = vecs.filter(col("vec_id") === 1)
+      .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble)
+    failOnce(pe)(StreamingJobs.ivfPqMaintenanceBatch(
+      changed.select(lit("update").as("op"), col("vec_id"), col("embedding")),
+      0, pe, outV, probeVec))
+  }
 }

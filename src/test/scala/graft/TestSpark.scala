@@ -33,4 +33,28 @@ object TestSpark {
       java.nio.file.Paths.get(graft.sources.Writers.scratchRoot))
     java.nio.file.Files.createTempDirectory(root, prefix).toString
   }
+
+  /** Make the next append into `leg` fail AFTER it has published its
+    * files: Hadoop's committer writes the `leg/_SUCCESS` marker last,
+    * and a non-empty directory in its place refuses that write. Returns
+    * the undo, which restores the leg for the next append. */
+  def failNextCommit(leg: String): () => Unit = {
+    val marker = java.nio.file.Paths.get(leg, "_SUCCESS")
+    java.nio.file.Files.deleteIfExists(marker)
+    val block = java.nio.file.Files.createDirectories(marker.resolve("block"))
+    () => {
+      java.nio.file.Files.delete(block)
+      java.nio.file.Files.delete(marker)
+    }
+  }
+
+  /** `n` deterministic 64-dimension float vectors (vec_id, embedding) —
+    * the shape of the corpus `embeddings` table, small enough for a
+    * stored IVF×PQ layout (m = 4 sub-quantizers of 16 dimensions). */
+  def vectors(n: Int): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{array, col, sin}
+    spark.range(n).select(col("id").as("vec_id"),
+      array((1 to 64).map(j => sin(col("id") * j + j).cast("float")): _*)
+        .as("embedding"))
+  }
 }
