@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Materializes an N×-scaled, TESTDATA-SHAPED corpus mirror
@@ -21,38 +22,42 @@ import org.apache.spark.sql.functions._
   * `customer` ships as the unscaled single copy. Document/embedding
   * CONTENT repeats verbatim: near-dup tiers see 10× denser duplicate
   * structure, exactly the stress the scale-tier queries should agree
-  * with the oracle on. */
+  * with the oracle on.
+  *
+  * It is also the one scale path: `QueryBench` or `Bench` with
+  * `SPARK_GRAFT_SF_DIR=<out>` time the declared plans themselves at N×
+  * (SCALE.md, "Scale runs through the declared queries"). */
 object ScaleCorpus {
   val Offset = 10000000L
+
+  /** Fact tables, each with the primary key a replica offsets. Every
+    * other table in [[Tables.names]] is a dimension and ships once. */
+  val Keys: Map[String, String] = Map(
+    "documents" -> "doc_id", "embeddings" -> "vec_id",
+    "lineitem" -> "l_orderkey", "orders" -> "o_orderkey",
+    "events" -> "event_id")
+
+  /** Writes the `mult`× mirror of the corpus at `sfDir` to `outDir`. */
+  def write(spark: SparkSession, sfDir: String, outDir: String,
+            mult: Int): Unit =
+    Tables.names.foreach { name =>
+      val base = Tables.load(spark, sfDir, name)
+      val scaled = Keys.get(name).fold(base) { k =>
+        (0 until mult).map(i => base.withColumn(k, col(k) + lit(i * Offset)))
+          .reduce(_ unionByName _)
+      }
+      scaled.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
+      println(s"[scale-corpus] $name -> $outDir/$name.parquet")
+    }
 
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val outDir = args.drop(1).headOption
       .getOrElse(s"/tmp/graft_scale/corpus_x$mult")
-    val spark = GraftSession.build("local[32]", "32")
-    def write(name: String, keyCols: Seq[String]): Unit = {
-      val base = Tables.load(spark, sfDir, name)
-      val scaled =
-        if (keyCols.isEmpty) base
-        else (0 until mult).map { i =>
-          keyCols.foldLeft(base) { (df, k) =>
-            df.withColumn(k, col(k) + lit(i * Offset))
-          }
-        }.reduce(_ unionByName _)
-      scaled.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
-      println(s"[scale-corpus] $name -> $outDir/$name.parquet")
-    }
-    write("documents", Seq("doc_id"))
-    write("embeddings", Seq("vec_id"))
-    write("lineitem", Seq("l_orderkey"))
-    write("orders", Seq("o_orderkey"))
-    write("events", Seq("event_id"))
-    // dimensions ship as unscaled single copies (stable dimensional
-    // density) so the FULL suite — not just the fact-table tier — runs
-    // unchanged against the mirror
-    Seq("customer", "part", "supplier", "nation", "region")
-      .foreach(write(_, Seq.empty))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftSession.build(s"local[$cpus]", cpus)
+    write(spark, sfDir, outDir, mult)
     spark.stop()
   }
 }

@@ -1256,9 +1256,6 @@ object ImageFunctions {
   def mp3Info(payload: Column): Column =
     header("mp3_info", payload)
 
-  /** Typed audio header metadata for MP3 — NULL fields otherwise. */
-  def mp3Meta(payload: Column): Column = unpackAudio(mp3Info(payload))
-
   /** Packed (sampleRate, durationMs) long for FLAC payloads, NULL
     * otherwise. */
   def flacInfo(payload: Column): Column =

@@ -20,19 +20,30 @@ object Funnel {
   /** Per-entity furthest stage reached: 0 = none, k = completed step k.
     * Returns (entityCol, stage). `window` is the max gap between
     * consecutive steps (an INTERVAL column, e.g.
-    * `expr("INTERVAL 24 HOURS")`); pass a null Column-less overload via
-    * [[stageUnbounded]] for no window. Rows whose entity id is NULL are
+    * `expr("INTERVAL 24 HOURS")`). Rows whose entity id is NULL are
     * dropped (no output row) — NULL is not an identity.
     */
   def stage(events: DataFrame, entityCol: String, typeCol: String,
-            tsCol: String, steps: Seq[String], window: Column): DataFrame =
-    stageImpl(events, entityCol, typeCol, tsCol, steps, Some(window))
-
-  /** [[stage]] with no conversion-window bound — steps need only be in
-    * strict order. */
-  def stageUnbounded(events: DataFrame, entityCol: String, typeCol: String,
-                     tsCol: String, steps: Seq[String]): DataFrame =
-    stageImpl(events, entityCol, typeCol, tsCol, steps, None)
+            tsCol: String, steps: Seq[String], window: Column): DataFrame = {
+    require(steps.nonEmpty, "funnel needs at least one step")
+    // NULL entity ids dropped — see stageSkewSafe.
+    val live = events.filter(col(entityCol).isNotNull)
+    val w = Window.partitionBy(col(entityCol))
+    val withTimes = steps.zipWithIndex.foldLeft(live) { case (df, (step, i)) =>
+      val cond =
+        if (i == 0) col(typeCol) === step
+        else col(typeCol) === step && col(tsCol) > col(s"_t${i - 1}") &&
+          col(tsCol) <= col(s"_t${i - 1}") + window
+      df.withColumn(s"_t$i", min(when(cond, col(tsCol))).over(w))
+    }
+    val stage = steps.indices.foldLeft(lit(0)) { (acc, i) =>
+      when(col(s"_t$i").isNotNull, i + 1).otherwise(acc)
+    }
+    val maxes = steps.indices.map(i => max(col(s"_t$i")).as(s"_t$i"))
+    withTimes.groupBy(col(entityCol))
+      .agg(maxes.head, maxes.tail: _*)
+      .select(col(entityCol), stage.as("stage"))
+  }
 
   /** [[stage]]'s skew-safe twin: identical result, different physical
     * shape. The window form shuffles events once but WindowExec buffers
@@ -47,33 +58,20 @@ object Funnel {
     * property-style in PropertySpec. */
   def stageSkewSafe(events: DataFrame, entityCol: String, typeCol: String,
                     tsCol: String, steps: Seq[String],
-                    window: Column): DataFrame =
-    stageSkewSafeImpl(events, entityCol, typeCol, tsCol, steps, Some(window))
-
-  /** [[stageSkewSafe]] with no conversion-window bound. */
-  def stageSkewSafeUnbounded(events: DataFrame, entityCol: String,
-                             typeCol: String, tsCol: String,
-                             steps: Seq[String]): DataFrame =
-    stageSkewSafeImpl(events, entityCol, typeCol, tsCol, steps, None)
-
-  private def stageSkewSafeImpl(events0: DataFrame, entityCol: String,
-                                typeCol: String, tsCol: String,
-                                steps: Seq[String],
-                                window: Option[Column]): DataFrame = {
+                    window: Column): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
     // NULL entity ids carry no identity — dropped up front so both
     // physical forms agree (window partitioning groups NULLs together,
     // equi-joins never match them; without this filter the two forms
     // diverge on NULL keys).
-    val events = events0.filter(col(entityCol).isNotNull)
-    var t = events.filter(col(typeCol) === steps.head)
+    val live = events.filter(col(entityCol).isNotNull)
+    var t = live.filter(col(typeCol) === steps.head)
       .groupBy(col(entityCol)).agg(min(col(tsCol)).as("_t0"))
     steps.tail.zipWithIndex.foreach { case (s, i0) =>
       val i = i0 + 1
       val prev = s"_t${i - 1}"
-      val cond = window.fold(col(tsCol) > col(prev))(iv =>
-        col(tsCol) > col(prev) && col(tsCol) <= col(prev) + iv)
-      val next = events.filter(col(typeCol) === s)
+      val cond = col(tsCol) > col(prev) && col(tsCol) <= col(prev) + window
+      val next = live.filter(col(typeCol) === s)
         .join(t.select(col(entityCol), col(prev)), entityCol)
         .filter(cond)
         .groupBy(col(entityCol)).agg(min(col(tsCol)).as(s"_t$i"))
@@ -82,34 +80,8 @@ object Funnel {
     val stage = steps.indices.foldLeft(lit(0)) { (acc, i) =>
       when(col(s"_t$i").isNotNull, i + 1).otherwise(acc)
     }
-    events.select(col(entityCol)).distinct()
+    live.select(col(entityCol)).distinct()
       .join(t, Seq(entityCol), "left")
       .select(col(entityCol), coalesce(stage, lit(0)).as("stage"))
-  }
-
-  private def stageImpl(events0: DataFrame, entityCol: String, typeCol: String,
-                        tsCol: String, steps: Seq[String],
-                        window: Option[Column]): DataFrame = {
-    require(steps.nonEmpty, "funnel needs at least one step")
-    // NULL entity ids dropped — see stageSkewSafeImpl.
-    val events = events0.filter(col(entityCol).isNotNull)
-    val w = Window.partitionBy(col(entityCol))
-    val withTimes = steps.zipWithIndex.foldLeft(events) { case (df, (step, i)) =>
-      val cond =
-        if (i == 0) col(typeCol) === step
-        else {
-          val after = col(typeCol) === step && col(tsCol) > col(s"_t${i - 1}")
-          window.fold(after)(iv =>
-            after && col(tsCol) <= col(s"_t${i - 1}") + iv)
-        }
-      df.withColumn(s"_t$i", min(when(cond, col(tsCol))).over(w))
-    }
-    val stage = steps.indices.foldLeft(lit(0)) { (acc, i) =>
-      when(col(s"_t$i").isNotNull, i + 1).otherwise(acc)
-    }
-    val maxes = steps.indices.map(i => max(col(s"_t$i")).as(s"_t$i"))
-    withTimes.groupBy(col(entityCol))
-      .agg(maxes.head, maxes.tail: _*)
-      .select(col(entityCol), stage.as("stage"))
   }
 }

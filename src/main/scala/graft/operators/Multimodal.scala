@@ -24,13 +24,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  val MetaSchema: StructType = StructType(Seq(
-    StructField("format", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("sample_rate", IntegerType),
-    StructField("duration_ms", LongType)))
-
   /** Deterministic synthetic media table derived from `documents`: kind
     * cycles image/audio/video, metadata derived from n_chars. Image rows
     * carry a REAL PNG header (signature + IHDR with the meta dimensions,

@@ -1178,7 +1178,8 @@ object Similarity {
     * PQ codes instead of exact cosine over embeddings (the index holds
     * ~16×-compressed codes plus the `labelCol` payload written at build
     * time, so probing never re-joins the corpus-sized base table; the
-    * recall trade vs the live arm is measured in ScaleSmoke).
+    * recall trade vs the live arm is measured in SCALE.md, "Round 16:
+    * ... stored-index BATCH mining").
     *
     * Scale shape: the query batch collapses duplicate/NULL qids (the
     * [[hardNegatives]] rule) and its QUANTIZED vectors are collected

@@ -348,8 +348,8 @@ object Sketches {
     * The `n_candidates` audit column carries the phase-1 cut so the
     * bound is VISIBLE in the output (flat distributions — the SON worst
     * case — show a small cut; Zipfian corpora, where heavy hitters
-    * matter, show orders of magnitude: ScaleSmoke's `heavy-hitters`
-    * stage measures it). Reference seed: the scraper's category
+    * matter, show orders of magnitude: SCALE.md's "SON exact heavy
+    * hitters" section measures it). Reference seed: the scraper's category
     * frequency rollups (/root/reference/src/classifier.py:123-156 label
     * distribution) — at 100 TB "which labels are frequent" cannot hash
     * the whole vocabulary. */

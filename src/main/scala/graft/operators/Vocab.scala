@@ -74,7 +74,7 @@ object Vocab {
     *    doubled after a fully-validated batch, cut to the validated
     *    prefix after a truncation — Zipfian corpora (big count gaps,
     *    speculation survives) converge to deep batches, tie-dense
-    *    corpora (near-uniform counts, the md5-hex ScaleSmoke fixture)
+    *    corpora (near-uniform counts, SCALE.md round 15's fixtures)
     *    fall back toward per-rank without paying for dead speculation.
     *  - ONE job per batch computes, over AFFECTED types only (those
     *    containing some batch adjacency — a row changed at any step
@@ -97,14 +97,15 @@ object Vocab {
     *    PER BATCH: an uncommitted fold would otherwise re-execute over
     *    the full type table inside every subsequent delta job (folds
     *    are the per-row cost driver — measured dominant on the 200k-
-    *    type ScaleSmoke fixture), so each fold runs exactly once per
-    *    full-table pass.
+    *    type fixture of SCALE.md round 15), so each fold runs exactly
+    *    once per full-table pass.
     *
     * Jobs: one full aggregation per snapshot (ONE total for alphabetic
     * corpora) + one delta job per batch + checkpoints — versus one
     * full-table aggregation + collect per rank. Per-batch cost shrinks
     * down the Zipf tail with the affected-type count, which is what
-    * makes wall-clock sub-linear in ranks (ScaleSmoke bpe-train-ranks).
+    * makes wall-clock sub-linear in ranks (SCALE.md round 15: 10→100
+    * rank-axis exponents 0.63 complete, 0.93 non-complete).
     *
     * NON-COMPLETE regime, measured (SCALE.md r15, `bpe-train-cjk` —
     * a 2048-ideograph alphabet whose ~6k realized initial pairs exceed
@@ -137,8 +138,8 @@ object Vocab {
     * whose initial pair universe fits `snapshotSize`, the complete
     * regime; each extra one is the non-complete regime's re-snapshot
     * cost), how many speculative batches committed work, and how many
-    * were truncated mid-validation. ScaleSmoke's non-complete stage
-    * reports these; SCALE.md derives the snapshotSize sizing rule. */
+    * were truncated mid-validation. SCALE.md round 15 reports these for
+    * the non-complete regime and derives the snapshotSize sizing rule. */
   final case class BpeStats(snapshots: Int, batches: Int, truncations: Int)
 
   /** [[learnBpe]] + its [[BpeStats]] — same training, same result. */

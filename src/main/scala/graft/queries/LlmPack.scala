@@ -150,7 +150,7 @@ object LlmPack extends QueryPack {
     // rides the codes layout (written at build time), so
     // disqualification runs in-scan with no base-table join; ranking
     // is ADC distance ascending (the compressed-index trade vs q155's
-    // exact cosine — recall A/B'd in ScaleSmoke). The oracle replays
+    // exact cosine — recall A/B in SCALE.md round 16). The oracle replays
     // the q156 assignment + per-query probe ranking, the per-qid ADC
     // tables, and the disqualified DECIMAL-sum top-k.
     "q168_routed_negatives_stored" -> ((s, dir) => Q.ordered {

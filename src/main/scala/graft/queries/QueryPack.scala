@@ -30,19 +30,13 @@ object Q {
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     graft.Tables.load(s, dir, name)
 
-  /** When set (dev A/B only — QueryBench --nowide): [[wide]] becomes
-    * identity, so the fan-out's cost/benefit is measurable PAIRED in one
-    * JVM (VERDICT r12 #4 adjudication protocol). */
-  val NoWideProp = "graft.bench.nowide"
-
   /** Conditional fan-out ahead of CPU-heavy per-row work (hashing,
     * tokenization, regex/markup extraction): repartitions to core count
     * ONLY when the planned input is narrower than one scan split per core
     * — a no-op at corpus scale, where scans already yield thousands of
     * splits. See [[graft.operators.Parallelize.fanOutIfNarrow]]. */
   def wide(df: DataFrame): DataFrame =
-    if (sys.props.get(NoWideProp).contains("true")) df
-    else graft.operators.Parallelize.fanOutIfNarrow(df)
+    graft.operators.Parallelize.fanOutIfNarrow(df)
 
   /** Driver-comparator boundary: the oracle harness sorts/hashes rows via
     * pandas, which cannot hash array cells — a declared query emitting a

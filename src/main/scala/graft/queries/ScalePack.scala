@@ -207,7 +207,8 @@ object ScalePack extends QueryPack {
     // n·P/T-bounded by construction, which is what survives a vocabulary
     // 1000× the cluster's shuffle capacity. n_candidates carries the
     // phase-1 cut as the audit column (this deliberately FLAT corpus is
-    // SON's worst case — ScaleSmoke's Zipfian stage shows the real cut).
+    // SON's worst case — SCALE.md's "SON exact heavy hitters" section
+    // shows the real cut on a Zipfian stream).
     "q145_exact_heavy_hitters" -> ((s, dir) => Q.ordered {
       val toks = Q.wide(Q.t(s, dir, "documents"))
         .select(col("doc_id"),

@@ -237,7 +237,7 @@ object TextPack extends QueryPack {
     // changes (build → merge → merge → probe), the scores must not —
     // a dropped row, double-counted doc, or drifted avgdl breaks the
     // hash. Merged ≡ rebuilt is additionally equality-pinned layout-
-    // wide in SourcesSpec; merge-vs-rebuild cost is ScaleSmoke's A/B.
+    // wide in SourcesSpec; merge-vs-rebuild cost is in SCALE.md round 17.
     "q171_bm25_index_merge" -> ((s, dir) => Q.ordered {
       import graft.operators.Retrieval
       val path = graft.sources.Writers.ensureBm25IndexMerged(s, dir, "documents")
@@ -747,7 +747,7 @@ object TextPack extends QueryPack {
     // consistency wrap on measurement — VERDICT r12 #4): the map work is
     // doc_id-derived string synthesis, the cheapest thing the fan-out
     // guards, and the paired A/B lost BOTH at sf0.1 (0.27 s → 0.38 s)
-    // and at ScaleSmoke ×10 (0.41 s → 0.64 s, url-canon twins). The rule
+    // and at ×10 (0.41 s → 0.64 s, SCALE.md round 13). The rule
     // recorded in SCALE.md r13: wrap stages whose per-row CPU dominates
     // an exchange of their input (hashing, tokenization, markup parse) —
     // never key-synthesis projections feeding a window that already

@@ -9,9 +9,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * removed the public `Column.expr` / `new Column(expr)` surface when
   * Column became Connect-agnostic; third-party native expressions reach
   * the classic conversions from inside the sql package namespace — the
-  * standard pattern for open-source Spark extension libraries. This is
-  * the ONLY file outside the graft namespace; everything else uses the
-  * public API. */
+  * standard pattern for open-source Spark extension libraries. The
+  * `private[spark]` listener-bus drain that QueryBench's job counts need
+  * lives here for the same reason. This is the ONLY file outside the
+  * graft namespace; everything else uses the public API. */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -25,4 +26,10 @@ object ColumnBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
+
+  /** Waits until the listener bus has delivered every posted event, so a
+    * listener's counts are complete when read (the bus is
+    * `private[spark]`). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 }

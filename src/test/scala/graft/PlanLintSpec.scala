@@ -951,8 +951,8 @@ class PlanLintSpec extends AnyFunSuite {
   // curriculum tier's offsets+rank pair re-references the admitted-mix
   // subtree, which itself re-references the q152 base — the measured
   // 6-scan/13-exchange plan is the DECLARED composition price at test
-  // scale; production materializes between tiers (the W4 handoff, as
-  // ScaleSmoke's token-budget stage does) and pays each tier's own
+  // scale; production materializes between tiers (the W4 handoff,
+  // priced in SCALE.md round 16) and pays each tier's own
   // budget once. The budgets pin the shape so a refactor that adds a
   // join-back (re-executing the whole mix per output column) fails
   // loudly.

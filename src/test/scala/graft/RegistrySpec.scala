@@ -126,4 +126,27 @@ class RegistrySpec extends AnyFunSuite {
           "the reference; do not add the path to SURVEY.md by hand.")
     }
   }
+
+  test("README names exactly the mains under src/main") {
+    // every runnable entry point is documented, and no retired one is
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val mainDef = """def main\(args: Array\[String\]\)""".r
+    val objectDef = """\bobject (\w+)""".r
+    val defined = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val text = new String(Files.readAllBytes(p), "UTF-8")
+        mainDef.findAllMatchIn(text).map(m =>
+          objectDef.findAllMatchIn(text.take(m.start)).toSeq.last.group(1))
+      }.toSet
+    val mainsLine = """^\s*([A-Z]\w*(?: / [A-Z]\w*)+)\s.*\bmains\b""".r
+    val lines = new String(Files.readAllBytes(Paths.get("README.md")), "UTF-8")
+      .split("\n").toSeq.flatMap(l => mainsLine.findFirstMatchIn(l))
+    assert(lines.size == 1, s"README.md needs one 'A / B / ... mains' line: $lines")
+    val named = lines.head.group(1).split(" / ").toSet
+    assert(named == defined,
+      s"README.md names ${(named -- defined).mkString(", ")} with no main; " +
+        s"mains it does not name: ${(defined -- named).mkString(", ")}")
+  }
 }

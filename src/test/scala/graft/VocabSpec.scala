@@ -158,7 +158,7 @@ class VocabSpec extends AnyFunSuite {
     // 64 BMP ideographs, 3-char deterministic words: ~128 realized
     // initial pairs, so snapshotSize=16 can never capture them all and
     // every batch runs floor-trust + re-snapshot machinery on a fixture
-    // SHAPED like the ScaleSmoke bpe-train-cjk corpus
+    // SHAPED like the bpe-train-cjk corpus of SCALE.md round 15
     val alpha = (0 until 64).map(i => (0x4e00 + i).toChar)
     val words: Seq[(String, Long)] = (0 until 300).map { i =>
       (new String(Array(alpha(i * 3 % 64), alpha(i * 5 % 64),
