@@ -13,8 +13,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     System.setProperty(graft.queries.Q.NoOrderProp, "true")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.build(s"local[$cpus]", cpus)
+    val spark = GraftSession.local()
     // untimed warmup: session/codegen/parquet-footer startup shouldn't be
     // billed to whichever query happens to run first
     try Tables.load(spark, sfDir, "lineitem").limit(1)

@@ -9,7 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     System.setProperty(graft.queries.Q.NoOrderProp, "true")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = GraftSession.build("local[4]", "4")
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

@@ -17,7 +17,7 @@ import org.apache.spark.sql.SparkSession
   *    2,353 distinct classes; the cap is sized from that count.
   *
   * `shufflePartitions` should be ≈ total executor cores on a real
-  * cluster; the mains pass SPARK_GRAFT_CPUS.
+  * cluster; every main builds through [[local]], one rule for all.
   */
 object GraftSession {
   /** `spark.sql.codegen.cache.maxEntries`: the cache of compiled
@@ -39,6 +39,15 @@ object GraftSession {
     * another scale or core count, add classes. The cache holds at most
     * this many classes; a JVM that compiles fewer never fills it. */
   val CodegenCacheEntries: Int = 2387 * 3 / 2
+
+  /** The mains' session: `local[n]` with `n` shuffle partitions, where
+    * `n` is SPARK_GRAFT_CPUS or, unset, the host's available processors —
+    * so no main silently runs wider or narrower than another. */
+  def local(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    build(s"local[$cpus]", cpus)
+  }
 
   def build(master: String, shufflePartitions: String): SparkSession = {
     val spark = SparkSession.builder()

@@ -14,7 +14,7 @@ object MicroBench {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(2000000L)
     val dim = args.lift(1).map(_.toInt).getOrElse(64)
-    val spark = GraftSession.build("local[8]", "8")
+    val spark = GraftSession.local()
 
     def vec(seed: Int) = transform(sequence(lit(1), lit(dim)),
       i => ((i * (col("id") + seed)) % 97).cast("float"))

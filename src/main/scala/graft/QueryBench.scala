@@ -25,16 +25,15 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * best pass is printed.
   *
   * Run: sbt "runMain graft.QueryBench q88_pipeline_fallback [q83_...]"
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
-  * SPARK_GRAFT_PASSES (default 3); SPARK_GRAFT_METRICS prints the
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default:
+  * the host's available processors), SPARK_GRAFT_PASSES (default 3); SPARK_GRAFT_METRICS prints the
   * last pass's per-operator SQL metrics. */
 object QueryBench {
   def main(args: Array[String]): Unit = {
     System.setProperty(graft.queries.Q.NoOrderProp, "true")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
-    val spark = GraftSession.build(s"local[$cpus]", cpus)
+    val spark = GraftSession.local()
     try Tables.load(spark, sfDir, "lineitem").limit(1)
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }

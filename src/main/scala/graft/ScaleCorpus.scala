@@ -55,8 +55,7 @@ object ScaleCorpus {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val outDir = args.drop(1).headOption
       .getOrElse(s"/tmp/graft_scale/corpus_x$mult")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.build(s"local[$cpus]", cpus)
+    val spark = GraftSession.local()
     write(spark, sfDir, outDir, mult)
     spark.stop()
   }

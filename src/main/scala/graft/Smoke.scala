@@ -5,8 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Local smoke of the driver's rows>0 check on SparkEntry.entry. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.build(s"local[$cpus]", cpus)
+    val spark = GraftSession.local()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

@@ -6,8 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.build(s"local[$cpus]", cpus)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // Dump queries concurrently: Spark schedules independent jobs from
     // multiple submitter threads, so small queries pipeline instead of

@@ -1178,10 +1178,10 @@ object MediaHeader {
     *    audio track), `mp3_info` (optional ID3v2 + MPEG Layer III frame
     *    header, CBR estimate), `flac_info` (fLaC + STREAMINFO) and
     *    `ogg_info` (OggS page + Vorbis/Opus identification header):
-    *    sampleRate<<24|durationMs (`audioMeta` and its twins);
+    *    sampleRate<<24|durationMs (`anyAudioMeta`);
     *  - `mp4_info` (MP4/ISO-BMFF), `mkv_info` (Matroska/WebM EBML) and
     *    `avi_info` (RIFF/AVI + hdrl LIST + avih):
-    *    width<<44|height<<24|durationMs (`videoMeta` and its twins);
+    *    width<<44|height<<24|durationMs (`anyVideoMeta`);
     *  - `pdf_info`: a classic-xref PDF whose page tree resolves,
     *    major<<40|minor<<32|pageCount (`pdfMeta`). */
   val Parsers: Seq[(String, String, Array[Byte] => Long)] = Seq(
@@ -1237,19 +1237,10 @@ object ImageFunctions {
   def wavInfo(payload: Column): Column =
     header("wav_info", payload)
 
-  /** Typed audio header metadata `{sample_rate, duration_ms}` — NULL
-    * fields for non-WAV payloads. */
-  def audioMeta(payload: Column): Column = unpackAudio(wavInfo(payload))
-
   /** Packed (sampleRate, durationMs) long for Matroska/WebM payloads
     * carrying an audio track, NULL otherwise. */
   def mkvAudioInfo(payload: Column): Column =
     header("mkv_audio_info", payload)
-
-  /** Typed audio header metadata for Matroska/WebM audio — NULL fields
-    * otherwise. */
-  def webmAudioMeta(payload: Column): Column =
-    unpackAudio(mkvAudioInfo(payload))
 
   /** Packed (sampleRate, durationMs) long for MP3 payloads, NULL
     * otherwise. */
@@ -1261,16 +1252,10 @@ object ImageFunctions {
   def flacInfo(payload: Column): Column =
     header("flac_info", payload)
 
-  /** Typed audio header metadata for FLAC — NULL fields otherwise. */
-  def flacMeta(payload: Column): Column = unpackAudio(flacInfo(payload))
-
   /** Packed (sampleRate, durationMs) long for OGG Vorbis/Opus payloads,
     * NULL otherwise. */
   def oggInfo(payload: Column): Column =
     header("ogg_info", payload)
-
-  /** Typed audio header metadata for OGG — NULL fields otherwise. */
-  def oggMeta(payload: Column): Column = unpackAudio(oggInfo(payload))
 
   /** Container-agnostic audio metadata: WAV, Matroska/WebM audio, MP3,
     * FLAC, and OGG share the packed layout — the audio twin of
@@ -1290,27 +1275,15 @@ object ImageFunctions {
   def mp4Info(payload: Column): Column =
     header("mp4_info", payload)
 
-  /** Typed video header metadata `{width, height, duration_ms}` — NULL
-    * fields for non-MP4 payloads. */
-  def videoMeta(payload: Column): Column = unpackVideo(mp4Info(payload))
-
   /** Packed (width, height, durationMs) long for Matroska/WebM payloads,
     * NULL otherwise. */
   def mkvInfo(payload: Column): Column =
     header("mkv_info", payload)
 
-  /** Typed video header metadata for Matroska/WebM payloads — NULL
-    * fields otherwise. */
-  def webmMeta(payload: Column): Column = unpackVideo(mkvInfo(payload))
-
   /** Packed (width, height, durationMs) long for AVI payloads, NULL
     * otherwise. */
   def aviInfo(payload: Column): Column =
     header("avi_info", payload)
-
-  /** Typed video header metadata for AVI payloads — NULL fields
-    * otherwise. */
-  def aviMeta(payload: Column): Column = unpackVideo(aviInfo(payload))
 
   /** Container-agnostic video metadata: MP4, Matroska/WebM, and AVI
     * share the packed layout, so one coalesce covers all — the column a

@@ -15,10 +15,6 @@ object Cleaning {
   def requireNonBlank(df: DataFrame, key: String): DataFrame =
     df.filter(col(key).isNotNull && trim(col(key)) =!= "")
 
-  /** C2: trim a key in place (dags/processing_etl.py:65-69). */
-  def trimmed(df: DataFrame, cols: Seq[String]): DataFrame =
-    cols.foldLeft(df)((d, c) => d.withColumn(c, trim(col(c))))
-
   /** C4 (reference src/storage.py:149-152): ''-after-trim → NULL. */
   def emptyToNull(c: Column): Column = nullif(trim(c), lit(""))
 

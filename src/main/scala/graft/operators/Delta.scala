@@ -29,14 +29,6 @@ object Delta {
      joined.filter(col("__state_hash") === col(hashCol)).drop("__state_hash"))
   }
 
-  /** Pure anti-join form of J1: rows with no state match on (key, hash).
-    * `left_anti` never materializes right-side columns and plans as a
-    * broadcast/shuffled hash anti join — the cheapest delta at scale. */
-  def changedOrNew(fresh: DataFrame, state: DataFrame, keyCols: Seq[String],
-                   hashCol: String = "row_hash"): DataFrame =
-    fresh.join(state.select((keyCols :+ hashCol).map(col): _*),
-      keyCols :+ hashCol, "left_anti")
-
   /** J3 merge (dags/scraping_etl.py:108-114): detailed ++ bypass, where the
     * detailed branch may carry extra columns (detail-stage fields). */
   def merge(detailed: DataFrame, bypass: DataFrame): DataFrame =

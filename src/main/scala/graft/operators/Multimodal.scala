@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -39,13 +39,13 @@ object Multimodal {
   def synthesizeMedia(docs: DataFrame): DataFrame = {
     val w = (col("n_chars") % 640 + 1).cast("int")
     val h = (col("n_chars") % 480 + 1).cast("int")
-    def be16(c: Column2): Column2 = unhex(lpad(hex(c), 4, "0"))
-    def be32(c: Column2): Column2 = unhex(lpad(hex(c), 8, "0"))
+    def be16(c: Column): Column = unhex(lpad(hex(c), 4, "0"))
+    def be32(c: Column): Column = unhex(lpad(hex(c), 8, "0"))
     // IEEE-754 float64 big-endian bytes of a non-negative integer column,
     // EXACT via integer column math (no UDF): exponent = |bin(n)|-1,
     // bits = (e+1023)·2^52 + n·2^(52-e) − 2^52 (n < 2^24 keeps every
     // shift in-range); 0 encodes as all-zero bits
-    def f64be(n: Column2): Column2 = {
+    def f64be(n: Column): Column = {
       val e = (length(bin(n)) - 1).cast("int")
       val bits = shiftleft((e + 1023).cast("long"), 52) +
         call_function("shiftleft", n.cast("long"), lit(52) - e) -
@@ -53,7 +53,7 @@ object Multimodal {
       when(n > 0, unhex(lpad(hex(bits), 16, "0")))
         .otherwise(unhex(lit("0000000000000000")))
     }
-    def le32(c: Column2): Column2 = {
+    def le32(c: Column): Column = {
       val x = lpad(hex(c), 8, "0")
       unhex(concat(substring(x, 7, 2), substring(x, 5, 2),
         substring(x, 3, 2), substring(x, 1, 2)))
@@ -286,18 +286,4 @@ object Multimodal {
       }
     }(Encoders.row(schema))
   }
-
-  /** Pure-column metadata resize — no decode needed, pushes to the scan. */
-  def resizeMeta(meta: Column2, maxW: Int, maxH: Int): Column2 = {
-    val scale = least(
-      lit(maxW) / meta.getField("width"), lit(maxH) / meta.getField("height"), lit(1.0))
-    meta
-      .withField("width", floor(meta.getField("width") * scale).cast("int"))
-      .withField("height", floor(meta.getField("height") * scale).cast("int"))
-  }
-  private type Column2 = org.apache.spark.sql.Column
-
-  /** Frame-sample timestamps: every `strideMs` within duration (bounded). */
-  def frameSampleMs(meta: Column2, strideMs: Long, maxFrames: Int): Column2 =
-    slice(sequence(lit(0L), meta.getField("duration_ms"), lit(strideMs)), 1, maxFrames)
 }

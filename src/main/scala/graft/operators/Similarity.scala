@@ -666,30 +666,6 @@ object Similarity {
       .filter(col("__n") <= maxBucketSize)
       .drop("__n")
 
-  /** [[capBuckets]] with the threshold DERIVED from the corpus: cap =
-    * ⌈margin × p99 bucket occupancy⌉ (min 1). A hand-tuned constant cap
-    * that was right at 1× silently zeroes the operator once natural
-    * occupancy grows past it (SCALE.md round 8) — anchoring the cap to
-    * the corpus's own occupancy distribution keeps it what it is meant
-    * to be: a guard against the adversarial TAIL (buckets `margin`×
-    * beyond the p99 are "all alike" outliers), not a bound on normal
-    * buckets. The quantile is computed over the bucket-count table
-    * (bucket-space rows, never corpus rows) and lands on the driver as
-    * ONE scalar — the same bounded-state shape as [[kmeans]]'s
-    * centroids. This is a plan-construction action; at streaming ingest
-    * derive the cap once per epoch from state, not per batch. Returns
-    * (capped frame, derived cap) so callers can log/pin the number. */
-  def capBucketsAuto(df: DataFrame, bucketCol: String,
-                     margin: Double = 3.0): (DataFrame, Int) = {
-    require(margin >= 1.0, s"margin must be >= 1 (got $margin)")
-    val row = df.groupBy(col(bucketCol)).agg(count(lit(1)).as("__n"))
-      .agg(expr("percentile_approx(__n, 0.99)").cast("double"))
-      .head()
-    val p99 = if (row.isNullAt(0)) 0.0 else row.getDouble(0) // null ⇔ empty input
-    val cap = math.max(1, math.ceil(margin * p99).toInt)
-    (capBuckets(df, bucketCol, cap), cap)
-  }
-
   // ---- Product quantization (Jégou et al. 2011) ----
 
   /** PQ codes: the vector split into `m` subspaces of `subDim`

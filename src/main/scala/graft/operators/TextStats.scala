@@ -114,25 +114,6 @@ object TextStats {
   def lines(text: Column): Column =
     filter(transform(split(text, "\\r?\\n"), l => trim(l)), l => l =!= "")
 
-  /** Fraction of lines that repeat an earlier line of the SAME document
-    * (1 − distinct/total) — Gopher's duplicate-line-fraction filter
-    * signal (boilerplate pages repeat nav/footer lines). [] → 0.0, like
-    * [[dupGramFrac]]. */
-  def dupLineFrac(text: Column): Column = {
-    val ls = lines(text)
-    when(size(ls) <= 0, lit(0.0))
-      .otherwise(round(
-        lit(1.0) - size(array_distinct(ls)).cast("double") / size(ls), 6))
-  }
-
-  /** Intra-document exact line dedup, keep-FIRST in document order —
-    * the repair counterpart of [[dupLineFrac]] (C4/RefinedWeb drop
-    * repeated lines instead of whole documents when the signal is
-    * moderate). Row-local: `array_distinct` preserves first-occurrence
-    * order. Empty/whitespace lines are dropped with the dedup. */
-  def dedupLines(text: Column, sep: String = "\n"): Column =
-    array_join(array_distinct(lines(text)), sep)
-
   /** Corpus-level unigram language-model score per document — the
     * scalable skeleton of perplexity-based quality filtering: the
     * "model" is the corpus's own unigram distribution (one hash

@@ -77,9 +77,4 @@ object Bucketing {
     })
     readBucketed(spark, table)
   }
-
-  /** True when the physical plan of `joined` contains no shuffle exchange
-    * — the co-location check (bucketed joins must pass this). */
-  def isShuffleFree(joined: DataFrame): Boolean =
-    !joined.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning")
 }

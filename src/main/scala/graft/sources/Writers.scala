@@ -197,25 +197,28 @@ object Writers {
     * files and releases it. A production deployment plays the same role
     * with a table format's optimistic-commit CAS.
     *
+    * ONE ON-DISK FORMAT: every builder and verb writes the sidecar and
+    * stamps every leg row, so a root with no sidecar is either EMPTY
+    * (the bootstrap: it reads as generation 1) or not a layout of this
+    * format, and is refused ([[requireSidecar]]).
+    *
     * Per layout: `legs` (directory, partition column), where the counter
     * lives, the tombstone table, whether tombstones carry `del_gen`
-    * (postings' are id-only by design; a legacy IVF leg written without
-    * del_gen keeps its kill-all semantics), the counter of a layout
-    * without a sidecar (`None`: a legacy gen-less postings root, read
-    * with everything visible), and the directories a compaction or
-    * reindex swaps (`swaps`, recovered before every write). */
+    * (postings' are id-only by design), the from-scratch builder a
+    * refusal names, and the directories a compaction or reindex swaps
+    * (`swaps`, recovered before every write). */
   private final case class GenLayout(root: String, kind: String,
                                      legs: Seq[(String, String)],
                                      genDir: String, delDir: String,
-                                     genTombs: Boolean,
-                                     defaultGen: Option[Long],
+                                     genTombs: Boolean, builder: String,
                                      swaps: Seq[String]) {
 
     /** Run `body` as the layout's single writer, after finishing any
       * swap a crash interrupted. A root missing its directory can only be
       * mid-swap, and the lock lives inside it, so that root is recovered
-      * before the lock; everything else only once the lock is held,
-      * which keeps a refused writer from touching anything.
+      * before the lock, and a root without a sidecar is refused
+      * ([[requireSidecar]]) before it too; everything else only once the
+      * lock is held, which keeps a refused writer from touching anything.
       *
       * A body that THROWS may already have appended segments or
       * tombstones at the committed generation, and the next commit would
@@ -225,6 +228,7 @@ object Writers {
       * the next writer is refused and maintain* recovers. */
     def write[T](spark: SparkSession, verb: String)(body: => T): T = {
       if (!Files.exists(Paths.get(root))) recoverSwap(root)
+      requireSidecar()
       val token = acquireWriter(verb)
       val out =
         try {
@@ -272,29 +276,40 @@ object Writers {
       } catch { case _: java.io.IOException => () }
     }
 
+    /** Refuse a root that has leg files but no sidecar — no writer
+      * leaves one, so it is not a layout of this format. Directory
+      * syscalls only, and only when the sidecar is absent. A held writer
+      * lock exempts the root: its own verb is mid-bootstrap, or a crashed
+      * one left it for [[vacuum]], and the lock's refusal names that. */
+    def requireSidecar(): Unit =
+      if (!Files.isDirectory(Paths.get(genDir)) && !writerLockHeld(root) &&
+          legs.exists(l => hasParquetFiles(l._1)))
+        throw new IllegalStateException(
+          s"$root has $kind leg files but no generation sidecar " +
+            s"(${genDir.stripPrefix(root + "/")}/): it is not a " +
+            s"generation-stamped layout; rebuild it with $builder")
+
     /** The committed sidecar row (BM25 stats, the postings/IVF counter),
-      * None when the layout has none. The read is ONE tiny 1-row job,
+      * None on an empty root. The read is ONE tiny 1-row job,
       * but it runs at every probe CONSTRUCTION (~0.2 s a job at
       * local[32], measured r18), so it is cached against the sidecar
       * directory's names+mtimes — a few syscalls, no Spark job; a commit
       * from ANY process on this filesystem invalidates it. */
     def sidecar(spark: SparkSession): Option[Row] =
-      if (!Files.isDirectory(Paths.get(genDir))) None
-      else Some(cachedBy(sidecarCache, genDir)(
-        spark.read.parquet(genDir).head()))
+      if (Files.isDirectory(Paths.get(genDir)))
+        Some(cachedBy(sidecarCache, genDir)(spark.read.parquet(genDir).head()))
+      else { requireSidecar(); None }
 
-    /** The committed generation — None on a legacy gen-less layout. */
-    def horizon(spark: SparkSession): Option[Long] =
-      sidecar(spark).filter(_.schema.fieldNames.contains("next_gen"))
-        .map(_.getAs[Long]("next_gen")).orElse(defaultGen)
+    /** The committed generation; an empty root reads as 1. */
+    def horizon(spark: SparkSession): Long =
+      sidecar(spark).fold(1L)(_.getAs[Long]("next_gen"))
 
     /** The visibility horizon of a read AS OF `asOfGen` — clamped to the
       * committed counter (the committed state IS the newest history). */
-    def asOf(spark: SparkSession, asOfGen: Option[Long]): Option[Long] =
-      horizon(spark).map(c => asOfGen.fold(c)(math.min(_, c)))
-
-    /** The committed generation of a layout that always has one. */
-    def gen(spark: SparkSession): Long = horizon(spark).get
+    def asOf(spark: SparkSession, asOfGen: Option[Long]): Long = {
+      val c = horizon(spark)
+      asOfGen.fold(c)(math.min(_, c))
+    }
 
     /** The tombstone table, when any committed or torn delete left one
       * (a vacuum that collected every tombstone file leaves none). */
@@ -314,22 +329,18 @@ object Writers {
     /** Rows of one leg visible at generation `g`: uncommitted rows
       * (gen ≥ g) dropped, then a broadcast anti-join against the ACTIVE
       * tombstones — gen-aware (a re-added id, stamped past its tombstone,
-      * survives; an uncommitted tombstone kills nothing) or id-only
-      * (kills every version). Rows without a gen column read as gen 0;
-      * `g = None` (legacy gen-less layout) applies no generation filter.
-      * No tombstone table ⇒ no join: such layouts plan as before. */
-    def visible(rows0: DataFrame, dels: Option[DataFrame], idCol: String,
-                g: Option[Long]): DataFrame = {
-      val rows =
-        if (g.isEmpty || rows0.columns.contains("gen")) rows0
-        else rows0.withColumn("gen", lit(0L))
-      val committed = g.fold(rows)(v => rows.filter(col("gen") < lit(v)))
+      * survives; an uncommitted tombstone kills nothing) or, on an
+      * id-only layout, killing every version. No tombstone table ⇒ no
+      * join: such layouts plan as before. */
+    def visible(rows: DataFrame, dels: Option[DataFrame], idCol: String,
+                g: Long): DataFrame = {
+      val committed = rows.filter(col("gen") < lit(g))
       dels.fold(committed) { d =>
-        if (!d.columns.contains("del_gen"))
+        if (!genTombs)
           committed.join(broadcast(d.select(col(idCol))), Seq(idCol),
             "left_anti")
         else {
-          val t = d.filter(col("del_gen") < lit(g.getOrElse(Long.MaxValue)))
+          val t = d.filter(col("del_gen") < lit(g))
             .select(col(idCol).as("__del_id"), col("del_gen").as("__del_gen"))
           committed.join(broadcast(t),
             committed(idCol) === t("__del_id") &&
@@ -340,8 +351,8 @@ object Writers {
     }
 
     /** Append `ids` as ONE tombstone segment stamped `del_gen = g`
-      * (id-only on id-only legs, so a leg's schema never mixes), after
-      * enforcing [[MaxTombstoneRows]] on the accumulated table. */
+      * (id-only on an id-only layout), after enforcing
+      * [[MaxTombstoneRows]] on the accumulated table. */
     def appendTombstones(verb: String, existing: Option[DataFrame],
                          ids: DataFrame, n: Long, g: Long): Unit = {
       val total = tombCount(existing) + n
@@ -349,8 +360,7 @@ object Writers {
         s"$verb: $total tombstone rows would exceed MaxTombstoneRows=" +
           s"$MaxTombstoneRows — the tombstone table is broadcast into " +
           s"every probe; run compact$kind (or maintain$kind) first")
-      val genAware = genTombs && existing.forall(_.columns.contains("del_gen"))
-      (if (genAware) ids.withColumn("del_gen", lit(g)) else ids)
+      (if (genTombs) ids.withColumn("del_gen", lit(g)) else ids)
         .coalesce(1).write.mode("append").parquet(delDir)
     }
 
@@ -360,7 +370,7 @@ object Writers {
       * 1-row sidecar `row` — LAST. */
     def commit(spark: SparkSession, verb: String, g: Long,
                into: String = genDir)(row: Column*): Unit = {
-      val actual = horizon(spark).getOrElse(-1L)
+      val actual = horizon(spark)
       require(actual == g,
         s"$verb: commit-flip CAS failed — committed generation moved " +
           s"from $g to $actual under a held writer lock (an " +
@@ -375,15 +385,13 @@ object Writers {
       * batch, so a file is torn iff its minimum gen is) and every
       * tombstone file that never committed, then release the crashed
       * verb's lock LAST. Such files are invisible already; collecting
-      * them makes a RETRY of the torn verb safe. Legs without a gen
-      * column (gen-less or id-only) are all committed. Returns the number
-      * of files removed. */
+      * them makes a RETRY of the torn verb safe. Id-only tombstones
+      * are all committed. Returns the number of files removed. */
     def vacuum(spark: SparkSession): Long = {
       swaps.foreach(recoverSwap)
-      val removed = horizon(spark).fold(0L) { g =>
-        legs.map(l => vacuumLeg(spark, l._1, "gen", g)).sum +
-          vacuumLeg(spark, delDir, "del_gen", g)
-      }
+      val g = horizon(spark)
+      val removed = legs.map(l => vacuumLeg(spark, l._1, "gen", g)).sum +
+        (if (genTombs) vacuumLeg(spark, delDir, "del_gen", g) else 0L)
       Files.deleteIfExists(lockPath(root))
       removed
     }
@@ -420,22 +428,11 @@ object Writers {
 
     /** Worst-directory segment statistics of the first leg. */
     def segments: (Int, Int) = partDirStats(legs.head._1, legs.head._2 + "=")
-
-    /** The maintain* policy: a stale writer lock means a verb crashed
-      * mid-flight — [[vacuum]] collects its torn files and releases the
-      * lock, so recovery needs no manual step (VERDICT r18 #3); `due`
-      * (accumulated debt) fires [[compact]]. Returns whether either ran. */
-    def maintain(spark: SparkSession, stale: Boolean, due: Boolean,
-                 idCol: String): Boolean = {
-      if (stale) vacuum(spark)
-      if (due) compact(spark, idCol)
-      due || stale
-    }
   }
 
   private def bm25Layout(path: String) = GenLayout(path, "Bm25Index",
     Seq(s"$path/tf" -> "tok_part", s"$path/doclen" -> "doc_part"),
-    s"$path/stats", s"$path/deletes", genTombs = true, defaultGen = None,
+    s"$path/stats", s"$path/deletes", genTombs = true, "writeBm25Index",
     swaps = Seq(s"$path/tf", s"$path/doclen"))
 
   // postings DATA lives at the layout root (tok_part=* directories), so
@@ -443,15 +440,14 @@ object Writers {
   // _-hidden siblings, a visible one would break partition discovery
   private def postingsLayout(path: String) = GenLayout(path, "Postings",
     Seq(path -> "tok_part"), s"$path/_gen", s"$path/_deletes",
-    genTombs = false, defaultGen = None, swaps = Seq(path))
+    genTombs = false, "writePostings", swaps = Seq(path))
 
-  // a hand-written dev layout without the gen/ sidecar reads as
-  // (next_gen 1, last_merge_gen 0) and its gen-less codes as gen 0 — the
-  // plain-id delete semantics it always had
+  // an empty codes leg without the gen/ sidecar (the streaming
+  // bootstrap: codebook and centroids only) reads as (next_gen 1,
+  // last_merge_gen 0)
   private def ivfLayout(path: String) = GenLayout(path, "IvfPqIndex",
     Seq(s"$path/codes" -> "bucket"), s"$path/gen", s"$path/deletes",
-    genTombs = true, defaultGen = Some(1L),
-    swaps = Seq(path, s"$path/codes"))
+    genTombs = true, "writeIvfCodes", swaps = Seq(path, s"$path/codes"))
 
   private def lockPath(path: String): java.nio.file.Path =
     Paths.get(path, "_writer.lock")
@@ -502,13 +498,11 @@ object Writers {
 
   /** Drop the files of one leg whose minimum `genCol` is ≥ the committed
     * generation — whole-file torn-batch collection (one narrow columnar
-    * scan). A leg without `genCol` has nothing uncommitted. */
+    * scan). */
   private def vacuumLeg(spark: SparkSession, legPath: String,
                         genCol: String, committedGen: Long): Long = {
     if (!hasParquetFiles(legPath)) return 0L
-    val leg = spark.read.parquet(legPath)
-    if (!leg.columns.contains(genCol)) return 0L
-    val torn = leg
+    val torn = spark.read.parquet(legPath)
       .select(input_file_name().as("__f"), col(genCol).as("__g"))
       .groupBy(col("__f")).agg(min(col("__g")).as("__mn"))
       .filter(col("__mn") >= committedGen)
@@ -658,9 +652,9 @@ object Writers {
       "doc_id", col("toks"))
       .withColumn("tok_part", tokenPart(col("token")))
 
-  /** From-scratch write of a COMMIT-CAPABLE postings layout: rows
-    * stamped gen 0 and the `_gen` sidecar holding next_gen 1 — the
-    * [[writeBm25Index]] stance for the positional leg. */
+  /** From-scratch write of a postings layout: rows stamped gen 0 and
+    * the `_gen` sidecar holding next_gen 1 — the [[writeBm25Index]]
+    * stance for the positional leg. */
   def writePostings(spark: SparkSession, docs: DataFrame,
                     path: String): Unit = {
     removeDir(s"$path/_deletes")
@@ -673,19 +667,16 @@ object Writers {
     * layout — the [[mergeBm25Index]] segment-append discipline for the
     * POSITIONAL leg: fresh (token, doc_id, pos) rows are one map-only
     * posexplode ∝ |fresh|, appended as new files inside their
-    * md5-prefix directories; nothing existing is read or rewritten. On
-    * a commit-capable layout ([[writePostings]]) they are stamped
-    * `gen = next_gen` and the sidecar flip lands LAST. Same new-doc-id
-    * guard contract as the BM25 merge (gen-aware on capable layouts, so
-    * a torn batch cannot trip the guard on its own retry); legacy
-    * gen-less roots append unchanged. */
+    * md5-prefix directories; nothing existing is read or rewritten.
+    * They are stamped `gen = next_gen` and the sidecar flip lands LAST.
+    * Same new-doc-id guard contract as the BM25 merge (gen-aware, so a
+    * torn batch cannot trip the guard on its own retry). */
   def mergePostings(spark: SparkSession, path: String, fresh: DataFrame,
                     checkNewDocIds: Boolean = true): Unit = {
     val lay = postingsLayout(path)
     lay.write(spark, "mergePostings") {
       val g = lay.horizon(spark)
-      val rows = postingsRows(fresh)
-      val stamped = g.fold(rows)(v => rows.withColumn("gen", lit(v)))
+      val stamped = postingsRows(fresh).withColumn("gen", lit(g))
       val freshPost = if (checkNewDocIds) stamped.cache() else stamped
       try {
         if (checkNewDocIds) {
@@ -703,14 +694,12 @@ object Writers {
               "docs need delete-then-compact, not a double posting list")
         }
         writeClustered(freshPost, path, "tok_part", "append")
-        g.foreach(v => lay.commit(spark, "mergePostings", v)(
-          lit(v + 1L).as("next_gen")))
+        lay.commit(spark, "mergePostings", g)(lit(g + 1L).as("next_gen"))
       } finally freshPost.unpersist()
     }
   }
 
-  /** [[vacuumBm25Index]] for a postings layout. No-op on legacy
-    * gen-less roots beyond releasing the lock. */
+  /** [[vacuumBm25Index]] for a postings layout. */
   def vacuumPostings(spark: SparkSession, path: String): Long =
     postingsLayout(path).vacuum(spark)
 
@@ -729,15 +718,6 @@ object Writers {
     writePostings(spark, docs.filter(col("doc_id") % 3 =!= 2), p)
     mergePostings(spark, p, docs.filter(col("doc_id") % 3 === 2))
   }
-
-  /** The tombstone table of a postings layout, when any delete ever
-    * ran — one doc_id per row, append-only, deduplicated at write time.
-    * No generation column, deliberately: positions are immutable
-    * payloads; a CHANGED document routes delete → [[compactPostings]] →
-    * re-merge, and the merge guard correctly rejects a re-add while
-    * dead rows still stand. */
-  def postingsDeletes(spark: SparkSession, path: String): Option[DataFrame] =
-    postingsLayout(path).deletes(spark)
 
   /** Delete documents from a stored [[ensurePostings]] layout at cost
     * ∝ |ids| — the [[deleteFromBm25Index]] verb for the positional leg,
@@ -796,9 +776,11 @@ object Writers {
                        maxTombstones: Long = 1024L,
                        maxFilesPerDir: Int = 8): Boolean = {
     val info = describePostings(spark, path)
-    postingsLayout(path).maintain(spark, info.staleWriter,
-      info.tombstoneRows > maxTombstones ||
-        info.maxFilesPerDir > maxFilesPerDir, "doc_id")
+    val due = info.tombstoneRows > maxTombstones ||
+      info.maxFilesPerDir > maxFilesPerDir
+    if (info.staleWriter) vacuumPostings(spark, path)
+    if (due) compactPostings(spark, path)
+    due || info.staleWriter
   }
 
   /** The q177 lifecycle applied to the POSITIONAL postings leg — q181's
@@ -819,19 +801,16 @@ object Writers {
     * Catalyst prunes non-matching directories at planning time
     * (`PartitionFilters` in the scan — PlanLint-pinned via q158); the
     * residual `token IN (...)` predicate pushes into the parquet reader
-    * within the surviving directories. Commit-capable layouts hide a
-    * torn merge's rows; `asOfGen` is [[liveCodes]]' SNAPSHOT contract
-    * on this leg (merge visibility `gen < G`). Tombstones are id-only,
-    * so deletes apply at every horizon. Returns (token, doc_id, pos). */
+    * within the surviving directories. A torn merge's rows stay hidden;
+    * `asOfGen` is [[liveCodes]]' SNAPSHOT contract on this leg (merge
+    * visibility `gen < G`). Tombstones are id-only, so deletes apply at
+    * every horizon. Returns (token, doc_id, pos). */
   def prunedPostings(spark: SparkSession, path: String,
                      tokens: Seq[String],
                      asOfGen: Option[Long] = None): DataFrame = {
     require(tokens.nonEmpty, "prunedPostings needs at least one token")
     val lay = postingsLayout(path)
     val g = lay.asOf(spark, asOfGen)
-    require(asOfGen.isEmpty || g.nonEmpty,
-      "prunedPostings asOfGen needs a commit-capable layout " +
-        "(writePostings-built, _gen sidecar)")
     val parts = tokens.distinct.map(tokenPartOf).distinct
     lay.visible(spark.read.parquet(path)
         .filter(col("tok_part").isin(parts: _*) &&
@@ -890,17 +869,6 @@ object Writers {
     Option(r.getAs[java.math.BigDecimal]("sum_dl"))
       .getOrElse(java.math.BigDecimal.ZERO)
 
-  /** The 1-row stats of a stored layout, refused unless it carries the
-    * exact sum_dl and the next_gen counter the incremental verbs need. */
-  private def mergeableStats(spark: SparkSession, lay: GenLayout,
-                             verb: String): Row = {
-    val st = lay.sidecar(spark).get
-    require(Set("sum_dl", "next_gen").subsetOf(st.schema.fieldNames.toSet),
-      s"$verb needs a merge-capable layout: stats/ lacks the exact " +
-        "sum_dl / next_gen columns (rebuild with writeBm25Index)")
-    st
-  }
-
   /** One from-scratch BM25 layout write over `docs` (must carry doc_id,
     * text): `tf/` partitioned by [[tokenPart]], `doclen/` the one-row-
     * per-doc (doc_id, dl) table partitioned by [[idPart]] (the Lucene
@@ -939,7 +907,7 @@ object Writers {
                          parts: Seq[String], dels: Option[DataFrame],
                          g: Long): DataFrame =
     lay.visible(spark.read.parquet(s"${lay.root}/doclen")
-      .filter(col("doc_part").isin(parts: _*)), dels, "doc_id", Some(g))
+      .filter(col("doc_part").isin(parts: _*)), dels, "doc_id", g)
 
   private def docParts(rows: DataFrame): Seq[String] =
     rows.select(col("doc_part")).distinct()
@@ -991,7 +959,7 @@ object Writers {
                                allowEmpty: Boolean = true): Long = {
     val lay = bm25Layout(path)
     lay.write(spark, verb)(withCached { cache =>
-      val old = mergeableStats(spark, lay, verb)
+      val old = lay.sidecar(spark).get
       val oldN = old.getAs[Long]("n_docs")
       val g = old.getAs[Long]("next_gen")
       val dels = lay.deletes(spark)
@@ -1191,10 +1159,12 @@ object Writers {
                         maxFilesPerDir: Int = 8,
                         maxTombstones: Long = MaxTombstoneRows / 2): Boolean = {
     val info = describeBm25Index(spark, path)
-    bm25Layout(path).maintain(spark, info.staleWriter,
-      info.deadFraction > maxDeadFraction ||
-        info.maxTfFilesPerDir > maxFilesPerDir ||
-        info.tombstoneRows > maxTombstones, "doc_id")
+    val due = info.deadFraction > maxDeadFraction ||
+      info.maxTfFilesPerDir > maxFilesPerDir ||
+      info.tombstoneRows > maxTombstones
+    if (info.staleWriter) vacuumBm25Index(spark, path)
+    if (due) compactBm25Index(spark, path)
+    due || info.staleWriter
   }
 
   /** Probe-side read of an [[ensureBm25Index]] tf layout — the
@@ -1237,7 +1207,7 @@ object Writers {
     val g = lay.asOf(spark, Some(asOfGen))
     dlSum(lay.visible(spark.read.parquet(s"$path/doclen"),
         lay.deletes(spark), "doc_id", g))
-      .select(statsRow(col("n_docs"), col("sum_dl"), g.get): _*)
+      .select(statsRow(col("n_docs"), col("sum_dl"), g): _*)
   }
 
   /** The BM25 layout built INCREMENTALLY: build from the doc_id%3=0
@@ -1325,10 +1295,9 @@ object Writers {
   // tombstone with del_gen > last_merge_gen is FULLY KILLING (gens are
   // only handed out by add legs), so re-deleting an id behind one is a
   // no-op; one at or below it may have been out-merged and a re-delete
-  // must stamp a fresh one. Update requires a gen-capable layout and
-  // says so.
+  // must stamp a fresh one.
 
-  /** From-scratch write of a gen-capable codes leg: rows stamped gen 0,
+  /** From-scratch write of a codes leg: rows stamped gen 0,
     * sidecar (next_gen 1, last_merge_gen 0), stale tombstones cleared —
     * the [[writeBm25Index]] stance for the vector leg. */
   def writeIvfCodes(spark: SparkSession, codes: DataFrame,
@@ -1374,7 +1343,7 @@ object Writers {
     vecs.filter(col("vec_id") < coarseK)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
 
-  /** Build a gen-capable IVF×PQ layout at `p`: codes of `vecs` against
+  /** Build an IVF×PQ layout at `p`: codes of `vecs` against
     * `coarse`, the codebook trained on `vecs` (padded when later verbs
     * may code vectors the training never saw), and the centroids. */
   private def buildIvf(spark: SparkSession, p: String, vecs: DataFrame,
@@ -1426,16 +1395,12 @@ object Writers {
     *     out by adds, so such an id has no live row); codes are
     *     bucket-partitioned, there is no id-pruned leg to probe
     *     liveness cheaply, so a brand-new id gets a harmless kill-nothing
-    *     stamp that compaction folds away. A legacy id-only leg keeps its
-    *     kill-all semantics (every existing tombstone is fully killing,
-    *     appended rows stay id-only — ADVICE r18);
+    *     stamp that compaction folds away;
     *  3. add leg: `adds` encodes rows against the layout's FROZEN
     *     centroid table (codebook and centroids never change here);
     *  4. the new-id guard, one rule: no add id may be live unless this
     *     epoch tombstones it — probed under `checkNewIds` over the add
-    *     buckets' directories; a gen-less layout cannot stamp an add past
-    *     any tombstone, so there an add id may have none and an epoch
-    *     with both legs is refused;
+    *     buckets' directories;
     *  5. tombstones append at `del_gen = g`, codes append stamped past
     *     them (`g + 1` when this epoch tombstoned any id, else `g`), and
     *     the sidecar (next_gen one past the last stamp, last_merge_gen
@@ -1448,22 +1413,15 @@ object Writers {
                                 checkNewIds: Boolean = false): Unit = {
     val lay = ivfLayout(path)
     lay.write(spark, verb)(withCached { cache =>
-      val g = lay.gen(spark)
+      val g = lay.horizon(spark)
       val lastMerge = lastMergeGen(spark, lay)
       val dels = lay.deletes(spark)
       val codesExist = hasParquetFiles(s"$path/codes")
-      val genCapable = !codesExist ||
-        spark.read.parquet(s"$path/codes").columns.contains("gen")
-      require(genCapable || deletes.isEmpty || adds.isEmpty,
-        s"$verb needs a gen-capable layout (per-row gen stamps — rebuild " +
-          "with writeIvfCodes / the ensure* builders); a gen-less layout " +
-          "routes changes as delete -> compact -> merge")
       val fresh = deletes.map { d =>
         val cand = cache(d.select(col(idCol)).distinct())
         dels.fold(cand)(old => cand.join(
-          (if (!old.columns.contains("del_gen")) old
-           else old.filter(col("del_gen") > lastMerge &&
-             col("del_gen") < lit(g))).select(col(idCol)),
+          old.filter(col("del_gen") > lastMerge && col("del_gen") < lit(g))
+            .select(col(idCol)),
           Seq(idCol), "left_anti"))
       }
       val freshCnt = fresh.fold(0L)(_.count())
@@ -1471,17 +1429,12 @@ object Writers {
         cache(enc(spark.read.parquet(s"$path/centroids"))))
       val buckets = out.fold(Array.empty[Long])(_.select(col("bucket"))
         .distinct().collect().map(_.getLong(0))) // bounded by the coarse k
-      val addIds = out.map(_.select(col(idCol)).distinct())
-      if (!genCapable && buckets.nonEmpty) dels.foreach(del =>
-        require(del.join(addIds.get, Seq(idCol), "left_semi").head(1).isEmpty,
-          s"$verb: gen-less layout has tombstones for ids in this batch " +
-            "— compactIvfPqIndex first, or rebuild the layout gen-capable " +
-            "(writeIvfCodes) to use update semantics"))
       if (checkNewIds && codesExist && buckets.nonEmpty) {
         val hit = lay.visible(spark.read.parquet(s"$path/codes"), dels,
-            idCol, Some(g))
+            idCol, g)
           .filter(col("bucket").isin(buckets.toIndexedSeq: _*))
-          .join(addIds.get, Seq(idCol), "left_semi")
+          .join(out.get.select(col(idCol)).distinct(), Seq(idCol),
+            "left_semi")
         require(fresh.fold(hit)(f => hit.join(f, Seq(idCol), "left_anti"))
             .head(1).isEmpty,
           s"$verb: fresh batch contains ids LIVE in the index — merge " +
@@ -1493,7 +1446,7 @@ object Writers {
           lay.appendTombstones(verb, dels, fresh.get, freshCnt, g)
         val addGen = if (freshCnt > 0L) g + 1L else g
         if (buckets.nonEmpty)
-          (if (genCapable) out.get.withColumn("gen", lit(addGen)) else out.get)
+          out.get.withColumn("gen", lit(addGen))
             .write.partitionBy("bucket").mode("append")
             .parquet(s"$path/codes")
         val (next, merged) =
@@ -1514,8 +1467,7 @@ object Writers {
     * frozen-artifacts is q174's oracle. With `checkNewIds` (the default)
     * a fresh id already LIVE fails loudly (a semi-join over the fresh
     * buckets' directories; Delta-routed ingest passes false). Fresh rows
-    * are stamped `gen = next_gen` on gen-capable layouts; on a gen-less
-    * dev layout the append follows the stored schema. `passthrough` must
+    * are stamped `gen = next_gen`. `passthrough` must
     * match the columns the layout was built with. An empty codes leg
     * (the streaming bootstrap) skips the guard; an empty batch is a
     * no-op. */
@@ -1562,9 +1514,7 @@ object Writers {
   /** Probe-side codes view of a stored IVF×PQ layout: the codes table
     * through [[GenLayout.visible]] — uncommitted rows and tombstones
     * filtered, tombstoned rows dropped by a gen-aware broadcast
-    * anti-join (id-only on a legacy leg). Gen-less dev layouts read as
-    * gen 0 against next_gen 1 — their historical semantics. The
-    * probed-bucket partition filter applied downstream
+    * anti-join. The probed-bucket partition filter applied downstream
     * (ivfPqSearchStored) pushes through the anti-join's left side, so
     * directory pruning survives deletion (PlanLint pins q178).
     *
@@ -1574,21 +1524,16 @@ object Writers {
     * started from is bit-for-bit the pre-verb probe (q185's oracle). G
     * above the committed counter clamps to it. HISTORY HORIZON:
     * compaction and vacuum truncate history to the fold point — the
-    * table-format VACUUM-vs-time-travel trade. Requires a gen-capable
-    * layout. */
+    * table-format VACUUM-vs-time-travel trade. */
   def liveCodes(spark: SparkSession, path: String,
                 idCol: String = "vec_id",
                 asOfGen: Option[Long] = None): DataFrame = {
     val lay = ivfLayout(path)
-    val codes = spark.read.parquet(s"$path/codes")
-    require(asOfGen.isEmpty || codes.columns.contains("gen"),
-      "liveCodes asOfGen needs a gen-capable layout (per-row gen " +
-        "stamps — rebuild with writeIvfCodes / the ensure* builders)")
-    lay.visible(codes, lay.deletes(spark), idCol, lay.asOf(spark, asOfGen))
+    lay.visible(spark.read.parquet(s"$path/codes"), lay.deletes(spark), idCol,
+      lay.asOf(spark, asOfGen))
   }
 
-  /** [[vacuumBm25Index]] for the IVF×PQ layout. Gen-less dev layouts and
-    * legacy id-only tombstones have nothing to vacuum. */
+  /** [[vacuumBm25Index]] for the IVF×PQ layout. */
   def vacuumIvfPqIndex(spark: SparkSession, path: String): Long =
     ivfLayout(path).vacuum(spark)
 
@@ -1606,8 +1551,7 @@ object Writers {
     * vectors against the FROZEN codebook/centroids and append them
     * stamped past the tombstones, one commit for both — the
     * tombstoned-only state is never exposed. ∝ the changed batch
-    * (q184's oracle). Requires a gen-capable layout — without per-row
-    * gens a re-add cannot outlive its tombstone. The codebook must cover
+    * (q184's oracle). The codebook must cover
     * the codes the changed vectors realize ([[padIvfPqCodebook]] at
     * build time guarantees that). */
   def updateIvfPqIndex(spark: SparkSession, path: String, changed: DataFrame,
@@ -1642,7 +1586,7 @@ object Writers {
                         passthrough: Seq[String] = Nil): Unit = {
     val lay = ivfLayout(path)
     lay.write(spark, "reindexIvfPqIndex") {
-      val g = lay.gen(spark)
+      val g = lay.horizon(spark)
       val cents = coarse.select(col(cidCol).as("cid"),
         col(cvecCol).as("cvec"))
       val (codes, book) = Similarity.ivfPqIndexTables(
@@ -1664,7 +1608,7 @@ object Writers {
   }
 
   /** The DRIFT → REINDEX lifecycle as one artifact — q188's: the full
-    * gen-capable layout over the ORIGINAL corpus, DRIFTED by
+    * layout over the ORIGINAL corpus, DRIFTED by
     * [[updateIvfPqIndex]] (the %5=4 vectors reversed, encoded against
     * the stale frozen artifacts), then [[reindexIvfPqIndex]] over the
     * UPDATED corpus with RE-DERIVED artifacts (the low-id centroid rule
@@ -1707,7 +1651,7 @@ object Writers {
     }
 
   /** q184's artifact, UPDATE = delete + re-merge on the vector layout:
-    * the full gen-capable layout with a PADDED codebook, then the
+    * the full layout with a PADDED codebook, then the
     * vec_id%5=4 vectors replaced by their reversed versions through
     * [[updateIvfPqIndex]] (the vector analog of q180's
     * `text + " fresh join"`). The artifacts stay FROZEN as built over
@@ -1748,7 +1692,7 @@ object Writers {
         spark.read.parquet(s"$path/codes").count() // footer metadata
       else 0L
     val (dirs, maxFiles) = lay.segments
-    IvfPqIndexInfo(rows, lay.tombstones(spark), lay.gen(spark),
+    IvfPqIndexInfo(rows, lay.tombstones(spark), lay.horizon(spark),
       lastMergeGen(spark, lay), dirs, maxFiles,
       staleWriter = writerLockHeld(path))
   }
@@ -1766,10 +1710,12 @@ object Writers {
                          maxFilesPerDir: Int = 8,
                          maxTombstones: Long = MaxTombstoneRows / 2): Boolean = {
     val info = describeIvfPqIndex(spark, path)
-    ivfLayout(path).maintain(spark, info.staleWriter,
-      info.tombstoneFraction > maxTombstoneFraction ||
-        info.maxFilesPerDir > maxFilesPerDir ||
-        info.tombstoneRows > maxTombstones, idCol)
+    val due = info.tombstoneFraction > maxTombstoneFraction ||
+      info.maxFilesPerDir > maxFilesPerDir ||
+      info.tombstoneRows > maxTombstones
+    if (info.staleWriter) vacuumIvfPqIndex(spark, path)
+    if (due) compactIvfPqIndex(spark, path, idCol)
+    due || info.staleWriter
   }
 
   /** [[ensureIvfPqIndex]] with a KMEANS-TRAINED coarse level (VERDICT

@@ -12,28 +12,27 @@ import graft.sources.Writers
 
 /** Structured Streaming surface — SURVEY §2.8 G10. The reference's daily
   * Airflow micro-batch + checksum delta (dags/master_etl.py:22,
-  * dags/scraping_etl.py:51-74) upgraded to true streams:
+  * dags/scraping_etl.py:51-74) as streams. The module is product surface
+  * in two parts:
   *
-  *  - [[tumblingCounts]] — watermarked tumbling-window aggregation (the
-  *    streaming form of q44's date_trunc bucket agg);
-  *  - [[sessionCounts]] — session windows per key;
-  *  - [[dedupWithinWatermark]] — the raw-table PK dedup (W2) with BOUNDED
-  *    state: the watermark evicts keys, unlike the reference's forever-state
-  *    Postgres raw table (documented deviation, SURVEY §7.4.10);
-  *  - [[deltaStream]] — the J1 delta split as arbitrary stateful
-  *    processing: per-key last-fingerprint state, emitting only new/changed
-  *    rows.
+  *  - the incremental epoch bodies, one `*Batch(batch, epochId, …)` per
+  *    sink, each the reference's one incremental upsert per run: compute
+  *    this run's delta, upsert it into stored state. [[foreachEpoch]]
+  *    starts one on a stream; `bm25MaintenanceBatch` and
+  *    `ivfPqMaintenanceBatch` drive the stored serving layouts' single
+  *    write step from a change stream;
+  *  - [[deltaStream]] / [[deltaStreamBounded]] — the J1 delta split as
+  *    arbitrary stateful processing: per-key last-fingerprint state,
+  *    emitting only new/changed rows.
   *
-  * All state is keyed and watermark-bounded — at 1000 executors state
-  * partitions by key exactly like a batch shuffle; nothing accumulates on
-  * the driver. Batch queries stay the oracle-checked source of truth; these
-  * jobs are covered by MemoryStream ScalaTests (no DuckDB oracle exists for
+  * The query-surface wrappers (watermarked tumbling and session counts,
+  * stream-static enrichment, watermark-bounded dedup and a progress
+  * feed) were removed: each was one Spark call and nothing called them.
+  * Batch queries stay the oracle-checked source of truth; these jobs are
+  * covered by MemoryStream ScalaTests (no DuckDB oracle exists for
   * streaming semantics).
   *
-  * The incremental sinks are the reference's scheduled run (compute this
-  * run's delta, upsert it into stored state) as one epoch body each: a
-  * `*Batch(batch, epochId, …)` that [[foreachEpoch]] starts on a stream.
-  * Every body runs the same epoch-sink protocol, written once in
+  * Every epoch body runs the same epoch-sink protocol, written once in
   * [[runEpoch]]: read each state leg's latest version as of
   * `__epoch < epochId`, write the epoch's output over `outDir/epoch=N`,
   * merge the fresh contribution stamped `__epoch = N` (evicting
@@ -45,39 +44,6 @@ import graft.sources.Writers
   * epoch, and the `__epoch`-versioned keyed merge is content-idempotent.
   */
 object StreamingJobs {
-
-  /** G10: tumbling-window counts; late rows beyond `delay` are dropped. */
-  def tumblingCounts(events: DataFrame, tsCol: String, delay: String,
-                     windowLen: String): DataFrame =
-    events.withWatermark(tsCol, delay)
-      .groupBy(window(col(tsCol), windowLen), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-           sum(col("value").cast("decimal(28,10)")).cast("double").as("sum_value"))
-      .select(col("window.start").as("bucket"), col("event_type"),
-        col("n"), col("sum_value"))
-
-  /** G10: session windows — gap-based grouping per user. */
-  def sessionCounts(events: DataFrame, tsCol: String, delay: String,
-                    gap: String): DataFrame =
-    events.withWatermark(tsCol, delay)
-      .groupBy(session_window(col(tsCol), gap), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("session_window.start").as("session_start"),
-        col("user_id"), col("n"))
-
-  /** S2/J4 streaming: per-row enrichment as a stream-static left join —
-    * the dimension is re-read per micro-batch (so slowly-changing dims
-    * pick up updates), the stream side never buffers. Broadcast/AQE
-    * decisions apply per batch exactly as in the batch path. */
-  def enrichStream(stream: DataFrame, dim: DataFrame,
-                   streamKey: String, dimKey: String): DataFrame =
-    stream.join(dim, stream(streamKey) === dim(dimKey), "left")
-
-  /** W2 streaming: exact dedup with watermark-bounded state. */
-  def dedupWithinWatermark(events: DataFrame, tsCol: String, delay: String,
-                           keys: Seq[String]): DataFrame =
-    events.withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark(keys)
 
   /** Run `step(batch, epochId)` on every micro-batch of `df`; the caller
     * `.start()`s the returned writer. The step is an epoch body with its
@@ -1247,24 +1213,6 @@ object StreamingJobs {
     * work. */
   def epochMetrics(spark: SparkSession, outDir: String): DataFrame =
     spark.read.parquet(s"$outDir/_metrics")
-
-  /** Watermark-side observability for the query-surface jobs
-    * ([[tumblingCounts]]/[[sessionCounts]]/[[dedupWithinWatermark]]):
-    * the engine's own progress feed as a DataFrame — per micro-batch
-    * input rows, live state rows, and rows DROPPED AS TOO LATE by the
-    * watermark (the counter a pipeline alerts on when upstream lag
-    * starts eating data). Snapshot of `recentProgress`; call after
-    * `processAllAvailable()` in tests or on a schedule in production. */
-  def progressMetrics(query: org.apache.spark.sql.streaming.StreamingQuery): DataFrame = {
-    val spark = query.sparkSession
-    import spark.implicits._
-    query.recentProgress.toSeq.map { p =>
-      val ops = Option(p.stateOperators).getOrElse(Array.empty)
-      (p.batchId, p.numInputRows,
-        ops.map(_.numRowsTotal).sum,
-        ops.map(_.numRowsDroppedByWatermark).sum)
-    }.toDF("batch_id", "input_rows", "state_rows", "dropped_late_rows")
-  }
 
   /** A fingerprinted record flowing through the delta stream. */
   final case class KeyedRecord(key: String, hash: String, payload: String)

@@ -11,6 +11,11 @@ class BucketingSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
+  /** True when the physical plan of `joined` contains no shuffle exchange
+    * — the co-location check (bucketed joins must pass this). */
+  private def isShuffleFree(joined: org.apache.spark.sql.DataFrame): Boolean =
+    !joined.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning")
+
   test("bucketed-by-key join plans without a shuffle exchange") {
     val facts = (1L to 1000L).map(i => (i % 50, s"f$i")).toDF("key", "fact")
     val state = (0L until 50L).map(i => (i, s"s$i")).toDF("key", "label")
@@ -22,13 +27,13 @@ class BucketingSpec extends AnyFunSuite {
     try {
       val joined = Bucketing.readBucketed(spark, "graft_facts_b")
         .join(Bucketing.readBucketed(spark, "graft_state_b"), Seq("key"))
-      assert(Bucketing.isShuffleFree(joined),
+      assert(isShuffleFree(joined),
         s"expected no shuffle:\n${joined.queryExecution.executedPlan}")
       assert(joined.count() == 1000L)
 
       // control: the same join over unbucketed frames DOES shuffle
       val plain = facts.join(state, Seq("key"))
-      assert(!Bucketing.isShuffleFree(plain))
+      assert(!isShuffleFree(plain))
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS graft_facts_b")

@@ -307,25 +307,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
-  test("capBucketsAuto derives the cap from occupancy, drops only the tail") {
-    // 200 buckets of 10 rows (the natural occupancy) + one 500-row
-    // mega-bucket beyond the p99: the derived cap = 3 × p99(≈10) = 30,
-    // so exactly the mega-bucket is dropped and every natural bucket
-    // survives — the guard tracks the corpus, not a hand-tuned constant
-    val rows = (0 until 200).flatMap(b => (0 until 10).map(i => (b, b * 100 + i))) ++
-      (0 until 500).map(i => (999, 100000 + i))
-    val df = rows.toDF("bucket", "id")
-    val (capped, cap) = Similarity.capBucketsAuto(df, "bucket", margin = 3.0)
-    assert(cap >= 10 && cap < 500, s"derived cap $cap")
-    val kept = capped.select("bucket").distinct().as[Int].collect().toSet
-    assert(kept == (0 until 200).toSet, s"kept=$kept")
-    assert(capped.count() == 2000)
-    // empty input: cap bottoms at 1, no crash
-    val (emptyCapped, emptyCap) =
-      Similarity.capBucketsAuto(df.limit(0), "bucket")
-    assert(emptyCap == 1 && emptyCapped.count() == 0)
-  }
-
   test("incrementalEmbeddingCandidates probes stored buckets, verifies by cosine") {
     // sf0.01 (2k vectors): sf0.001's ~1 vector per bucket leaves no
     // cross pairs to verify against

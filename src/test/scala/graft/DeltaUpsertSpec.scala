@@ -35,13 +35,6 @@ class DeltaUpsertSpec extends AnyFunSuite {
     assert(payloads == Set("changed", "brandnew"))
   }
 
-  test("changedOrNew anti-join form agrees with split's to_detail") {
-    val (toDetail, _) = Delta.split(fresh, state, Seq("key"))
-    val anti = Delta.changedOrNew(fresh, state, Seq("key"))
-    assert(anti.select("key").as[String].collect().toSet ==
-           toDetail.select("key").as[String].collect().toSet)
-  }
-
   test("gate short-circuits downstream when the delta is empty (J2)") {
     val unchanged = Seq(("k1", "h1", "same")).toDF("key", "row_hash", "payload")
     val (toDetail, _) = Delta.split(unchanged, state, Seq("key"))

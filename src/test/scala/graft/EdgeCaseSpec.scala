@@ -197,12 +197,6 @@ class EdgeCaseSpec extends AnyFunSuite {
       .as[String].collect().head == null)
   }
 
-  test("capBucketsAuto rejects a sub-1 margin loudly") {
-    val df = Seq((1, 1L)).toDF("bucket", "id")
-    assertThrows[IllegalArgumentException](
-      Similarity.capBucketsAuto(df, "bucket", margin = 0.5))
-  }
-
   test("Vocab.encode at the exact threshold boundary still broadcasts") {
     import graft.operators.Vocab
     val docs = Seq((1L, "a b")).toDF("doc_id", "text")

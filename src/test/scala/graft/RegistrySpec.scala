@@ -149,4 +149,157 @@ class RegistrySpec extends AnyFunSuite {
       s"README.md names ${(named -- defined).mkString(", ")} with no main; " +
         s"mains it does not name: ${(defined -- named).mkString(", ")}")
   }
+
+  test("every public member under src/main is reached, or allowlisted " +
+    "with the spec that covers it") {
+    // A member counts as reached when its name, as a whole word, occurs
+    // somewhere a shipped path can call it from: another src/main file,
+    // its own file beyond its definition (overloads count each other:
+    // look at those by hand), etlbench/src or tools. Roots: `def main`;
+    // Spark expression overrides and functions.GraftExtensions, which
+    // Spark loads by name, are overrides or classes and never scanned.
+    // Everything else must be in the allowlist, with the spec that checks
+    // it against an independent computation, and the list may not go
+    // stale: a listed member that is now reached, or gone, fails too.
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    def sources(root: String, ext: String): Seq[Path] =
+      Files.walk(Paths.get(root)).iterator().asScala
+        .filter(_.toString.endsWith(ext)).toSeq.sortBy(_.toString)
+    def read(p: Path) = new String(Files.readAllBytes(p), "UTF-8")
+    def word(name: String) =
+      s"\\b${java.util.regex.Pattern.quote(name)}\\b".r
+    val main = sources("src/main/scala", ".scala").map(p =>
+      p.toString -> read(p))
+    val code = main.map { case (f, t) => f -> stripComments(t, false) }
+    val outside = (sources("etlbench/src", ".scala")
+      .map(p => stripComments(read(p), false)) ++
+      sources("tools", ".py").map(p => read(p).replaceAll("#.*", "")))
+      .mkString("\n")
+    val unreached = (for {
+      (f, text) <- main
+      name <- publicMembers(text) if name != "main"
+      w = word(name)
+      if !code.exists { case (g, t) =>
+        w.findAllMatchIn(t).size > (if (g == f) 1 else 0) }
+      if w.findFirstIn(outside).isEmpty
+    } yield (f, name)).toSet
+    val entries = read(Paths.get("src/test/resources/reachability-allowlist.txt"))
+      .split("\n").toSeq.map(_.trim)
+      .filter(l => l.nonEmpty && !l.startsWith("#"))
+      .map(_.split("\\|").toSeq.map(_.trim))
+    val malformed = entries.filterNot(e => e.size == 4 && e.forall(_.nonEmpty))
+    assert(malformed.isEmpty,
+      s"allowlist lines are 'file | member | covering spec | reason': $malformed")
+    val listed = entries.map(e => (e(0), e(1))).toSet
+    val missing = unreached -- listed
+    assert(missing.isEmpty,
+      "public members that no declared query, main, etlbench or tool " +
+        "reaches — delete them, make them private, or allowlist them " +
+        s"with their covering spec: ${missing.toSeq.sorted.mkString(", ")}")
+    val stale = listed -- unreached
+    assert(stale.isEmpty,
+      "allowlisted members that are now reached or no longer exist — " +
+        s"remove them from the allowlist: ${stale.toSeq.sorted.mkString(", ")}")
+    val uncovered = entries.filterNot { e =>
+      val spec = Paths.get(s"src/test/scala/graft/${e(2)}.scala")
+      Files.isRegularFile(spec) && word(e(1)).findFirstIn(read(spec)).nonEmpty
+    }
+    assert(uncovered.isEmpty,
+      s"allowlist entries whose covering spec does not exist or never " +
+        s"names the member: ${uncovered.map(e => e(1) + " / " + e(2))}")
+  }
+
+  /** `text` without comments. With `blankStrings`, string and char
+    * literal contents are blanked too, so a structure scan sees no brace
+    * or keyword inside a literal. Newlines are kept. */
+  private def stripComments(text: String, blankStrings: Boolean): String = {
+    val out = new StringBuilder
+    val n = text.length
+    def lit(from: Int, to: Int, quote: String): Unit = {
+      val body = text.substring(from, to)
+      out ++= quote
+      out ++= (if (blankStrings) body.map(c => if (c == '\n') c else ' ') else body)
+      out ++= quote
+    }
+    var i = 0
+    while (i < n) {
+      if (text.startsWith("//", i)) {
+        val j = text.indexOf('\n', i)
+        i = if (j < 0) n else j
+      } else if (text.startsWith("/*", i)) {
+        var depth = 1
+        i += 2
+        while (i < n && depth > 0) {
+          if (text.startsWith("/*", i)) { depth += 1; i += 2 }
+          else if (text.startsWith("*/", i)) { depth -= 1; i += 2 }
+          else { if (text(i) == '\n') out += '\n'; i += 1 }
+        }
+      } else if (text.startsWith("\"\"\"", i)) {
+        var j = text.indexOf("\"\"\"", i + 3)
+        if (j < 0) j = n
+        while (j + 3 < n && text(j + 3) == '"') j += 1
+        lit(i + 3, j, "\"\"\"")
+        i = math.min(n, j + 3)
+      } else if (text(i) == '"') {
+        var j = i + 1
+        while (j < n && text(j) != '"' && text(j) != '\n') {
+          if (text(j) == '\\') j += 1
+          j += 1
+        }
+        lit(i + 1, math.min(j, n), "\"")
+        i = j + 1
+      } else if (text(i) == '\'' && i + 2 < n &&
+          (text(i + 2) == '\'' || text(i + 1) == '\\')) {
+        val j = text.indexOf('\'', if (text(i + 1) == '\\') i + 3 else i + 2)
+        lit(i + 1, j, "'")
+        i = j + 1
+      } else {
+        out += text(i)
+        i += 1
+      }
+    }
+    out.toString
+  }
+
+  /** Names of the public member-level `def`s and `val`s of a source file:
+    * declared directly in an object, class or trait body (not inside a
+    * method, not a constructor parameter), without `private`,
+    * `protected` or `override`. A `{` opens a template body when the
+    * last declaration keyword before it (parenthesized groups removed)
+    * is `object`, `class`, `trait` or `new`, with no `=` after it. */
+  private def publicMembers(text: String): Seq[String] = {
+    val s = stripComments(text, blankStrings = true)
+    val token = """[{}()\[\];]|\b(def|val)\s+([A-Za-z_]\w*)""".r
+    val keyword = """\b(object|class|trait|def|val|var|new|type)\b""".r
+    val hidden = """\b(private|protected|override)\b""".r
+    final class Frame(val template: Boolean, var parens: Int, var head: Int)
+    var frames = List(new Frame(true, 0, 0))
+    val found = Seq.newBuilder[String]
+    token.findAllMatchIn(s).foreach { m =>
+      val top = frames.head
+      m.matched match {
+        case "(" | "[" => top.parens += 1
+        case ")" | "]" => top.parens -= 1
+        case "{" =>
+          val head = (1 to 3).foldLeft(s.substring(top.head, m.start))(
+            (h, _) => h.replaceAll("""\([^()]*\)""", ""))
+          val template = keyword.findAllMatchIn(head).toSeq.lastOption
+            .exists(k => Set("object", "class", "trait", "new")(k.group(1)) &&
+              !head.substring(k.start).replace("=>", "").contains("="))
+          top.head = m.end
+          frames = new Frame(template, 0, m.end) :: frames
+        case "}" =>
+          if (frames.size > 1) frames = frames.tail
+          frames.head.head = m.end
+        case ";" => top.head = m.end
+        case _ =>
+          val lineStart = s.lastIndexOf('\n', m.start) + 1
+          if (top.template && top.parens == 0 &&
+              hidden.findFirstIn(s.substring(lineStart, m.start)).isEmpty)
+            found += m.group(2)
+      }
+    }
+    found.result()
+  }
 }

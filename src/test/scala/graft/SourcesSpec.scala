@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config.ConfigLoader
-import graft.sources.{JdbcUpsert, Readers, Writers}
+import graft.sources.{JdbcUpsert, Writers}
 
 /** Source/sink surface: explicit-schema readers, partitioned writes, and
   * the versioned parquet-state merge (ON CONFLICT upsert analog). */
@@ -16,49 +16,6 @@ class SourcesSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(prefix: String): String = TestSpark.tmpDir(prefix)
-
-  test("csv/jsonl readers honor the explicit schema") {
-    val dir = tmp("csvsrc")
-    Files.writeString(java.nio.file.Paths.get(dir, "part.csv"),
-      "id,name\n1,alpha\n2,beta\n")
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("name", StringType)))
-    val got = Readers.csv(spark, dir, schema).as[(Long, String)].collect().toSet
-    assert(got == Set((1L, "alpha"), (2L, "beta")))
-
-    val jdir = tmp("jsonsrc")
-    Files.writeString(java.nio.file.Paths.get(jdir, "part.jsonl"),
-      """{"id": 3, "name": "gamma"}""" + "\n")
-    val gotJ = Readers.jsonl(spark, jdir, schema).as[(Long, String)].collect().toSet
-    assert(gotJ == Set((3L, "gamma")))
-  }
-
-  test("csvPermissive quarantines malformed rows instead of dropping them") {
-    val dir = tmp("badcsv")
-    Files.writeString(java.nio.file.Paths.get(dir, "part.csv"),
-      "id,n\n1,10\nnot-a-number-row,xx\n3,30\n")
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("n", LongType),
-      StructField("_corrupt_record", StringType)))
-    val df = Readers.csvPermissive(spark, dir, schema).cache()
-    val good = df.filter(col("_corrupt_record").isNull)
-      .select("id", "n").as[(Long, Long)].collect().toSet
-    val bad = df.filter(col("_corrupt_record").isNotNull)
-      .select("_corrupt_record").as[String].collect().toSeq
-    assert(good == Set((1L, 10L), (3L, 30L)))
-    assert(bad == Seq("not-a-number-row,xx"))
-  }
-
-  test("keyedLookup: isin and semi-join forms agree") {
-    val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
-    val byLit = Readers.keyedLookup(df, "k", Seq(1L, 3L))
-      .select("v").as[String].collect().toSet
-    val keys = Seq(1L, 3L).toDF("kk")
-    val bySemi = Readers.keyedLookup(df, "k", keys, "kk")
-      .select("v").as[String].collect().toSet
-    assert(byLit == Set("a", "c"))
-    assert(bySemi == byLit)
-  }
 
   test("partitioned write creates pruning directories") {
     val dir = tmp("part")
@@ -481,19 +438,13 @@ class SourcesSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getString(3))).toSet
     val full = tmp("postfull"); val inc = tmp("postinc")
-    import graft.operators.Retrieval
-    def build(path: String, d: org.apache.spark.sql.DataFrame): Unit =
-      Retrieval.invertedIndex(
-          d.select(col("doc_id"),
-            filter(split(col("text"), " "), t => t =!= "").as("toks")),
-          "doc_id", col("toks"))
-        .withColumn("tok_part", Writers.tokenPart(col("token")))
-        .write.partitionBy("tok_part").mode("overwrite").parquet(path)
-    build(full, docs)
-    build(inc, docs.filter(col("doc_id") < 2))
+    Writers.writePostings(spark, docs, full)
+    Writers.writePostings(spark, docs.filter(col("doc_id") < 2), inc)
+    // posting files only: the _gen sidecar is rewritten by every commit
     def allFiles(path: String) =
       java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-        .toArray.map(_.toString).filter(_.endsWith(".parquet")).toSet
+        .toArray.map(_.toString)
+        .filter(f => f.endsWith(".parquet") && !f.contains("/_gen/")).toSet
     val before = allFiles(inc)
     Writers.mergePostings(spark, inc, docs.filter(col("doc_id") >= 2))
     assert(before.subsetOf(allFiles(inc)), "append rewrote existing files")
@@ -826,13 +777,7 @@ class SourcesSpec extends AnyFunSuite {
     // compaction on a COPY (the shared artifact keeps its tombstones
     // for q181's PlanLint pins): physical drop, probe unchanged
     val copy = tmp("postdelcopy")
-    val allDocs = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"),
-        filter(split(col("text"), " "), t => t =!= "").as("toks"))
-    Retrieval.invertedIndex(allDocs, "doc_id", col("toks"))
-      .withColumn("tok_part", Writers.tokenPart(col("token")))
-      .repartition(col("tok_part"))
-      .write.partitionBy("tok_part").mode("overwrite").parquet(copy)
+    Writers.writePostings(spark, Tables.load(spark, dir, "documents"), copy)
     Writers.deleteFromPostings(spark, copy, ids)
     val before = probe(copy)
     Writers.compactPostings(spark, copy)
@@ -855,7 +800,7 @@ class SourcesSpec extends AnyFunSuite {
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
     val (codes, book) = Similarity.ivfPqIndexTables(
       vecs, "vec_id", "embedding", coarse, "cid", "cvec", 4, 16, 4)
-    codes.write.partitionBy("bucket").mode("overwrite").parquet(s"$p/codes")
+    Writers.writeIvfCodes(spark, codes, p)
     book.write.mode("overwrite").parquet(s"$p/codebook")
     coarse.write.mode("overwrite").parquet(s"$p/centroids")
     val q = vecs.filter(col("vec_id") === 1)
@@ -1183,70 +1128,120 @@ class SourcesSpec extends AnyFunSuite {
     assert(phraseProbe(Some(99L)) == phraseProbe(None))
     assert(phraseProbe(None) != sliceProbe,
       "weak fixture: the merge added no match")
-    // AS-OF needs generation history — legacy layouts are refused
-    val legacy = tmp("postasoflegacy")
-    Retrieval.invertedIndex(slice, "doc_id", col("toks"))
-      .withColumn("tok_part", Writers.tokenPart(col("token")))
-      .repartition(col("tok_part"))
-      .write.partitionBy("tok_part").mode("overwrite").parquet(legacy)
-    val ex = intercept[IllegalArgumentException] {
-      Writers.prunedPostings(spark, legacy, phrase, Some(1L))
-    }
-    assert(ex.getMessage.contains("commit-capable"))
   }
 
-  test("ivfpq legacy id-only deletes leg: probes keep the historical " +
-    "kill-all semantics instead of resolving a missing del_gen column, " +
-    "re-deletes stay id-only (no schema mix), vacuum skips the leg, " +
-    "and compaction folds the tombstones") {
+  test("one on-disk format: every builder and every ensure* variant " +
+    "leaves a sidecar with next_gen, a gen stamp on every leg row, and " +
+    "del_gen on BM25 and IVF-PQ tombstones (postings' stay id-only)") {
     import graft.operators.Similarity
     val dir = "/root/testdata/sf0.001"
-    val p = tmp("ivflegacydel")
+    val docs = Tables.load(spark, dir, "documents")
+    val vecs = Tables.load(spark, dir, "embeddings")
+    val bm25 = tmp("fmtbm25"); val post = tmp("fmtpost"); val ivf = tmp("fmtivf")
+    Writers.writeBm25Index(docs, bm25)
+    Writers.writePostings(spark, docs, post)
+    val coarse = vecs.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    Writers.writeIvfCodes(spark, Similarity.ivfPqIndexTables(vecs, "vec_id",
+      "embedding", coarse, "cid", "cvec", 4, 16, 4)._1, ivf)
+    // (root, sidecar, legs, tombstones, tombstone id column, gen-aware)
+    def bm25Shape(p: String) =
+      (p, s"$p/stats", Seq(s"$p/tf", s"$p/doclen"), s"$p/deletes", "doc_id", true)
+    def postShape(p: String) = (p, s"$p/_gen", Seq(p), s"$p/_deletes", "doc_id", false)
+    def ivfShape(p: String) =
+      (p, s"$p/gen", Seq(s"$p/codes"), s"$p/deletes", "vec_id", true)
+    val layouts = Seq(
+      bm25Shape(bm25), postShape(post), ivfShape(ivf),
+      bm25Shape(Writers.ensureBm25Index(spark, dir)),
+      bm25Shape(Writers.ensureBm25IndexMerged(spark, dir)),
+      bm25Shape(Writers.ensureBm25IndexDeleted(spark, dir)),
+      bm25Shape(Writers.ensureBm25IndexUpdated(spark, dir)),
+      bm25Shape(Writers.ensureBm25IndexCompacted(spark, dir)),
+      bm25Shape(Writers.ensureBm25IndexDeleteCompacted(spark, dir)),
+      postShape(Writers.ensurePostings(spark, dir)),
+      postShape(Writers.ensurePostingsMerged(spark, dir)),
+      postShape(Writers.ensurePostingsDeleted(spark, dir)),
+      ivfShape(Writers.ensureIvfPqIndex(spark, dir)),
+      ivfShape(Writers.ensureIvfPqIndexMerged(spark, dir)),
+      ivfShape(Writers.ensureIvfPqIndexDeleted(spark, dir)),
+      ivfShape(Writers.ensureIvfPqIndexUpdated(spark, dir)),
+      ivfShape(Writers.ensureIvfPqIndexReindexed(spark, dir)),
+      ivfShape(Writers.ensureIvfPqIndexTrained(spark, dir)))
+    layouts.foreach { case (root, side, legs, dels, id, genTombs) =>
+      val st = spark.read.parquet(side)
+      assert(st.columns.contains("next_gen") && st.count() == 1L,
+        s"$root: no one-row next_gen sidecar")
+      legs.foreach { leg =>
+        val rows = spark.read.parquet(leg)
+        assert(rows.columns.contains("gen") && rows.count() > 0L &&
+          rows.filter(col("gen").isNull).isEmpty, s"$leg: a row without gen")
+      }
+      if (Writers.hasParquetFiles(dels)) {
+        val t = spark.read.parquet(dels)
+        if (genTombs)
+          assert(t.columns.toSet == Set(id, "del_gen") &&
+            t.filter(col("del_gen").isNull).isEmpty, s"$dels: a tombstone without del_gen")
+        else assert(t.columns.toSeq == Seq(id), s"$dels: not id-only")
+      }
+    }
+    assert(layouts.filter(l => Writers.hasParquetFiles(l._4)).map(_._6).toSet ==
+      Set(true, false), "weak fixture: the deleted variants left no tombstones")
+  }
+
+  test("a root with leg files but no sidecar is refused by every probe " +
+    "and write verb, before the writer lock; an empty root reads as " +
+    "generation 1") {
+    import graft.operators.Similarity
+    import java.nio.file.Paths
+    def drop(path: String): Unit = {
+      val walk = Files.walk(Paths.get(path))
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => Files.delete(f))
+      finally walk.close()
+    }
+    def refused(builder: String)(call: => Any): Unit = {
+      val ex = intercept[IllegalStateException](call)
+      assert(ex.getMessage.contains("no generation sidecar") &&
+        ex.getMessage.contains(s"rebuild it with $builder"), ex.getMessage)
+    }
+    val docs = Seq(0L -> "alpha beta", 1L -> "beta gamma").toDF("doc_id", "text")
+    val bm25 = tmp("nosidebm25")
+    Writers.writeBm25Index(docs, bm25)
+    drop(s"$bm25/stats")
+    refused("writeBm25Index")(Writers.prunedBm25Tf(spark, bm25, Seq("beta")))
+    refused("writeBm25Index")(Writers.mergeBm25Index(spark, bm25,
+      Seq(2L -> "gamma").toDF("doc_id", "text")))
+    assert(!Writers.writerLockHeld(bm25))
+    val post = tmp("nosidepost")
+    Writers.writePostings(spark, docs, post)
+    drop(s"$post/_gen")
+    refused("writePostings")(Writers.prunedPostings(spark, post, Seq("beta")))
+    refused("writePostings")(Writers.deleteFromPostings(spark, post,
+      Seq(1L).toDF("doc_id")))
+    assert(!Writers.writerLockHeld(post) &&
+      !Files.exists(Paths.get(post, "_deletes")))
+    val dir = "/root/testdata/sf0.001"
     val vecs = Tables.load(spark, dir, "embeddings")
     val coarse = vecs.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val (codes, book) = Similarity.ivfPqIndexTables(
-      vecs, "vec_id", "embedding", coarse, "cid", "cvec", 4, 16, 4)
-    // gen-less dev layout + a deletes/ leg in the PRE-GEN id-only
-    // format (a layout persisted before the generation discipline)
-    codes.write.partitionBy("bucket").mode("overwrite").parquet(s"$p/codes")
-    book.write.mode("overwrite").parquet(s"$p/codebook")
-    coarse.write.mode("overwrite").parquet(s"$p/centroids")
-    vecs.filter(col("vec_id") % 5 === 2).select(col("vec_id"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$p/deletes")
-    // probe: no AnalysisException, kill-all anti-join (ADVICE r18)
-    val visible = Writers.liveCodes(spark, p)
-    assert(visible.filter(col("vec_id") % 5 === 2).isEmpty,
-      "a legacy tombstone failed to kill its row")
-    assert(visible.count() ==
-      vecs.filter(col("vec_id") % 5 =!= 2).count())
-    // a NEW delete on the legacy leg appends id-only rows — the leg's
-    // schema never mixes, and the dedup treats every existing
-    // tombstone as fully killing
-    val nTomb = spark.read.parquet(s"$p/deletes").count()
-    Writers.deleteFromIvfPqIndex(spark, p,
-      vecs.filter(col("vec_id") % 5 === 2 || col("vec_id") === 3L)
-        .select(col("vec_id")))
-    val del = spark.read.parquet(s"$p/deletes")
-    assert(!del.columns.contains("del_gen"),
-      "a legacy id-only deletes leg grew a del_gen column (schema mix)")
-    assert(del.count() == nTomb + 1, "legacy dedup missed or doubled")
-    assert(Writers.liveCodes(spark, p)
-      .filter(col("vec_id") === 3L).isEmpty)
-    // vacuum has nothing to collect on an id-only leg (all committed)
-    assert(Writers.vacuumIvfPqIndex(spark, p) == 0L)
-    // compaction folds the legacy tombstones like any others
-    val before = Writers.liveCodes(spark, p).count()
-    Writers.compactIvfPqIndex(spark, p)
-    assert(!Files.isDirectory(java.nio.file.Paths.get(s"$p/deletes")))
-    assert(spark.read.parquet(s"$p/codes").count() == before)
+    val ivf = tmp("nosideivf")
+    coarse.write.parquet(s"$ivf/centroids")
+    // empty root: no sidecar, no codes — the streaming bootstrap
+    assert(Writers.describeIvfPqIndex(spark, ivf).nextGen == 1L)
+    Writers.writeIvfCodes(spark, Similarity.ivfPqIndexTables(vecs, "vec_id",
+      "embedding", coarse, "cid", "cvec", 4, 16, 4)._1, ivf)
+    drop(s"$ivf/gen")
+    refused("writeIvfCodes")(Writers.liveCodes(spark, ivf))
+    refused("writeIvfCodes")(Writers.deleteFromIvfPqIndex(spark, ivf,
+      Seq(1L).toDF("vec_id")))
+    assert(!Writers.writerLockHeld(ivf) &&
+      !Files.exists(Paths.get(ivf, "deletes")))
   }
 
   test("updateIvfPqIndex: the probe serves exactly one — the new — " +
     "version of every updated vector (visible codes equal a " +
     "from-scratch encode of the UPDATED corpus against the frozen " +
-    "artifacts), a later delete kills the updated version, and " +
-    "gen-less layouts are refused") {
+    "artifacts), and a later delete kills the updated version") {
     import graft.operators.Similarity
     val dir = "/root/testdata/sf0.001"
     val p = tmp("ivfupd")
@@ -1286,34 +1281,16 @@ class SourcesSpec extends AnyFunSuite {
     assert(Writers.liveCodes(spark, p)
       .filter(col("vec_id") === 4).isEmpty,
       "delete-after-update left the updated version visible")
-    // gen-less layouts cannot express update — refused loudly
-    val pLegacy = tmp("ivfupdlegacy")
-    codes.write.partitionBy("bucket").mode("overwrite")
-      .parquet(s"$pLegacy/codes")
-    coarse.write.mode("overwrite").parquet(s"$pLegacy/centroids")
-    val ex = intercept[IllegalArgumentException] {
-      Writers.updateIvfPqIndex(spark, pLegacy, changed)
-    }
-    assert(ex.getMessage.contains("gen-capable"))
   }
 
   test("describePostings / maintainPostings: metadata-priced policy — " +
     "segment-count and tombstone triggers fire, healthy layouts are " +
     "no-ops, compaction clears the debt") {
-    import graft.operators.Retrieval
     val dir = "/root/testdata/sf0.001"
     val p = tmp("postmaint")
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
-    def postRows(d: org.apache.spark.sql.DataFrame) =
-      Retrieval.invertedIndex(
-        d.select(col("doc_id"),
-          filter(split(col("text"), " "), t => t =!= "").as("toks")),
-        "doc_id", col("toks"))
-        .withColumn("tok_part", Writers.tokenPart(col("token")))
-    postRows(docs.filter(col("doc_id") % 3 =!= 2))
-      .repartition(col("tok_part"))
-      .write.partitionBy("tok_part").mode("overwrite").parquet(p)
+    Writers.writePostings(spark, docs.filter(col("doc_id") % 3 =!= 2), p)
     Writers.mergePostings(spark, p, docs.filter(col("doc_id") % 3 === 2))
     val i0 = Writers.describePostings(spark, p)
     assert(i0.postingRows > 0 && i0.tombstoneRows == 0 && i0.dirs > 0)
@@ -1494,7 +1471,7 @@ class SourcesSpec extends AnyFunSuite {
   test("read-time atomic commit (postings): a torn merge — posting " +
     "segments appended, the _gen sidecar flip did not land — is " +
     "invisible to the phrase probe, vacuum collects it, the retry " +
-    "lands exactly once; legacy gen-less roots are untouched") {
+    "lands exactly once") {
     import graft.operators.Retrieval
     val docs = Seq(
       (0L, "alpha beta gamma"), (1L, "beta gamma delta"),
@@ -1712,7 +1689,7 @@ class SourcesSpec extends AnyFunSuite {
     Files.move(Paths.get(p), Paths.get(p + ".old"))
     Writers.vacuumPostings(spark, p)
     assert(probe() == before, "the swap-window crash lost the root")
-    assert(Writers.postingsDeletes(spark, p).isEmpty,
+    assert(!Writers.hasParquetFiles(s"$p/_deletes"),
       "a complete staged root must roll forward, not back")
     assert(!Files.exists(Paths.get(p + ".old")) && !Files.exists(Paths.get(staged)))
     assert(!Writers.writerLockHeld(p))

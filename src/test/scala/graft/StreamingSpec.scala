@@ -22,26 +22,6 @@ class StreamingSpec extends AnyFunSuite {
 
   final case class Ev(ts: Timestamp, event_type: String, user_id: Long, value: Double)
 
-  test("tumblingCounts emits closed windows after the watermark passes") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Ev]
-    val out = StreamingJobs.tumblingCounts(in.toDF(), "ts", "5 minutes", "10 minutes")
-    val q = out.writeStream.format("memory").queryName("tumbling")
-      .outputMode(OutputMode.Append).start()
-    try {
-      in.addData(Ev(ts(1), "a", 1, 1.0), Ev(ts(2), "a", 1, 2.0), Ev(ts(11), "b", 2, 3.0))
-      q.processAllAvailable()
-      // watermark far past the first window → it closes and emits
-      in.addData(Ev(ts(59), "c", 3, 0.0))
-      q.processAllAvailable()
-      val rows = spark.table("tumbling")
-        .select(col("bucket").cast("string"), col("event_type"), col("n"), col("sum_value"))
-        .as[(String, String, Long, Double)].collect().toSet
-      assert(rows.contains(("2024-01-01 10:00:00", "a", 2L, 3.0)))
-      assert(rows.contains(("2024-01-01 10:10:00", "b", 1L, 3.0)))
-    } finally q.stop()
-  }
-
   test("incrementalDedupSink flags cross-batch near-dups and grows bucket state") {
     implicit val sqlCtx = spark.sqlContext
     val stateDir = TestSpark.tmpDir("lshstate")
@@ -1408,66 +1388,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("dedupWithinWatermark drops repeated keys while state is live") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Ev]
-    val out = StreamingJobs.dedupWithinWatermark(in.toDF(), "ts", "10 minutes",
-      Seq("user_id", "event_type"))
-    val q = out.writeStream.format("memory").queryName("dedup")
-      .outputMode(OutputMode.Append).start()
-    try {
-      in.addData(Ev(ts(1), "a", 1, 1.0), Ev(ts(2), "a", 1, 9.0), Ev(ts(3), "b", 1, 2.0))
-      q.processAllAvailable()
-      in.addData(Ev(ts(4), "a", 1, 7.0)) // still within watermark → dropped
-      q.processAllAvailable()
-      val rows = spark.table("dedup").select("event_type", "value")
-        .as[(String, Double)].collect().toSet
-      assert(rows == Set(("a", 1.0), ("b", 2.0)))
-    } finally q.stop()
-  }
-
-  test("sessionCounts merges events within the gap into one session") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Ev]
-    val out = StreamingJobs.sessionCounts(in.toDF(), "ts", "5 minutes", "10 minutes")
-    val q = out.writeStream.format("memory").queryName("sessions")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // u1: 10:01, 10:05, 10:08 → one session; 10:45 → separate session
-      in.addData(Ev(ts(1), "a", 1, 1.0), Ev(ts(5), "a", 1, 1.0),
-        Ev(ts(8), "a", 1, 1.0), Ev(ts(45), "a", 1, 1.0))
-      q.processAllAvailable()
-      // two watermark advances: the second session ends at 10:55, so the
-      // watermark must pass 10:55 (batch N's watermark uses batch N-1's max)
-      in.addData(Ev(ts(59), "a", 9, 0.0))
-      q.processAllAvailable()
-      in.addData(Ev(Timestamp.valueOf("2024-01-01 12:00:00"), "a", 9, 0.0))
-      q.processAllAvailable()
-      val rows = spark.table("sessions")
-        .select(col("session_start").cast("string"), col("user_id"), col("n"))
-        .as[(String, Long, Long)].collect().toSet
-      assert(rows.contains(("2024-01-01 10:01:00", 1L, 3L)))
-      assert(rows.contains(("2024-01-01 10:45:00", 1L, 1L)))
-    } finally q.stop()
-  }
-
-  test("enrichStream left-joins the stream against a static dimension") {
-    implicit val sqlCtx = spark.sqlContext
-    val dim = Seq((1L, "gold"), (2L, "silver")).toDF("cust_id", "tier")
-    val in = MemoryStream[Ev]
-    val out = StreamingJobs.enrichStream(in.toDF(), dim, "user_id", "cust_id")
-      .select(col("event_type"), col("user_id"), col("tier"))
-    val q = out.writeStream.format("memory").queryName("enrich")
-      .outputMode(OutputMode.Append).start()
-    try {
-      in.addData(Ev(ts(1), "a", 1, 0.0), Ev(ts(2), "b", 2, 0.0), Ev(ts(3), "c", 9, 0.0))
-      q.processAllAvailable()
-      val rows = spark.table("enrich")
-        .collect().map(r => (r.getString(0), Option(r.getAs[String]("tier")))).toSet
-      assert(rows == Set(("a", Some("gold")), ("b", Some("silver")), ("c", None)))
-    } finally q.stop()
-  }
-
   test("mergeStateSink upserts each micro-batch into the versioned state") {
     implicit val sqlCtx = spark.sqlContext
     val dir = TestSpark.tmpDir("stream-state")
@@ -1585,31 +1505,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(metrics == m1)
     // the sidecar must not leak into reads of the data directory
     assert(!spark.read.parquet(outDir).columns.contains("input_rows"))
-  }
-
-  test("progressMetrics surfaces watermark-dropped late rows") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Ev]
-    val out = StreamingJobs.tumblingCounts(in.toDF(), "ts", "5 minutes", "10 minutes")
-    val q = out.writeStream.format("memory").queryName("wm_metrics")
-      .outputMode(OutputMode.Append).start()
-    try {
-      in.addData(Ev(ts(1), "a", 1, 1.0), Ev(ts(2), "a", 1, 2.0))
-      q.processAllAvailable()
-      // advance the watermark to 10:49...
-      in.addData(Ev(ts(59), "b", 2, 0.0))
-      q.processAllAvailable()
-      // ...then a 10:05 straggler is too late and must be dropped
-      in.addData(Ev(ts(5), "a", 1, 9.0))
-      q.processAllAvailable()
-      val m = StreamingJobs.progressMetrics(q)
-      assert(m.columns.toSeq ==
-        Seq("batch_id", "input_rows", "state_rows", "dropped_late_rows"))
-      val agg = m.agg(sum("input_rows"), sum("dropped_late_rows"))
-        .as[(Long, Long)].collect()(0)
-      assert(agg._1 == 4L)
-      assert(agg._2 >= 1L, m.collect().mkString("; "))
-    } finally q.stop()
   }
 
   test("bm25MaintenanceBatch: CDC epochs (add/update/delete) drive the " +

@@ -196,23 +196,6 @@ class TextStatsSpec extends AnyFunSuite {
     assert(one == 0.0)
   }
 
-  test("dupLineFrac + dedupLines: keep-first intra-doc line dedup") {
-    val doc = "nav menu\nreal content one\nnav menu\n\n  \nreal content two\nnav menu"
-    val df = Seq(doc, "single line", "").toDF("t").select(
-      TextStats.dupLineFrac(col("t")).as("f"),
-      TextStats.dedupLines(col("t")).as("d"))
-    val got = df.as[(Double, String)].collect().toSeq
-    // 5 non-empty lines, 3 distinct → 1 - 3/5 = 0.4; blank lines excluded
-    assert(got(0) == (0.4,
-      "nav menu\nreal content one\nreal content two"))
-    assert(got(1) == (0.0, "single line"))
-    assert(got(2) == (0.0, ""))
-    // windows line endings split the same way
-    val win = Seq("a\r\nb\r\na").toDF("t")
-      .select(TextStats.dedupLines(col("t"))).as[String].head()
-    assert(win == "a\nb")
-  }
-
   test("collocations: exact counts, discounted-PMI-ratio score, minCount " +
     "floor — matches the hand-computed law") {
     // corpus: 'new york' 4×, 'new car' 1×, singles pad the denominator
