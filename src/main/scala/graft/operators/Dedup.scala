@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   *    pairs come from equi-joining on (band, band-hash) buckets — a single
   *    shuffle on the bucket key, no quadratic blowup; exact Jaccard is then
   *    re-verified only within buckets.
-  *  - [[simhash]] — 32-bit SimHash over tokens for Hamming-style near-dup.
+  *  - [[simhashOf]] — 32-bit SimHash over [[tokenHashes]] for
+  *    Hamming-style near-dup.
   *
   * All hash primitives are md5-derived so DuckDB can replay them exactly
   * (engine-portable oracles); xxhash64 is the cheaper swap-in when oracle
@@ -242,10 +243,6 @@ object Dedup {
     }
     bits.reduce(_ + _)
   }
-
-  /** Convenience single-expression form — prefer tokenHashes+simhashOf in
-    * hot paths (see [[tokenHashes]]). */
-  def simhash(tokensCol: Column): Column = simhashOf(tokenHashes(tokensCol))
 
   /** Train/test decontamination — flag training docs whose n-gram sets
     * overlap a held-out corpus (the standard LLM-corpus contamination

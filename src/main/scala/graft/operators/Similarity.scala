@@ -18,12 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Max distinct qids per [[routedNegativesStored]] call — bounds the
-    * per-query ADC literal when-chain codegen'd into one Janino method
-    * (ADVICE r16). A contrastive-mining pass over more queries chunks
-    * its batch and unions the per-chunk results. */
-  val MaxStoredMiningBatch = 64
-
   private def d(c: Column): Column = c.cast("double")
 
   /** Sequential-fold dot product of two float/double array columns. */
@@ -770,8 +764,8 @@ object Similarity {
     * exact decimal addition in any order (DedupSimilaritySpec pins
     * result parity); vectors missing EVERY subspace are dropped, and a
     * (m, code) absent from the codebook (impossible when the codebook
-    * was built from this corpus) hits a NaN array slot and fails the
-    * ANSI decimal cast loudly, never a silent 0. */
+    * was built from this corpus) hits a NaN array slot and fails
+    * loudly ([[adcDist]]), never a silent 0. */
   def pqSearchWide(vectors: DataFrame, idCol: String, vecCol: String,
                    query: DataFrame, queryVecCol: String, k: Int,
                    m: Int = 4, subDim: Int = 16, probeDims: Int = 4): DataFrame = {
@@ -798,7 +792,7 @@ object Similarity {
   /** Collect the per-query ADC table into m dense double arrays
     * (bounded by m·(2p+1)² — the kmeans-centroids bounded-driver-state
     * pattern). Slots no (m, code) pair maps to hold NaN so an
-    * impossible lookup fails the ANSI decimal cast loudly. */
+    * impossible lookup fails loudly ([[adcDist]]). */
   def pqAdcDense(dtable: DataFrame, m: Int, probeDims: Int): Array[Array[Double]] = {
     val radix = 2 * probeDims + 1
     val dense = Array.fill(m, radix * radix)(Double.NaN)
@@ -1130,19 +1124,29 @@ object Similarity {
                     idCol: String, k: Int): DataFrame =
     wideCodes
       .filter(adcAnyCode(dense.length))
-      .select(col(idCol), adcDist(dense).as("adist"))
+      .select(col(idCol), adcDist(typedLit(dense), dense.length).as("adist"))
       .orderBy(col("adist").asc_nulls_last, col(idCol).asc_nulls_first)
       .limit(k)
 
-  /** Row-local ADC distance over a `codes` array column against one
-    * query's dense literal tables — [[pqAdcRankWide]]'s scoring
-    * expression, shared with the batch form. */
-  private def adcDist(dense: Array[Array[Double]]): Column =
-    dense.indices.map { i =>
+  /** Row-local ADC distance over a `codes` array column: subspace i's
+    * code indexes the i-th of the m dense tables in `tables`
+    * (`array<array<double>>`), and the m lookups are DECIMAL-added in
+    * fixed subspace order. The single-query forms pass one query's
+    * tables as a literal, which constant folding splits back into m
+    * literal arrays; the batch forms pass a column that carries each
+    * row's own query's tables ([[storedBatchTopK]]). A code whose slot
+    * holds NaN (no codebook row for that (m, code)) raises: a NaN casts
+    * to a NULL decimal even under ANSI, and a NULL distance would sort
+    * last, silently dropping the vector from the top-k. */
+  private def adcDist(tables: Column, m: Int): Column =
+    coalesce((0 until m).map { i =>
       val c = element_at(col("codes"), i + 1)
       when(c.isNull, lit(BigDecimal(0)).cast("decimal(28,8)"))
-        .otherwise(element_at(lit(dense(i)), c + 1).cast("decimal(28,8)"))
-    }.reduce(_ + _).cast("decimal(28,8)").cast("double")
+        .otherwise(element_at(element_at(tables, i + 1), c + 1)
+          .cast("decimal(28,8)"))
+    }.reduce(_ + _).cast("decimal(28,8)").cast("double"),
+      raise_error(lit("ADC lookup hit a NaN slot: a scanned vector has a " +
+        "(subspace, code) the codebook has no row for")))
 
   private def adcAnyCode(m: Int): Column =
     (0 until m).map(i =>
@@ -1157,22 +1161,13 @@ object Similarity {
     * recall trade vs the live arm is measured in SCALE.md, "Round 16:
     * ... stored-index BATCH mining").
     *
-    * Scale shape: the query batch collapses duplicate/NULL qids (the
-    * [[hardNegatives]] rule) and its QUANTIZED vectors are collected
-    * once — bounded by the batch, the pqAdcDense contract; routing is
-    * driver-side EXACT integer argsort per query (replayable by any SQL
-    * engine), and the distinct probed-bucket union is ≤ the CENTROID
-    * count regardless of |Q|, so the codes scan carries plan-time
-    * PartitionFilters literals (directory pruning) no matter how large
-    * the batch grows. The scan side is ONE filtered pass of the codes
-    * layout, a broadcast equi-join on the bucket key fanning rows to
-    * their probing queries (queries sharing a bucket share the scan),
-    * label/self disqualification inside that join, a per-qid CASE of
-    * ADC literal lookups, and one qid-keyed rank window
-    * (WindowGroupLimit cuts before the exchange). Returns
-    * (qidCol, idCol, labelCol, adist), per-query ascending top-k, ids
-    * ascending on ties. qids must be integral (they key the driver-side
-    * routing map). */
+    * Scale shape: [[storedBatchTopK]]'s — one pruned pass of the codes
+    * layout serves the whole batch; the query's label rides its probe
+    * pairs, so label/self disqualification runs inside the bucket join.
+    * Duplicate qids collapse on (vector, label) ascending, the
+    * [[hardNegatives]] rule. Returns (qidCol, idCol, labelCol, adist),
+    * per-query ascending top-k, ids ascending on ties. qids must be
+    * integral (they key the driver-side routing). */
   def routedNegativesStored(codes: DataFrame, book: DataFrame,
                             centroids: DataFrame, idCol: String,
                             labelCol: String, queries: DataFrame,
@@ -1180,87 +1175,131 @@ object Similarity {
                             queryLabelCol: String, nprobe: Int, k: Int,
                             m: Int = 4, subDim: Int = 16,
                             probeDims: Int = 4): DataFrame = {
-    require(nprobe >= 1 && k >= 1,
-      s"need nprobe >= 1 and k >= 1 (got nprobe=$nprobe k=$k)")
     require(qidCol != idCol && queryLabelCol != labelCol,
       s"query columns must differ from stored-index columns " +
         s"(got id $qidCol/$idCol, label $queryLabelCol/$labelCol) — " +
         s"alias one side")
+    storedBatchTopK(codes, book, centroids, idCol, queries, qidCol,
+      queryVecCol, Seq(queryLabelCol),
+      col(labelCol) =!= col(queryLabelCol) && col(idCol) =!= col(qidCol),
+      Seq(labelCol), nprobe, k, m, subDim, probeDims)
+  }
+
+  /** Per-query ANN top-k against a STORED [[ivfPqIndexTables]] layout
+    * for a query batch — [[ivfPqSearchStored]]'s q162 serving shape
+    * generalized to a query TABLE (the q168/q173 batch move applied to
+    * ranked ANN serving, and [[routedNegativesStored]] minus the
+    * mining-specific label/self disqualification): the retrieval half
+    * of a training-batch pipeline's vector tier. Scale shape:
+    * [[storedBatchTopK]]'s. Returns (qidCol BIGINT, idCol, adist) —
+    * per-query ADC ascending top-k, ids ascending on ties; qids must be
+    * integral. */
+  def ivfPqSearchStoredBatch(codes: DataFrame, book: DataFrame,
+                             centroids: DataFrame, idCol: String,
+                             queries: DataFrame, qidCol: String,
+                             queryVecCol: String, nprobe: Int, k: Int,
+                             m: Int = 4, subDim: Int = 16,
+                             probeDims: Int = 4): DataFrame = {
+    require(qidCol != idCol,
+      s"query id column must differ from the stored-index id column " +
+        s"(both '$idCol') — alias one side")
+    storedBatchTopK(codes, book, centroids, idCol,
+      queries.select(col(qidCol).cast("long").as(qidCol), col(queryVecCol)),
+      qidCol, queryVecCol, Nil, lit(true), Nil, nprobe, k, m, subDim,
+      probeDims)
+  }
+
+  /** Most distinct qids one stored batch call serves. The batch's
+    * quantized vectors, routing and ADC tables are driver-side state,
+    * so "a query batch" must stay a driver-priced object; a
+    * corpus-sized query side is a JOIN ([[pqAdcRank]]'s table form),
+    * not a batch. */
+  val MaxQueryBatch = 4096
+
+  /** The scored scan of the stored batch forms. NULL qids are dropped
+    * and duplicate qids collapse to one row (the array-minimal vector
+    * wins, then the `carried` query columns ascending) — a duplicated
+    * qid would corrupt its rank window. The collapsed batch's quantized
+    * vectors are collected once (at most [[MaxQueryBatch]] rows) and
+    * routed on the driver in exact integer arithmetic (replayable by any
+    * SQL engine); the distinct probed-bucket union is ≤ the CENTROID
+    * count regardless of |Q|, so the codes scan carries plan-time
+    * PartitionFilters literals (directory pruning) and ONE filtered pass
+    * serves the whole batch. Each (qid, bucket) probe pair carries the
+    * query's `carried` columns and its ADC tables (m dense arrays,
+    * [[denseAdcByQid]]) as data, so the broadcast equi-join on the bucket
+    * key fans rows to their probing queries and [[adcDist]] reads each
+    * row's own tables: the generated code is the same for 3 qids or
+    * 4,096. `keep` filters the joined rows; one qid-keyed rank window
+    * (WindowGroupLimit cuts before the exchange) keeps k per query.
+    * Returns (qidCol, idCol, out…, adist). */
+  private def storedBatchTopK(codes: DataFrame, book: DataFrame,
+      centroids: DataFrame, idCol: String, queries: DataFrame,
+      qidCol: String, queryVecCol: String, carried: Seq[String],
+      keep: Column, out: Seq[String], nprobe: Int, k: Int, m: Int,
+      subDim: Int, probeDims: Int): DataFrame = {
+    require(nprobe >= 1 && k >= 1,
+      s"need nprobe >= 1 and k >= 1 (got nprobe=$nprobe k=$k)")
+    import org.apache.spark.sql.Row
     import org.apache.spark.sql.expressions.Window
-    val spark = queries.sparkSession
-    import spark.implicits._
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType,
+      StructField, StructType}
+    import scala.jdk.CollectionConverters._
     val cents = collectQuantCents(centroids, "cid", "cvec")
+    val dim = cents.head._2.length
+    val qcols = qidCol +: carried
     val distinctQ = queries
-      .select(col(qidCol), col(queryVecCol), col(queryLabelCol))
+      .select((qcols :+ queryVecCol).map(col): _*)
       .filter(col(qidCol).isNotNull)
       .withColumn("__qrn", row_number().over(
         Window.partitionBy(col(qidCol))
-          .orderBy(col(queryVecCol).asc_nulls_last,
-            col(queryLabelCol).asc_nulls_last)))
+          .orderBy((queryVecCol +: carried).map(col(_).asc_nulls_last): _*)))
       .filter(col("__qrn") === 1)
-      .select(col(qidCol), col(queryVecCol), col(queryLabelCol))
-    // bounded probe batch: quantized vectors collected once, routed on
-    // the driver in exact integer arithmetic
+      .drop("__qrn")
+    val n = qcols.length
     val qrows = distinctQ
-      .select(col(qidCol).cast("long"), quantMilli(col(queryVecCol)))
+      .select(qcols.map(col) :+ col(qidCol).cast("long") :+
+        quantMilli(col(queryVecCol)): _*)
+      .limit(MaxQueryBatch + 1)
       .collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    // hard cap, not just a docstring bound (ADVICE r16): adistExpr below
-    // nests one when-branch per query, each embedding m dense literal
-    // arrays of (2p+1)² doubles — a few hundred qids would blow past
-    // Janino's 64 KB method limit and fail (or silently de-codegen) deep
-    // inside plan compilation with nothing pointing at the cause. Fail
-    // loudly here instead; larger batches chunk-and-union at the caller.
-    require(qrows.length <= MaxStoredMiningBatch,
-      s"routedNegativesStored mines a BOUNDED query batch — got " +
-        s"${qrows.length} distinct qids, max $MaxStoredMiningBatch " +
-        s"(the per-query ADC literal tables are codegen'd into one " +
-        s"method; oversized batches break Janino's 64 KB limit). " +
-        s"Chunk the query table and union the results.")
-    if (qrows.isEmpty)
-      return codes.filter(lit(false))
-        .join(distinctQ, col(qidCol) === col(idCol))
-        .select(col(qidCol), col(idCol), col(labelCol),
-          lit(0.0).as("adist"))
-    qrows.foreach { case (q, v) => require(v.length == cents.head._2.length,
-      s"query $q dimension ${v.length} != centroid dimension " +
-        s"${cents.head._2.length}") }
-    val probePairs = qrows.toSeq.flatMap { case (q, v) =>
-      probedIds(v, cents, nprobe).map(b => (q, b))
+    require(qrows.length <= MaxQueryBatch,
+      s"a stored batch probe serves a driver-priced batch — got more " +
+        s"than $MaxQueryBatch distinct qids; a corpus-sized query side " +
+        "needs the join form, not a batch")
+    qrows.foreach { r =>
+      val len = Option(r.getSeq[Long](n + 1)).map(_.length)
+      require(len.contains(dim),
+        s"query ${r.getLong(n)} dimension ${len.getOrElse("NULL")} != " +
+          s"centroid dimension $dim")
     }
-    val unionBuckets = probePairs.map(_._2).distinct
-    val denseByQ = denseAdcByQid(distinctQ, book, qidCol, queryVecCol,
-      qrows.map(_._1).toSeq, m, subDim, probeDims)
-    val adistExpr = qrows.foldRight(lit(null).cast("double")) {
-      case ((q, _), acc) =>
-        when(col(qidCol).cast("long") === q, adcDist(denseByQ(q)))
-          .otherwise(acc)
+    val tables = denseAdcByQid(distinctQ, book, qidCol, queryVecCol,
+      qrows.map(_.getLong(n)).toSeq, m, subDim, probeDims)
+    val pairs = qrows.toSeq.flatMap { r =>
+      probedIds(r.getSeq[Long](n + 1).toArray, cents, nprobe).map(b =>
+        Row.fromSeq((0 until n).map(r.get) ++ Seq(b, tables(r.getLong(n)))))
     }
-    val probeSide = distinctQ
-      .select(col(qidCol), col(queryLabelCol))
-      .join(broadcast(probePairs.toDF("__qid", "bucket")),
-        col(qidCol).cast("long") === col("__qid"))
-      .select(col(qidCol), col(queryLabelCol), col("bucket"))
+    val probes = queries.sparkSession.createDataFrame(pairs.asJava,
+      StructType(qcols.map(distinctQ.schema(_)) ++ Seq(
+        StructField("bucket", LongType),
+        StructField("__tables", ArrayType(ArrayType(DoubleType))))))
     codes
-      .filter(col("bucket").isin(unionBuckets: _*))
-      .join(broadcast(probeSide), Seq("bucket"))
-      .filter(col(labelCol) =!= col(queryLabelCol) &&
-        col(idCol) =!= col(qidCol))
+      .filter(col("bucket").isin(pairs.map(_.getLong(n)).distinct: _*))
+      .join(broadcast(probes), Seq("bucket"))
+      .filter(keep)
       .filter(adcAnyCode(m))
-      .select(col(qidCol), col(idCol), col(labelCol),
-        adistExpr.as("adist"))
+      .select((col(qidCol) +: col(idCol) +: out.map(col)) :+
+        adcDist(col("__tables"), m).as("adist"): _*)
       .withColumn("__rk", row_number().over(
         Window.partitionBy(col(qidCol))
           .orderBy(col("adist").asc_nulls_last, col(idCol).asc_nulls_first)))
       .filter(col("__rk") <= k)
-      .select(col(qidCol), col(idCol), col(labelCol), col("adist"))
+      .drop("__rk")
   }
 
-  /** Per-query dense ADC tables for a BOUNDED query batch: book ⋈
-    * broadcast query subvectors (the pqAdcTable arithmetic, qid-keyed),
-    * collected once — ≤ |Q|·m·(2p+1)² rows, the pqAdcDense contract.
-    * Shared by [[routedNegativesStored]] and
-    * [[ivfPqSearchStoredBatch]]. */
+  /** Per-query dense ADC tables for a query batch: book ⋈ broadcast
+    * query subvectors (the pqAdcTable arithmetic, qid-keyed), collected
+    * once — ≤ |Q|·m·(2p+1)² rows, the pqAdcDense contract, with NaN in
+    * the slots no (m, code) row fills. */
   private def denseAdcByQid(distinctQ: DataFrame, book: DataFrame,
                             qidCol: String, queryVecCol: String,
                             qids: Seq[Long], m: Int, subDim: Int,
@@ -1282,135 +1321,5 @@ object Similarity {
       .foreach(r => denseByQ(r.getLong(0))(r.getInt(1))(r.getInt(2)) =
         r.getDouble(3))
     denseByQ
-  }
-
-  /** Per-query ANN top-k against a STORED [[ivfPqIndexTables]] layout
-    * for a BOUNDED query batch — [[ivfPqSearchStored]]'s q162 serving
-    * shape generalized to a query TABLE (the q168/q173 batch move
-    * applied to ranked ANN serving, and [[routedNegativesStored]] minus
-    * the mining-specific label/self disqualification): the retrieval
-    * half of a training-batch pipeline's vector tier.
-    *
-    * Scale shape (q168's): duplicate/NULL qids collapse, quantized
-    * query vectors are collected once (bounded batch — the
-    * MaxStoredMiningBatch codegen cap applies identically), routing is
-    * driver-side exact integer argsort, and the distinct probed-bucket
-    * union is ≤ the centroid count regardless of |Q| — so the codes
-    * scan carries plan-time PartitionFilters literals and ONE pruned
-    * pass serves the whole batch; per-qid ADC CASE lookups, one
-    * qid-keyed rank window (WindowGroupLimit cuts before the
-    * exchange). Returns (qidCol BIGINT, idCol, adist) — per-query ADC
-    * ascending top-k, ids ascending on ties; qids must be integral. */
-  def ivfPqSearchStoredBatch(codes: DataFrame, book: DataFrame,
-                             centroids: DataFrame, idCol: String,
-                             queries: DataFrame, qidCol: String,
-                             queryVecCol: String, nprobe: Int, k: Int,
-                             m: Int = 4, subDim: Int = 16,
-                             probeDims: Int = 4): DataFrame = {
-    require(nprobe >= 1 && k >= 1,
-      s"need nprobe >= 1 and k >= 1 (got nprobe=$nprobe k=$k)")
-    require(qidCol != idCol,
-      s"query id column must differ from the stored-index id column " +
-        s"(both '$idCol') — alias one side")
-    import org.apache.spark.sql.expressions.Window
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val cents = collectQuantCents(centroids, "cid", "cvec")
-    val distinctQ = queries
-      .select(col(qidCol), col(queryVecCol))
-      .filter(col(qidCol).isNotNull)
-      .withColumn("__qrn", row_number().over(
-        Window.partitionBy(col(qidCol))
-          .orderBy(col(queryVecCol).asc_nulls_last)))
-      .filter(col("__qrn") === 1)
-      .select(col(qidCol), col(queryVecCol))
-    val qrows = distinctQ
-      .select(col(qidCol).cast("long"), quantMilli(col(queryVecCol)))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    // same Janino-method-size cap as the mining form: one when-branch
-    // of m dense literal arrays per query
-    require(qrows.length <= MaxStoredMiningBatch,
-      s"ivfPqSearchStoredBatch serves a BOUNDED query batch — got " +
-        s"${qrows.length} distinct qids, max $MaxStoredMiningBatch " +
-        s"(per-query ADC literal tables are codegen'd into one method). " +
-        s"Chunk the query table and union the results.")
-    if (qrows.isEmpty)
-      return codes.limit(0)
-        .select(lit(0L).as(qidCol), col(idCol), lit(0.0).as("adist"))
-    qrows.foreach { case (q, v) => require(v.length == cents.head._2.length,
-      s"query $q dimension ${v.length} != centroid dimension " +
-        s"${cents.head._2.length}") }
-    val probePairs = qrows.toSeq.flatMap { case (q, v) =>
-      probedIds(v, cents, nprobe).map(b => (q, b))
-    }
-    val unionBuckets = probePairs.map(_._2).distinct
-    val denseByQ = denseAdcByQid(distinctQ, book, qidCol, queryVecCol,
-      qrows.map(_._1).toSeq, m, subDim, probeDims)
-    val adistExpr = qrows.foldRight(lit(null).cast("double")) {
-      case ((q, _), acc) =>
-        when(col(qidCol).cast("long") === q, adcDist(denseByQ(q)))
-          .otherwise(acc)
-    }
-    codes
-      .filter(col("bucket").isin(unionBuckets: _*))
-      .join(broadcast(probePairs.toDF(qidCol, "bucket")), Seq("bucket"))
-      .filter(adcAnyCode(m))
-      .select(col(qidCol), col(idCol), adistExpr.as("adist"))
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy(col(qidCol))
-          .orderBy(col("adist").asc_nulls_last, col(idCol).asc_nulls_first)))
-      .filter(col("__rk") <= k)
-      .select(col(qidCol), col(idCol), col("adist"))
-  }
-
-  /** Hard cap on one [[ivfPqSearchStoredBatchChunked]] call's TOTAL
-    * distinct qids — the wrapper still collects the qid list and plans
-    * one pruned scan per chunk on the driver, so "a query batch" must
-    * stay a driver-priced object; a corpus-sized query side is a JOIN
-    * ([[pqAdcRank]]'s table form), not a batch. */
-  val MaxChunkedBatch = 4096
-
-  /** [[ivfPqSearchStoredBatch]] for query batches ABOVE the
-    * MaxStoredMiningBatch codegen cap (VERDICT r17 #4-wrong): splits
-    * the distinct qids into chunks of `chunkSize`, serves each chunk
-    * through the batch form (one pruned scan per chunk — union bucket
-    * PartitionFilters, per-qid ADC literals within the Janino bound)
-    * and unions the per-chunk top-k heads; the per-(qid, chunk) results
-    * are independent, so the union IS the unchunked answer. Keeps the
-    * Janino method-size cap an implementation detail instead of caller
-    * boilerplate. `chunkSize` is parameterized (≤ MaxStoredMiningBatch)
-    * so specs can pin chunked ≡ unchunked with small chunks; callers
-    * use the default. */
-  def ivfPqSearchStoredBatchChunked(codes: DataFrame, book: DataFrame,
-                                    centroids: DataFrame, idCol: String,
-                                    queries: DataFrame, qidCol: String,
-                                    queryVecCol: String, nprobe: Int, k: Int,
-                                    m: Int = 4, subDim: Int = 16,
-                                    probeDims: Int = 4,
-                                    chunkSize: Int = MaxStoredMiningBatch): DataFrame = {
-    require(chunkSize >= 1 && chunkSize <= MaxStoredMiningBatch,
-      s"chunkSize must be in [1, $MaxStoredMiningBatch] (got $chunkSize)")
-    // NULL qids are dropped ONCE, up front, and the same filtered frame
-    // feeds both paths — the fast path must not forward rows the
-    // chunked path's isin filter would drop (chunked ≡ unchunked at the
-    // chunk-size boundary; ADVICE r18)
-    val nonNullQ = queries.filter(col(qidCol).isNotNull)
-    val qids = nonNullQ.select(col(qidCol).cast("long")).distinct()
-      .orderBy(col(qidCol).asc)
-      .collect().map(_.getLong(0))
-    require(qids.length <= MaxChunkedBatch,
-      s"ivfPqSearchStoredBatchChunked serves a driver-priced batch — " +
-        s"got ${qids.length} distinct qids, max $MaxChunkedBatch; a " +
-        "corpus-sized query side needs the join form, not a batch")
-    if (qids.length <= chunkSize)
-      return ivfPqSearchStoredBatch(codes, book, centroids, idCol,
-        nonNullQ, qidCol, queryVecCol, nprobe, k, m, subDim, probeDims)
-    qids.grouped(chunkSize).map { chunk =>
-      ivfPqSearchStoredBatch(codes, book, centroids, idCol,
-        nonNullQ.filter(col(qidCol).cast("long")
-          .isin(chunk.toIndexedSeq: _*)),
-        qidCol, queryVecCol, nprobe, k, m, subDim, probeDims)
-    }.reduce(_.unionByName(_))
   }
 }

@@ -162,8 +162,9 @@ object Writers {
   // ---- the generation-stamped layout protocol -------------------------
 
   /** Hard cap on a layout's ACCUMULATED tombstone rows (across all
-    * delete batches since the last compaction) — the MaxStoredMiningBatch
-    * discipline applied to the delete verb: every probe BROADCASTS the
+    * delete batches since the last compaction) — a driver-priced input
+    * bound enforced once, like Similarity.MaxQueryBatch for query
+    * batches, applied to the delete verb: every probe BROADCASTS the
     * tombstone table into its anti-join and every delete batch writes it
     * through one task (`coalesce(1)`), so "bounded between compactions"
     * must be enforced, not assumed (VERDICT r17). At the cap (~16 MB of

@@ -696,9 +696,13 @@ object StreamingJobs {
     * mutable vectors route through a keyed `Writers.mergeState`
     * upsert). Each epoch emits the probe query's cumulative
     * [[graft.operators.Similarity.ivfPqSearchStored]] top-k to
-    * `outDir/epoch=N`. An empty epoch before training (checked with one
-    * `isEmpty` job) emits an empty result and a metrics row with zero
-    * counts; it trains nothing and merges nothing.
+    * `outDir/epoch=N`; the probe pads the frozen codebook
+    * ([[Writers.padIvfPqCodebook]]), so a later vector whose code the
+    * training batch never realized scores against a zero centroid
+    * instead of failing the epoch. An empty epoch before training
+    * (checked with one `isEmpty` job) emits an empty result and a
+    * metrics row with zero counts; it trains nothing and merges
+    * nothing.
     *
     * Freezing is WHY this streams: retraining codebook/centroids per
     * epoch would re-code every prior vector (a full-state rewrite per
@@ -741,7 +745,11 @@ object StreamingJobs {
           Files.writeString(artDone, "1")
         }
         val cents = spark.read.parquet(s"$stateDir/artifacts/centroids")
-        val book = spark.read.parquet(s"$stateDir/artifacts/codebook")
+        // padded at read: a later batch can realize a code the training
+        // batch never did, and a stream frozen unpadded heals on replay
+        val book = Writers.padIvfPqCodebook(spark,
+          spark.read.parquet(s"$stateDir/artifacts/codebook"),
+          m, subDim, probeDims)
         val (coded, _) = Similarity.ivfPqIndexTables(
           batch, idCol, vecCol, cents, "cid", "cvec", m, subDim, probeDims)
         val fresh = ep.stamp(coded)

@@ -97,17 +97,11 @@ class CodegenLintSpec extends AnyFunSuite {
   }
 
   test("all graft_* expressions codegen-compile (no interpreter fallback)") {
-    val prevFactory = spark.conf.getOption("spark.sql.codegen.factoryMode")
-    val prevFallback = spark.conf.getOption("spark.sql.codegen.fallback")
-    val prevExcluded = spark.conf.getOption("spark.sql.optimizer.excludedRules")
-    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    // Without this, Project-over-LocalRelation is constant-folded on the
-    // driver by ConvertToLocalRelation (interpreted, no codegen at all) and
-    // the lint silently tests nothing — verified by re-breaking Md5Hash32.
-    spark.conf.set("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
-    try {
+    // TestSpark.codegenOnly also excludes ConvertToLocalRelation: without
+    // that, Project-over-LocalRelation is constant-folded on the driver
+    // (interpreted, no codegen at all) and the lint silently tests
+    // nothing — verified by re-breaking Md5Hash32.
+    TestSpark.codegenOnly {
       invocations.toSeq.sortBy(_._1).foreach { case (name, call) =>
         try row.selectExpr(s"$call AS out").collect()
         catch { case e: Throwable =>
@@ -115,13 +109,6 @@ class CodegenLintSpec extends AnyFunSuite {
             s"would have masked this): ${e.getMessage}", e)
         }
       }
-    } finally {
-      prevFactory.fold(spark.conf.unset("spark.sql.codegen.factoryMode"))(
-        spark.conf.set("spark.sql.codegen.factoryMode", _))
-      prevFallback.fold(spark.conf.unset("spark.sql.codegen.fallback"))(
-        spark.conf.set("spark.sql.codegen.fallback", _))
-      prevExcluded.fold(spark.conf.unset("spark.sql.optimizer.excludedRules"))(
-        spark.conf.set("spark.sql.optimizer.excludedRules", _))
     }
   }
 }

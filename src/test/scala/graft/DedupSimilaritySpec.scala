@@ -75,7 +75,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("simhash: equal docs equal, disjoint docs differ") {
     val df = Seq((1L, "a b c a"), (2L, "a b c a"), (3L, "p q r s")).toDF("id", "text")
-    val got = df.select(col("id"), Dedup.simhash(split(col("text"), " ")))
+    val got = df.select(col("id"), Dedup.simhashOf(Dedup.tokenHashes(split(col("text"), " "))))
       .as[(Long, Long)].collect().toMap
     assert(got(1L) == got(2L))
     assert(got(1L) != got(3L))

@@ -727,14 +727,12 @@ class PlanLintSpec extends AnyFunSuite {
       s"tok_part did not prune at the partition level:\n$plan")
   }
 
-  // stored-index batch mining: the pruned codes scan + the bounded
-  // query-batch scan, PLUS one DPP copy of the query side — Spark
-  // layers dynamicpruningexpression on top of the static bucket-IN
-  // PartitionFilters and materializes the (3-row) broadcast side again
-  // for it; runtime pruning stacked on plan-time pruning is the
-  // desired behavior, and the duplicated subtree is the bounded batch,
-  // never the corpus. Exchanges: the query-dedup window (×2 via the
-  // DPP copy) + the final rank window (WindowGroupLimit cuts before it)
+  // stored-index batch mining: the pruned codes scan joined to the
+  // broadcast probe-pair table (qid, label, bucket, ADC tables), which
+  // is built on the driver from the collected batch — the served plan
+  // reads no query-side parquet. It plans 1 scan and 1 exchange (the
+  // final rank window; WindowGroupLimit cuts before it), under the
+  // ceilings below
   assertScanBudget("q168_routed_negatives_stored", 3)
   assertShuffleBudget("q168_routed_negatives_stored", 3)
   test("q168_routed_negatives_stored prunes bucket directories for the " +

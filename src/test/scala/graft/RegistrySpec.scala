@@ -171,16 +171,20 @@ class RegistrySpec extends AnyFunSuite {
       s"\\b${java.util.regex.Pattern.quote(name)}\\b".r
     val main = sources("src/main/scala", ".scala").map(p =>
       p.toString -> read(p))
-    val code = main.map { case (f, t) => f -> stripComments(t, false) }
+    // a name inside a string literal (an error message, a metrics label)
+    // calls nothing: literal text is blanked, its `$name` and `${…}`
+    // splices are code and stay
+    def code(t: String) = stripComments(t, blankStrings = true, keepSplices = true)
+    val scanned = main.map { case (f, t) => f -> code(t) }
     val outside = (sources("etlbench/src", ".scala")
-      .map(p => stripComments(read(p), false)) ++
+      .map(p => code(read(p))) ++
       sources("tools", ".py").map(p => read(p).replaceAll("#.*", "")))
       .mkString("\n")
     val unreached = (for {
       (f, text) <- main
       name <- publicMembers(text) if name != "main"
       w = word(name)
-      if !code.exists { case (g, t) =>
+      if !scanned.exists { case (g, t) =>
         w.findAllMatchIn(t).size > (if (g == f) 1 else 0) }
       if w.findFirstIn(outside).isEmpty
     } yield (f, name)).toSet
@@ -212,14 +216,49 @@ class RegistrySpec extends AnyFunSuite {
 
   /** `text` without comments. With `blankStrings`, string and char
     * literal contents are blanked too, so a structure scan sees no brace
-    * or keyword inside a literal. Newlines are kept. */
-  private def stripComments(text: String, blankStrings: Boolean): String = {
+    * or keyword inside a literal; with `keepSplices` as well, the `$name`
+    * and `${…}` splices of an interpolated string are kept. Newlines are
+    * kept. */
+  private def stripComments(text: String, blankStrings: Boolean,
+                            keepSplices: Boolean = false): String = {
     val out = new StringBuilder
     val n = text.length
-    def lit(from: Int, to: Int, quote: String): Unit = {
-      val body = text.substring(from, to)
+    def ident(c: Char) = c.isLetterOrDigit || c == '_'
+    // end of the `${…}` splice whose `{` is at `from`; a string literal
+    // nested in the splice may hold braces and quotes
+    def spliceEnd(from: Int): Int = {
+      var depth = 0
+      var j = from
+      while (j < n) {
+        text(j) match {
+          case '{' => depth += 1
+          case '}' => depth -= 1; if (depth == 0) return j + 1
+          case '"' => j = text.indexOf('"', j + 1); if (j < 0) return n
+          case _ =>
+        }
+        j += 1
+      }
+      n
+    }
+    // an interpolated literal's opening quote follows its interpolator
+    def interpolated(quote: Int) = quote > 0 && ident(text(quote - 1))
+    def lit(from: Int, to: Int, quote: String, interp: Boolean): Unit = {
       out ++= quote
-      out ++= (if (blankStrings) body.map(c => if (c == '\n') c else ' ') else body)
+      var j = from
+      while (j < to) {
+        val c = text(j)
+        val splice = keepSplices && interp && c == '$' && j + 1 < to
+        if (!blankStrings || c == '\n') { out += c; j += 1 }
+        else if (splice && text(j + 1) == '{') {
+          val e = math.min(to, spliceEnd(j + 1))
+          out ++= text.substring(j, e); j = e
+        } else if (splice && ident(text(j + 1)) && !text(j + 1).isDigit) {
+          var e = j + 1
+          while (e < to && ident(text(e))) e += 1
+          out ++= text.substring(j, e); j = e
+        } else if (splice && text(j + 1) == '$') { out ++= "  "; j += 2 }
+        else { out += ' '; j += 1 }
+      }
       out ++= quote
     }
     var i = 0
@@ -239,20 +278,23 @@ class RegistrySpec extends AnyFunSuite {
         var j = text.indexOf("\"\"\"", i + 3)
         if (j < 0) j = n
         while (j + 3 < n && text(j + 3) == '"') j += 1
-        lit(i + 3, j, "\"\"\"")
+        lit(i + 3, j, "\"\"\"", interpolated(i))
         i = math.min(n, j + 3)
       } else if (text(i) == '"') {
+        val interp = interpolated(i)
         var j = i + 1
         while (j < n && text(j) != '"' && text(j) != '\n') {
           if (text(j) == '\\') j += 1
+          else if (interp && text(j) == '$' && j + 1 < n &&
+              text(j + 1) == '{') j = spliceEnd(j + 1) - 1
           j += 1
         }
-        lit(i + 1, math.min(j, n), "\"")
+        lit(i + 1, math.min(j, n), "\"", interp)
         i = j + 1
       } else if (text(i) == '\'' && i + 2 < n &&
           (text(i + 2) == '\'' || text(i + 1) == '\\')) {
         val j = text.indexOf('\'', if (text(i + 1) == '\\') i + 3 else i + 2)
-        lit(i + 1, j, "'")
+        lit(i + 1, j, "'", interp = false)
         i = j + 1
       } else {
         out += text(i)

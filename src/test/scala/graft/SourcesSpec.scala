@@ -696,57 +696,67 @@ class SourcesSpec extends AnyFunSuite {
         "qid", "qvec", nprobe = 3, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(dup == batch)
-    // the Janino codegen cap fails loudly, like the mining form
-    val big = vecs.limit(300)
+    // each query's ADC tables are data, not generated code, so a
+    // 300-qid batch compiles to the 3-qid batch's classes: it runs with
+    // codegen fallback off, and its heads for qids 1-3 are the 3-qid
+    // batch's
+    val big = vecs.filter(col("vec_id") < 300)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val ex = intercept[IllegalArgumentException] {
+    val bigRows = TestSpark.codegenOnly {
       Similarity.ivfPqSearchStoredBatch(codes, book, cents, "vec_id",
-        big, "qid", "qvec", nprobe = 3, k = 10)
+          big, "qid", "qvec", nprobe = 3, k = 10)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     }
-    assert(ex.getMessage.contains("BOUNDED"))
-    // the chunked wrapper serves batches ABOVE the codegen cap: with
-    // chunkSize=2 the 3-qid batch splits into 2 chunks whose union must
-    // BE the unchunked answer (per-qid results are chunk-independent)
-    val chunked = Similarity.ivfPqSearchStoredBatchChunked(
-        codes, book, cents, "vec_id", queries, "qid", "qvec",
-        nprobe = 3, k = 10, chunkSize = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(chunked == batch, "chunked != unchunked batch")
-    // NULL qids drop identically on BOTH the fast (<= chunkSize) path
-    // and the chunked path — chunked ≡ unchunked at the chunk-size
-    // boundary even for batches containing null qids (ADVICE r18)
+    assert(bigRows.map(_._1).distinct.length == 300)
+    assert(bigRows.filter(r => r._1 >= 1L && r._1 <= 3L).toSet == batch,
+      "a qid's head depends on the rest of its batch")
+    // NULL qids are dropped
     val withNull = queries.unionByName(
       spark.range(1).select(lit(null).cast("long").as("qid"),
         lit(null).cast("array<float>").as("qvec")))
-    val nullFast = Similarity.ivfPqSearchStoredBatchChunked(
+    val nullDropped = Similarity.ivfPqSearchStoredBatch(
         codes, book, cents, "vec_id", withNull, "qid", "qvec",
         nprobe = 3, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val nullChunked = Similarity.ivfPqSearchStoredBatchChunked(
-        codes, book, cents, "vec_id", withNull, "qid", "qvec",
-        nprobe = 3, k = 10, chunkSize = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(nullFast == batch && nullChunked == batch,
-      "a null qid row moved a chunked/fast-path batch answer")
-    // an over-cap batch that the raw form rejects is served chunked —
-    // every distinct qid comes back with its head
-    val big2 = vecs.limit(Similarity.MaxStoredMiningBatch + 6)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val bigChunked = Similarity.ivfPqSearchStoredBatchChunked(
-        codes, book, cents, "vec_id", big2, "qid", "qvec",
-        nprobe = 3, k = 10)
-    assert(bigChunked.select(col("qid")).distinct().count() ==
-      big2.select(col("qid")).distinct().count())
-    // ...but the driver-priced ceiling still holds
+    assert(nullDropped == batch, "a null qid row moved the batch answer")
+    // the driver-priced ceiling on distinct qids holds
     val exBig = intercept[IllegalArgumentException] {
-      Similarity.ivfPqSearchStoredBatchChunked(codes, book, cents,
-        "vec_id",
-        spark.range(Similarity.MaxChunkedBatch + 1)
+      Similarity.ivfPqSearchStoredBatch(codes, book, cents, "vec_id",
+        spark.range(Similarity.MaxQueryBatch + 1)
           .select(col("id").as("qid"),
             lit(null).cast("array<float>").as("qvec")),
         "qid", "qvec", nprobe = 3, k = 10)
     }
     assert(exBig.getMessage.contains("driver-priced"))
+  }
+
+  test("a codebook missing a (subspace, code) that a probed vector " +
+    "realizes fails the stored single and batch probes loudly instead " +
+    "of scoring the lookup 0") {
+    import graft.operators.Similarity
+    val dir = "/root/testdata/sf0.001"
+    val path = Writers.ensureIvfPqIndex(spark, dir)
+    val codes = spark.read.parquet(s"$path/codes")
+    val cents = spark.read.parquet(s"$path/centroids")
+    // a query probes its own bucket, so vector 1's subspace-0 code is
+    // realized by a probed vector: drop that codebook row
+    val own = codes.filter(col("vec_id") === 1L)
+      .select(element_at(col("codes"), 1)).head().getInt(0)
+    val book = spark.read.parquet(s"$path/codebook")
+      .filter(!(col("m") === 0 && col("code") === own))
+    val query = Tables.load(spark, dir, "embeddings")
+      .filter(col("vec_id") === 1L)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    def failsLoudly(probe: => org.apache.spark.sql.DataFrame): Unit = {
+      val e = intercept[Exception](probe.collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(String.valueOf(_)).mkString("\n")
+      assert(msgs.contains("ADC lookup hit a NaN slot"), msgs)
+    }
+    failsLoudly(Similarity.ivfPqSearchStored(codes, book, cents, "vec_id",
+      query.select("qvec"), "qvec", nprobe = 3, k = 10))
+    failsLoudly(Similarity.ivfPqSearchStoredBatch(codes, book, cents,
+      "vec_id", query, "qid", "qvec", nprobe = 3, k = 10))
   }
 
   test("deleteFromPostings: tombstoned phrase probe equals the live form " +

@@ -642,8 +642,9 @@ class StreamingSpec extends AnyFunSuite {
                 searchable: Seq[(Long, Seq[Float])]): Seq[(Long, Double)] = {
       val coarse = df(train).orderBy(col("vec_id").asc_nulls_last).limit(4)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val (_, book) = Similarity.ivfPqIndexTables(
+      val (_, trained) = Similarity.ivfPqIndexTables(
         df(train), "vec_id", "embedding", coarse, "cid", "cvec", 2, 2, 2)
+      val book = graft.sources.Writers.padIvfPqCodebook(spark, trained, 2, 2, 2)
       val (codes, _) = Similarity.ivfPqIndexTables(
         df(searchable), "vec_id", "embedding", coarse, "cid", "cvec", 2, 2, 2)
       val query = spark.range(1)
@@ -693,6 +694,15 @@ class StreamingSpec extends AnyFunSuite {
       java.nio.file.Paths.get(s"$st3/artifacts/_done")))
     run(1, e0, st3, out3)
     assert(emitted(1, out3) == oneShot(e0, e0))
+    // a later vector in a probed bucket (cid 0) whose subspace-0 code
+    // (|0.9| first, then −0.3: code 15) no e0 vector realized scores
+    // against the padded codebook's zero centroid, not a NaN slot
+    val st4 = TestSpark.tmpDir("ivfstate4")
+    val out4 = TestSpark.tmpDir("ivfout4")
+    val novel = Seq((12L, Seq(0.9f, -0.3f, 0f, 0f)))
+    run(0, e0, st4, out4); run(1, novel, st4, out4)
+    assert(emitted(1, out4) == oneShot(e0, e0 ++ novel))
+    assert(emitted(1, out4).map(_._1).contains(12L), emitted(1, out4))
   }
 
   test("a negative maxEpochAge is rejected before the epoch writes anything") {

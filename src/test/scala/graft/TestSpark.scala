@@ -25,6 +25,26 @@ object TestSpark {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** Run `body` with Spark's codegen fallback off: a generated class
+    * that fails to compile (Janino's 64 KB method limit, an emitted call
+    * that does not resolve) throws instead of running interpreted.
+    * `ConvertToLocalRelation` is excluded too, or a projection over a
+    * local relation is folded on the driver and never generated. The
+    * previous settings are restored afterwards. */
+  def codegenOnly[T](body: => T): T = {
+    val confs = Seq(
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false",
+      "spark.sql.optimizer.excludedRules" ->
+        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
   /** A fresh directory named `prefix…` under the JVM's scratch root
     * ([[graft.sources.Writers.scratchRoot]]), which a shutdown hook
     * removes — test fixtures leave nothing in the temp directory. */
